@@ -96,13 +96,15 @@ class Bm25Stats:
 
     def score(self, df, freq, norm_bytes, boost: float = 1.0) -> np.ndarray:
         """Per-doc term scores: freq + norm byte arrays -> float32 scores."""
-        if isinstance(freq, np.ndarray) and freq.size == 1:
+        if (isinstance(freq, np.ndarray) and freq.size == 1
+                and np.size(norm_bytes) <= 1):
             # scalar fast path for driver-side per-doc loops (explain,
             # oracle scoring) that call with 1-element arrays: the same
             # float32 ops in the same order as score_tf — np.float32
             # scalar arithmetic is single-precision IEEE, so the result
             # is bit-identical — minus ~10 numpy array dispatches per
-            # call.
+            # call.  Only when norm_bytes is scalar too: a 1-element freq
+            # against n norm bytes broadcasts to n scores.
             nbv = norm_bytes[0] if np.ndim(norm_bytes) else norm_bytes
             f = np.float32(freq[0])
             nf = self.cache[int(nbv) & 0xFF]

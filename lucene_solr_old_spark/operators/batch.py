@@ -2,24 +2,25 @@
 
 Per-query jobs pay Spark's scheduling floor (~0.5-2s) regardless of work;
 the reference engine answers single queries in microseconds.  Where Spark
-WINS is throughput: express the entire query set as data — a broadcast
-(qid, term, weight) table joined against ONE postings scan — and the
-whole workload costs one job: one term-pruned scan, one aggregation, one
-per-query top-k window.  Amortized per-query cost drops by orders of
-magnitude and scales with the cluster.
+WINS is throughput: the workload is data — one term-pruned postings scan
+fanned out to every query holding each term, one (qid, seg, docid)
+aggregation, one per-qid top-k window — so the whole workload costs one
+job, and amortized per-query cost drops by orders of magnitude.
 
-Mapping: this is SURVEY.md §3.3's distributed query fan-out inverted —
-instead of one query fanned to N shards, M queries share one pass; the
-per-shard/leaf top-k heap becomes a window row_number per qid.
+This is search.py's BM25 core (:func:`~.search._scored_docs`, which also
+runs every single query as a workload of one) behind the per-qid
+``row_number`` collector (:func:`~.search._topk_per_qid`): SURVEY.md §3.3's
+distributed query fan-out inverted — instead of one query fanned to N
+shards, M queries share one pass, and the per-leaf top-k heap becomes a
+window row_number per qid.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
-from .search import _Scorer
+from .search import _parse, _scored_docs, _topk_per_qid
 
 __all__ = ["batch_search"]
 
@@ -29,59 +30,5 @@ def batch_search(index: InvertedIndex, queries: list[tuple],
     """queries: [(qid, query_text, mode)] with mode in {"OR", "AND"}.
     Returns (qid, rank, key, score) — top-k per query, one Spark job.
     """
-    analyzer = get_analyzer(index.analyzer)
-    qterms: list[tuple] = []      # (qid, term, clause multiplicity)
-    qmeta: dict = {}              # qid -> (n_clauses, is_and)
-    all_terms: set[str] = set()
-    for qid, text, mode in queries:
-        terms = [t.term for t in analyzer(text)]
-        # repeated terms = repeated CLAUSES: score once per clause, count
-        # clauses for AND (same semantics as search_terms)
-        qmeta[qid] = (len(terms), mode.upper() == "AND")
-        for t in sorted(set(terms)):
-            qterms.append((qid, t, terms.count(t)))
-            all_terms.add(t)
-    if not qterms:
-        return index.docmeta.sparkSession.createDataFrame(
-            [], "qid INT, rank INT, key STRING, score FLOAT")
-
-    scorer = _Scorer(index, sorted(all_terms), precision)
-    stype = scorer._sqltype
-    weights = scorer._weights
-    spark = index.postings.sparkSession
-    qdf = spark.createDataFrame(
-        [(qid, t, float(weights[t]), m) for qid, t, m in qterms],
-        "qid INT, term STRING, weight DOUBLE, mult INT")
-    and_qids = [qid for qid, (_n, is_and) in qmeta.items() if is_and]
-    nterms_map = F.create_map(*[
-        x for qid, (n, _a) in qmeta.items()
-        for x in (F.lit(qid), F.lit(n))])
-
-    exploded = (index.postings.where(F.col("term").isin(sorted(all_terms)))
-                .select("seg", "term", F.explode("postings").alias("p"))
-                .select("seg", "term",
-                        F.col("p.docid").alias("docid"),
-                        F.col("p.freq").alias("freq"),
-                        F.col("p.norm").alias("norm")))
-    joined = exploded.join(F.broadcast(qdf), "term")
-    freq = F.col("freq").cast(stype)
-    scored = joined.withColumn(
-        "tscore",
-        ((F.col("weight").cast(stype) * freq) / (freq + scorer.norm_factor()))
-        * F.col("mult").cast(stype))
-    agg = scored.groupBy("qid", "seg", "docid").agg(
-        F.sum("tscore").alias("score"),
-        F.sum("mult").alias("nmatched"))
-    if and_qids:
-        agg = agg.where(~F.col("qid").isin(and_qids)
-                        | (F.col("nmatched") == nterms_map[F.col("qid")]))
-    with_keys = agg.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
-    w = Window.partitionBy("qid").orderBy(
-        F.desc(F.col("score").cast(stype)), F.asc("key"))
-    return (with_keys
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qid", "rank", "key",
-                    F.col("score").cast(stype).alias("score"))
-            .orderBy("qid", "rank"))
+    docs = _scored_docs(index, _parse(index, queries), precision)
+    return _topk_per_qid(docs, index, k, precision)

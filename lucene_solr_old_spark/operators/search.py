@@ -1,45 +1,59 @@
 """Query execution: the reference's scorer algebra as DataFrame plans.
 
-Mapping (SURVEY.md §2.5, §2.7):
+Every BM25 entry point — ``search_terms`` (``search_or``/``search_and``),
+``search_dismax``, ``search_after``, ``count_query``, ``batch_search``
+(batch.py) and the block-max ``wand_search``/``batch_wand_search``
+(wand.py) — runs one pipeline, the reference's ``IndexSearcher`` ->
+``Weight`` -> ``Scorer`` -> ``TopScoreDocCollector`` (SURVEY.md §2.5,
+§3.3).  A single query is a workload of one:
 
-  * TermQuery/TermScorer        -> filter postings to term, explode, score
-    (``search/TermQuery.java:161``, ``TermScorer.java:27-96``)
-  * BooleanQuery SHOULD (OR)    -> union of per-term score frames +
-    groupBy(doc).sum  — term-at-a-time, exactly BooleanScorer's bucket
-    accumulation (``search/BooleanScorer.java:61,143-156``); coord == 1 for
-    BM25 so disjunction score is a plain sum (``Similarity.java:122-124``)
-  * BooleanQuery MUST (AND)     -> same frames + HAVING count(distinct term)
-    == n  (the leapfrog ConjunctionScorer's semantics,
-    ``ConjunctionScorer.java:28-120`` — Catalyst's hash aggregate replaces
-    the merge)
-  * MUST_NOT                    -> left-anti join (``ReqExclScorer.java``)
-  * minNrShouldMatch            -> HAVING count >= n
-    (``MinShouldMatchSumScorer.java:36``)
-  * DisjunctionMaxQuery         -> max(score) + tie*(sum-max)
-    (``DisjunctionMaxQuery.java``)
-  * PhraseQuery (slop=0)        -> positions-array intersection via a
-    vectorized alignment kernel (``ExactPhraseScorer.java:26-33``); phrase
-    freq feeds BM25 with summed idf (``BM25Similarity.idfExplain[]``)
-  * top-k collector             -> ORDER BY score DESC, key ASC LIMIT k —
-    Catalyst's TakeOrderedAndProject is the per-leaf PQ + merge
-    (``TopScoreDocCollector.java:54-61``; ties favor lower doc order)
-  * searchAfter                 -> WHERE (score,key) < (after) then top-k
-    (``IndexSearcher.java:234-250``)
+  * parse    -> :func:`_parse` analyses ``[(qid, text, mode)]`` with the
+    index's analyzer.  A repeated term is a repeated clause: it scores once
+    per clause and counts per clause for AND / minNrShouldMatch
+    (``BooleanQuery.java`` clause list, ``MinShouldMatchSumScorer.java:36``).
+    A query that analyses to nothing matches nothing.
+  * weight   -> :class:`_Scorer` is the only place the collection stats,
+    term stats, weights and the 256-entry norm cache are computed: Column
+    expressions for the relational plan, NumPy arrays for the kernel.
+  * score    -> :func:`_scored_docs` is the relational core: one
+    term-pruned postings scan, fanned out to the queries holding each term
+    through one map literal, scored ``weightValue * freq / (freq +
+    cache[norm])`` (``BM25Similarity.java:233-238``), and aggregated per
+    (qid, seg, docid).  The aggregate is the plain sum — coord == 1 for
+    BM25 (``Similarity.java:122-124``), BooleanScorer's bucket sum
+    (``BooleanScorer.java:61,143-156``) — or DisjunctionMaxQuery's
+    ``max + tie*(sum-max)``.  AND and minNrShouldMatch are one HAVING
+    ``nmatched >= need`` (the leapfrog ConjunctionScorer's semantics,
+    ``ConjunctionScorer.java:28-120``); MUST_NOT is a left-anti join
+    (``ReqExclScorer.java``).  wand.py's per-segment kernel is the other
+    scorer over the same parsed workload and scorer state.
+  * collect  -> :func:`_topk` is TakeOrderedAndProject (``ORDER BY score
+    DESC, key ASC LIMIT k``: the per-leaf PQ + merge of
+    ``TopScoreDocCollector.java:54-61``, ties to the lower doc key), with
+    an optional ``(score, key)`` cursor for searchAfter
+    (``IndexSearcher.java:234-250``); :func:`_topk_per_qid` is the per-qid
+    ``row_number`` window for workloads; ``count()`` is
+    TotalHitCountCollector.
+
+Phrase queries (``ExactPhraseScorer.java:26-33``, SloppyPhraseScorer) score
+through :func:`phrase_score_frame` with summed idf
+(``BM25Similarity.idfExplain[]``) and share the collector.
 
 Scoring: per-term scores are computed in Spark float32 arithmetic (same IEEE
-ops as the Java engine); the freq-independent norm factor is looked up from
-the 256-entry cache (``BM25Similarity.java:206-210``) via an array literal.
-Multi-term sums aggregate in float64 then round to float32 — the reference's
-own sum order is scorer-implementation-dependent (BS1 vs BS2), so sums are
-only reproducible up to addition order; ranks are tie-broken by doc key.
+ops as the Java engine).  Multi-term sums aggregate in float64 then round to
+float32 — the reference's own sum order is scorer-implementation-dependent
+(BS1 vs BS2), so sums are only reproducible up to addition order; ranks are
+tie-broken by doc key.  ``precision="float64"`` is the oracle-precision twin
+(see below).
 """
 
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.bm25 import Bm25Stats
 from ..functions.smallfloat import byte315_to_float
@@ -67,28 +81,36 @@ def _qtokens(index: InvertedIndex, query_text: str):
     return get_analyzer(index.analyzer)(query_text)
 
 
-def _cache_array(stats: Bm25Stats) -> Column:
-    """256-entry float32 norm-factor cache as a Spark array literal.
-
-    Built as ONE array literal + an array<float> cast rather than 256
-    per-element ``lit().cast()`` calls: each Column call is a py4j round
-    trip, and the per-element form cost ~0.5s of driver time PER QUERY
-    construction.  Element values are identical (double -> float32 cast
-    per element either way)."""
-    return F.lit([float(c) for c in stats.cache]).cast("array<float>")
+def _stype(precision: str) -> str:
+    return "double" if precision == "float64" else "float"
 
 
-def _norm_factor(stats: Bm25Stats) -> Column:
-    # element_at is 1-based; norm byte is 0..255
-    return F.element_at(_cache_array(stats), F.col("norm") + 1)
+# Literal tables (weights, the norm cache, the query fan-out) are written
+# as Spark SQL text and parsed in ONE call: every ``F.lit`` is a py4j round
+# trip (about 1 ms each on a 4-core host, so a 256-entry per-element
+# array literal cost ~170 ms of driver time per query).  ``repr`` of a float round-trips exactly
+# through Java's double parser, so the values are the same as lit()'s.
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_num(x: float, stype: str) -> str:
+    v = float(x)
+    text = f"{v!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+    return f"CAST({text} AS {stype})"
+
+
+def _sql_in(col: str, values: list[str]) -> Column:
+    return F.expr(f"{col} IN ({', '.join(_sql_str(v) for v in values)})")
 
 
 # --- float64 "oracle precision" variant ------------------------------------
 # Same BM25 with the same norm QUANTIZATION (doc length still passes through
 # the lossy byte), but all arithmetic in float64 with a fixed operation
 # order, so an ANSI-SQL engine (the DuckDB correctness oracle) can reproduce
-# scores bit-for-bit up to libm ulp differences.  The float32 path above is
-# the rank-identity path vs the reference.
+# scores bit-for-bit up to libm ulp differences.  The default float32 path
+# is the rank-identity path vs the reference.
 
 LQ64: list[float] = [
     float("inf") if b == 0 else 1.0 / (float(byte315_to_float(b)) * float(byte315_to_float(b)))
@@ -105,8 +127,38 @@ def cache64(avg_dl: float, k1: float = 1.2, b: float = 0.75) -> list[float]:
     return [k1 * ((1.0 - b) + (b * lq) / avg_dl) for lq in LQ64]
 
 
+class _Query(NamedTuple):
+    """One analysed query of a workload."""
+    qid: int
+    mults: dict[str, int]  # distinct term -> clause multiplicity
+    need: int              # clauses a doc must match: all of them for AND
+
+
+def _parse(index: InvertedIndex, queries: list[tuple],
+           min_should_match: int = 0) -> list[_Query]:
+    """Analyse a workload ``[(qid, text, mode)]`` (mode "OR" or "AND");
+    queries that analyse to no term drop out."""
+    analyzer = get_analyzer(index.analyzer)
+    out = []
+    for qid, text, mode in queries:
+        terms = [t.term for t in analyzer(text)]
+        if terms:
+            need = (len(terms) if mode.upper() == "AND"
+                    else max(1, min_should_match))
+            out.append(_Query(qid, {t: terms.count(t)
+                                    for t in sorted(set(terms))}, need))
+    return out
+
+
+def _no_docs(index: InvertedIndex, precision: str) -> DataFrame:
+    """The scored-docs frame of a workload that matches nothing."""
+    return index.docmeta.sparkSession.createDataFrame(
+        [], f"qid INT, seg INT, docid INT, score {_stype(precision)}")
+
+
 class _Scorer:
-    """Per-query scoring state for either precision path."""
+    """Scoring state of a query or workload, in either precision: Column
+    expressions for the relational plan, NumPy arrays for the kernel."""
 
     def __init__(self, index: InvertedIndex, terms: list[str],
                  precision: str = "float32", boost: float = 1.0):
@@ -115,14 +167,13 @@ class _Scorer:
         self.stats = Bm25Stats(max_doc, sum_ttf)
         self.tstats = index.term_stats(terms)
         self.terms = terms
+        self._sqltype = _stype(precision)
         if precision == "float64":
-            self.avgdl64 = sum_ttf / max_doc if max_doc else 1.0
-            self._cache = cache64(self.avgdl64)
+            self._cache = cache64(sum_ttf / max_doc if max_doc else 1.0)
             self._weights = {
                 t: boost * (idf64(self.tstats.get(t, (0, 0))[0], max_doc) * 2.2)
                 for t in set(terms)
             }
-            self._sqltype = "double"
         else:
             self._cache = [float(c) for c in self.stats.cache]
             self._weights = {
@@ -130,23 +181,46 @@ class _Scorer:
                                                  boost))
                 for t in set(terms)
             }
-            self._sqltype = "float"
+
+    def _num(self, x: float) -> str:
+        return _sql_num(x, self._sqltype)
 
     def norm_factor(self) -> Column:
-        # single array literal + cast — see _cache_array for why
-        arr = F.lit([float(c) for c in self._cache]).cast(
-            f"array<{self._sqltype}>")
+        # element_at is 1-based; norm byte is 0..255
+        arr = F.expr(f"array({', '.join(map(self._num, self._cache))})")
         return F.element_at(arr, F.col("norm") + 1)
 
     def weight_map(self) -> Column:
-        return F.create_map(*[
-            x for t, w in self._weights.items()
-            for x in (F.lit(t), F.lit(w).cast(self._sqltype))
-        ])
+        """term -> weightValue."""
+        return F.expr("map(" + ", ".join(
+            f"{_sql_str(t)}, {self._num(w)}"
+            for t, w in self._weights.items()) + ")")
+
+    def fanout_map(self, workload: list[_Query]) -> Column:
+        """term -> array<struct<qid, mult, need, w>>: the queries holding
+        each term, with its clause multiplicity and weightValue."""
+        holders: dict[str, list[str]] = {}
+        for q in workload:
+            for t, m in q.mults.items():
+                holders.setdefault(t, []).append(
+                    f"named_struct('qid', {int(q.qid)}, 'mult', {m}, "
+                    f"'need', {q.need}, 'w', {self._num(self._weights[t])})")
+        return F.expr("map(" + ", ".join(
+            f"{_sql_str(t)}, array({', '.join(h)})"
+            for t, h in holders.items()) + ")")
+
+    def score(self, weight: Column) -> Column:
+        freq = F.col("freq").cast(self._sqltype)
+        return (weight * freq) / (freq + self.norm_factor())
 
     def score_col(self) -> Column:
-        freq = F.col("freq").cast(self._sqltype)
-        return (self.weight_map()[F.col("term")] * freq) / (freq + self.norm_factor())
+        return self.score(self.weight_map()[F.col("term")])
+
+    def kernel_state(self):
+        """(weights, cache, dtype) of the NumPy block-max kernel."""
+        dtype = np.float64 if self.precision == "float64" else np.float32
+        return ({t: dtype(w) for t, w in self._weights.items()},
+                np.asarray(self._cache, dtype=dtype), dtype)
 
     def phrase_weight(self) -> float:
         """Summed idf * (k1+1), accumulated in this precision, term order."""
@@ -161,41 +235,115 @@ class _Scorer:
         return float(s32 * (self.stats.k1 + np.float32(1.0)))
 
 
+def _posting_rows(frame: DataFrame, *keep: str) -> DataFrame:
+    """One row per posting of ``frame``'s postings arrays: the ``keep``
+    columns plus docid, freq and norm."""
+    return (frame.select(*keep, F.explode("postings").alias("p"))
+            .select(*keep, "p.docid", "p.freq", "p.norm"))
+
+
 def term_score_frame(index: InvertedIndex, terms: list[str],
                      boost: float = 1.0,
                      precision: str = "float32") -> tuple[DataFrame, _Scorer]:
-    """(seg, docid, term, freq, norm, score) for every posting of ``terms``.
+    """(seg, term, docid, freq, norm, score) for every posting of ``terms``.
 
     score = weightValue * freq / (freq + cache[norm])
     (``BM25Similarity.java:233-238``), weightValue per-term from global df.
     """
     scorer = _Scorer(index, terms, precision, boost)
-    matched = index.postings.where(F.col("term").isin(list(set(terms))))
-    exploded = matched.select(
-        "seg", "term",
-        F.explode("postings").alias("p"),
-    ).select(
-        "seg", "term",
-        F.col("p.docid").alias("docid"),
-        F.col("p.freq").alias("freq"),
-        F.col("p.norm").alias("norm"),
-    )
-    scored = exploded.withColumn("score", scorer.score_col())
+    matched = index.postings.where(_sql_in("term", sorted(set(terms))))
+    scored = _posting_rows(matched, "seg", "term").withColumn(
+        "score", scorer.score_col())
     return scored, scorer
 
 
+def _scored_docs(index: InvertedIndex, workload: list[_Query],
+                 precision: str = "float32", *,
+                 tie_breaker: float | None = None,
+                 exclude_text: str | None = None) -> DataFrame:
+    """The relational core: (qid, seg, docid, score) for every document a
+    query of ``workload`` matches.  The score is the sum of the clause
+    scores, or ``max + tie_breaker * (sum - max)`` when a tie-breaker is
+    given (DisjunctionMaxQuery); documents matching ``exclude_text`` are
+    dropped (MUST_NOT)."""
+    if not workload:
+        return _no_docs(index, precision)
+    terms = sorted({t for q in workload for t in q.mults})
+    scorer = _Scorer(index, terms, precision)
+    # fan each term's postings out to the queries holding it BEFORE the
+    # postings explode: one map lookup per (seg, term) row
+    hits = _posting_rows(
+        index.postings.where(_sql_in("term", terms)).select(
+            "seg", "postings",
+            F.inline(scorer.fanout_map(workload)[F.col("term")])),
+        "qid", "seg", "mult", "need", "w")
+    hits = hits.withColumn("tscore", scorer.score(F.col("w"))).withColumn(
+        "score", F.col("tscore") * F.col("mult").cast(scorer._sqltype))
+    if tie_breaker is None:
+        score = F.sum("score")
+    else:
+        score = F.max("tscore") + F.lit(tie_breaker) * (
+            F.sum("score") - F.max("tscore"))
+    aggs = [score.alias("score")]
+    filtered = any(q.need > 1 for q in workload)
+    if filtered:
+        aggs += [F.sum("mult").alias("nmatched"), F.max("need").alias("need")]
+    docs = hits.groupBy("qid", "seg", "docid").agg(*aggs)
+    if filtered:
+        docs = docs.where(F.col("nmatched") >= F.col("need"))
+    ex_terms = _qterms(index, exclude_text) if exclude_text else []
+    if ex_terms:
+        ex_docs = (index.postings.where(_sql_in("term", ex_terms))
+                   .select("seg", F.explode("postings.docid").alias("docid"))
+                   .distinct())
+        docs = docs.join(ex_docs, ["seg", "docid"], "left_anti")
+    return docs.select("qid", "seg", "docid", "score")
+
+
+def _single(index: InvertedIndex, query_text: str, mode: str = "OR",
+            precision: str = "float32", min_should_match: int = 0,
+            **kw) -> DataFrame:
+    """Scored docs of one query: a workload of one."""
+    return _scored_docs(
+        index, _parse(index, [(0, query_text, mode)], min_should_match),
+        precision, **kw)
+
+
+def _with_keys(per_doc: DataFrame, index: InvertedIndex) -> DataFrame:
+    # late materialization of the doc key: the PURPOSE_GET_FIELDS second
+    # round of SURVEY.md §3.3
+    return per_doc.join(index.docmeta.select("seg", "docid", "key"),
+                        ["seg", "docid"])
+
+
 def _topk(per_doc: DataFrame, index: InvertedIndex, k: int,
-          precision: str = "float32") -> DataFrame:
-    """Collector: join back doc keys (late materialization — the
-    PURPOSE_GET_FIELDS second round of SURVEY.md §3.3) and take top-k."""
-    stype = "double" if precision == "float64" else "float"
-    with_keys = per_doc.join(
-        index.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
-    return (
-        with_keys.select("key", F.col("score").cast(stype).alias("score"))
-        .orderBy(F.desc("score"), F.asc("key"))
-        .limit(k)
-    )
+          precision: str = "float32",
+          after: tuple[float, str] | None = None) -> DataFrame:
+    """TakeOrderedAndProject collector: top-k (key, score), optionally only
+    the hits strictly after the ``(score, key)`` cursor in rank order."""
+    with_keys = _with_keys(per_doc, index)
+    score = F.col("score").cast(_stype(precision))
+    if after is not None:
+        a_score, a_key = after
+        with_keys = with_keys.where(
+            (score < F.lit(a_score))
+            | ((score == F.lit(a_score)) & (F.col("key") > F.lit(a_key))))
+    return (with_keys.select("key", score.alias("score"))
+            .orderBy(F.desc("score"), F.asc("key"))
+            .limit(k))
+
+
+def _topk_per_qid(per_doc: DataFrame, index: InvertedIndex, k: int,
+                  precision: str = "float32") -> DataFrame:
+    """Workload collector: (qid, rank, key, score), the top-k of every qid
+    through one ``row_number`` window."""
+    score = F.col("score").cast(_stype(precision))
+    w = Window.partitionBy("qid").orderBy(F.desc(score), F.asc("key"))
+    return (_with_keys(per_doc, index)
+            .withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("qid", "rank", "key", score.alias("score"))
+            .orderBy("qid", "rank"))
 
 
 def search_terms(index: InvertedIndex, query_text: str, mode: str = "OR",
@@ -205,49 +353,9 @@ def search_terms(index: InvertedIndex, query_text: str, mode: str = "OR",
     """Analyze ``query_text`` with the same chain as indexing (Lucene parses
     queries through the index analyzer), then run OR/AND with optional
     MUST_NOT and minimum-should-match. Returns top-k (key, score)."""
-    terms = _qterms(index, query_text)
-    if not terms:
-        return index.docmeta.select(
-            F.col("key"), F.lit(0.0).cast("float").alias("score")).limit(0)
-    scored, _ = term_score_frame(index, terms, precision=precision)
-
-    # BooleanQuery scores a repeated term ONCE PER CLAUSE (each duplicate is
-    # its own TermQuery clause: "a a b" doubles a's contribution) and counts
-    # CLAUSES for AND / minNrShouldMatch (``BooleanQuery.java`` clause list;
-    # ``MinShouldMatchSumScorer.java:36``).  Weight each distinct term's
-    # score and match-count by its multiplicity; multiplicity-1 queries keep
-    # the plain plan.
-    mult = {t: terms.count(t) for t in set(terms)}
-    if any(m > 1 for m in mult.values()):
-        mcol = F.create_map(*[x for t, m in mult.items()
-                              for x in (F.lit(t), F.lit(m))])
-        scored = scored.withColumn(
-            "score", F.col("score") * mcol[F.col("term")].cast(
-                "double" if precision == "float64" else "float"))
-        agg = scored.groupBy("seg", "docid").agg(
-            F.sum("score").alias("score"),
-            F.sum(mcol[F.col("term")]).alias("nmatched"),
-        )
-    else:
-        agg = scored.groupBy("seg", "docid").agg(
-            F.sum("score").alias("score"),
-            F.count_distinct("term").alias("nmatched"),
-        )
-    if mode.upper() == "AND":
-        agg = agg.where(F.col("nmatched") == len(terms))
-    elif min_should_match > 1:
-        agg = agg.where(F.col("nmatched") >= min_should_match)
-
-    if exclude_text:
-        ex_terms = _qterms(index, exclude_text)
-        if ex_terms:
-            ex_docs = (
-                index.postings.where(F.col("term").isin(ex_terms))
-                .select("seg", F.explode("postings.docid").alias("docid"))
-                .distinct()
-            )
-            agg = agg.join(ex_docs, ["seg", "docid"], "left_anti")
-    return _topk(agg, index, k, precision)
+    docs = _single(index, query_text, mode, precision, min_should_match,
+                   exclude_text=exclude_text)
+    return _topk(docs, index, k, precision)
 
 
 def search_or(index: InvertedIndex, query_text: str, k: int = 10,
@@ -264,30 +372,16 @@ def search_dismax(index: InvertedIndex, query_text: str, k: int = 10,
                   tie_breaker: float = 0.0,
                   precision: str = "float32") -> DataFrame:
     """score = max(sub) + tie * (sum(sub) - max(sub))
-    (``search/DisjunctionMaxQuery.java``)."""
-    terms = _qterms(index, query_text)
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    agg = scored.groupBy("seg", "docid").agg(
-        (F.max("score")
-         + F.lit(tie_breaker) * (F.sum("score") - F.max("score"))).alias("score"))
-    return _topk(agg, index, k, precision)
+    (``search/DisjunctionMaxQuery.java``); a repeated term is a repeated
+    disjunct."""
+    docs = _single(index, query_text, precision=precision,
+                   tie_breaker=tie_breaker)
+    return _topk(docs, index, k, precision)
 
 
 def count_query(index: InvertedIndex, query_text: str, mode: str = "OR") -> int:
     """TotalHitCountCollector (``search/TotalHitCountCollector.java``)."""
-    terms = _qterms(index, query_text)
-    if not terms:
-        return 0
-    matched = (
-        index.postings.where(F.col("term").isin(terms))
-        .select("seg", F.explode("postings.docid").alias("docid"),
-                F.col("term"))
-    )
-    grouped = matched.groupBy("seg", "docid").agg(
-        F.count_distinct("term").alias("nmatched"))
-    if mode.upper() == "AND":
-        grouped = grouped.where(F.col("nmatched") == len(set(terms)))
-    return grouped.count()
+    return _single(index, query_text, mode).count()
 
 
 def search_after(index: InvertedIndex, query_text: str, k: int,
@@ -295,25 +389,8 @@ def search_after(index: InvertedIndex, query_text: str, k: int,
                  mode: str = "OR", precision: str = "float32") -> DataFrame:
     """Cursor pagination: hits strictly after (score, key) in rank order
     (``search/IndexSearcher.java:234-250,351-416``)."""
-    # over-fetch then filter — the frame is lazy so only the filter survives
-    terms = _qterms(index, query_text)
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    agg = scored.groupBy("seg", "docid").agg(
-        F.sum("score").alias("score"),
-        F.count_distinct("term").alias("nmatched"))
-    if mode.upper() == "AND":
-        agg = agg.where(F.col("nmatched") == len(set(terms)))
-    with_keys = agg.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
-    cast = F.col("score").cast("double" if precision == "float64" else "float")
-    after = (cast < F.lit(after_score)) | (
-        (cast == F.lit(after_score)) & (F.col("key") > F.lit(after_key)))
-    return (
-        with_keys.where(after)
-        .select("key", cast.alias("score"))
-        .orderBy(F.desc("score"), F.asc("key"))
-        .limit(k)
-    )
+    docs = _single(index, query_text, mode, precision)
+    return _topk(docs, index, k, precision, after=(after_score, after_key))
 
 
 def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
@@ -326,10 +403,7 @@ def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
     if not index.with_positions:
         raise ValueError("index built without positions")
     tokens = _qtokens(index, phrase_text)
-    if not tokens:
-        return index.docmeta.select(
-            F.col("key"), F.lit(0.0).cast("float").alias("score")).limit(0)
-    if len(tokens) == 1:
+    if len(tokens) < 2:
         return search_terms(index, phrase_text, "OR", k, precision=precision)
     terms = [t.term for t in tokens]
     offsets = [t.pos - tokens[0].pos for t in tokens]
@@ -355,7 +429,7 @@ def phrase_score_frame(index: InvertedIndex, terms: list[str],
     # summed idf over the phrase's terms, accumulated in term order
     # (BM25Similarity.idfExplain(TermStatistics[]))
     weight_value = scorer.phrase_weight() * float(boost)
-    stype = "double" if precision == "float64" else "float"
+    stype = _stype(precision)
     if offsets is None:
         offsets = list(range(len(terms)))
 
@@ -503,11 +577,9 @@ def ngram_phrase_search(index: InvertedIndex, query_text: str, n: int = 2,
     KEPT grams (the rewrite scores with the reduced term set)."""
     text = query_text.lower()
     grams = [text[i:i + n] for i in range(max(0, len(text) - n + 1))]
-    if not grams:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    if len(grams) == 1:
-        return search_terms(index, grams[0], "OR", k, precision=precision)
+    if len(grams) < 2:
+        return search_terms(index, "".join(grams), "OR", k,
+                            precision=precision)
     keep = list(range(0, len(grams), n))
     if keep[-1] != len(grams) - 1:
         keep.append(len(grams) - 1)
@@ -532,15 +604,9 @@ def custom_score_search(index: InvertedIndex, query_text: str,
     when it is a small dim table; here it joins on the doc key AFTER the
     per-term scoring aggregate (so the join input is |matching docs|, not
     |postings|)."""
-    terms = _qterms(index, query_text)
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    stype = "double" if precision == "float64" else "float"
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    agg = scored.groupBy("seg", "docid").agg(F.sum("score").alias("score"))
-    with_keys = agg.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    stype = _stype(precision)
+    with_keys = _with_keys(_single(index, query_text, precision=precision),
+                           index)
     boosted = with_keys.join(boosts, "key").select(
         "key",
         (F.col("score") * F.col(boost_col)).cast(stype).alias("score"))
@@ -560,21 +626,13 @@ def rescore(index: InvertedIndex, first_query: str, second_query: str,
     top-n frame, which is broadcastable for any practical n) — the
     expensive query never touches the full corpus, which is the entire
     point of rescoring at 100 TB."""
-    stype = "double" if precision == "float64" else "float"
+    stype = _stype(precision)
     first = search_terms(index, first_query, mode, k=n,
                          precision=precision) \
         .withColumnRenamed("score", "first_score")
-    terms2 = _qterms(index, second_query)
-    if not terms2:
-        return (first.select("key",
-                             F.col("first_score").alias("score"))
-                .orderBy(F.desc("score"), F.asc("key")).limit(k))
-    scored2, _ = term_score_frame(index, terms2, precision=precision)
-    per_doc2 = (scored2.groupBy("seg", "docid")
-                .agg(F.sum("score").alias("second_score"))
-                .join(index.docmeta.select("seg", "docid", "key"),
-                      ["seg", "docid"])
-                .select("key", "second_score"))
+    per_doc2 = _with_keys(
+        _single(index, second_query, precision=precision), index).select(
+            "key", F.col("score").alias("second_score"))
     combined = (first.join(per_doc2, "key", "left")
                 .select("key",
                         (F.col("first_score")

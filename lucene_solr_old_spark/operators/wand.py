@@ -1,19 +1,23 @@
 """Block-max pruned top-k query kernel over the compressed index.
 
-The scale-path query engine: per segment, a NumPy MaxScore/WAND-family
-kernel runs over varbyte blocks (codec.py), skipping blocks whose
-max-impact upper bound cannot lift any candidate into the top-k.  The
-reference era has skip lists but NO score-bound metadata
-(``Lucene41SkipWriter.java:120-151``); block-max pruning is the
+The scale-path scorer of search.py's BM25 core: the workload is parsed by
+:func:`~.search._parse` and weighted by :class:`~.search._Scorer` exactly as
+for the relational plan, then, per segment, a NumPy MaxScore/WAND-family
+kernel runs every query of the workload over varbyte blocks (codec.py),
+skipping blocks whose max-impact upper bound cannot lift any candidate
+into the top-k.  The reference era has skip lists but NO score-bound
+metadata (``Lucene41SkipWriter.java:120-151``); block-max pruning is the
 north-star-mandated extension (BASELINE.json).
 
 Plan shape (designed for 1000-executor scale):
-  * `postings.filter(term IN q)` — parquet predicate pushdown on the term
-    column prunes row groups before any decode;
+  * `postings.filter(term IN workload terms)` — parquet predicate pushdown
+    on the term column prunes row groups before any decode;
   * `groupBy(seg).applyInPandas(kernel)` — one small task per segment, no
-    doc-level shuffle; only ≤|q| posting rows move;
-  * per-seg top-k rows (k per segment) join docmeta for keys (late
-    materialization) and merge on the driver via TakeOrderedAndProject.
+    doc-level shuffle; only the workload's posting rows move;
+  * per-(qid, seg) top-k rows join docmeta for keys (late materialization)
+    and go to search.py's collectors: TakeOrderedAndProject for
+    ``wand_search`` (a workload of one), the per-qid ``row_number`` window
+    for ``batch_wand_search``.
 
 Algorithm (disjunction): term-at-a-time MaxScore with block-max skipping —
 terms ordered by upper bound descending; after the first term, a new doc is
@@ -28,27 +32,32 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.bm25 import Bm25Stats
-from ..functions.tokenizer import get_analyzer
 from .codec import decode_block
 from .indexer import InvertedIndex
+from .search import (_no_docs, _parse, _Query, _Scorer, _sql_in, _topk,
+                     _topk_per_qid)
 
 __all__ = ["wand_search", "batch_wand_search"]
 
 _SAFETY = np.float32(1.0 + 1e-5)  # absorbs f32 rounding in bound comparisons
 
 
-def _block_arrays(blocks) -> dict:
-    """Columnar views of a term's block metadata."""
-    return {
-        "first": np.array([b["first_docid"] for b in blocks], dtype=np.int64),
-        "last": np.array([b["last_docid"] for b in blocks], dtype=np.int64),
-        "max_tf": np.array([b["max_tf"] for b in blocks], dtype=np.int64),
-        "max_norm": np.array([b["max_norm"] for b in blocks], dtype=np.int64),
-        "blocks": blocks,
-    }
+def _term_metas(term_rows, weights, mults) -> list[dict]:
+    """Columnar views of each term's block metadata, with its weight and
+    clause multiplicity."""
+    metas = []
+    for term, blocks in term_rows:
+        metas.append({
+            "term": term, "w": weights[term], "blocks": blocks,
+            "mult": 1 if mults is None else mults.get(term, 1),
+            "first": np.array([b["first_docid"] for b in blocks], np.int64),
+            "last": np.array([b["last_docid"] for b in blocks], np.int64),
+            "max_tf": np.array([b["max_tf"] for b in blocks], np.int64),
+            "max_norm": np.array([b["max_norm"] for b in blocks], np.int64),
+        })
+    return metas
 
 
 def _block_ub(meta, weight, cache: np.ndarray,
@@ -95,15 +104,10 @@ def _merge_acc(acc_d, acc_s, new_d, new_s, admit_new: bool):
 def _disjunctive_kernel(term_rows, weights, cache, k, mults=None,
                         dtype=np.float32):
     """term_rows: [(term, blocks)]; returns (docids, scores) top-k pool."""
-    metas = []
-    for term, blocks in term_rows:
-        m = _block_arrays(blocks)
-        m["term"] = term
-        m["w"] = weights[term]
-        m["mult"] = 1 if mults is None else mults.get(term, 1)
+    metas = _term_metas(term_rows, weights, mults)
+    for m in metas:
         m["ub"] = (float(_block_ub(m, m["w"], cache, m["mult"],
-                                   dtype).max()) if blocks else 0.0)
-        metas.append(m)
+                                   dtype).max()) if m["blocks"] else 0.0)
     metas.sort(key=lambda m: -m["ub"])
     tail_ub = np.cumsum([m["ub"] for m in metas][::-1])[::-1]  # incl. self
 
@@ -141,15 +145,8 @@ def _conjunctive_kernel(term_rows, weights, cache, k, mults=None,
     """Leapfrog: intersect docid sets in df-ascending (cost) order, then sum
     scores over the survivors."""
     # decode lazily: smallest list first
-    metas = []
-    for term, blocks in term_rows:
-        m = _block_arrays(blocks)
-        m["term"] = term
-        m["w"] = weights[term]
-        m["mult"] = 1 if mults is None else mults.get(term, 1)
-        m["ndocs"] = int(sum(b["count"] for b in blocks))
-        metas.append(m)
-    metas.sort(key=lambda m: m["ndocs"])
+    metas = _term_metas(term_rows, weights, mults)
+    metas.sort(key=lambda m: sum(b["count"] for b in m["blocks"]))
 
     cand = None
     decoded = []
@@ -187,70 +184,62 @@ def _conjunctive_kernel(term_rows, weights, cache, k, mults=None,
     return cand, scores
 
 
+def _kernel_docs(index: InvertedIndex, workload: list[_Query], k: int,
+                 precision: str = "float32") -> DataFrame:
+    """(qid, seg, docid, score): every query's per-segment top-k from the
+    block-max kernel, in ONE applyInPandas over the segments."""
+    if "blocks" not in index.postings.columns:
+        raise ValueError("the block-max kernel requires a compressed index "
+                         "(indexer.compress_index)")
+    if not workload:
+        return _no_docs(index, precision)
+    terms = sorted({t for q in workload for t in q.mults})
+    scorer = _Scorer(index, terms, precision)
+    weights, cache, dtype = scorer.kernel_state()
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        seg = int(pdf["seg"].iloc[0])
+        by_term = {r.term: list(r.blocks)
+                   for r in pdf.itertuples(index=False)}
+        qids = [np.zeros(0, np.int32)]
+        docids = [np.zeros(0, np.int64)]
+        scores = [np.zeros(0, dtype)]
+        for q in workload:
+            rows = [(t, by_term[t]) for t in q.mults if t in by_term]
+            conj = q.need > 1  # the kernel runs AND (all clauses) or OR
+            if not rows or (conj and len(rows) < len(q.mults)):
+                continue  # some AND term is absent from this segment
+            run = _conjunctive_kernel if conj else _disjunctive_kernel
+            d, s = run(rows, weights, cache, k, q.mults, dtype)
+            if d.size > k:
+                # per-segment top-k (ties -> lower docid): by (-score, docid)
+                order = np.lexsort((d, -s))[:k]
+                d, s = d[order], s[order]
+            qids.append(np.full(d.size, q.qid, np.int32))
+            docids.append(d)
+            scores.append(s)
+        qid = np.concatenate(qids)
+        return pd.DataFrame({
+            "qid": qid,
+            "seg": np.full(qid.size, seg, dtype=np.int32),
+            "docid": np.concatenate(docids).astype(np.int32),
+            "score": np.concatenate(scores).astype(dtype),
+        })
+
+    return (index.postings.where(_sql_in("term", terms))
+            .select("seg", "term", "blocks")
+            .groupBy("seg")
+            .applyInPandas(kernel, schema="qid INT, seg INT, docid INT, "
+                                          f"score {scorer._sqltype}"))
+
+
 def wand_search(index: InvertedIndex, query_text: str, k: int = 10,
                 mode: str = "OR", precision: str = "float32") -> DataFrame:
     """Top-k (key, score) via the block-max kernel. Requires a compressed
     index (indexer.compress_index)."""
-    if "blocks" not in index.postings.columns:
-        raise ValueError("wand_search requires a compressed index")
-    terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    mults = {t: terms.count(t) for t in set(terms)}  # clause multiplicity
-    terms = sorted(set(terms))
-    max_doc, sum_ttf = index.collection_stats()
-    stats = Bm25Stats(max_doc, sum_ttf)
-    tstats = index.term_stats(terms)
-    if precision == "float64":
-        # oracle-precision twin: same norm quantization, float64 math in
-        # fixed order so ANSI SQL reproduces the kernel's scores (the gate
-        # hash-compares values instead of a rows-only check)
-        from .search import cache64, idf64
-        avgdl = sum_ttf / max_doc if max_doc else 1.0
-        weights = {t: idf64(tstats.get(t, (0, 0))[0], max_doc) * 2.2
-                   for t in terms}
-        cache = np.array(cache64(avgdl), dtype=np.float64)
-        dtype = np.float64
-    else:
-        weights = {t: stats.weight_value(tstats.get(t, (0, 0))[0])
-                   for t in terms}
-        cache = stats.cache
-        dtype = np.float32
-    conj = mode.upper() == "AND"
-    n_terms = len(terms)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["seg"].iloc[0])
-        term_rows = [(r.term, list(r.blocks))
-                     for r in pdf.itertuples(index=False)]
-        if conj:
-            if len(term_rows) < n_terms:  # some term absent in this segment
-                return pd.DataFrame({"seg": [], "docid": [], "score": []})
-            d, s = _conjunctive_kernel(term_rows, weights, cache, k,
-                                       mults, dtype)
-        else:
-            d, s = _disjunctive_kernel(term_rows, weights, cache, k,
-                                       mults, dtype)
-        if d.size > k:
-            # per-segment top-k (ties -> lower docid): sort by (-score, docid)
-            order = np.lexsort((d, -s))[:k]
-            d, s = d[order], s[order]
-        return pd.DataFrame({
-            "seg": np.full(d.size, seg, dtype=np.int32),
-            "docid": d.astype(np.int32),
-            "score": s.astype(dtype),
-        })
-
-    matched = index.postings.where(F.col("term").isin(terms))
-    stype = "DOUBLE" if precision == "float64" else "FLOAT"
-    per_seg = matched.select("seg", "term", "blocks").groupBy("seg").applyInPandas(
-        kernel, schema=f"seg INT, docid INT, score {stype}")
-    out = per_seg.join(index.docmeta.select("seg", "docid", "key"),
-                       ["seg", "docid"])
-    return (out.select("key", "score")
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+    workload = _parse(index, [(0, query_text, mode)])
+    return _topk(_kernel_docs(index, workload, k, precision), index, k,
+                 precision)
 
 
 def batch_wand_search(index: InvertedIndex, queries: list[tuple],
@@ -266,68 +255,5 @@ def batch_wand_search(index: InvertedIndex, queries: list[tuple],
     leaves — the per-query Spark scheduling floor is amortized across the
     workload exactly like operators/batch.py, but with MaxScore block
     skipping instead of the relational aggregation."""
-    if "blocks" not in index.postings.columns:
-        raise ValueError("batch_wand_search requires a compressed index")
-    analyzer = get_analyzer(index.analyzer)
-    qinfo: list[tuple] = []           # (qid, [terms], mults, conj)
-    all_terms: set[str] = set()
-    for qid, text, mode in queries:
-        terms = [t.term for t in analyzer(text)]
-        if not terms:
-            continue
-        mults = {t: terms.count(t) for t in set(terms)}
-        qinfo.append((qid, sorted(set(terms)), mults,
-                      mode.upper() == "AND"))
-        all_terms.update(terms)
-    if not qinfo:
-        return index.docmeta.sparkSession.createDataFrame(
-            [], "qid INT, rank INT, key STRING, score FLOAT")
-    max_doc, sum_ttf = index.collection_stats()
-    stats = Bm25Stats(max_doc, sum_ttf)
-    tstats = index.term_stats(sorted(all_terms))
-    weights = {t: stats.weight_value(tstats.get(t, (0, 0))[0])
-               for t in all_terms}
-    cache = stats.cache
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["seg"].iloc[0])
-        by_term = {r.term: list(r.blocks)
-                   for r in pdf.itertuples(index=False)}
-        out_q, out_d, out_s = [], [], []
-        for qid, terms, mults, conj in qinfo:
-            rows = [(t, by_term[t]) for t in terms if t in by_term]
-            if not rows:
-                continue
-            if conj:
-                if len(rows) < len(terms):
-                    continue
-                d, s = _conjunctive_kernel(rows, weights, cache, k, mults)
-            else:
-                d, s = _disjunctive_kernel(rows, weights, cache, k, mults)
-            if d.size > k:
-                order = np.lexsort((d, -s))[:k]
-                d, s = d[order], s[order]
-            out_q.extend([qid] * d.size)
-            out_d.extend(d.tolist())
-            out_s.extend(s.tolist())
-        return pd.DataFrame({
-            "qid": np.asarray(out_q, dtype=np.int32),
-            "seg": np.full(len(out_q), seg, dtype=np.int32),
-            "docid": np.asarray(out_d, dtype=np.int32),
-            "score": np.asarray(out_s, dtype=np.float32),
-        })
-
-    matched = index.postings.where(F.col("term").isin(sorted(all_terms)))
-    per_seg = (matched.select("seg", "term", "blocks")
-               .groupBy("seg")
-               .applyInPandas(kernel,
-                              schema="qid INT, seg INT, docid INT, "
-                                     "score FLOAT"))
-    from pyspark.sql import Window
-    with_keys = per_seg.join(index.docmeta.select("seg", "docid", "key"),
-                             ["seg", "docid"])
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("key"))
-    return (with_keys.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qid", "rank", "key", "score")
-            .orderBy("qid", "rank"))
+    docs = _kernel_docs(index, _parse(index, queries), k)
+    return _topk_per_qid(docs, index, k)

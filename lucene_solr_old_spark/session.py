@@ -8,9 +8,12 @@ AQE is on so skewed query-time joins get runtime splitting
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "lucene-solr-old-spark",
@@ -155,51 +158,10 @@ def warm_session(spark: SparkSession) -> None:
         (c.select("id", "k").mapInPandas(_ident, schema="id LONG, k INT")
          .write.format("noop").mode("overwrite").save())
         c.unpersist()
-
-        # Second warming tier: a miniature index-build + query + dedup
-        # workload over ~2k synthetic docs — the literal firstSearcher
-        # pattern (representative queries through the real operators).
-        # Warms the engine's own pipelines end to end: fused Arrow
-        # analysis, posting-list caching, the batched query join/window
-        # plan, and the MinHash window/band-join chain.
-        from ..operators import dedup as _D
-        from ..operators.batch import batch_search as _bs
-        from ..operators.indexer import build_index as _bi
-
-        mini = spark.range(0, 2000, 1, 4).select(
-            F.concat(F.lit("d"), F.lpad(F.col("id").cast("string"), 6, "0")
-                     ).alias("key"),
-            F.concat(
-                F.lit("alpha beta gamma delta epsilon zeta eta theta w"),
-                (F.col("id") % 17).cast("string"), F.lit(" w"),
-                (F.col("id") % 31).cast("string")).alias("text"))
-        # persist_termdoc=False: the mini index must leave NO cache
-        # behind in the session (unpersisting the derived postings frame
-        # would not free the fused-stage cache); re-running the 2k-doc
-        # analysis per warming action costs ~0.2 s each.
-        midx = _bi(mini, key_col="key", text_col="text", num_segments=4,
-                   analyzer="ws_stop", persist_termdoc=False)
-        midx.postings.count()
-        midx.collection_stats()
-        # >10 distinct terms so the batch plan compiles the InSet term
-        # filter shape (the form any real multi-query batch takes), not
-        # the small inlined In
-        _bs(midx, [(0, "alpha beta gamma delta", "OR"),
-                   (1, "epsilon zeta", "AND"),
-                   (2, "w3 w5 eta theta", "OR"),
-                   (3, "w1 w2 w4 iota", "OR")], k=5).count()
-        from ..operators import search as _S
-        from ..operators.spans import span_near as _sn
-
-        _S.search_or(midx, "alpha beta", k=5).collect()
-        _S.search_phrase(midx, "alpha beta", k=5, slop=1).collect()
-        _sn(midx, "alpha beta", slop=2, in_order=True, k=5).collect()
-        toks = _D.ws_tokens(mini, key_col="key", text_col="text")
-        _D.lsh_candidate_pairs(
-            _D.minhash_signatures(toks, shingle_n=3)).count()
-        midx.postings.unpersist()
     except Exception:
-        pass  # warm-up is best-effort; never block a session on it
+        # warm-up is best-effort and never blocks a session, but a failure
+        # is reported, not swallowed
+        log.warning("session warm-up failed", exc_info=True)
     finally:
         sc.setJobDescription(desc)
 

@@ -39,3 +39,15 @@ def test_vectorized_path_unchanged_for_batches():
     ref = score_tf(s.weight_value(42, 1.0), tf,
                    s.cache[nb.astype(np.int64) & 0xFF])
     assert out.tobytes() == ref.tobytes()
+
+
+def test_single_freq_broadcasts_over_norm_bytes():
+    """A 1-element freq against n norm bytes is not the scalar case: it
+    broadcasts to n scores, exactly like score_tf."""
+    s = Bm25Stats(5000, 90000)
+    nb = np.array([3, 200, 118, 255])
+    out = s.score(42, np.array([7]), nb)
+    ref = score_tf(s.weight_value(42, 1.0), np.array([7]),
+                   s.cache[nb.astype(np.int64) & 0xFF])
+    assert out.shape == (4,)
+    assert out.tobytes() == ref.tobytes()

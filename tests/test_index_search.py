@@ -186,6 +186,13 @@ def test_search_after_pagination(index, oracle):
     last = page1[-1]
     page2 = rows_to_pairs(S.search_after(index, q, 5, last[1], last[0]))
     assert_rank_identical(page2, full[5:10])
+    # a repeated term is a repeated clause: the cursor page must continue
+    # search_or's ranking, multiplicity included
+    q = "caresses caresses ponies"
+    full = rows_to_pairs(S.search_or(index, q, k=10))
+    last = full[4]
+    page2 = rows_to_pairs(S.search_after(index, q, 5, last[1], last[0]))
+    assert page2 == full[5:10]
 
 
 def test_phrase_query(index, oracle, corpus):

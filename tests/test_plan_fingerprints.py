@@ -1,0 +1,129 @@
+"""Plan-shape fingerprints of the query entry points.
+
+Each entry point runs once on a tiny index (500 generated pages, the size
+of the sf0.001 documents table); the counts of Exchange, Window, join,
+Python-exec and TakeOrderedAndProject nodes in its executed (final
+adaptive) plan are compared with ``plan_fingerprints.json``.  A count may
+fall but never rise: a plan regression then fails here instead of
+showing up as benchmark noise.
+
+Print the current counts as JSON (to refresh the file after a deliberate
+plan improvement) with::
+
+    python tests/test_plan_fingerprints.py
+"""
+
+import json
+import os
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from lucene_solr_old_spark.operators import search as S  # noqa: E402
+from lucene_solr_old_spark.operators import wand as W  # noqa: E402
+from lucene_solr_old_spark.operators.batch import batch_search  # noqa: E402
+from lucene_solr_old_spark.operators.indexer import (  # noqa: E402
+    build_index, compress_index)
+from lucene_solr_old_spark.sources.pages import (  # noqa: E402
+    PAGES_SCHEMA, gen_pages)
+
+BASELINE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "plan_fingerprints.json")
+KINDS = ("exchange", "window", "join", "python", "take_ordered")
+QUERY = "running meetings caresses"
+BATCH = [(0, "running meetings", "OR"), (1, "caresses ponies", "AND"),
+         (2, "relational hopeful running", "OR"),
+         (3, "running running meetings", "OR")]
+
+
+def _kind(node: str) -> str | None:
+    if node in ("Exchange", "BroadcastExchange"):
+        return "exchange"
+    if node == "Window":
+        return "window"
+    if node.endswith("Join") or node == "CartesianProduct":
+        return "join"
+    if "Python" in node or "InPandas" in node or "InArrow" in node:
+        return "python"
+    if node == "TakeOrderedAndProject":
+        return "take_ordered"
+    return None
+
+
+def _walk(node, counts: dict[str, int]) -> None:
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _walk(node.executedPlan(), counts)  # the final plan
+    if name.endswith("QueryStage"):
+        # a stage's plan is not a child; a cached relation's build plan
+        # (under InMemoryTableScan) is neither, so it is not counted
+        return _walk(node.plan(), counts)
+    kind = _kind(name)
+    if kind:
+        counts[kind] += 1
+    children = node.children().iterator()
+    while children.hasNext():
+        _walk(children.next(), counts)
+
+
+def plan_counts(df) -> dict[str, int]:
+    """Run ``df`` and count node kinds in its executed physical plan."""
+    df.collect()
+    counts = dict.fromkeys(KINDS, 0)
+    _walk(df._jdf.queryExecution().executedPlan(), counts)
+    return counts
+
+
+def entry_points(plain, comp) -> dict:
+    first = S.search_or(plain, QUERY, k=5).collect()
+    after = (float(first[-1]["score"]), first[-1]["key"])
+    return {
+        "search_or": lambda: S.search_or(plain, QUERY, k=10),
+        "search_and": lambda: S.search_and(plain, "running meetings", k=10),
+        "search_dismax": lambda: S.search_dismax(plain, QUERY, k=10,
+                                                 tie_breaker=0.3),
+        "search_after": lambda: S.search_after(plain, QUERY, 5, *after),
+        "wand_search_or": lambda: W.wand_search(comp, QUERY, k=10),
+        "wand_search_and": lambda: W.wand_search(
+            comp, "running meetings", k=10, mode="AND"),
+        "batch_search": lambda: batch_search(plain, BATCH, k=10),
+        "batch_wand_search": lambda: W.batch_wand_search(comp, BATCH, k=10),
+    }
+
+
+def build(spark):
+    df = spark.createDataFrame(gen_pages(500, seed=5), schema=PAGES_SCHEMA)
+    plain = build_index(df, num_segments=4).persist()
+    comp = compress_index(plain).persist()
+    comp.postings.count()
+    return plain, comp
+
+
+@pytest.fixture(scope="module")
+def fingerprints(spark):
+    plain, comp = build(spark)
+    return {name: plan_counts(make()) for name, make
+            in entry_points(plain, comp).items()}
+
+
+def test_plan_fingerprints_do_not_grow(fingerprints):
+    with open(BASELINE) as f:
+        ceiling = json.load(f)
+    assert set(fingerprints) == set(ceiling)
+    grown = {name: (kind, ceiling[name][kind], got[kind])
+             for name, got in fingerprints.items() for kind in KINDS
+             if got[kind] > ceiling[name][kind]}
+    assert not grown, grown
+
+
+if __name__ == "__main__":
+    from lucene_solr_old_spark.session import get_spark
+
+    spark = get_spark("plan-fingerprints", master="local[4]",
+                      shuffle_partitions=8)
+    plain, comp = build(spark)
+    print(json.dumps({name: plan_counts(make()) for name, make
+                      in entry_points(plain, comp).items()}, indent=1))
+    spark.stop()
