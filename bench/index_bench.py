@@ -2,9 +2,9 @@
 
     spark-submit --master local[N] --py-files <engine.zip> \
         bench/index_bench.py --input <pages parquet> --out <index dir> \
-        [--segments S] [--salt 8] [--shuffle P] [--compress]
+        [--segments S] [--shuffle P] [--compress]
 
-Times extract (html->text) -> analyze -> invert -> aggregate ->
+Times extract (html->text) -> analyze -> invert ->
 [encode ->] write segments, excluding corpus generation (BASELINE.md
 protocol).  Prints one JSON line with docs/sec.
 """
@@ -27,7 +27,6 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--segments", type=int, default=32)
-    ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--shuffle", type=int, default=64)
     ap.add_argument("--compress", action="store_true")
     ap.add_argument("--nosave", action="store_true")
@@ -57,7 +56,6 @@ def main() -> None:
     t0 = time.time()
     idx = build_index(docs, key_col="url", html_col="html",
                       num_segments=args.segments, analyzer="english",
-                      salt_partitions=args.salt,
                       persist_termdoc=not args.nopersist,
                       route=args.route)
     if args.compress:

@@ -1,15 +1,12 @@
-"""Analysis operators: row -> analyzed term-doc rows, as Arrow-batched UDFs.
+"""Analysis operators: documents -> finished posting lists (Arrow UDFs).
 
 The Spark restatement of the reference indexing chain's analysis+inversion
 steps (``DocInverterPerField.processFields`` ->
 ``FreqProxTermsWriterPerField.newTerm/addTerm``; SURVEY.md §3.1): each Spark
 partition plays the role of a DocumentsWriterPerThread — documents are
-analyzed and locally inverted with no cross-task coordination.  The fused
-default (make_fused_postings_partition) finishes the whole inversion in
-the partition, so the build's ONLY exchange is the doc-routing
-repartition; the term-doc variant (make_analyze_partition) feeds the
-groupBy(seg, term) aggregation instead (the larger-than-memory-segment
-fallback).
+analyzed and inverted with no cross-task coordination.  The fused stage
+(make_fused_postings_partition) finishes the whole inversion in the
+partition, so the build's only exchange is the doc-routing repartition.
 
 Everything is mapInPandas (Arrow batches); no per-row Python UDFs
 (BASELINE.json input_hint mandate).
@@ -17,7 +14,6 @@ Everything is mapInPandas (Arrow batches); no per-row Python UDFs
 
 from __future__ import annotations
 
-from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -25,112 +21,6 @@ import pandas as pd
 
 from ..functions.htmlstrip import html_to_text
 from ..functions.smallfloat import doclen_to_norm
-
-# Output schema of analyze_partition: one row per (doc, distinct term),
-# doc metadata repeated on each term row (docmeta is later distilled by a
-# cheap distinct on (seg, docid)).
-TERMDOC_SCHEMA = (
-    "seg INT, docid INT, key STRING, doclen INT, norm INT, "
-    "term STRING, freq INT, positions ARRAY<INT>"
-)
-
-# IndexOptions.DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS: per-occurrence
-# char offsets ride along in the postings (what PostingsHighlighter reads
-# instead of re-analyzing — ``postingshighlight/PostingsHighlighter.java``)
-TERMDOC_SCHEMA_OFFSETS = TERMDOC_SCHEMA + ", starts ARRAY<INT>, ends ARRAY<INT>"
-
-EXTRACT_SCHEMA_SUFFIX = ", text STRING"
-
-
-def make_analyze_partition(key_col: str, text_col: str, seg_col: str = "seg",
-                           with_positions: bool = True,
-                           analyzer: str = "english",
-                           html_input: bool = False,
-                           with_offsets: bool = False):
-    """Returns a mapInPandas function assigning segment-local docIDs.
-
-    Input partitions MUST be sorted by ``key_col`` (the caller does
-    repartitionByRange + sortWithinPartitions) so docIDs are deterministic
-    under any parallelism: docid = rank of key within segment
-    (SURVEY.md §7 P2 — reference docIDs are insertion-order artifacts, ours
-    are sort-derived).
-    """
-
-    from ..functions.tokenizer import get_analyzer
-    analyze_fn = get_analyzer(analyzer)
-
-    def analyze_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        next_docid = 0  # running counter across Arrow batches of ONE partition
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            segs = pdf[seg_col].to_numpy()
-            keys = pdf[key_col].to_numpy()
-            texts = pdf[text_col].to_numpy()
-            out_seg, out_docid, out_key = [], [], []
-            out_dl, out_norm, out_term, out_freq, out_pos = [], [], [], [], []
-            out_starts, out_ends = [], []
-            for i in range(n):
-                docid = next_docid
-                next_docid += 1
-                raw = texts[i]
-                if html_input:
-                    # extraction fused into this pass: one Python stage,
-                    # html bytes never cross a second Arrow boundary
-                    raw = html_to_text(raw) if raw is not None else ""
-                toks = analyze_fn(raw if raw is not None else "")
-                doclen = len(toks)
-                norm = int(doclen_to_norm(doclen))
-                if doclen == 0:
-                    # token-less docs still occupy a docID (Lucene counts
-                    # them in maxDoc); sentinel row with NULL term.
-                    out_seg.append(segs[i]); out_docid.append(docid)
-                    out_key.append(keys[i]); out_dl.append(0)
-                    out_norm.append(norm); out_term.append(None)
-                    out_freq.append(0); out_pos.append([] if with_positions else None)
-                    if with_offsets:
-                        out_starts.append([]); out_ends.append([])
-                    continue
-                if with_positions or with_offsets:
-                    per_term: dict[str, list] = {}
-                    for t in toks:
-                        per_term.setdefault(t.term, []).append(t)
-                    items = ((term, len(ts), ts) for term, ts in per_term.items())
-                else:
-                    counts = Counter(t.term for t in toks)
-                    items = ((term, c, None) for term, c in counts.items())
-                for term, freq, ts in items:
-                    out_seg.append(segs[i])
-                    out_docid.append(docid)
-                    out_key.append(keys[i])
-                    out_dl.append(doclen)
-                    out_norm.append(norm)
-                    out_term.append(term)
-                    out_freq.append(freq)
-                    out_pos.append([t.pos for t in ts]
-                                   if (with_positions and ts is not None)
-                                   else (None if not with_positions else []))
-                    if with_offsets:
-                        out_starts.append([t.start for t in ts])
-                        out_ends.append([t.end for t in ts])
-            cols = {
-                "seg": np.asarray(out_seg, dtype=np.int32),
-                "docid": np.asarray(out_docid, dtype=np.int32),
-                "key": out_key,
-                "doclen": np.asarray(out_dl, dtype=np.int32),
-                "norm": np.asarray(out_norm, dtype=np.int32),
-                "term": out_term,
-                "freq": np.asarray(out_freq, dtype=np.int32),
-                "positions": out_pos,
-            }
-            if with_offsets:
-                cols["starts"] = out_starts
-                cols["ends"] = out_ends
-            yield pd.DataFrame(cols)
-
-    return analyze_partition
-
 
 def make_html_extractor(html_col: str = "html"):
     """mapInPandas stage: html binary -> extracted text column appended.
@@ -165,16 +55,45 @@ FUSED_SCHEMA = (
     "poss ARRAY<ARRAY<INT>>"
 )
 
+# IndexOptions.DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS: per-occurrence
+# char offsets ride along in the postings (what PostingsHighlighter reads
+# instead of re-analyzing — ``postingshighlight/PostingsHighlighter.java``)
+FUSED_SCHEMA_OFFSETS = (
+    FUSED_SCHEMA + ", starts ARRAY<ARRAY<INT>>, ends ARRAY<ARRAY<INT>>")
+
+
+def _offsets_inverter(analyzer: str):
+    """(term -> (positions, starts, ends), doclen) from the analyzer's
+    token stream — the only form that still carries char offsets."""
+    from ..functions.tokenizer import get_analyzer
+    analyze_fn = get_analyzer(analyzer)
+
+    def inverted(text: str):
+        per: dict[str, tuple] = {}
+        toks = analyze_fn(text)
+        for t in toks:
+            slot = per.get(t.term)
+            if slot is None:
+                slot = per[t.term] = ([], [], [])
+            slot[0].append(t.pos)
+            slot[1].append(t.start)
+            slot[2].append(t.end)
+        return per, len(toks)
+
+    return inverted
+
 
 def make_fused_postings_partition(key_col: str, text_col: str,
                                   seg_col: str = "seg",
                                   with_positions: bool = True,
                                   analyzer: str = "english",
                                   html_input: bool = False,
+                                  with_offsets: bool = False,
                                   emit_chunk: int = 50_000):
     """mapInPandas stage: analyze + FULLY invert a whole partition
     (= segment) in memory, emitting finished docID-sorted posting lists —
-    no term shuffle at all.
+    no term shuffle at all.  Output schema: ``FUSED_SCHEMA``, or
+    ``FUSED_SCHEMA_OFFSETS`` with ``with_offsets``.
 
     This is exactly the reference's DocumentsWriterPerThread in-memory
     inversion (``FreqProxTermsWriterPerField.java:100-239``): a segment's
@@ -186,18 +105,22 @@ def make_fused_postings_partition(key_col: str, text_col: str,
 
     Memory bound: one segment's postings must fit the Python worker
     (Lucene bounds the same structure with the flush policy / 5 GB max
-    merged segment).  For larger-than-memory segments use the groupBy
-    path (build_index(fused=False)).
+    merged segment); see ``build_index`` for the settings that make
+    segments smaller.
     """
 
-    from ..functions.tokenizer import get_inverted_analyzer
-    invert_fn = get_inverted_analyzer(analyzer)
+    if with_offsets:
+        invert_fn = _offsets_inverter(analyzer)
+    else:
+        from ..functions.tokenizer import get_inverted_analyzer
+        invert_fn = get_inverted_analyzer(analyzer)
 
     def fused_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         next_docid = 0
         seg = None
         meta_rows: list[tuple] = []       # (docid, key, doclen, norm)
-        # term -> ([docids], [freqs], [norms], [positions-lists])
+        # term -> ([docids], [freqs], [norms], [positions-lists]
+        #          [, [starts-lists], [ends-lists]])
         inv: dict[str, tuple] = {}
         for pdf in batches:
             n = len(pdf)
@@ -221,8 +144,13 @@ def make_fused_postings_partition(key_col: str, text_col: str,
                 for term, ps in per_term.items():
                     slot = inv.get(term)
                     if slot is None:
-                        slot = ([], [], [], [])
+                        slot = (([], [], [], [], [], []) if with_offsets
+                                else ([], [], [], []))
                         inv[term] = slot
+                    if with_offsets:
+                        ps, starts, ends = ps
+                        slot[4].append(starts)
+                        slot[5].append(ends)
                     slot[0].append(docid)
                     slot[1].append(len(ps))
                     slot[2].append(norm)
@@ -230,7 +158,7 @@ def make_fused_postings_partition(key_col: str, text_col: str,
         if seg is None:
             return
         nm = len(meta_rows)
-        yield pd.DataFrame({
+        meta = {
             "seg": np.full(nm, seg, dtype=np.int32),
             "docid": np.asarray([m[0] for m in meta_rows], dtype=np.int32),
             "key": [m[1] for m in meta_rows],
@@ -243,13 +171,16 @@ def make_fused_postings_partition(key_col: str, text_col: str,
             "freqs": [None] * nm,
             "norms": [None] * nm,
             "poss": [None] * nm,
-        })
+        }
+        if with_offsets:
+            meta["starts"] = meta["ends"] = [None] * nm
+        yield pd.DataFrame(meta)
         terms = list(inv.keys())
         for lo in range(0, len(terms), emit_chunk):
             chunk = terms[lo:lo + emit_chunk]
             slots = [inv[t] for t in chunk]
             nc = len(chunk)
-            yield pd.DataFrame({
+            rows = {
                 "seg": np.full(nc, seg, dtype=np.int32),
                 "docid": np.zeros(nc, dtype=np.int32),
                 "key": [None] * nc,
@@ -263,6 +194,10 @@ def make_fused_postings_partition(key_col: str, text_col: str,
                 "freqs": [s[1] for s in slots],
                 "norms": [s[2] for s in slots],
                 "poss": [s[3] if with_positions else None for s in slots],
-            })
+            }
+            if with_offsets:
+                rows["starts"] = [s[4] for s in slots]
+                rows["ends"] = [s[5] for s in slots]
+            yield pd.DataFrame(rows)
 
     return fused_partition

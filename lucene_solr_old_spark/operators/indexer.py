@@ -7,14 +7,10 @@ Spark-first restatement of the reference build pipeline (SURVEY.md §3.1):
     a deterministic segment-local docID (= rank of key within segment) under
     ANY parallelism — the engine's substitute for Lucene's insertion-order
     docIDs (``index/DocumentsWriterPerThread.java``);
-  * analysis + local inversion run inside ``mapInPandas`` with no shuffle;
-  * the ONE shuffle of the build is ``groupBy(seg, term)`` building
-    docID-sorted posting lists (``FreqProxTermsWriterPerField.java:100-239``'s
-    in-memory postings, re-expressed as a Spark aggregation);
-  * optional salted two-phase aggregation splits head terms into
-    ``docid % salt`` sub-keys and re-merges — build-time skew handling for
-    Zipf head terms (north_rule; the CommonTermsQuery high-df split idea at
-    build time, ``queries/CommonTermsQuery.java``);
+  * analysis AND inversion run in one ``mapInPandas`` stage per segment,
+    which emits finished docID-sorted posting lists
+    (``FreqProxTermsWriterPerField.java:100-239``'s in-memory postings), so
+    the doc-routing repartition is the build's only shuffle;
   * per-segment stats (maxDoc, sumTotalTermFreq) == the term dict's
     FieldSummary (``codecs/BlockTreeTermsWriter.java:113-117``).
 
@@ -26,12 +22,13 @@ we inline them — same data, join-free plan).
 from __future__ import annotations
 
 import os
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .analysis import (TERMDOC_SCHEMA, TERMDOC_SCHEMA_OFFSETS,
-                       make_analyze_partition)
+from .analysis import (FUSED_SCHEMA, FUSED_SCHEMA_OFFSETS,
+                       make_fused_postings_partition)
 
 __all__ = ["InvertedIndex", "build_index", "load_index"]
 
@@ -253,8 +250,11 @@ class InvertedIndex:
             # re-derived from the stored docmeta): keep_stats=True
             # delete-masked indexes carry intentionally-stale stats
             # (Lucene's deleted-doc over-counting, merge.py:249) that a
-            # fresh aggregation would erase.
-            self.segstats.write.mode(mode).parquet(
+            # fresh aggregation would erase.  Seg-partitioned like the
+            # streaming flush writes it: Spark reads only the seg= dirs of
+            # a table that mixes them with plain files, so a flush into
+            # this directory would otherwise hide these segments' stats.
+            self.segstats.write.mode(mode).partitionBy("seg").parquet(
                 os.path.join(path, "segstats"))
             if mode == "overwrite":
                 self._write_terms_dict(path, mode)
@@ -263,7 +263,7 @@ class InvertedIndex:
                 # longer cover the new segments' terms); drop it so
                 # load_index falls back to the lazily-aggregated dict
                 # instead of silently losing new terms from expansions
-                _drop_stored_terms_dict(path)
+                _drop_stored_terms_dict(self.postings.sparkSession, path)
                 self._terms_dict = None
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "index_meta.json"), "w") as f:
@@ -273,14 +273,14 @@ class InvertedIndex:
                        "compressed": "blocks" in self.postings.columns}, f)
 
 
-def _drop_stored_terms_dict(path: str) -> None:
-    """Remove a stored terms_dict that an append has made stale (local
-    filesystem, matching index_meta.json's existing locality assumption)."""
-    import shutil
-
-    td = os.path.join(path, "terms_dict")
-    if os.path.isdir(td):
-        shutil.rmtree(td, ignore_errors=True)
+def _drop_stored_terms_dict(spark: SparkSession, path: str) -> None:
+    """Remove a stored terms_dict that an append has made stale, through
+    the Hadoop FileSystem of ``path`` (any scheme Spark writes to)."""
+    jvm = spark.sparkContext._jvm
+    td = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "terms_dict"))
+    fs = td.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(td) and not fs.delete(td, True):
+        raise OSError(f"could not delete stale terms_dict at {td}")
 
 
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:
@@ -306,16 +306,6 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
     return idx
 
 
-def _posting_struct(with_positions: bool, with_offsets: bool = False):
-    cols = [F.col("docid"), F.col("freq"), F.col("norm")]
-    if with_positions:
-        cols.append(F.col("positions"))
-    if with_offsets:
-        cols.append(F.col("starts"))
-        cols.append(F.col("ends"))
-    return F.struct(*cols)
-
-
 def build_index(
     docs: DataFrame,
     key_col: str = "url",
@@ -327,31 +317,35 @@ def build_index(
     analyzer: str = "english",
     persist_termdoc: bool = True,
     with_offsets: bool = False,
-    fused: bool | None = None,
     route: str = "hash",
 ) -> InvertedIndex:
     """Build the inverted index.
 
-    Plan shape, DEFAULT (``fused=True``) — ONE shuffle total:
+    Plan shape — at most ONE shuffle:
       1. hash-repartition by doc key (deterministic for a fixed
          ``num_segments`` under any input parallelism — the murmur3 doc
          routing analogue) + sortWithinPartitions(key): segment membership
          and segment-local docID (= key rank) are reproducible;
       2. ONE fused Arrow stage per partition: [html->text] -> analyze ->
-         FULL in-memory inversion -> finished docID-sorted posting lists +
+         FULL in-memory inversion -> finished docID-sorted posting lists
+         (with per-occurrence char offsets when ``with_offsets``) +
          docmeta sentinel rows (analysis.make_fused_postings_partition).
          A (seg, term) posting list is complete partition-locally because
-         the whole segment IS the partition, so the term-grouping shuffle
-         of the unfused plan is pure waste — this is the
-         DocumentsWriterPerThread RAM inversion, and it makes build
-         data movement exactly one exchange at any scale.
+         the whole segment IS the partition — this is the
+         DocumentsWriterPerThread RAM inversion, and it makes build data
+         movement at most one exchange at any scale.
 
-    ``fused=False`` (or with_offsets=True, which the fused stage doesn't
-    carry yet) falls back to the two-shuffle plan: analyze -> term-doc
-    rows -> groupBy(seg, term) aggregation, with ``salt_partitions > 0``
-    enabling two-phase salted aggregation for head-term skew.  Use it when
-    one segment's postings exceed Python-worker memory (the fused bound;
-    Lucene bounds the same structure with its flush policy).
+    One segment's postings must fit one Python worker's memory.  A segment
+    too large for that is split into more units of work with the existing
+    settings: more ``num_segments`` on the hash route, or more input
+    partitions with ``route="none"``.  Query results do not depend on the
+    segmentation (global stats).
+
+    ``salt_partitions`` is deprecated and ignored (the build has no term
+    shuffle to salt); a non-zero value warns.
+
+    ``persist_termdoc`` caches the fused stage's output, so the postings
+    and docmeta actions analyze the corpus once.
 
     ``route`` picks the doc->segment assignment:
       * ``"hash"`` (default) — one repartition by doc key: segment
@@ -364,13 +358,15 @@ def build_index(
         routing at all; ``index/DocumentsWriterFlushControl``).  Query
         results are IDENTICAL to any other segmentation (global stats);
         only the internal seg/docid labels differ, so use it when
-        reproducible labels don't matter — with ``fused``, the whole
-        build then moves data zero times before the segment write.
+        reproducible labels don't matter — the whole build then moves
+        data zero times before the segment write.
     """
-    if fused is None:
-        fused = not with_offsets
     if route not in ("hash", "none"):
         raise ValueError("route must be 'hash' or 'none'")
+    if salt_partitions:
+        warnings.warn("build_index(salt_partitions=...) is ignored: the "
+                      "build has no term shuffle to salt",
+                      DeprecationWarning, stacklevel=2)
     if html_col is not None:
         base = docs.select(F.col(key_col).alias("key"),
                            F.col(html_col).alias("text"))
@@ -389,103 +385,30 @@ def build_index(
             .withColumn("seg", F.spark_partition_id())
         )
 
-    if fused and not with_offsets:
-        from .analysis import FUSED_SCHEMA, make_fused_postings_partition
-
-        out = parted.mapInPandas(
-            make_fused_postings_partition(
-                "key", "text", with_positions=with_positions,
-                analyzer=analyzer, html_input=html_input),
-            schema=FUSED_SCHEMA,
-        )
-        if persist_termdoc:
-            out = out.persist()
-        # reassemble struct arrays JVM-side from the parallel primitive
-        # arrays (arrays_zip names struct fields after the aliases)
-        zip_cols = [F.col("docids").alias("docid"),
-                    F.col("freqs").alias("freq"),
-                    F.col("norms").alias("norm")]
-        if with_positions:
-            zip_cols.append(F.col("poss").alias("positions"))
-        postings = out.where(F.col("term").isNotNull()).select(
-            "seg", "term", "df", "ttf",
-            F.arrays_zip(*zip_cols).alias("postings"))
-        docmeta = out.where(F.col("term").isNull()).select(
-            "seg", "docid", "key", "doclen", "norm")
-        segstats = docmeta.groupBy("seg").agg(
-            F.count("*").alias("max_doc"),
-            F.sum("doclen").alias("sum_ttf"),
-        )
-        return InvertedIndex(postings, docmeta, segstats, with_positions,
-                             analyzer, False)
-    # with_offsets stores per-occurrence char offsets in the postings
-    # (IndexOptions ..._AND_OFFSETS — the PostingsHighlighter input); note
-    # the merge/delete paths strip offsets (positions-only rebuild).
-    termdoc = parted.mapInPandas(
-        make_analyze_partition("key", "text", with_positions=with_positions,
-                               analyzer=analyzer, html_input=html_input,
-                               with_offsets=with_offsets),
-        schema=TERMDOC_SCHEMA_OFFSETS if with_offsets else TERMDOC_SCHEMA,
+    out = parted.mapInPandas(
+        make_fused_postings_partition(
+            "key", "text", with_positions=with_positions,
+            analyzer=analyzer, html_input=html_input,
+            with_offsets=with_offsets),
+        schema=FUSED_SCHEMA_OFFSETS if with_offsets else FUSED_SCHEMA,
     )
     if persist_termdoc:
-        # avoids re-analyzing for the docmeta/segstats actions, at the cost
-        # of pushing the analyzed stream through the block store (disk at
-        # scale) — for one-shot build+save jobs recompute is often cheaper
-        termdoc = termdoc.persist()
-
-    # partition-local distinct: all rows of a doc are in one partition and
-    # docid-ordered; carry the last docid across Arrow batches.
-    def _dedup_meta(batches):
-        import pandas as pd
-        last = None
-        for pdf in batches:
-            sub = pdf[["seg", "docid", "key", "doclen", "norm"]]
-            sub = sub[sub["docid"] != sub["docid"].shift(1)]
-            if last is not None and len(sub) and sub["docid"].iloc[0] == last:
-                sub = sub.iloc[1:]
-            if len(sub):
-                last = int(sub["docid"].iloc[-1])
-                yield sub
-
-    docmeta = termdoc.mapInPandas(
-        _dedup_meta,
-        schema="seg INT, docid INT, key STRING, doclen INT, norm INT")
-    # token-less docs carry a NULL-term sentinel row (analysis.py) so they
-    # keep a dense docID and count in maxDoc; drop sentinels from postings.
-    termdoc = (termdoc.where(F.col("term").isNotNull())
-               .drop("key", "doclen"))
-
-    pstruct = _posting_struct(with_positions, with_offsets)
-    if salt_partitions and salt_partitions > 1:
-        # phase 1: partial sorted lists per (seg, term, docid % salt)
-        partial = (
-            termdoc.groupBy("seg", "term",
-                            F.pmod(F.col("docid"), F.lit(salt_partitions)).alias("_salt"))
-            .agg(
-                F.count("*").alias("pdf"),
-                F.sum("freq").alias("pttf"),
-                F.sort_array(F.collect_list(pstruct)).alias("plist"),
-            )
-        )
-        # phase 2: merge partials (salt classes interleave -> re-sort by docid)
-        postings = (
-            partial.groupBy("seg", "term")
-            .agg(
-                F.sum("pdf").cast("int").alias("df"),
-                F.sum("pttf").cast("long").alias("ttf"),
-                F.array_sort(F.flatten(F.collect_list("plist"))).alias("postings"),
-            )
-        )
-    else:
-        postings = (
-            termdoc.groupBy("seg", "term")
-            .agg(
-                F.count("*").cast("int").alias("df"),
-                F.sum("freq").cast("long").alias("ttf"),
-                F.sort_array(F.collect_list(pstruct)).alias("postings"),
-            )
-        )
-
+        out = out.persist()
+    # reassemble struct arrays JVM-side from the parallel primitive
+    # arrays (arrays_zip names struct fields after the aliases); the
+    # merge/delete paths rebuild postings without the offsets
+    zip_cols = [F.col("docids").alias("docid"),
+                F.col("freqs").alias("freq"),
+                F.col("norms").alias("norm")]
+    if with_positions:
+        zip_cols.append(F.col("poss").alias("positions"))
+    if with_offsets:
+        zip_cols += [F.col("starts"), F.col("ends")]
+    postings = out.where(F.col("term").isNotNull()).select(
+        "seg", "term", "df", "ttf",
+        F.arrays_zip(*zip_cols).alias("postings"))
+    docmeta = out.where(F.col("term").isNull()).select(
+        "seg", "docid", "key", "doclen", "norm")
     segstats = docmeta.groupBy("seg").agg(
         F.count("*").alias("max_doc"),
         F.sum("doclen").alias("sum_ttf"),

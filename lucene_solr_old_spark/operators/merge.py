@@ -17,12 +17,13 @@ Defaults mirror the reference: maxMergeAtOnce=10, segsPerTier=10,
 floor=2MB, maxMergedSegment=5GB, reclaimDeletesWeight=2
 (``TieredMergePolicy.java:81-88``).
 
-The merge job itself is the Spark restatement of ``SegmentMerger.merge()``
-(``index/SegmentMerger.java:85-135``): docIDs are rebased per source
-segment (``MergeState.DocMap``), deleted docs dropped and the survivors
-renumbered densely, posting lists concatenated in rebased-docID order
-(no re-sort needed: source lists are docid-sorted and rebased ranges are
-disjoint and ordered), per-term stats re-summed.
+The merge job (``merge_many``; ``merge_segments`` and ``force_merge`` are
+one-group calls of it) is the Spark restatement of
+``SegmentMerger.merge()`` (``index/SegmentMerger.java:85-135``): docIDs are
+rebased per source segment (``MergeState.DocMap``), deleted docs dropped
+and the survivors renumbered densely, posting lists regrouped in
+rebased-docID order and per-term stats re-summed.  ``delete_docs`` shares
+the explode -> regroup half of it.
 """
 
 from __future__ import annotations
@@ -131,12 +132,27 @@ class TieredMergePlanner:
         return score * (non_del ** self.reclaim_deletes_weight)
 
 
-def _posting_cols(with_positions: bool):
-    cols = [F.col("p.docid").alias("docid"), F.col("p.freq").alias("freq"),
-            F.col("p.norm").alias("norm")]
-    if with_positions:
-        cols.append(F.col("p.positions").alias("positions"))
-    return cols
+def _posting_fields(with_positions: bool) -> list[str]:
+    """Fields of a rebuilt posting struct (offsets are not carried)."""
+    return ["docid", "freq", "norm"] + (["positions"] if with_positions
+                                        else [])
+
+
+def _explode_postings(postings: DataFrame, fields: list[str]) -> DataFrame:
+    """One row per posting: (seg, term, *fields)."""
+    return (postings.select("seg", "term", F.explode("postings").alias("p"))
+            .select("seg", "term",
+                    *[F.col(f"p.{c}").alias(c) for c in fields]))
+
+
+def _regroup_postings(rows: DataFrame, fields: list[str]) -> DataFrame:
+    """Inverse of :func:`_explode_postings`: docID-sorted posting lists per
+    (seg, term), with df/ttf re-summed."""
+    return (rows.groupBy("seg", "term")
+            .agg(F.count("*").cast("int").alias("df"),
+                 F.sum("freq").cast("long").alias("ttf"),
+                 F.sort_array(F.collect_list(F.struct(*fields)))
+                 .alias("postings")))
 
 
 def merge_segments(index: InvertedIndex, seg_ids: list[int],
@@ -149,66 +165,7 @@ def merge_segments(index: InvertedIndex, seg_ids: list[int],
     Returns a NEW InvertedIndex whose postings/docmeta have the merged
     segment replacing the sources (other segments pass through untouched).
     """
-    wp = index.with_positions
-    in_merge = F.col("seg").isin(seg_ids)
-
-    # --- docmeta: drop deletes, renumber densely in (seg, docid) order ----
-    # MergeState.DocMap semantics without a global sort: per-source-segment
-    # live counts -> driver-side prefix-sum base offsets (k tiny values) ->
-    # new_docid = base[seg] + rank within segment.  The window partitions by
-    # source segment, so renumbering parallelizes across segments instead of
-    # funnelling every surviving row through one task (the reference maps
-    # docids per-reader the same way: ``index/MergeState.java DocMap``).
-    src_meta = index.docmeta.where(in_merge)
-    if deleted_keys is not None:
-        src_meta = src_meta.join(deleted_keys, "key", "left_anti")
-    counts = {r["seg"]: r["n"] for r in
-              src_meta.groupBy("seg").agg(F.count("*").alias("n")).collect()}
-    base, acc = {}, 0
-    for s in sorted(counts):
-        base[s] = acc
-        acc += counts[s]
-    base_col = F.create_map(*[x for s, b in base.items()
-                              for x in (F.lit(s), F.lit(b))])
-    w = Window.partitionBy("seg").orderBy("docid")
-    docmap = src_meta.select(
-        "seg", "docid",
-        (base_col[F.col("seg")] + F.row_number().over(w) - 1)
-        .cast("int").alias("new_docid"),
-    )
-    new_meta = (src_meta.join(docmap, ["seg", "docid"])
-                .select(F.lit(target_seg).alias("seg"),
-                        F.col("new_docid").alias("docid"),
-                        "key", "doclen", "norm"))
-
-    # --- postings: explode sources, remap docids, re-aggregate ------------
-    src_posts = (index.postings.where(in_merge)
-                 .select("seg", "term", F.explode("postings").alias("p"))
-                 .select("seg", "term", *_posting_cols(wp)))
-    remapped = (src_posts.join(docmap, ["seg", "docid"])
-                .drop("docid").withColumnRenamed("new_docid", "docid"))
-    pcols = [F.col("docid"), F.col("freq"), F.col("norm")]
-    if wp:
-        pcols.append(F.col("positions"))
-    new_posts = (remapped.groupBy("term")
-                 .agg(F.count("*").cast("int").alias("df"),
-                      F.sum("freq").cast("long").alias("ttf"),
-                      F.sort_array(F.collect_list(F.struct(*pcols)))
-                      .alias("postings"))
-                 .select(F.lit(target_seg).alias("seg"), "term", "df", "ttf",
-                         "postings"))
-
-    new_stats = new_meta.groupBy("seg").agg(
-        F.count("*").alias("max_doc"), F.sum("doclen").alias("sum_ttf"))
-
-    keep = ~in_merge
-    return InvertedIndex(
-        postings=index.postings.where(keep).unionByName(new_posts),
-        docmeta=index.docmeta.where(keep).unionByName(new_meta),
-        segstats=index.segstats.where(keep).unionByName(new_stats),
-        with_positions=wp,
-        analyzer=index.analyzer,
-    )
+    return merge_many(index, [seg_ids], [target_seg], deleted_keys)
 
 
 def delete_docs(index: InvertedIndex, deleted_keys: DataFrame,
@@ -234,18 +191,10 @@ def delete_docs(index: InvertedIndex, deleted_keys: DataFrame,
     live_meta = index.docmeta.join(deleted_keys, "key", "left_anti")
     live_ids = live_meta.select("seg", "docid")
     wp = index.with_positions
-    src = (index.postings
-           .select("seg", "term", F.explode("postings").alias("p"))
-           .select("seg", "term", *_posting_cols(wp)))
-    kept = src.join(live_ids, ["seg", "docid"], "left_semi")
-    pcols = [F.col("docid"), F.col("freq"), F.col("norm")]
-    if wp:
-        pcols.append(F.col("positions"))
-    new_posts = (kept.groupBy("seg", "term")
-                 .agg(F.count("*").cast("int").alias("df"),
-                      F.sum("freq").cast("long").alias("ttf"),
-                      F.sort_array(F.collect_list(F.struct(*pcols)))
-                      .alias("postings")))
+    fields = _posting_fields(wp)
+    kept = _explode_postings(index.postings, fields).join(
+        live_ids, ["seg", "docid"], "left_semi")
+    new_posts = _regroup_postings(kept, fields)
     if keep_stats:
         new_stats = index.segstats
     else:
@@ -359,8 +308,12 @@ def merge_many(index: InvertedIndex, merges: list[list[int]],
 
     ``merges``: disjoint segment-id groups (e.g. ``TieredMergePlanner.
     find_merges`` output).  ``target_segs`` defaults to each group's min
-    id.  Docids renumber densely per TARGET segment with per-source
-    offsets (no global sort — same shape as merge_segments).
+    id.  Docids renumber densely per TARGET segment: driver-side
+    prefix-sum base offsets per source segment (k tiny values) plus the
+    rank within the source segment, so renumbering parallelizes across
+    segments instead of funnelling every surviving row through one task
+    (``index/MergeState.java DocMap`` maps docids per reader the same
+    way).
     """
     if not merges:
         return index
@@ -399,21 +352,13 @@ def merge_many(index: InvertedIndex, merges: list[list[int]],
                         F.col("new_docid").alias("docid"),
                         "key", "doclen", "norm"))
 
-    src_posts = (index.postings.where(in_merge)
-                 .select("seg", "term", F.explode("postings").alias("p"))
-                 .select("seg", "term", *_posting_cols(wp)))
-    remapped = (src_posts.join(docmap, ["seg", "docid"])
+    fields = _posting_fields(wp)
+    remapped = (_explode_postings(index.postings.where(in_merge), fields)
+                .join(docmap, ["seg", "docid"])
                 .drop("seg", "docid")
                 .withColumnRenamed("tseg", "seg")
                 .withColumnRenamed("new_docid", "docid"))
-    pcols = [F.col("docid"), F.col("freq"), F.col("norm")]
-    if wp:
-        pcols.append(F.col("positions"))
-    new_posts = (remapped.groupBy("seg", "term")
-                 .agg(F.count("*").cast("int").alias("df"),
-                      F.sum("freq").cast("long").alias("ttf"),
-                      F.sort_array(F.collect_list(F.struct(*pcols)))
-                      .alias("postings")))
+    new_posts = _regroup_postings(remapped, fields)
     new_stats = new_meta.groupBy("seg").agg(
         F.count("*").alias("max_doc"), F.sum("doclen").alias("sum_ttf"))
 

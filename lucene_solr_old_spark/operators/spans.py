@@ -17,7 +17,7 @@
     query's terms are split at a document-frequency threshold; low-df terms
     drive matching (disjunction), high-df (stopword-like) terms only add
     score to docs already matched by a low-df term — the classic
-    head-term-cost dodge, same idea as the build-time salting.
+    head-term-cost dodge.
 """
 
 from __future__ import annotations

@@ -60,7 +60,6 @@ def checkpointed_build(
     text_col: str = "text",
     html_col: str | None = None,
     analyzer: str = "english",
-    salt_partitions: int = 0,
     source_desc: str = "",
     fail_after_shards: int | None = None,  # fault injection for tests
 ) -> InvertedIndex:
@@ -77,7 +76,7 @@ def checkpointed_build(
             F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)) == s)
         idx = build_index(shard_docs, key_col=key_col, text_col=text_col,
                           html_col=html_col, num_segments=segments_per_shard,
-                          analyzer=analyzer, salt_partitions=salt_partitions)
+                          analyzer=analyzer)
         base = s * segments_per_shard
         idx = InvertedIndex(
             idx.postings.withColumn("seg", F.col("seg") + base),

@@ -99,7 +99,7 @@ def flush_index_batch(batch_df: DataFrame, batch_id: int, index_path: str,
     # re-derive the dictionary lazily instead of silently losing the new
     # terms from multi-term expansions and term_stats
     from ..operators.indexer import _drop_stored_terms_dict
-    _drop_stored_terms_dict(index_path)
+    _drop_stored_terms_dict(spark, index_path)
 
 
 def start_incremental_indexer(

@@ -10,7 +10,8 @@ import pytest
 from lucene_solr_old_spark.functions.bm25 import Bm25Stats
 from lucene_solr_old_spark.functions.htmlstrip import html_to_text
 from lucene_solr_old_spark.functions.smallfloat import doclen_to_norm
-from lucene_solr_old_spark.functions.tokenizer import analyze, analyze_terms
+from lucene_solr_old_spark.functions.tokenizer import (
+    analyze, analyze_terms, get_analyzer)
 from lucene_solr_old_spark.operators.indexer import build_index
 from lucene_solr_old_spark.operators import search as S
 from lucene_solr_old_spark.sources.pages import gen_pages, pages_dataframe
@@ -229,7 +230,7 @@ def test_differential_parallelism(spark, corpus, index):
         corpus, schema="url STRING, warc_ts TIMESTAMP, html BINARY, "
                        "text STRING, lang STRING")
     idx1 = build_index(df, num_segments=1)
-    idx7 = build_index(df, num_segments=7, salt_partitions=4)
+    idx7 = build_index(df, num_segments=7)
     q = "running meetings caresses"
     r_ctl = rows_to_pairs(S.search_or(idx1, q, k=10))
     r_par = rows_to_pairs(S.search_or(idx7, q, k=10))
@@ -275,36 +276,97 @@ def test_repeated_term_scores_once_per_clause(index, oracle):
     assert [k for k, _ in got_and] == [k for k, _ in exp_and[:10]]
 
 
-def test_fused_build_identical_to_grouped(spark, corpus):
-    """The fused (no-term-shuffle) build must produce EXACTLY the same
-    index content as the groupBy plan, and its postings lineage must
-    contain only the doc-routing exchange."""
+def _inversion_oracle(corpus, analyzer, with_positions, with_offsets):
+    """Driver-side inversion of get_analyzer's token streams:
+    (term, key) -> (freq, norm[, positions][, starts, ends]) and
+    key -> (doclen, norm)."""
+    analyze_fn = get_analyzer(analyzer)
+    posts, meta = {}, {}
+    for url, _ts, _html, text, _lang in corpus:
+        toks = analyze_fn(text)
+        norm = int(doclen_to_norm(len(toks)))
+        meta[url] = (len(toks), norm)
+        per_term = {}
+        for t in toks:
+            per_term.setdefault(t.term, []).append(t)
+        for term, ts in per_term.items():
+            row = (len(ts), norm)
+            if with_positions:
+                row += (tuple(t.pos for t in ts),)
+            if with_offsets:
+                row += (tuple(t.start for t in ts), tuple(t.end for t in ts))
+            posts[(term, url)] = row
+    return posts, meta
+
+
+@pytest.mark.parametrize("analyzer,with_positions,with_offsets", [
+    ("english", True, False),
+    ("english", False, False),
+    ("ws_stop", True, True),
+], ids=["english", "english_no_positions", "ws_stop_offsets"])
+def test_build_matches_inversion_oracle(spark, corpus, analyzer,
+                                        with_positions, with_offsets):
+    """The build against a driver-side inversion of the analyzer's token
+    streams (for "english" this cross-checks the analyze_inverted fast
+    path): every posting's fields, per-term df/ttf, docmeta, docids = dense
+    key rank per segment, and one exchange (doc routing) in the postings
+    plan."""
     df = spark.createDataFrame(
         corpus, schema="url STRING, warc_ts TIMESTAMP, html BINARY, "
                        "text STRING, lang STRING")
-    fused = build_index(df, num_segments=4, fused=True)
-    grouped = build_index(df, num_segments=4, fused=False)
+    idx = build_index(df, num_segments=4, analyzer=analyzer,
+                      with_positions=with_positions,
+                      with_offsets=with_offsets, persist_termdoc=False)
+    exp_posts, exp_meta = _inversion_oracle(corpus, analyzer,
+                                            with_positions, with_offsets)
 
-    def canon(idx):
-        rows = idx.postings.select("seg", "term", "df", "ttf",
-                                   "postings").collect()
-        return sorted(
-            (r["seg"], r["term"], r["df"], r["ttf"],
-             tuple((p["docid"], p["freq"], p["norm"], tuple(p["positions"]))
-                   for p in r["postings"]))
-            for r in rows)
+    docmeta = idx.docmeta.collect()
+    assert len(docmeta) == len(exp_meta)
+    assert {r["key"]: (r["doclen"], r["norm"]) for r in docmeta} == exp_meta
+    by_seg = {}
+    for r in docmeta:
+        by_seg.setdefault(r["seg"], []).append((r["key"], r["docid"]))
+    for rows in by_seg.values():
+        assert [d for _k, d in sorted(rows)] == list(range(len(rows)))
+    key_of = {(r["seg"], r["docid"]): r["key"] for r in docmeta}
 
-    assert canon(fused) == canon(grouped)
-    assert sorted(map(tuple, fused.docmeta.collect())) == \
-        sorted(map(tuple, grouped.docmeta.collect()))
-    # exactly ONE exchange (doc routing) in the fused postings plan
-    # (uncached build: the persisted variant prints the inner AQE plan
-    # twice, double-counting the same exchange)
-    uncached = build_index(df, num_segments=4, fused=True,
-                           persist_termdoc=False)
-    plan = uncached.postings._jdf.queryExecution().executedPlan().toString()
+    fields = (["docid", "freq", "norm"]
+              + (["positions"] if with_positions else [])
+              + (["starts", "ends"] if with_offsets else []))
+    got_posts, got_stats, exp_stats = {}, Counter(), Counter()
+    for r in idx.postings.collect():
+        plist = r["postings"]
+        assert list(plist[0].asDict()) == fields
+        assert r["df"] == len(plist)
+        assert r["ttf"] == sum(p["freq"] for p in plist)
+        docids = [p["docid"] for p in plist]
+        assert docids == sorted(set(docids))
+        got_stats[(r["term"], "df")] += r["df"]
+        got_stats[(r["term"], "ttf")] += r["ttf"]
+        for p in plist:
+            row = (p["freq"], p["norm"])
+            if with_positions:
+                row += (tuple(p["positions"]),)
+            if with_offsets:
+                row += (tuple(p["starts"]), tuple(p["ends"]))
+            got_posts[(r["term"], key_of[(r["seg"], p["docid"])])] = row
+    for (term, _key), row in exp_posts.items():
+        exp_stats[(term, "df")] += 1
+        exp_stats[(term, "ttf")] += row[0]
+    assert got_posts == exp_posts
+    assert got_stats == exp_stats
+
+    plan = idx.postings._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # AQE prints the plan twice
     assert final.count("Exchange") == 1, plan
+
+
+def test_salt_partitions_is_deprecated(spark, corpus):
+    df = spark.createDataFrame(
+        corpus, schema="url STRING, warc_ts TIMESTAMP, html BINARY, "
+                       "text STRING, lang STRING")
+    with pytest.warns(DeprecationWarning, match="salt_partitions"):
+        build_index(df, num_segments=2, salt_partitions=4)
 
 
 def test_route_none_query_identical(spark, corpus):

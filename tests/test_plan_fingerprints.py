@@ -1,8 +1,9 @@
-"""Plan-shape fingerprints of the query entry points.
+"""Plan-shape fingerprints of the query, build and merge entry points.
 
 Each entry point runs once on a tiny index (500 generated pages, the size
-of the sf0.001 documents table); the counts of Exchange, Window, join,
-Python-exec and TakeOrderedAndProject nodes in its executed (final
+of the sf0.001 documents table); builds run unpersisted, so the inversion
+stage itself is in the counted plan.  The counts of Exchange, Window,
+join, Python-exec and TakeOrderedAndProject nodes in its executed (final
 adaptive) plan are compared with ``plan_fingerprints.json``.  A count may
 fall but never rise: a plan regression then fails here instead of
 showing up as benchmark noise.
@@ -26,6 +27,8 @@ from lucene_solr_old_spark.operators import wand as W  # noqa: E402
 from lucene_solr_old_spark.operators.batch import batch_search  # noqa: E402
 from lucene_solr_old_spark.operators.indexer import (  # noqa: E402
     build_index, compress_index)
+from lucene_solr_old_spark.operators.merge import (  # noqa: E402
+    delete_docs, merge_many)
 from lucene_solr_old_spark.sources.pages import (  # noqa: E402
     PAGES_SCHEMA, gen_pages)
 
@@ -76,10 +79,24 @@ def plan_counts(df) -> dict[str, int]:
     return counts
 
 
-def entry_points(plain, comp) -> dict:
+def entry_points(df, plain, comp) -> dict:
     first = S.search_or(plain, QUERY, k=5).collect()
     after = (float(first[-1]["score"]), first[-1]["key"])
+    # materialised, so only delete_docs' own nodes are counted
+    deleted = (df.select(df["url"].alias("key")).orderBy("key").limit(20)
+               .localCheckpoint())
     return {
+        # default num_segments: a 4-segment build would match ``plain``'s
+        # cached plan and count nothing
+        "build_index": lambda: build_index(
+            df, persist_termdoc=False).postings,
+        "build_index_route_none": lambda: build_index(
+            df, route="none", persist_termdoc=False).postings,
+        "build_index_offsets": lambda: build_index(
+            df, analyzer="ws_stop", with_offsets=True,
+            persist_termdoc=False).postings,
+        "merge_many": lambda: merge_many(plain, [[0, 1], [2, 3]]).postings,
+        "delete_docs": lambda: delete_docs(plain, deleted).postings,
         "search_or": lambda: S.search_or(plain, QUERY, k=10),
         "search_and": lambda: S.search_and(plain, "running meetings", k=10),
         "search_dismax": lambda: S.search_dismax(plain, QUERY, k=10,
@@ -98,14 +115,13 @@ def build(spark):
     plain = build_index(df, num_segments=4).persist()
     comp = compress_index(plain).persist()
     comp.postings.count()
-    return plain, comp
+    return df, plain, comp
 
 
 @pytest.fixture(scope="module")
 def fingerprints(spark):
-    plain, comp = build(spark)
     return {name: plan_counts(make()) for name, make
-            in entry_points(plain, comp).items()}
+            in entry_points(*build(spark)).items()}
 
 
 def test_plan_fingerprints_do_not_grow(fingerprints):
@@ -123,7 +139,6 @@ if __name__ == "__main__":
 
     spark = get_spark("plan-fingerprints", master="local[4]",
                       shuffle_partitions=8)
-    plain, comp = build(spark)
     print(json.dumps({name: plan_counts(make()) for name, make
-                      in entry_points(plain, comp).items()}, indent=1))
+                      in entry_points(*build(spark)).items()}, indent=1))
     spark.stop()

@@ -30,7 +30,7 @@ K = 10
 def env(spark):
     corpus = gen_pages(N_DOCS, seed=1234)
     df = spark.createDataFrame(corpus, schema=PAGES_SCHEMA)
-    idx = build_index(df, num_segments=6, salt_partitions=4).persist()
+    idx = build_index(df, num_segments=6).persist()
     cidx = compress_index(idx).persist()
     cidx.postings.count()
 

@@ -38,8 +38,7 @@ def main(out_dir: str, suffix: str) -> None:
                             num_partitions=64).persist()
     pages.count()
     pidx = build_index(pages, key_col="url", html_col="html",
-                       num_segments=16, analyzer="english",
-                       salt_partitions=8)
+                       num_segments=16, analyzer="english")
     pidx.postings.count()
     pidx.collection_stats()
 

@@ -85,7 +85,7 @@ def run_full(cores: int, zip_path: str, inp: str, out: str,
         # zstd sink: fewer bytes onto the bottleneck disk (see session.py)
         "--conf", "spark.sql.parquet.compression.codec=zstd",
         "bench/index_bench.py", "--input", inp, "--out", out,
-        "--segments", "64", "--salt", "8", "--shuffle", str(cores * 4),
+        "--segments", "64", "--shuffle", str(cores * 4),
         "--route", ROUTE, "--layout", LAYOUT,
     ] + (["--nosave"] if nosave else [])
     res = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo",
@@ -100,7 +100,7 @@ def run_analysis_only(cores: int, inp: str) -> float:
     """docs/sec of the fused extract+analyze+invert stage (noop sink)."""
     from lucene_solr_old_spark.session import get_spark
     from lucene_solr_old_spark.operators.analysis import (
-        TERMDOC_SCHEMA, make_analyze_partition)
+        FUSED_SCHEMA, make_fused_postings_partition)
     from pyspark.sql import functions as F
 
     spark = get_spark("analysis-scaling", master=f"local[{cores}]",
@@ -109,10 +109,10 @@ def run_analysis_only(cores: int, inp: str) -> float:
     docs = (spark.read.parquet(inp)
             .select(F.col("url").alias("key"), F.col("html").alias("text"))
             .withColumn("seg", F.lit(0)))
-    fn = make_analyze_partition("key", "text", analyzer="english",
-                                html_input=True)
+    fn = make_fused_postings_partition("key", "text", analyzer="english",
+                                       html_input=True)
     t0 = time.time()
-    docs.mapInPandas(fn, schema=TERMDOC_SCHEMA).write.format("noop") \
+    docs.mapInPandas(fn, schema=FUSED_SCHEMA).write.format("noop") \
         .mode("overwrite").save()
     wall = time.time() - t0
     spark.stop()
