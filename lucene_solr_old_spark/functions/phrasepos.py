@@ -11,8 +11,9 @@ priority-queue walk does not enumerate every combination;
   * :func:`sloppy_phrase_freq` — ``search/SloppyPhraseScorer.java:100-134``
     ``phraseFreq()`` including the repeating-terms machinery
     (``initPhrasePositions``/``advanceRpts``/``collide``, :147-317) for the
-    single-term-per-position case (multi-term positions = MultiPhraseQuery
-    are handled by the separate multi_phrase plan);
+    single-term-per-position case (MultiPhraseQuery's multi-term
+    positions are exact-only: their aligned starts are counted in Catalyst
+    by the shared positional scorer of operators/search.py);
   * :func:`span_near_ordered_matches` — ``search/spans/NearSpansOrdered
     .java:202-354`` (``stretchToOrder`` + ``shrinkToAfterShortestMatch``);
   * :func:`span_near_unordered_matches` — ``search/spans/NearSpansUnordered

@@ -285,77 +285,64 @@ def masked_span_query(mfi: MultiFieldIndex, tree, k: int = 10,
     leaf's term statistics (df for idf) come from its REAL field.
 
     Plan: per-field postings pruned to that field's leaf terms (parquet
-    pushdown) -> join each field's docmeta for the shared key -> union ->
-    per-key (term, positions) collection -> the exact NearSpans kernels
-    (functions/phrasepos.py) over field-tagged terms -> BM25 ->
+    pushdown), each field-tagged term one slot -> join each field's
+    docmeta for the shared key -> union -> per-key (slot, positions)
+    hits -> the exact NearSpans kernels (functions/phrasepos.py) -> BM25
+    on the span freq with search.py's summed-idf weight ->
     TakeOrderedAndProject."""
-    import numpy as np
-
-    from .search import _Scorer, idf64
-    from .spans import _required_terms, _span_tree_udf, _tree_terms
+    from .search import _has_slots, _Scorer, _slot_fanout, _sql_in
+    from .spans import (_eval_terms, _required_terms, _span_tree_udf,
+                        _tree_terms)
 
     tagged = _retag(tree, mfi.default_field)
-    by_field: dict[str, set] = {}
-    for tt in set(_tree_terms(tagged)):
-        fld, t = tt.split(_MASK_SEP, 1)
-        by_field.setdefault(fld, set()).add(t)
+    names = sorted(set(_eval_terms(tagged)))
+    by_field: dict[str, list[str]] = {}
+    for name in names:
+        fld, t = name.split(_MASK_SEP, 1)
+        by_field.setdefault(fld, []).append(t)
 
     frames = []
     for fld, terms in sorted(by_field.items()):
         idx = mfi.field(fld)
         if not idx.with_positions:
             raise ValueError(f"field {fld!r} indexed without positions")
-        rows = (idx.postings.where(F.col("term").isin(sorted(terms)))
-                .select("seg", "term", F.explode("postings").alias("p"))
-                .select("seg",
-                        F.concat(F.lit(fld + _MASK_SEP),
-                                 F.col("term")).alias("term"),
-                        F.col("p.docid").alias("docid"),
+        # this field's terms fan out to their own slots only
+        slots = [[n.split(_MASK_SEP, 1)[1]]
+                 if n.startswith(fld + _MASK_SEP) else [] for n in names]
+        rows = (idx.postings.where(_sql_in("term", terms))
+                .select("seg", "postings",
+                        F.explode(_slot_fanout(slots)[F.col("term")])
+                        .alias("slot"))
+                .select("seg", "slot", F.explode("postings").alias("p"))
+                .select("seg", "slot", "p.docid",
                         F.col("p.positions").alias("pos"))
                 .join(idx.docmeta.select("seg", "docid", "key"),
                       ["seg", "docid"])
-                .select("key", "term", "pos"))
+                .select("key", "slot", "pos"))
         frames.append(rows)
     rows = frames[0]
     for f in frames[1:]:
         rows = rows.unionByName(f)
 
-    req = sorted(_required_terms(tagged))
     per_key = rows.groupBy("key").agg(
-        F.sum(F.when(F.col("term").isin(req), 1).otherwise(0)).alias("nreq"),
-        F.collect_list(F.struct("term", "pos")).alias("termpos"))
-    if req:
-        per_key = per_key.where(F.col("nreq") == len(req))
+        F.collect_list(F.struct("slot", "pos")).alias("hits"))
+    required = _required_terms(tagged)
+    if required:
+        per_key = per_key.where(_has_slots(names.index(n) for n in required))
 
     # norms of the masked field; term stats of each leaf's real field
     masked_idx = mfi.field(mfi.default_field)
     scorer = _Scorer(masked_idx, [], precision)
-    if precision == "float64":
-        w = 0.0
-        for tt in sorted(set(_tree_terms(tagged))):
-            fld, t = tt.split(_MASK_SEP, 1)
-            df = mfi.field(fld).term_stats([t]).get(t, (0, 0))[0]
-            w += idf64(df, scorer.stats.max_doc)
-        weight_value = w * (float(scorer.stats.k1) + 1.0)
-    else:
-        acc = np.float32(0.0)
-        for tt in sorted(set(_tree_terms(tagged))):
-            fld, t = tt.split(_MASK_SEP, 1)
-            df = mfi.field(fld).term_stats([t]).get(t, (0, 0))[0]
-            acc = acc + scorer.stats.idf(df)
-        weight_value = float(acc * (scorer.stats.k1 + np.float32(1.0)))
-    stype = "double" if precision == "float64" else "float"
-
-    scored = (per_key
-              .join(masked_idx.docmeta.select("key", "norm"), "key")
-              .withColumn("sfreq", _span_tree_udf(
-                  tagged, f32=(precision != "float64"))(F.col("termpos")))
-              .where(F.col("sfreq") > 0)
-              .withColumn(
-                  "score",
-                  (F.lit(weight_value).cast(stype)
-                   * F.col("sfreq").cast(stype))
-                  / (F.col("sfreq").cast(stype) + scorer.norm_factor())))
-    return (scored.select("key", F.col("score").cast(stype).alias("score"))
+    tstats = {fld: mfi.field(fld).term_stats(terms)
+              for fld, terms in by_field.items()}
+    dfs = [tstats[fld].get(t, (0, 0))[0] for fld, t in
+           (n.split(_MASK_SEP, 1) for n in sorted(set(_tree_terms(tagged))))]
+    return (per_key
+            .join(masked_idx.docmeta.select("key", "norm"), "key")
+            .withColumn("freq", _span_tree_udf(
+                tagged, names, f32=(precision != "float64"))(F.col("hits")))
+            .where(F.col("freq") > 0)
+            .select("key", scorer.score(scorer.summed_weight(dfs))
+                    .cast(scorer._sqltype).alias("score"))
             .orderBy(F.desc("score"), F.asc("key"))
             .limit(k))

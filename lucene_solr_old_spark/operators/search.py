@@ -35,9 +35,20 @@ Every BM25 entry point — ``search_terms`` (``search_or``/``search_and``),
     ``row_number`` window for workloads; ``count()`` is
     TotalHitCountCollector.
 
-Phrase queries (``ExactPhraseScorer.java:26-33``, SloppyPhraseScorer) score
-through :func:`phrase_score_frame` with summed idf
-(``BM25Similarity.idfExplain[]``) and share the collector.
+Positional queries — PhraseQuery exact or sloppy, MultiPhraseQuery,
+NGramPhraseQuery (here) and the span trees (spans.py, multifield.py) —
+share one scorer:
+
+  * gather   -> :func:`_slot_positions` reads the postings once and
+    collects each candidate document's (slot, positions) hits; a phrase
+    slot holds one term, or a term set for MultiPhraseQuery.
+    :func:`_has_slots` keeps the documents holding every required slot.
+  * freq     -> the aligned-start count of ``ExactPhraseScorer.java:26-33``
+    in Catalyst, or the exact SloppyPhraseScorer / span kernels of
+    functions/phrasepos.py.
+  * score    -> ``_Scorer.score`` on that freq with
+    :meth:`_Scorer.summed_weight`, the idf summed over the query's terms
+    (``BM25Similarity.idfExplain(TermStatistics[])``).
 
 Scoring: per-term scores are computed in Spark float32 arithmetic (same IEEE
 ops as the Java engine).  Multi-term sums aggregate in float64 then round to
@@ -166,21 +177,22 @@ class _Scorer:
         self.precision = precision
         self.stats = Bm25Stats(max_doc, sum_ttf)
         self.tstats = index.term_stats(terms)
-        self.terms = terms
         self._sqltype = _stype(precision)
         if precision == "float64":
             self._cache = cache64(sum_ttf / max_doc if max_doc else 1.0)
             self._weights = {
-                t: boost * (idf64(self.tstats.get(t, (0, 0))[0], max_doc) * 2.2)
+                t: boost * (idf64(self.df(t), max_doc) * 2.2)
                 for t in set(terms)
             }
         else:
             self._cache = [float(c) for c in self.stats.cache]
             self._weights = {
-                t: float(self.stats.weight_value(self.tstats.get(t, (0, 0))[0],
-                                                 boost))
+                t: float(self.stats.weight_value(self.df(t), boost))
                 for t in set(terms)
             }
+
+    def df(self, term: str) -> int:
+        return self.tstats.get(term, (0, 0))[0]
 
     def _num(self, x: float) -> str:
         return _sql_num(x, self._sqltype)
@@ -222,17 +234,21 @@ class _Scorer:
         return ({t: dtype(w) for t, w in self._weights.items()},
                 np.asarray(self._cache, dtype=dtype), dtype)
 
-    def phrase_weight(self) -> float:
-        """Summed idf * (k1+1), accumulated in this precision, term order."""
+    def summed_weight(self, dfs: list[int], boost: float = 1.0) -> Column:
+        """The weightValue of a positional query: idf summed over ``dfs`` in
+        order, times (k1+1) and ``boost``, accumulated in this precision
+        (``BM25Similarity.idfExplain(TermStatistics[])``)."""
         if self.precision == "float64":
             s = 0.0
-            for t in self.terms:
-                s = s + idf64(self.tstats.get(t, (0, 0))[0], self.stats.max_doc)
-            return s * 2.2
-        s32 = np.float32(0.0)
-        for t in self.terms:
-            s32 = s32 + self.stats.idf(self.tstats.get(t, (0, 0))[0])
-        return float(s32 * (self.stats.k1 + np.float32(1.0)))
+            for df in dfs:
+                s = s + idf64(df, self.stats.max_doc)
+            w = s * 2.2
+        else:
+            s32 = np.float32(0.0)
+            for df in dfs:
+                s32 = s32 + self.stats.idf(df)
+            w = float(s32 * (self.stats.k1 + np.float32(1.0)))
+        return F.expr(self._num(w * float(boost)))
 
 
 def _posting_rows(frame: DataFrame, *keep: str) -> DataFrame:
@@ -396,10 +412,12 @@ def search_after(index: InvertedIndex, query_text: str, k: int,
 def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
                   precision: str = "float32", boost: float = 1.0,
                   slop: int = 0) -> DataFrame:
-    """Exact phrase (slop=0): per-doc alignment count of consecutive
-    positions == phrase freq; BM25 with summed idf
-    (``search/ExactPhraseScorer.java:26-33``; ``PhraseQuery.java:279-283``).
-    """
+    """PhraseQuery over the analysed ``phrase_text``: exact for slop=0
+    (``search/ExactPhraseScorer.java:26-33``), SloppyPhraseScorer for
+    slop>0; BM25 on the phrase freq with summed idf
+    (``PhraseQuery.java:279-283``).  Analysed positions are the phrase
+    offsets, so stopword holes widen the phrase.  A phrase of fewer than
+    two terms is a term query."""
     if not index.with_positions:
         raise ValueError("index built without positions")
     tokens = _qtokens(index, phrase_text)
@@ -412,91 +430,108 @@ def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
     return _topk(scored, index, k, precision)
 
 
+def _slot_fanout(slots: list[list[str]]) -> Column:
+    """term -> array of the slots holding it, as one map literal."""
+    holders: dict[str, list[int]] = {}
+    for i, slot in enumerate(slots):
+        for t in sorted(set(slot)):
+            holders.setdefault(t, []).append(i)
+    return F.expr("map(" + ", ".join(
+        f"{_sql_str(t)}, array({', '.join(map(str, ids))})"
+        for t, ids in holders.items()) + ")")
+
+
+def _slot_positions(index: InvertedIndex,
+                    slots: list[list[str]]) -> DataFrame:
+    """The positional gather: (seg, docid, norm, hits) for every document
+    holding a term of ``slots``, where ``hits`` is the sorted
+    array<struct<slot, pos>> of the document's postings, one per (slot,
+    term), with the term's positions.  One term-pruned postings scan; each
+    term fans out to every slot holding it, so a repeated phrase term
+    feeds each of its slots."""
+    terms = sorted({t for slot in slots for t in slot})
+    rows = (index.postings.where(_sql_in("term", terms))
+            .select("seg", "postings",
+                    F.explode(_slot_fanout(slots)[F.col("term")])
+                    .alias("slot"))
+            .select("seg", "slot", F.explode("postings").alias("p")))
+    return rows.groupBy("seg", F.col("p.docid").alias("docid")).agg(
+        F.first("p.norm").alias("norm"),
+        F.array_sort(F.collect_list(F.struct(
+            "slot", F.col("p.positions").alias("pos")))).alias("hits"))
+
+
+def _has_slots(slot_ids) -> Column:
+    """Every slot of ``slot_ids`` holds a hit: the set-containment filter
+    (AND's ``nmatched >= need`` over slots)."""
+    need = sorted(set(slot_ids))
+    return F.size(F.array_intersect(
+        F.col("hits.slot"),
+        F.expr(f"array({', '.join(map(str, need))})"))) == len(need)
+
+
+def _exact_phrase_freq(offsets: list[int]) -> Column:
+    """ExactPhraseScorer's freq: per slot, the union of its terms'
+    positions shifted back by the slot's offset; the phrase occurs at every
+    start that all slots share."""
+    def starts(i: int, off: int) -> Column:
+        pos = F.flatten(F.transform(
+            F.filter("hits", lambda h: h["slot"] == i), lambda h: h["pos"]))
+        return F.transform(pos, lambda p: p - off)
+
+    common = F.array_distinct(starts(0, offsets[0]))
+    for i, off in enumerate(offsets[1:], 1):
+        common = F.array_intersect(common, starts(i, off))
+    return F.size(common).cast("double")
+
+
+def _phrase_frame(index: InvertedIndex, slots: list[list[str]],
+                  offsets: list[int], precision: str = "float32",
+                  boost: float = 1.0, slop: int = 0) -> DataFrame:
+    """(seg, docid, pfreq, score) of a phrase whose slot i accepts any term
+    of ``slots[i]`` at phrase offset ``offsets[i]``; weight = idf summed
+    over every term of every slot.  slop>0 takes one term per slot."""
+    flat = [t for slot in slots for t in slot]
+    scorer = _Scorer(index, flat, precision, boost)
+    if slop == 0:
+        freq = _exact_phrase_freq(offsets)
+    else:
+        freq = _sloppy_pfreq_udf(slop, flat, offsets,
+                                 f32=(precision != "float64"))(F.col("hits"))
+    weight = scorer.summed_weight([scorer.df(t) for t in flat], boost)
+    return (_slot_positions(index, slots)
+            .where(_has_slots(range(len(slots))))
+            .withColumn("freq", freq)
+            .where(F.col("freq") > 0)
+            .select("seg", "docid", F.col("freq").alias("pfreq"),
+                    scorer.score(weight).alias("score")))
+
+
 def phrase_score_frame(index: InvertedIndex, terms: list[str],
                        precision: str = "float32",
                        boost: float = 1.0, slop: int = 0,
                        offsets: list[int] | None = None) -> DataFrame:
-    """(seg, docid, score) for a phrase — the unsorted scoring frame
+    """(seg, docid, pfreq, score) for a phrase — the unsorted scoring frame
     (used directly by the boolean plan builder in plans/query.py).
 
     ``offsets[i]`` is term i's position within the phrase (analyzed query
-    positions; defaults to 0..n-1).  slop=0 runs the columnar
-    ExactPhraseScorer plan; slop>0 runs the EXACT SloppyPhraseScorer kernel
-    (``search/SloppyPhraseScorer.java`` phraseFreq + repeating-term groups,
-    ported in functions/phrasepos.py) over per-doc position arrays.
+    positions; defaults to 0..n-1).  slop=0 counts the aligned starts in
+    Catalyst (ExactPhraseScorer); slop>0 runs the EXACT SloppyPhraseScorer
+    kernel (``search/SloppyPhraseScorer.java`` phraseFreq + repeating-term
+    groups, ported in functions/phrasepos.py) over the per-doc positions.
     """
-    scorer = _Scorer(index, terms, precision, boost)
-    # summed idf over the phrase's terms, accumulated in term order
-    # (BM25Similarity.idfExplain(TermStatistics[]))
-    weight_value = scorer.phrase_weight() * float(boost)
-    stype = _stype(precision)
     if offsets is None:
         offsets = list(range(len(terms)))
-
-    # per position-slot i: docs containing terms[i]; for the exact plan the
-    # positions are shifted by -offset so the check becomes a plain
-    # multi-set intersection (ExactPhraseScorer checks pos_i == base + off);
-    # the sloppy kernel takes UNSHIFTED positions (it applies offsets
-    # itself — repeat-collision detection needs absolute token positions)
-    frames = []
-    for i, t in enumerate(terms):
-        # one-arg lambda: F.transform treats a two-arg lambda as
-        # (element, index); bind the offset via an outer closure
-        pos_col = ((lambda off: F.transform(F.col("p.positions"),
-                                            lambda c: c - F.lit(off)))
-                   (offsets[i])
-                   if slop == 0 else F.col("p.positions"))
-        f = (
-            index.postings.where(F.col("term") == t)
-            .select("seg", F.explode("postings").alias("p"))
-            .select(
-                "seg",
-                F.col("p.docid").alias("docid"),
-                F.col("p.norm").alias("norm"),
-                pos_col.alias("pos"),
-            )
-            .withColumn("slot", F.lit(i))
-        )
-        frames.append(f)
-    # duplicate terms in the phrase reuse the same postings rows, one per slot
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    per_doc = union.groupBy("seg", "docid").agg(
-        F.count("*").alias("nslots"),
-        F.first("norm").alias("norm"),
-        F.array_sort(F.collect_list(F.struct("slot", "pos"))).alias("slots"),
-    ).where(F.col("nslots") == len(terms))
-    if slop == 0:
-        # exact: phrase freq = |intersection of shifted position arrays|
-        inter = per_doc.withColumn(
-            "common",
-            F.aggregate(
-                F.expr("slice(slots, 2, size(slots) - 1)"),
-                F.col("slots")[0]["pos"],
-                lambda acc, s: F.array_intersect(acc, s["pos"]),
-            ),
-        ).withColumn("pfreq", F.size("common").cast("double")) \
-         .where(F.col("pfreq") > 0)
-    else:
-        inter = per_doc.withColumn(
-            "pfreq", _sloppy_pfreq_udf(slop, terms, offsets,
-                                       f32=(precision != "float64"))(
-                F.col("slots"))
-        ).where(F.col("pfreq") > 0)
-
-    return inter.withColumn(
-        "score",
-        (F.lit(weight_value).cast(stype) * F.col("pfreq").cast(stype))
-        / (F.col("pfreq").cast(stype) + scorer.norm_factor()),
-    ).select("seg", "docid", "pfreq", "score")
+    return _phrase_frame(index, [[t] for t in terms], offsets, precision,
+                         boost, slop)
 
 
 def _sloppy_pfreq_udf(slop: int, terms: list[str], offsets: list[int],
                       f32: bool = True):
     """Arrow-batched wrapper over the exact SloppyPhraseScorer kernel
-    (functions/phrasepos.py).  term_ids group equal terms so the kernel's
-    repeating-term machinery mirrors ``gatherRptGroups``."""
+    (functions/phrasepos.py) on one-term slots' hits.  term_ids group
+    equal terms so the kernel's repeating-term machinery mirrors
+    ``gatherRptGroups``."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -506,17 +541,20 @@ def _sloppy_pfreq_udf(slop: int, terms: list[str], offsets: list[int],
     term_ids = [first[t] for t in terms]
 
     @pandas_udf("double")
-    def pfreq(slots_series):  # pd.Series -> pd.Series (hints omitted: the
+    def pfreq(hits_series):  # pd.Series -> pd.Series (hints omitted: the
         # local pandas import makes string annotations unresolvable for
         # pandas_udf's signature inference)
         out = []
-        for slots in slots_series:
-            pos_lists = [s["pos"] for s in slots]  # slot-ordered
+        for hits in hits_series:
+            pos_lists = [h["pos"] for h in hits]  # slot-ordered
             out.append(sloppy_phrase_freq(pos_lists, offsets, slop,
                                           term_ids=term_ids, f32=f32))
         return pd.Series(out)
 
-    return pfreq
+    # marked nondeterministic so the optimizer runs it once: pushing the
+    # caller's ``freq > 0`` filter below the projection would inline a
+    # deterministic UDF into the filter and evaluate the kernel twice
+    return pfreq.asNondeterministic()
 
 
 def explain(index: InvertedIndex, query_text: str, key: str) -> list[dict]:
@@ -546,7 +584,7 @@ def explain(index: InvertedIndex, query_text: str, key: str) -> list[dict]:
         tf = freq_by_term.get(t)
         if tf is None:
             continue
-        df, _ttf = scorer.tstats.get(t, (0, 0))
+        df = scorer.df(t)
         idf_v = scorer.stats.idf(df)
         cache_v = scorer.stats.cache[normb & 0xFF]
         partial = scorer.stats.score(df, np.array([tf]),

@@ -1,9 +1,13 @@
-"""Span queries (full algebra) + CommonTermsQuery.
+"""Span queries (full algebra), MultiPhraseQuery + CommonTermsQuery.
+
+The positional queries here run on search.py's one positional scorer: the
+slot-position gather, a freq, and BM25 on that freq with the summed-idf
+weight.
 
   * span_query — general span-tree execution: term / near(ordered,
-    unordered) / or / not / first nodes, evaluated per doc by the EXACT
-    per-doc kernels ported from the reference
-    (``search/spans/NearSpansOrdered.java:202-354``,
+    unordered) / or / not / first nodes, one slot per distinct leaf term,
+    evaluated per doc by the EXACT per-doc kernels ported from the
+    reference (``search/spans/NearSpansOrdered.java:202-354``,
     ``NearSpansUnordered.java:163-211``, ``SpanOrQuery.java``,
     ``SpanNotQuery.java``, ``SpanFirstQuery.java`` — see
     functions/phrasepos.py).  Scoring = ``SpanScorer.setFreqCurrentDoc``:
@@ -13,6 +17,8 @@
     ``query.extractTerms`` — a Set).
   * span_near — SpanNearQuery over single-term clauses (the common case),
     expressed through span_query.
+  * multi_phrase — MultiPhraseQuery: the exact phrase with a term set per
+    slot.
   * common_terms_query — ``lucene/queries/.../CommonTermsQuery.java``: the
     query's terms are split at a document-frequency threshold; low-df terms
     drive matching (disjunction), high-df (stopword-like) terms only add
@@ -22,12 +28,12 @@
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
-from .search import _Scorer, _topk, term_score_frame
+from .search import (_has_slots, _no_docs, _phrase_frame, _Scorer,
+                     _slot_positions, _topk, term_score_frame)
 
 __all__ = ["span_near", "span_query", "span_score_frame",
            "common_terms_query", "multi_phrase"]
@@ -81,22 +87,25 @@ def _required_terms(node) -> set[str]:
     raise ValueError(f"unknown span node {node[0]!r}")
 
 
-def _span_tree_udf(tree, f32: bool = True):
+def _span_tree_udf(tree, names: list[str], f32: bool = True):
+    """Arrow-batched span-tree kernel over a document's (slot, pos) hits;
+    slot i holds the positions of the leaf term ``names[i]``."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.phrasepos import eval_span_tree, span_freq
 
     @pandas_udf("double")
-    def sfreq(termpos_series):
+    def sfreq(hits_series):
         out = []
-        for rows in termpos_series:
-            iv = {r["term"]: [(int(p), int(p) + 1) for p in r["pos"]]
-                  for r in rows}
+        for hits in hits_series:
+            iv = {names[h["slot"]]: [(int(p), int(p) + 1) for p in h["pos"]]
+                  for h in hits}
             out.append(span_freq(eval_span_tree(tree, iv), f32=f32))
         return pd.Series(out)
 
-    return sfreq
+    # nondeterministic: evaluated once per row (see _sloppy_pfreq_udf)
+    return sfreq.asNondeterministic()
 
 
 def span_query(index: InvertedIndex, tree, k: int = 10,
@@ -116,11 +125,12 @@ def span_score_frame(index: InvertedIndex, tree,
     """(seg, docid, sfreq, score) for a span-query tree — the unsorted
     scoring frame.
 
-    Plan: postings pruned to the tree's leaf terms (parquet pushdown on
-    term) -> explode -> per-doc (term, positions) collection -> Arrow
-    kernel evaluates the tree -> BM25 -> TakeOrderedAndProject. Candidate
-    docs are pre-filtered to those containing every REQUIRED term (the
-    same conjunctive pruning Lucene's sub-span leapfrog does).
+    Plan: the shared positional gather of search.py — one postings scan
+    pruned to the tree's leaf terms (``not`` excludes included), one slot
+    per distinct term -> candidate docs holding every REQUIRED term (the
+    conjunctive pruning Lucene's sub-span leapfrog does) -> Arrow kernel
+    evaluates the tree -> BM25 on the span freq with the summed-idf
+    weight.
 
     Scale bound (BENCH_r03 measures this at 1.2M docs): the candidate
     frame is distributed (one groupBy partition per shuffle slot) and the
@@ -133,49 +143,20 @@ def span_score_frame(index: InvertedIndex, tree,
     """
     if not index.with_positions:
         raise ValueError("index built without positions")
-    eval_terms = sorted(set(_eval_terms(tree)))
+    names = sorted(set(_eval_terms(tree)))
     weight_terms = sorted(set(_tree_terms(tree)))
-    required = sorted(_required_terms(tree))
     scorer = _Scorer(index, weight_terms, precision)
-    # SpanWeight: idf summed over extractTerms' distinct terms
-    if precision == "float64":
-        from .search import idf64
-        w = 0.0
-        for t in weight_terms:
-            w += idf64(scorer.tstats.get(t, (0, 0))[0], scorer.stats.max_doc)
-        weight_value = w * 2.2
-    else:
-        acc = np.float32(0.0)
-        for t in weight_terms:
-            acc = acc + scorer.stats.idf(scorer.tstats.get(t, (0, 0))[0])
-        weight_value = float(acc * (scorer.stats.k1 + np.float32(1.0)))
-    stype = "double" if precision == "float64" else "float"
-
-    rows = (index.postings.where(F.col("term").isin(eval_terms))
-            .select("seg", "term", F.explode("postings").alias("p"))
-            .select("seg", "term",
-                    F.col("p.docid").alias("docid"),
-                    F.col("p.norm").alias("norm"),
-                    F.col("p.positions").alias("pos")))
-    req_set = set(required)
-    per_doc = rows.groupBy("seg", "docid").agg(
-        F.first("norm").alias("norm"),
-        F.sum(F.when(F.col("term").isin(list(req_set)), 1).otherwise(0))
-        .alias("nreq"),
-        F.collect_list(F.struct("term", "pos")).alias("termpos"),
-    )
-    if req_set:
-        per_doc = per_doc.where(F.col("nreq") == len(req_set))
-    return (per_doc
-            .withColumn("sfreq", _span_tree_udf(
-                tree, f32=(precision != "float64"))(F.col("termpos")))
-            .where(F.col("sfreq") > 0)
-            .withColumn(
-                "score",
-                (F.lit(weight_value).cast(stype)
-                 * F.col("sfreq").cast(stype))
-                / (F.col("sfreq").cast(stype) + scorer.norm_factor()))
-            .select("seg", "docid", "sfreq", "score"))
+    docs = _slot_positions(index, [[t] for t in names])
+    required = _required_terms(tree)
+    if required:
+        docs = docs.where(_has_slots(names.index(t) for t in required))
+    weight = scorer.summed_weight([scorer.df(t) for t in weight_terms])
+    return (docs
+            .withColumn("freq", _span_tree_udf(
+                tree, names, f32=(precision != "float64"))(F.col("hits")))
+            .where(F.col("freq") > 0)
+            .select("seg", "docid", F.col("freq").alias("sfreq"),
+                    scorer.score(weight).alias("score")))
 
 
 def span_near(index: InvertedIndex, query_text: str, slop: int = 2,
@@ -234,10 +215,10 @@ def multi_phrase(index: InvertedIndex, slots: list[list[str]],
                  k: int = 10, precision: str = "float32") -> DataFrame:
     """MultiPhraseQuery (``search/MultiPhraseQuery.java``): an exact phrase
     where each position slot accepts a SET of terms (e.g. synonyms):
-    slots = [["new"], ["york", "jersey"]].  Per slot, the union of the
-    member terms' (shifted) positions feeds the same intersection used by
-    the exact-phrase plan; weight = summed idf over each slot's first
-    matching term set (the reference sums idf over all terms).
+    slots = [["new"], ["york", "jersey"]].  Each slot's texts are
+    analysed, and the phrase scores through the exact-phrase plan with a
+    term set per slot; weight = idf summed over every term of every slot
+    (MultiPhraseQuery weights with idfExplain over the flat term array).
     """
     if not index.with_positions:
         raise ValueError("index built without positions")
@@ -246,51 +227,8 @@ def multi_phrase(index: InvertedIndex, slots: list[list[str]],
         sorted({t.term for txt in slot for t in analyzer(txt)})
         for slot in slots
     ]
-    all_terms = sorted({t for s in norm_slots for t in s})
-    scorer = _Scorer(index, all_terms, precision)
-    # idf summed over every term of every slot (MultiPhraseQuery weights
-    # with idfExplain over the flat term array)
-    flat = [t for s in norm_slots for t in s]
-    s_acc = np.float32(0.0)
-    for t in flat:
-        s_acc = s_acc + scorer.stats.idf(scorer.tstats.get(t, (0, 0))[0])
-    weight_value = float(s_acc * (scorer.stats.k1 + np.float32(1.0)))
-    stype = "double" if precision == "float64" else "float"
-
-    frames = []
-    for i, slot_terms in enumerate(norm_slots):
-        f = (index.postings.where(F.col("term").isin(slot_terms))
-             .select("seg", F.explode("postings").alias("p"))
-             .select("seg", F.col("p.docid").alias("docid"),
-                     F.col("p.norm").alias("norm"),
-                     F.transform(F.col("p.positions"),
-                                 lambda c: c - F.lit(i)).alias("pos"))
-             .groupBy("seg", "docid")
-             .agg(F.first("norm").alias("norm"),
-                  F.array_sort(F.array_distinct(
-                      F.flatten(F.collect_list("pos")))).alias("pos"))
-             .withColumn("slot", F.lit(i)))
-        frames.append(f)
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    per_doc = union.groupBy("seg", "docid").agg(
-        F.count("*").alias("nslots"),
-        F.first("norm").alias("norm"),
-        F.array_sort(F.collect_list(F.struct("slot", "pos"))).alias("slots"),
-    ).where(F.col("nslots") == len(norm_slots))
-    inter = per_doc.withColumn(
-        "common",
-        F.aggregate(
-            F.expr("slice(slots, 2, size(slots) - 1)"),
-            F.col("slots")[0]["pos"],
-            lambda acc, s: F.array_intersect(acc, s["pos"]),
-        ),
-    ).withColumn("pfreq", F.size("common").cast("double")) \
-     .where(F.col("pfreq") > 0)
-    scored = inter.withColumn(
-        "score",
-        (F.lit(weight_value).cast(stype) * F.col("pfreq").cast(stype))
-        / (F.col("pfreq").cast(stype) + scorer.norm_factor()),
-    ).select("seg", "docid", "score")
-    return _topk(scored, index, k, precision)
+    if not all(norm_slots):  # a slot with no term never matches
+        return _topk(_no_docs(index, precision), index, k, precision)
+    scored = _phrase_frame(index, norm_slots, list(range(len(norm_slots))),
+                           precision)
+    return _topk(scored.select("seg", "docid", "score"), index, k, precision)

@@ -155,3 +155,28 @@ class TestFieldMaskingSpan:
         keys = sorted(r["key"] for r in hits)
         # adjacent or same-slot pairs all fit in slop 0 unordered
         assert keys == ["d1", "d2", "d3"]
+
+    @pytest.mark.parametrize("precision", ["float32", "float64"])
+    def test_unmasked_tree_is_span_query(self, mfi, precision):
+        """With every leaf in the default field, the masked query scores
+        exactly as span_query on that field (one summed-idf weight)."""
+        from lucene_solr_old_spark.operators.multifield import (
+            masked_span_query)
+        from lucene_solr_old_spark.operators.spans import span_query
+
+        tree = ("near", [("term", "james"), ("term", "mary")], 1, False)
+        got = {r["key"]: r["score"] for r in masked_span_query(
+            mfi, tree, k=10, precision=precision).collect()}
+        want = {r["key"]: r["score"] for r in span_query(
+            mfi.field("first"), tree, k=10, precision=precision).collect()}
+        assert want and got == want
+
+    def test_masked_not_excludes(self, mfi):
+        from lucene_solr_old_spark.operators.multifield import (
+            masked_span_query)
+
+        # james, unless sally follows within the same field
+        tree = ("not", ("term", "james"),
+                ("near", [("term", "james"), ("term", "sally")], 0, True))
+        hits = masked_span_query(mfi, tree, k=10).collect()
+        assert sorted(r["key"] for r in hits) == ["d1", "d2"]

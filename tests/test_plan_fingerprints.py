@@ -3,8 +3,9 @@
 Each entry point runs once on a tiny index (500 generated pages, the size
 of the sf0.001 documents table); builds run unpersisted, so the inversion
 stage itself is in the counted plan.  The counts of Exchange, Window,
-join, Python-exec and TakeOrderedAndProject nodes in its executed (final
-adaptive) plan are compared with ``plan_fingerprints.json``.  A count may
+join, Python-exec, TakeOrderedAndProject and scan nodes in its executed
+(final adaptive) plan are compared with ``plan_fingerprints.json``; the
+scan count shows how often a plan reads its inputs.  A count may
 fall but never rise: a plan regression then fails here instead of
 showing up as benchmark noise.
 
@@ -23,6 +24,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lucene_solr_old_spark.operators import search as S  # noqa: E402
+from lucene_solr_old_spark.operators import spans as SP  # noqa: E402
 from lucene_solr_old_spark.operators import wand as W  # noqa: E402
 from lucene_solr_old_spark.operators.batch import batch_search  # noqa: E402
 from lucene_solr_old_spark.operators.indexer import (  # noqa: E402
@@ -34,11 +36,12 @@ from lucene_solr_old_spark.sources.pages import (  # noqa: E402
 
 BASELINE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "plan_fingerprints.json")
-KINDS = ("exchange", "window", "join", "python", "take_ordered")
+KINDS = ("exchange", "window", "join", "python", "take_ordered", "scan")
 QUERY = "running meetings caresses"
 BATCH = [(0, "running meetings", "OR"), (1, "caresses ponies", "AND"),
          (2, "relational hopeful running", "OR"),
          (3, "running running meetings", "OR")]
+PHRASE = "aad aaeevnqlbaa"
 
 
 def _kind(node: str) -> str | None:
@@ -52,6 +55,8 @@ def _kind(node: str) -> str | None:
         return "python"
     if node == "TakeOrderedAndProject":
         return "take_ordered"
+    if "Scan" in node:
+        return "scan"
     return None
 
 
@@ -107,6 +112,12 @@ def entry_points(df, plain, comp) -> dict:
             comp, "running meetings", k=10, mode="AND"),
         "batch_search": lambda: batch_search(plain, BATCH, k=10),
         "batch_wand_search": lambda: W.batch_wand_search(comp, BATCH, k=10),
+        "search_phrase": lambda: S.search_phrase(plain, PHRASE, k=10),
+        "search_phrase_slop": lambda: S.search_phrase(
+            plain, "aad aaferqwx aad", k=10, slop=2),
+        "span_near": lambda: SP.span_near(plain, PHRASE, slop=2, k=10),
+        "multi_phrase": lambda: SP.multi_phrase(
+            plain, [["aad"], ["aaeevnqlbaa", "aaferqwx"]], k=10),
     }
 
 

@@ -77,6 +77,29 @@ def test_multi_phrase(idx, spark):
     assert exact == keys(search_phrase(idx, "alpha gamma", k=10))
 
 
+@pytest.mark.parametrize("precision", ["float32", "float64"])
+@pytest.mark.parametrize("text", ["alpha gamma", "gamma alpha gamma"])
+def test_singleton_multi_phrase_is_phrase(idx, text, precision):
+    """One-term slots score exactly as the phrase, a repeated term
+    included, in either precision (one summed-idf weight)."""
+    from lucene_solr_old_spark.operators.spans import multi_phrase
+
+    slots = [[t] for t in text.split()]
+    got = {r["key"]: r["score"] for r in
+           multi_phrase(idx, slots, k=10, precision=precision).collect()}
+    want = {r["key"]: r["score"] for r in
+            S.search_phrase(idx, text, k=10,
+                            precision=precision).collect()}
+    assert want and got == want
+
+
+@pytest.mark.parametrize("slots", [[["alpha"], ["the"]], [["the"], ["a"]]])
+def test_multi_phrase_stopword_slot_matches_nothing(idx, slots):
+    from lucene_solr_old_spark.operators.spans import multi_phrase
+
+    assert multi_phrase(idx, slots, k=10).collect() == []
+
+
 def test_highlight_analyzed(spark):
     from lucene_solr_old_spark.operators.highlight import highlight_analyzed
 
