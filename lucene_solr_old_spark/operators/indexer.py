@@ -21,10 +21,13 @@ we inline them — same data, join-free plan).
 
 from __future__ import annotations
 
+import json
 import os
 import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .analysis import (FUSED_SCHEMA, FUSED_SCHEMA_OFFSETS,
@@ -48,15 +51,18 @@ class InvertedIndex:
     with_offsets: bool = False
     _stats: tuple | None = field(default=None, repr=False)
     _terms_dict: DataFrame | None = field(default=None, repr=False)
+    # the build's persisted fused-stage output, released by unpersist()
+    _fused: DataFrame | None = field(default=None, repr=False)
 
     def collection_stats(self) -> tuple[int, int]:
         """(maxDoc, sumTotalTermFreq) over the whole index — global exact
-        stats (unlike per-shard Solr idf; SURVEY.md §3.3)."""
+        stats (unlike per-shard Solr idf; SURVEY.md §3.3).  One tiny row
+        per segment is summed driver-side: one stage, no exchange (the
+        approach term_stats takes too)."""
         if self._stats is None:
-            row = self.segstats.agg(
-                F.sum("max_doc").alias("md"), F.sum("sum_ttf").alias("st")
-            ).collect()[0]
-            self._stats = (int(row["md"] or 0), int(row["st"] or 0))
+            rows = self.segstats.select("max_doc", "sum_ttf").collect()
+            self._stats = (sum(int(r["max_doc"]) for r in rows),
+                           sum(int(r["sum_ttf"]) for r in rows))
         return self._stats
 
     def terms_dict(self) -> DataFrame:
@@ -123,6 +129,14 @@ class InvertedIndex:
         self.segstats = self.segstats.persist()
         return self
 
+    def unpersist(self) -> "InvertedIndex":
+        """Release the build's fused-stage cache and whatever
+        :meth:`persist` cached."""
+        for df in (self._fused, self.postings, self.docmeta, self.segstats):
+            if df is not None:
+                df.unpersist()
+        return self
+
     def _write_terms_dict(self, path: str, mode: str) -> None:
         """Build-time term dictionary (BlockTreeTermsWriter analogue):
         few term-SORTED files so a prefix/range probe skips row groups
@@ -177,8 +191,6 @@ class InvertedIndex:
         write-once bulk ingest (``route="none"``), segdir for indexes
         that take incremental appends.
         """
-        import json
-
         if layout not in ("segdir", "packed"):
             raise ValueError("layout must be 'segdir' or 'packed'")
         if layout == "packed" and mode != "overwrite":
@@ -221,8 +233,6 @@ class InvertedIndex:
             # threads so none of them serializes behind another's
             # stragglers (the same overlap a multi-sink cluster job
             # gets for free).
-            from concurrent.futures import ThreadPoolExecutor
-
             def _w_docmeta():
                 (self.docmeta.coalesce(par)
                  .write.mode(mode).parquet(os.path.join(path, "docmeta")))
@@ -236,11 +246,8 @@ class InvertedIndex:
                     return
                 self._write_terms_dict(path, mode)
 
-            with ThreadPoolExecutor(max_workers=3) as ex:
-                futs = [ex.submit(f)
-                        for f in (_w_docmeta, _w_segstats, _w_terms)]
-                for fu in futs:
-                    fu.result()
+            _run_concurrently(self.postings.sparkSession,
+                              _w_docmeta, _w_segstats, _w_terms)
         else:
             self.postings.write.mode(mode).partitionBy("seg").parquet(
                 os.path.join(path, "postings"))
@@ -265,44 +272,129 @@ class InvertedIndex:
                 # instead of silently losing new terms from expansions
                 _drop_stored_terms_dict(self.postings.sparkSession, path)
                 self._terms_dict = None
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "index_meta.json"), "w") as f:
-            json.dump({"analyzer": self.analyzer,
-                       "with_positions": self.with_positions,
-                       "layout": layout,
-                       "compressed": "blocks" in self.postings.columns}, f)
+        _write_meta(self.postings.sparkSession, path, self._meta(layout))
+
+    def _meta(self, layout: str = "segdir") -> dict:
+        """The ``index_meta.json`` of this index: its analyzer and the
+        flags that fix the stored tables' schemas (:func:`_stored_schemas`)."""
+        return {"analyzer": self.analyzer,
+                "with_positions": self.with_positions,
+                "with_offsets": self.with_offsets,
+                "layout": layout,
+                "compressed": "blocks" in self.postings.columns}
+
+
+def _run_concurrently(spark: SparkSession, *fns) -> None:
+    """Run ``fns`` on driver threads and wait for all of them.  Each thread
+    inherits the caller's local properties, so its jobs carry the caller's
+    job group and description."""
+    with ThreadPoolExecutor(max_workers=len(fns)) as ex:
+        futs = [ex.submit(inheritable_thread_target(spark)(f)) for f in fns]
+        for fu in futs:
+            fu.result()
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path``, for any scheme Spark reads."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def _read_meta(spark: SparkSession, path: str) -> dict | None:
+    """The index's ``index_meta.json``, or None when it has none."""
+    fs, p = _hadoop_path(spark, os.path.join(path, "index_meta.json"))
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+    finally:
+        stream.close()
+
+
+def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
+    fs, p = _hadoop_path(spark, os.path.join(path, "index_meta.json"))
+    stream = fs.create(p, True)
+    try:
+        stream.write(bytearray(json.dumps(meta).encode("utf-8")))
+    finally:
+        stream.close()
 
 
 def _drop_stored_terms_dict(spark: SparkSession, path: str) -> None:
     """Remove a stored terms_dict that an append has made stale, through
     the Hadoop FileSystem of ``path`` (any scheme Spark writes to)."""
-    jvm = spark.sparkContext._jvm
-    td = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "terms_dict"))
-    fs = td.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, td = _hadoop_path(spark, os.path.join(path, "terms_dict"))
     if fs.exists(td) and not fs.delete(td, True):
         raise OSError(f"could not delete stale terms_dict at {td}")
 
 
-def load_index(spark: SparkSession, path: str) -> InvertedIndex:
-    import json
+def _stored_schemas(meta: dict) -> dict[str, str] | None:
+    """DDL schema of each stored table, derived from the meta flags and the
+    build's own column types, so a read infers nothing (schema inference
+    reads Parquet footers in a Spark job per table).  None for a meta
+    written before the flags were all recorded."""
+    if not {"with_positions", "with_offsets", "compressed"} <= meta.keys():
+        return None
+    from .codec import BLOCKS_SCHEMA
 
-    meta_path = os.path.join(path, "index_meta.json")
-    meta = {"analyzer": "english", "with_positions": True}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
+    ty = dict(c.split(" ", 1) for c in FUSED_SCHEMA_OFFSETS.split(", "))
+    # posting struct field <- the fused stage's parallel array it zips
+    fields = [("docid", "docids"), ("freq", "freqs"), ("norm", "norms")]
+    if meta["with_positions"]:
+        fields.append(("positions", "poss"))
+    if meta["with_offsets"]:
+        fields += [("starts", "starts"), ("ends", "ends")]
+    struct = ", ".join(f"{f}: {ty[src][len('ARRAY<'):-1]}"
+                       for f, src in fields)
+    body = (f"blocks {BLOCKS_SCHEMA}" if meta["compressed"]
+            else f"postings ARRAY<STRUCT<{struct}>>")
+    seg = f"seg {ty['seg']}"
+    cols = {
+        "postings": f"term {ty['term']}, df {ty['df']}, ttf {ty['ttf']}, "
+                    + body,
+        "docmeta": ", ".join(f"{c} {ty[c]}"
+                             for c in ("docid", "key", "doclen", "norm")),
+        # count(*) and sum(int) aggregates
+        "segstats": "max_doc BIGINT, sum_ttf BIGINT",
+    }
+    # a partition column reads back last; packed stores seg as a plain
+    # first column
+    if meta.get("layout", "segdir") == "packed":
+        out = {t: f"{seg}, {c}" for t, c in cols.items()}
+    else:
+        out = {t: f"{c}, {seg}" for t, c in cols.items()}
+    out["terms_dict"] = "term STRING, df BIGINT, ttf BIGINT"
+    return out
+
+
+def load_index(spark: SparkSession, path: str) -> InvertedIndex:
+    """Open a saved or flushed index.  With a full ``index_meta.json`` the
+    tables are read with derived schemas and the call runs no Spark job;
+    an older directory falls back to Parquet schema inference."""
+    meta = _read_meta(spark, path) or {"analyzer": "english",
+                                       "with_positions": True}
+    schemas = _stored_schemas(meta)
+
+    def read(table: str) -> DataFrame:
+        reader = spark.read
+        if schemas is not None:
+            reader = reader.schema(schemas[table])
+        return reader.parquet(os.path.join(path, table))
+
     idx = InvertedIndex(
-        postings=spark.read.parquet(os.path.join(path, "postings")),
-        docmeta=spark.read.parquet(os.path.join(path, "docmeta")),
-        segstats=spark.read.parquet(os.path.join(path, "segstats")),
+        postings=read("postings"),
+        docmeta=read("docmeta"),
+        segstats=read("segstats"),
         with_positions=meta["with_positions"],
         analyzer=meta["analyzer"],
+        with_offsets=meta.get("with_offsets", False),
     )
-    td_path = os.path.join(path, "terms_dict")
-    if os.path.isdir(td_path):
+    fs, td = _hadoop_path(spark, os.path.join(path, "terms_dict"))
+    if fs.exists(td):
         # stored term dictionary: expansions become parquet scans with
         # min/max file pruning — no per-query postings aggregation.
-        idx._terms_dict = spark.read.parquet(td_path)
+        idx._terms_dict = read("terms_dict")
     return idx
 
 
@@ -345,7 +437,8 @@ def build_index(
     shuffle to salt); a non-zero value warns.
 
     ``persist_termdoc`` caches the fused stage's output, so the postings
-    and docmeta actions analyze the corpus once.
+    and docmeta actions analyze the corpus once;
+    :meth:`InvertedIndex.unpersist` releases it.
 
     ``route`` picks the doc->segment assignment:
       * ``"hash"`` (default) — one repartition by doc key: segment
@@ -414,7 +507,8 @@ def build_index(
         F.sum("doclen").alias("sum_ttf"),
     )
     return InvertedIndex(postings, docmeta, segstats, with_positions,
-                         analyzer, with_offsets)
+                         analyzer, with_offsets,
+                         _fused=out if persist_termdoc else None)
 
 
 def compress_index(index: InvertedIndex) -> InvertedIndex:

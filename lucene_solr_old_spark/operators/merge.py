@@ -188,7 +188,9 @@ def delete_docs(index: InvertedIndex, deleted_keys: DataFrame,
         the engine's oracle gates certify).  Diverges from the reference
         after deletes-without-merge by design.
     """
-    live_meta = index.docmeta.join(deleted_keys, "key", "left_anti")
+    # the join puts "key" first; keep docmeta's own column order
+    live_meta = (index.docmeta.join(deleted_keys, "key", "left_anti")
+                 .select(*index.docmeta.columns))
     live_ids = live_meta.select("seg", "docid")
     wp = index.with_positions
     fields = _posting_fields(wp)
@@ -242,7 +244,7 @@ def upsert_docs(index: InvertedIndex, new_docs, key_col: str = "url",
             added.docmeta.withColumn("seg", shift.cast("int"))),
         pruned.segstats.unionByName(
             added.segstats.withColumn("seg", shift.cast("int"))),
-        index.with_positions, index.analyzer)
+        index.with_positions, index.analyzer, _fused=added._fused)
 
 
 def versioned_upsert(index: InvertedIndex, versions: DataFrame,

@@ -28,10 +28,11 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.indexer import InvertedIndex, build_index
+from ..operators.indexer import InvertedIndex, build_index, load_index
 
 __all__ = ["checkpointed_build", "load_checkpointed", "checkpoint_status"]
 
@@ -82,14 +83,13 @@ def checkpointed_build(
             idx.postings.withColumn("seg", F.col("seg") + base),
             idx.docmeta.withColumn("seg", F.col("seg") + base),
             idx.segstats.withColumn("seg", F.col("seg") + base),
-            idx.with_positions, idx.analyzer)
+            idx.with_positions, idx.analyzer, _fused=idx._fused)
         shard_path = os.path.join(path, "shards", str(s))
         idx.save(shard_path)
         # metrics from what was written (cheap: segstats is tiny)
-        stats = idx.segstats.agg(
-            F.sum("max_doc").alias("docs"), F.sum("sum_ttf").alias("ttf")
-        ).collect()[0]
+        docs_n, sum_ttf = idx.collection_stats()
         n_terms = idx.postings.count()
+        idx.unpersist()
         ckpt = {
             "status": "complete",
             "shard": s,
@@ -101,8 +101,8 @@ def checkpointed_build(
                 "analyzer": analyzer,
             },
             "metrics": {
-                "docs": int(stats["docs"] or 0),
-                "sum_ttf": int(stats["ttf"] or 0),
+                "docs": docs_n,
+                "sum_ttf": sum_ttf,
                 "term_postings_rows": int(n_terms),
                 "build_sec": round(time.time() - t0, 3),
             },
@@ -123,27 +123,19 @@ def load_checkpointed(spark: SparkSession, path: str,
                if done.get(s, {}).get("status") != "complete"]
     if missing:
         raise RuntimeError(f"incomplete shards {missing}; resume the build")
-    meta_path = os.path.join(path, "shards", "0", "index_meta.json")
-    meta = {"analyzer": "english", "with_positions": True}
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-    shards = os.path.join(path, "shards")
+    # each shard is its own index root (meta, partitioned tables) — load
+    # each and union (seg ids are globally unique by construction)
+    shards = [load_index(spark, os.path.join(path, "shards", str(s)))
+              for s in range(n_shards)]
 
-    def read_union(sub: str):
-        # each shard is its own partitioned table root — read separately
-        # and union (seg ids are globally unique by construction)
-        dfs = [spark.read.parquet(os.path.join(shards, str(s), sub))
-               for s in range(n_shards)]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+    def union(table: str) -> DataFrame:
+        return reduce(DataFrame.unionByName,
+                      [getattr(sh, table) for sh in shards])
 
     return InvertedIndex(
-        postings=read_union("postings"),
-        docmeta=read_union("docmeta"),
-        segstats=read_union("segstats"),
-        with_positions=meta["with_positions"],
-        analyzer=meta["analyzer"],
+        postings=union("postings"),
+        docmeta=union("docmeta"),
+        segstats=union("segstats"),
+        with_positions=shards[0].with_positions,
+        analyzer=shards[0].analyzer,
     )

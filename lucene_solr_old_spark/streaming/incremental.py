@@ -17,6 +17,21 @@ Each micro-batch builds ``segments_per_batch`` segments labeled
 accumulated index is just the union of all flushed segments, and query
 results are IDENTICAL to a one-shot batch build of the same rows (global
 stats are computed from segstats at query time).
+
+Cost model of one flush -> reopen -> first query cycle:
+
+  * flush (7 jobs): the doc-routing shuffle; one job that analyses the
+    batch into the build's cache; a one-partition take over that cache
+    as the emptiness test (the input itself is never re-read); then the
+    postings, docmeta and segstats writes (the last is an aggregate, so
+    two jobs) run concurrently off the cache, on driver threads that
+    keep the caller's job group.  The cache is released afterwards.  The
+    first flush into a fresh directory writes its ``index_meta.json``;
+  * reopen (``open_nrt_reader``): no Spark job.  ``index_meta.json``
+    fixes the stored tables' schemas, so nothing is inferred from
+    Parquet footers, and the file listing runs on the driver;
+  * first query: one job for collection stats (per-segment rows summed
+    on the driver) plus the query's own term-stats seek and collect.
 """
 
 from __future__ import annotations
@@ -25,31 +40,33 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.indexer import InvertedIndex, build_index, load_index
+from ..operators.indexer import (InvertedIndex, _drop_stored_terms_dict,
+                                 _read_meta, _run_concurrently, _write_meta,
+                                 build_index, load_index)
 
 __all__ = ["start_incremental_indexer", "open_nrt_reader",
            "flush_index_batch"]
 
 
-def _require_segdir_layout(index_path: str) -> None:
-    """Appends write ``seg=`` partition directories; a ``packed``
-    (bulk-ingest) index stores plain range files, and Spark cannot read
-    a directory mixing both — so a packed target must be rejected UP
-    FRONT, not discovered as a corrupt read later (indexer.save
-    docstring: packed is write-once)."""
-    import json
-    import os
-
-    meta_path = os.path.join(index_path, "index_meta.json")
-    if not os.path.exists(meta_path):
+def _require_segdir_layout(index_path: str, meta: dict | None) -> None:
+    """Appends write ``seg=`` partition directories of plain postings; a
+    ``packed`` (bulk-ingest) index stores plain range files, and Spark
+    cannot read a directory mixing both, while a compressed index stores
+    ``blocks`` where a flush writes ``postings`` — so such a target must
+    be rejected UP FRONT, not discovered as a corrupt read later
+    (indexer.save docstring: packed is write-once)."""
+    if meta is None:
         return  # fresh directory — this batch creates it as segdir
-    with open(meta_path) as f:
-        layout = json.load(f).get("layout", "segdir")
+    layout = meta.get("layout", "segdir")
     if layout != "segdir":
         raise ValueError(
             f"index at {index_path!r} has layout={layout!r}; incremental "
             "appends require layout='segdir' (re-save the index with the "
             "default layout, or bulk-rebuild instead of appending)")
+    if meta.get("compressed"):
+        raise ValueError(
+            f"index at {index_path!r} is compressed; incremental appends "
+            "write plain postings, so append to the uncompressed index")
 
 
 def flush_index_batch(batch_df: DataFrame, batch_id: int, index_path: str,
@@ -58,47 +75,51 @@ def flush_index_batch(batch_df: DataFrame, batch_id: int, index_path: str,
                       analyzer: str = "english",
                       segments_per_batch: int = 2) -> None:
     """Build and publish one micro-batch's segments — idempotent per
-    batch_id (safe under foreachBatch's at-least-once replay)."""
-    _require_segdir_layout(index_path)
-    if batch_df.isEmpty():
-        return
+    batch_id (safe under foreachBatch's at-least-once replay).  An empty
+    batch changes nothing."""
+    spark = batch_df.sparkSession
+    meta = _read_meta(spark, index_path)
+    _require_segdir_layout(index_path, meta)
     idx = build_index(batch_df, key_col=key_col, text_col=text_col,
                       html_col=html_col, analyzer=analyzer,
                       num_segments=segments_per_batch)
-    base = batch_id * segments_per_batch
-    relabeled = InvertedIndex(
-        idx.postings.withColumn("seg", (F.col("seg") + base).cast("int")),
-        idx.docmeta.withColumn("seg", (F.col("seg") + base).cast("int")),
-        idx.segstats.withColumn("seg", (F.col("seg") + base).cast("int")),
-        idx.with_positions, idx.analyzer)
-    # IDEMPOTENT flush: foreachBatch is at-least-once (a crash between
-    # the write and the streaming-checkpoint commit replays the batch),
-    # so a blind append would duplicate the batch's segments.  Segment
-    # ids are a pure function of batch_id, so dynamic partition
-    # overwrite (replace exactly the seg= partitions this batch owns,
-    # leave all others) makes the replay rewrite the same segments
-    # instead of appending twins — the transaction-log replay semantics
-    # of ``update/UpdateLog.java:779-812`` (replayed ops overwrite,
-    # not duplicate).  segstats is written seg-partitioned too so its
-    # rows are replaced by the same mechanism.
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        relabeled.postings.write.mode("overwrite") \
-            .partitionBy("seg").parquet(os.path.join(index_path, "postings"))
-        relabeled.docmeta.write.mode("overwrite") \
-            .partitionBy("seg").parquet(os.path.join(index_path, "docmeta"))
-        relabeled.segstats.write.mode("overwrite") \
-            .partitionBy("seg").parquet(os.path.join(index_path, "segstats"))
+        # the emptiness test fills the build's cache (a job over every
+        # partition, then a one-partition take); the writes all read it
+        if idx.docmeta.isEmpty():
+            return
+        base = batch_id * segments_per_batch
+        seg = (F.col("seg") + base).cast("int")
+        # IDEMPOTENT flush: foreachBatch is at-least-once (a crash between
+        # the write and the streaming-checkpoint commit replays the batch),
+        # so a blind append would duplicate the batch's segments.  Segment
+        # ids are a pure function of batch_id, so dynamic partition
+        # overwrite (replace exactly the seg= partitions this batch owns,
+        # leave all others) makes the replay rewrite the same segments
+        # instead of appending twins — the transaction-log replay
+        # semantics of ``update/UpdateLog.java:779-812`` (replayed ops
+        # overwrite, not duplicate).  segstats is written seg-partitioned
+        # too so its rows are replaced by the same mechanism.  The mode is
+        # a per-write option: the writes run concurrently, and a session
+        # conf flip would leak into other threads' writes.
+        def writer(table: str, df: DataFrame):
+            return lambda: (
+                df.withColumn("seg", seg).write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("seg")
+                .parquet(os.path.join(index_path, table)))
+
+        _run_concurrently(spark, writer("postings", idx.postings),
+                          writer("docmeta", idx.docmeta),
+                          writer("segstats", idx.segstats))
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        idx.unpersist()
+    if meta is None:
+        _write_meta(spark, index_path, idx._meta())
     # a flushed batch makes any stored terms_dict stale (it predates the
     # new segments' terms); drop it so readers opened via load_index
     # re-derive the dictionary lazily instead of silently losing the new
     # terms from multi-term expansions and term_stats
-    from ..operators.indexer import _drop_stored_terms_dict
     _drop_stored_terms_dict(spark, index_path)
 
 
