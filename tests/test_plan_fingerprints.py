@@ -26,6 +26,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lucene_solr_old_spark.operators import search as S  # noqa: E402
 from lucene_solr_old_spark.operators import spans as SP  # noqa: E402
 from lucene_solr_old_spark.operators import wand as W  # noqa: E402
+from lucene_solr_old_spark.operators.mlt import more_like_this  # noqa: E402
+from lucene_solr_old_spark.operators.tfidf import (  # noqa: E402
+    search_lmdirichlet, search_tfidf)
+from lucene_solr_old_spark.plans.query import execute  # noqa: E402
+from lucene_solr_old_spark.plans.xml import xml_search  # noqa: E402
 from lucene_solr_old_spark.operators.batch import batch_search  # noqa: E402
 from lucene_solr_old_spark.operators.indexer import (  # noqa: E402
     build_index, compress_index)
@@ -42,6 +47,13 @@ BATCH = [(0, "running meetings", "OR"), (1, "caresses ponies", "AND"),
          (2, "relational hopeful running", "OR"),
          (3, "running running meetings", "OR")]
 PHRASE = "aad aaeevnqlbaa"
+BOOL = "+running meetings^2 -caresses"
+XML = ('<BooleanQuery fieldName="contents">'
+       '<Clause occurs="should"><TermQuery>run</TermQuery></Clause>'
+       '<Clause occurs="should"><TermsQuery minimumNumberShouldMatch="2">'
+       'meetings caresses ponies</TermsQuery></Clause>'
+       '<Clause occurs="mustnot"><TermQuery>hope</TermQuery></Clause>'
+       '</BooleanQuery>')
 
 
 def _kind(node: str) -> str | None:
@@ -118,6 +130,15 @@ def entry_points(df, plain, comp) -> dict:
         "span_near": lambda: SP.span_near(plain, PHRASE, slop=2, k=10),
         "multi_phrase": lambda: SP.multi_phrase(
             plain, [["aad"], ["aaeevnqlbaa", "aaferqwx"]], k=10),
+        "search_tfidf": lambda: search_tfidf(plain, QUERY, k=10),
+        "search_tfidf_and": lambda: search_tfidf(
+            plain, "running meetings", k=10, mode="AND"),
+        "search_lmdirichlet": lambda: search_lmdirichlet(plain, QUERY, k=10),
+        "more_like_this": lambda: more_like_this(
+            plain, first[0]["key"], k=10, min_term_freq=1, min_doc_freq=1,
+            max_query_terms=5),
+        "execute": lambda: execute(plain, BOOL, k=10),
+        "xml_search": lambda: xml_search(plain, XML, k=10),
     }
 
 
