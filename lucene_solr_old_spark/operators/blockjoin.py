@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .indexer import InvertedIndex
-from .search import search_terms, term_score_frame
+from .search import _term_set_docs, search_terms
 
 __all__ = ["to_parent_join", "to_child_join"]
 
@@ -39,8 +39,7 @@ def _child_scores(index: InvertedIndex, child_query: str,
     from ..functions.tokenizer import get_analyzer
 
     terms = [t.term for t in get_analyzer(index.analyzer)(child_query)]
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    per_doc = scored.groupBy("seg", "docid").agg(F.sum("score").alias("score"))
+    per_doc = _term_set_docs(index, terms, precision)
     return per_doc.join(index.docmeta.select("seg", "docid", "key"),
                         ["seg", "docid"]).select("key", "score")
 
@@ -146,7 +145,7 @@ def join_util_search(index: InvertedIndex, from_query: str,
     the to-side never shuffles: scan -> broadcast-hash-join -> top-k."""
     from pyspark.sql import functions as F
 
-    from .search import _qterms, term_score_frame
+    from .search import _qterms
 
     stype = "double" if precision == "float64" else "float"
     terms = _qterms(index, from_query)
@@ -154,8 +153,8 @@ def join_util_search(index: InvertedIndex, from_query: str,
         return to_docs.select(
             F.col(key_col).alias("to_key"),
             F.lit(0.0).cast(stype).alias("score")).limit(0)
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    per_doc = scored.groupBy("seg", "docid").agg(F.sum("score").alias("s"))
+    per_doc = _term_set_docs(index, terms, precision).withColumnRenamed(
+        "score", "s")
     with_field = (per_doc
                   .join(index.docmeta.select("seg", "docid", "key"),
                         ["seg", "docid"])

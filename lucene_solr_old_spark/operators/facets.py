@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .indexer import InvertedIndex
-from .search import term_score_frame
+from .search import _term_set_docs
 
 __all__ = ["taxonomy_counts", "drill_down", "stats_percentiles",
            "collapse_results", "expand_groups",
@@ -124,8 +124,7 @@ def group_topk(index: InvertedIndex, terms: list[str], dims: DataFrame,
     (``lucene/grouping``'s first/second pass collapsed into one windowed
     plan — Catalyst's window exchange partitions by group, exactly the
     per-group PQ the reference keeps)."""
-    scored, _ = term_score_frame(index, terms)
-    per_doc = scored.groupBy("seg", "docid").agg(F.sum("score").alias("score"))
+    per_doc = _term_set_docs(index, terms)
     dims_k = dims.withColumnRenamed(key_col, "key") if key_col != "key" else dims
     hits = (per_doc.join(index.docmeta.select("seg", "docid", "key"),
                          ["seg", "docid"])

@@ -76,15 +76,5 @@ def more_like_this(index: InvertedIndex, key: str, k: int = 10,
                                max_doc_freq, max_query_terms,
                                min_word_len, max_word_len)
              .select("term").collect()]
-    if not terms:
-        spark = index.postings.sparkSession
-        return spark.createDataFrame([], "key STRING, score DOUBLE")
-    scored, _ = S.term_score_frame(index, terms, precision=precision)
-    per_doc = scored.groupBy("seg", "docid").agg(
-        F.sum("score").alias("score"))
-    return (per_doc.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
-            .where(F.col("key") != key)
-            .select("key", "score")
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+    return S._topk(S._term_set_docs(index, terms, precision), index, k,
+                   precision, where=F.col("key") != key)

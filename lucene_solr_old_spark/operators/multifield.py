@@ -20,7 +20,7 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from .indexer import InvertedIndex, build_index
-from .search import term_score_frame
+from .search import _no_docs, _term_set_docs, _topk
 from ..functions.tokenizer import get_analyzer
 
 __all__ = ["MultiFieldIndex", "build_multifield_index", "search_fielded",
@@ -126,17 +126,14 @@ def search_fielded(mfi: MultiFieldIndex, query: str, k: int = 10,
     frames = []
     for fname, terms in by_field.items():
         idx = mfi.indexes[fname]
-        scored, _ = term_score_frame(idx, terms, precision=precision)
-        per_doc = scored.groupBy("seg", "docid").agg(
-            F.sum("score").alias("score"))
+        per_doc = _term_set_docs(idx, terms, precision)
         keyed = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
                               ["seg", "docid"])
                  .select("key", "score"))
         frames.append(keyed)
     if not frames:
         any_idx = mfi.indexes[mfi.default_field]
-        return any_idx.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
+        return _topk(_no_docs(any_idx, precision), any_idx, k, precision)
     union = frames[0]
     for f in frames[1:]:
         union = union.unionByName(f)
@@ -185,18 +182,15 @@ def search_edismax(mfi: MultiFieldIndex, query_text: str,
             if not terms:
                 continue
             built_clauses.add(ci)
-            scored, _ = term_score_frame(idx, terms, boost=boost,
-                                         precision=precision)
-            per_doc = scored.groupBy("seg", "docid").agg(
-                F.sum("score").alias("fscore"))
+            per_doc = _term_set_docs(idx, terms, precision, boost)
             keyed = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
                                   ["seg", "docid"])
-                     .select("key", F.lit(ci).alias("clause"), "fscore"))
+                     .select("key", F.lit(ci).alias("clause"),
+                             F.col("score").alias("fscore")))
             frames.append(keyed)
     if not frames:
         any_idx = mfi.indexes[mfi.default_field]
-        return any_idx.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
+        return _topk(_no_docs(any_idx, precision), any_idx, k, precision)
     union = frames[0]
     for f in frames[1:]:
         union = union.unionByName(f)

@@ -1,26 +1,38 @@
 """Query execution: the reference's scorer algebra as DataFrame plans.
 
-Every BM25 entry point — ``search_terms`` (``search_or``/``search_and``),
-``search_dismax``, ``search_after``, ``count_query``, ``batch_search``
-(batch.py) and the block-max ``wand_search``/``batch_wand_search``
-(wand.py) — runs one pipeline, the reference's ``IndexSearcher`` ->
-``Weight`` -> ``Scorer`` -> ``TopScoreDocCollector`` (SURVEY.md §2.5,
-§3.3).  A single query is a workload of one:
+Every term-query entry point — ``search_terms`` (``search_or``/
+``search_and``), ``search_dismax``, ``search_after``, ``count_query``,
+``batch_search`` (batch.py), the TF-IDF, SweetSpot, LM-Dirichlet, DFR and
+IB searches (tfidf.py), and the term clauses of the query parsers
+(plans/) and operators, through :func:`_term_set_docs` — runs one
+pipeline, the reference's ``IndexSearcher`` -> ``Weight`` -> ``Scorer``
+-> ``TopScoreDocCollector`` (SURVEY.md §2.5, §3.3); the block-max
+``wand_search``/``batch_wand_search`` (wand.py) share its parse and
+weight steps.  A single query is a workload of one:
 
   * parse    -> :func:`_parse` analyses ``[(qid, text, mode)]`` with the
     index's analyzer.  A repeated term is a repeated clause: it scores once
     per clause and counts per clause for AND / minNrShouldMatch
     (``BooleanQuery.java`` clause list, ``MinShouldMatchSumScorer.java:36``).
-    A query that analyses to nothing matches nothing.
+    A query that analyses to nothing matches nothing.  A parser's term
+    clause is a term SET: a repeated term scores once.
+  * similarity -> the ``Similarity`` the scorer plugs in (``search/
+    similarities/``): ``weights`` gives each (query, term) weight on the
+    driver from df/ttf, the collection stats, the query's clauses and its
+    boost (the ``SimWeight``); ``score`` is the per-posting Column of
+    (weight, freq, norm byte) (the ``SimScorer``); ``coord`` scales a
+    document by matched / total clauses.  :class:`_BM25` is the default;
+    tfidf.py holds the others.
   * weight   -> :class:`_Scorer` is the only place the collection stats,
-    term stats, weights and the 256-entry norm cache are computed: Column
-    expressions for the relational plan, NumPy arrays for the kernel.
+    term stats, weights and norm tables are computed: Column expressions
+    for the relational plan, NumPy arrays for the kernel.
   * score    -> :func:`_scored_docs` is the relational core: one
     term-pruned postings scan, fanned out to the queries holding each term
-    through one map literal, scored ``weightValue * freq / (freq +
-    cache[norm])`` (``BM25Similarity.java:233-238``), and aggregated per
-    (qid, seg, docid).  The aggregate is the plain sum — coord == 1 for
-    BM25 (``Similarity.java:122-124``), BooleanScorer's bucket sum
+    through one map literal carrying each (query, term) weight, scored by
+    the similarity (BM25: ``weightValue * freq / (freq + cache[norm])``,
+    ``BM25Similarity.java:233-238``), and aggregated per (qid, seg,
+    docid).  The aggregate is the plain sum — coord == 1 for BM25
+    (``Similarity.java:122-124``), BooleanScorer's bucket sum
     (``BooleanScorer.java:61,143-156``) — or DisjunctionMaxQuery's
     ``max + tie*(sum-max)``.  AND and minNrShouldMatch are one HAVING
     ``nmatched >= need`` (the leapfrog ConjunctionScorer's semantics,
@@ -29,11 +41,13 @@ Every BM25 entry point — ``search_terms`` (``search_or``/``search_and``),
     scorer over the same parsed workload and scorer state.
   * collect  -> :func:`_topk` is TakeOrderedAndProject (``ORDER BY score
     DESC, key ASC LIMIT k``: the per-leaf PQ + merge of
-    ``TopScoreDocCollector.java:54-61``, ties to the lower doc key), with
-    an optional ``(score, key)`` cursor for searchAfter
-    (``IndexSearcher.java:234-250``); :func:`_topk_per_qid` is the per-qid
-    ``row_number`` window for workloads; ``count()`` is
-    TotalHitCountCollector.
+    ``TopScoreDocCollector.java:54-61``, ties to the lower doc key),
+    optionally over the hits passing a key/score predicate (the
+    searchAfter cursor, ``IndexSearcher.java:234-250``);
+    :func:`_topk_per_qid` is the per-qid ``row_number`` window for
+    workloads; ``count()`` is TotalHitCountCollector.  A workload that
+    matches nothing collects :func:`_no_docs`, so an empty result has the
+    schema of a matching one.
 
 Positional queries — PhraseQuery exact or sloppy, MultiPhraseQuery,
 NGramPhraseQuery (here) and the span trees (spans.py, multifield.py) —
@@ -143,6 +157,12 @@ class _Query(NamedTuple):
     qid: int
     mults: dict[str, int]  # distinct term -> clause multiplicity
     need: int              # clauses a doc must match: all of them for AND
+    boost: float = 1.0
+
+
+def _mults(terms: list[str]) -> dict[str, int]:
+    """The clauses of a term list: distinct term -> multiplicity."""
+    return {t: terms.count(t) for t in sorted(set(terms))}
 
 
 def _parse(index: InvertedIndex, queries: list[tuple],
@@ -156,51 +176,74 @@ def _parse(index: InvertedIndex, queries: list[tuple],
         if terms:
             need = (len(terms) if mode.upper() == "AND"
                     else max(1, min_should_match))
-            out.append(_Query(qid, {t: terms.count(t)
-                                    for t in sorted(set(terms))}, need))
+            out.append(_Query(qid, _mults(terms), need))
     return out
 
 
 def _no_docs(index: InvertedIndex, precision: str) -> DataFrame:
     """The scored-docs frame of a workload that matches nothing."""
     return index.docmeta.sparkSession.createDataFrame(
-        [], f"qid INT, seg INT, docid INT, score {_stype(precision)}")
+        [], f"qid INT, seg INT, docid INT, score {_stype(precision)}, "
+            "nmatched BIGINT")
+
+
+class _BM25:
+    """BM25Similarity (``BM25Similarity.java:233-238``), the default
+    similarity: weightValue = boost * idf * (k1+1), scored ``weightValue *
+    freq / (freq + cache[norm])`` with the 256-entry norm cache."""
+    coord = False
+
+    def weights(self, sc: "_Scorer", mults: dict[str, int],
+                boost: float) -> dict[str, float]:
+        if sc.precision == "float64":
+            return {t: boost * (idf64(sc.df(t), sc.stats.max_doc) * 2.2)
+                    for t in mults}
+        return {t: float(sc.stats.weight_value(sc.df(t), boost))
+                for t in mults}
+
+    def score(self, sc: "_Scorer", w: Column, freq: Column,
+              norm: Column) -> Column:
+        return (w * freq) / (freq + sc.per_norm(sc.bm25_cache, norm))
 
 
 class _Scorer:
-    """Scoring state of a query or workload, in either precision: Column
-    expressions for the relational plan, NumPy arrays for the kernel."""
+    """Scoring state of a query or workload under one similarity, in
+    either precision: Column expressions for the relational plan, NumPy
+    arrays for the kernel."""
 
     def __init__(self, index: InvertedIndex, terms: list[str],
-                 precision: str = "float32", boost: float = 1.0):
+                 precision: str = "float32", boost: float = 1.0,
+                 similarity=None):
         max_doc, sum_ttf = index.collection_stats()
         self.precision = precision
+        self.sim = similarity = similarity or _BM25()
         self.stats = Bm25Stats(max_doc, sum_ttf)
         self.tstats = index.term_stats(terms)
         self._sqltype = _stype(precision)
         if precision == "float64":
-            self._cache = cache64(sum_ttf / max_doc if max_doc else 1.0)
-            self._weights = {
-                t: boost * (idf64(self.df(t), max_doc) * 2.2)
-                for t in set(terms)
-            }
+            self.bm25_cache = cache64(sum_ttf / max_doc if max_doc else 1.0)
         else:
-            self._cache = [float(c) for c in self.stats.cache]
-            self._weights = {
-                t: float(self.stats.weight_value(self.df(t), boost))
-                for t in set(terms)
-            }
+            self.bm25_cache = [float(c) for c in self.stats.cache]
+        self._weights = similarity.weights(
+            self, dict.fromkeys(set(terms), 1), boost)
 
     def df(self, term: str) -> int:
         return self.tstats.get(term, (0, 0))[0]
 
+    def ttf(self, term: str) -> int:
+        return self.tstats.get(term, (0, 0))[1]
+
     def _num(self, x: float) -> str:
         return _sql_num(x, self._sqltype)
 
-    def norm_factor(self) -> Column:
+    def lit(self, x: float) -> Column:
+        return F.expr(self._num(x))
+
+    def per_norm(self, table: list[float], norm: Column) -> Column:
+        """``table[norm]``: a 256-entry per-norm-byte lookup."""
         # element_at is 1-based; norm byte is 0..255
-        arr = F.expr(f"array({', '.join(map(self._num, self._cache))})")
-        return F.element_at(arr, F.col("norm") + 1)
+        arr = F.expr(f"array({', '.join(map(self._num, table))})")
+        return F.element_at(arr, norm + 1)
 
     def weight_map(self) -> Column:
         """term -> weightValue."""
@@ -209,21 +252,24 @@ class _Scorer:
             for t, w in self._weights.items()) + ")")
 
     def fanout_map(self, workload: list[_Query]) -> Column:
-        """term -> array<struct<qid, mult, need, w>>: the queries holding
-        each term, with its clause multiplicity and weightValue."""
+        """term -> array<struct<qid, mult, need, w[, n]>>: the queries
+        holding each term, with its clause multiplicity and the weight of
+        (query, term); ``n``, the query's clause count, for coord."""
         holders: dict[str, list[str]] = {}
         for q in workload:
+            ws = self.sim.weights(self, q.mults, q.boost)
+            n = f", 'n', {sum(q.mults.values())}" if self.sim.coord else ""
             for t, m in q.mults.items():
                 holders.setdefault(t, []).append(
                     f"named_struct('qid', {int(q.qid)}, 'mult', {m}, "
-                    f"'need', {q.need}, 'w', {self._num(self._weights[t])})")
+                    f"'need', {q.need}, 'w', {self._num(ws[t])}{n})")
         return F.expr("map(" + ", ".join(
             f"{_sql_str(t)}, array({', '.join(h)})"
             for t, h in holders.items()) + ")")
 
     def score(self, weight: Column) -> Column:
         freq = F.col("freq").cast(self._sqltype)
-        return (weight * freq) / (freq + self.norm_factor())
+        return self.sim.score(self, weight, freq, F.col("norm"))
 
     def score_col(self) -> Column:
         return self.score(self.weight_map()[F.col("term")])
@@ -232,7 +278,7 @@ class _Scorer:
         """(weights, cache, dtype) of the NumPy block-max kernel."""
         dtype = np.float64 if self.precision == "float64" else np.float32
         return ({t: dtype(w) for t, w in self._weights.items()},
-                np.asarray(self._cache, dtype=dtype), dtype)
+                np.asarray(self.bm25_cache, dtype=dtype), dtype)
 
     def summed_weight(self, dfs: list[int], boost: float = 1.0) -> Column:
         """The weightValue of a positional query: idf summed over ``dfs`` in
@@ -274,46 +320,57 @@ def term_score_frame(index: InvertedIndex, terms: list[str],
 
 
 def _scored_docs(index: InvertedIndex, workload: list[_Query],
-                 precision: str = "float32", *,
+                 precision: str = "float32", *, similarity=None,
                  tie_breaker: float | None = None,
-                 exclude_text: str | None = None) -> DataFrame:
-    """The relational core: (qid, seg, docid, score) for every document a
-    query of ``workload`` matches.  The score is the sum of the clause
-    scores, or ``max + tie_breaker * (sum - max)`` when a tie-breaker is
-    given (DisjunctionMaxQuery); documents matching ``exclude_text`` are
+                 exclude_text: str | None = None,
+                 keys: tuple[str, ...] = ("qid", "seg", "docid")
+                 ) -> DataFrame:
+    """The relational core: (qid, seg, docid, score, nmatched) for every
+    document a query of ``workload`` matches, ``nmatched`` its matched
+    clauses (``keys=("seg", "docid")`` drops qid for a workload of one).
+    The score is the sum of the clause scores under ``similarity`` (BM25
+    by default; times matched / total clauses for a coord similarity),
+    or ``max + tie_breaker * (sum - max)`` when a tie-breaker is given
+    (DisjunctionMaxQuery); documents matching ``exclude_text`` are
     dropped (MUST_NOT)."""
     if not workload:
         return _no_docs(index, precision)
     terms = sorted({t for q in workload for t in q.mults})
-    scorer = _Scorer(index, terms, precision)
+    scorer = _Scorer(index, terms, precision, similarity=similarity)
+    sim, st = scorer.sim, scorer._sqltype
     # fan each term's postings out to the queries holding it BEFORE the
     # postings explode: one map lookup per (seg, term) row
     hits = _posting_rows(
         index.postings.where(_sql_in("term", terms)).select(
             "seg", "postings",
             F.inline(scorer.fanout_map(workload)[F.col("term")])),
-        "qid", "seg", "mult", "need", "w")
+        "qid", "seg", "mult", "need", "w", *(["n"] if sim.coord else []))
     hits = hits.withColumn("tscore", scorer.score(F.col("w"))).withColumn(
-        "score", F.col("tscore") * F.col("mult").cast(scorer._sqltype))
+        "score", F.col("tscore") * F.col("mult").cast(st))
     if tie_breaker is None:
         score = F.sum("score")
     else:
         score = F.max("tscore") + F.lit(tie_breaker) * (
             F.sum("score") - F.max("tscore"))
-    aggs = [score.alias("score")]
+    aggs = [score.alias("score"), F.sum("mult").alias("nmatched")]
     filtered = any(q.need > 1 for q in workload)
     if filtered:
-        aggs += [F.sum("mult").alias("nmatched"), F.max("need").alias("need")]
-    docs = hits.groupBy("qid", "seg", "docid").agg(*aggs)
+        aggs.append(F.max("need").alias("need"))
+    if sim.coord:
+        aggs.append(F.max("n").alias("n"))
+    docs = hits.groupBy(*keys).agg(*aggs)
     if filtered:
         docs = docs.where(F.col("nmatched") >= F.col("need"))
+    if sim.coord:
+        docs = docs.withColumn("score", F.col("score") * (
+            F.col("nmatched").cast(st) / F.col("n").cast(st)))
     ex_terms = _qterms(index, exclude_text) if exclude_text else []
     if ex_terms:
         ex_docs = (index.postings.where(_sql_in("term", ex_terms))
                    .select("seg", F.explode("postings.docid").alias("docid"))
                    .distinct())
         docs = docs.join(ex_docs, ["seg", "docid"], "left_anti")
-    return docs.select("qid", "seg", "docid", "score")
+    return docs.select(*keys, "score", "nmatched")
 
 
 def _single(index: InvertedIndex, query_text: str, mode: str = "OR",
@@ -325,6 +382,23 @@ def _single(index: InvertedIndex, query_text: str, mode: str = "OR",
         precision, **kw)
 
 
+def _term_set_docs(index: InvertedIndex, terms: list[str],
+                   precision: str = "float32", boost: float = 1.0,
+                   min_should_match: int = 0) -> DataFrame:
+    """(seg, docid, score) of one BM25 clause over the term SET ``terms``
+    (a repeated term scores once) at ``boost``, keeping the documents that
+    match ``min_should_match`` of its terms: the term clause of the query
+    parsers and operators, as a workload of one.  It is grouped by
+    document alone, so a parser's union of clause frames keeps their
+    (seg, docid) partitioning."""
+    if not terms:
+        return _no_docs(index, precision).select("seg", "docid", "score")
+    workload = [_Query(0, dict.fromkeys(sorted(set(terms)), 1),
+                       max(1, min_should_match), boost)]
+    return _scored_docs(index, workload, precision,
+                        keys=("seg", "docid")).drop("nmatched")
+
+
 def _with_keys(per_doc: DataFrame, index: InvertedIndex) -> DataFrame:
     # late materialization of the doc key: the PURPOSE_GET_FIELDS second
     # round of SURVEY.md §3.3
@@ -334,16 +408,13 @@ def _with_keys(per_doc: DataFrame, index: InvertedIndex) -> DataFrame:
 
 def _topk(per_doc: DataFrame, index: InvertedIndex, k: int,
           precision: str = "float32",
-          after: tuple[float, str] | None = None) -> DataFrame:
+          where: Column | None = None) -> DataFrame:
     """TakeOrderedAndProject collector: top-k (key, score), optionally only
-    the hits strictly after the ``(score, key)`` cursor in rank order."""
+    over the hits satisfying ``where`` (a predicate on key and score)."""
     with_keys = _with_keys(per_doc, index)
     score = F.col("score").cast(_stype(precision))
-    if after is not None:
-        a_score, a_key = after
-        with_keys = with_keys.where(
-            (score < F.lit(a_score))
-            | ((score == F.lit(a_score)) & (F.col("key") > F.lit(a_key))))
+    if where is not None:
+        with_keys = with_keys.where(where)
     return (with_keys.select("key", score.alias("score"))
             .orderBy(F.desc("score"), F.asc("key"))
             .limit(k))
@@ -406,7 +477,10 @@ def search_after(index: InvertedIndex, query_text: str, k: int,
     """Cursor pagination: hits strictly after (score, key) in rank order
     (``search/IndexSearcher.java:234-250,351-416``)."""
     docs = _single(index, query_text, mode, precision)
-    return _topk(docs, index, k, precision, after=(after_score, after_key))
+    score = F.col("score").cast(_stype(precision))
+    after = (score < F.lit(after_score)) | (
+        (score == F.lit(after_score)) & (F.col("key") > F.lit(after_key)))
+    return _topk(docs, index, k, precision, where=after)
 
 
 def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
 from .search import (_has_slots, _no_docs, _phrase_frame, _Scorer,
-                     _slot_positions, _topk, term_score_frame)
+                     _slot_positions, _term_set_docs, _topk)
 
 __all__ = ["span_near", "span_query", "span_score_frame",
            "common_terms_query", "multi_phrase"]
@@ -182,8 +182,7 @@ def common_terms_query(index: InvertedIndex, query_text: str,
     """
     terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
     if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
+        return _topk(_no_docs(index, precision), index, k, precision)
     max_doc, _ = index.collection_stats()
     tstats = index.term_stats(terms)
     low = sorted({t for t in terms
@@ -192,13 +191,11 @@ def common_terms_query(index: InvertedIndex, query_text: str,
     if not low:
         low, high = high, []
 
-    low_frame, _ = term_score_frame(index, low, precision=precision)
-    low_agg = low_frame.groupBy("seg", "docid").agg(
-        F.sum("score").alias("low_score"))
+    low_agg = _term_set_docs(index, low, precision).withColumnRenamed(
+        "score", "low_score")
     if high:
-        high_frame, _ = term_score_frame(index, high, precision=precision)
-        high_agg = high_frame.groupBy("seg", "docid").agg(
-            F.sum("score").alias("high_score"))
+        high_agg = _term_set_docs(index, high, precision).withColumnRenamed(
+            "score", "high_score")
         # semi-restricted join: high-df postings only evaluated for docs in
         # the (small) low-df match set
         joined = low_agg.join(high_agg, ["seg", "docid"], "left")

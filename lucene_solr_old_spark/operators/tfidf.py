@@ -1,33 +1,33 @@
-"""ClassicSimilarity (TF-IDF) scoring — the reference's pre-BM25 default.
+"""The term similarities besides BM25 (``search/similarities/``):
+ClassicSimilarity (TF-IDF), SweetSpotSimilarity, LM-Dirichlet, DFR G-L-H2
+and IB SPL-DF-H2.
 
-``search/similarities/DefaultSimilarity.java`` + ``TFIDFSimilarity.java``:
+Each is one similarity object plugged into search.py's term scorer,
+:func:`~.search._scored_docs`, exactly as BM25 is: ``weights`` gives the
+weight of each (query, term) on the driver from the term's df/ttf, the
+collection stats, the query's clauses and its boost; ``score`` gives the
+per-posting score Column of (weight, freq, norm byte); ``coord`` (the
+Classic family) multiplies a document's score by matched / total clauses.
+The term-pruned postings scan, the per-document aggregate, AND's
+``nmatched >= need`` filter and the top-k collector are BM25's, so every
+entry point here is a similarity plus ``_topk(_single(...))``.  A
+repeated query term is a repeated clause, scored once per clause.
 
-  score(q, d) = coord(q, d) * queryNorm(q)
-                * sum_t [ tf(freq) * idf(t)^2 * boost_t * norm(d) ]
-
-  tf(freq)   = sqrt(freq)                       (:120-122)
-  idf(t)     = ln(maxDoc / (df + 1)) + 1        (:138-140)
-  queryNorm  = 1 / sqrt(sum_t (idf*boost)^2)    (:67-69)
-  coord      = overlap / maxOverlap             (:61-63)
-  norm(d)    = byte315 decode of 1/sqrt(numTerms)  (:87-115; the engine's
-               norm byte already stores floatToByte315(1/sqrt(doclen)),
-               shared with BM25 — same byte, different decode use)
-
-This is the per-field pluggable-similarity surface (``Similarity``
-hierarchy, 34 files): the engine exposes BM25 (default) and TFIDF through
-the same relational plan; only the score expression differs.
+Norms: ClassicSimilarity decodes the norm byte (byte315 of
+``1/sqrt(doclen)``, shared with BM25); the SimilarityBase models
+(LM, DFR, IB) decode it to the quantized doc length, LQ64.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.smallfloat import byte315_to_float
-from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
-from .search import _topk
+from .search import (LQ64, _mults, _Query, _scored_docs, _Scorer, _single,
+                     _stype, _topk)
 
 __all__ = ["search_tfidf", "tfidf_score_frame", "search_lmdirichlet",
            "search_dfr_gl2", "search_ib_spl"]
@@ -36,63 +36,148 @@ __all__ = ["search_tfidf", "tfidf_score_frame", "search_lmdirichlet",
 _NORM_TABLE = [float(byte315_to_float(b)) for b in range(256)]
 
 
+class _Classic:
+    """ClassicSimilarity (``DefaultSimilarity.java`` +
+    ``TFIDFSimilarity.java``):
+
+      score(q, d) = coord(q, d) * sum_clauses tf(freq) * idf(t)^2 * boost
+                    * queryNorm(q) * norm(d)
+
+      tf(freq)   = sqrt(freq)                       (:120-122)
+      idf(t)     = ln(maxDoc / (df + 1)) + 1        (:138-140)
+      queryNorm  = 1 / sqrt(sum_clauses (idf*boost)^2)  (:67-69;
+                   BooleanWeight.sumOfSquaredWeights, once per clause)
+      coord      = overlap / maxOverlap             (:61-63)
+      norm(d)    = byte315 decode of 1/sqrt(numTerms)  (:87-115)
+    """
+    coord = True
+    norms = _NORM_TABLE
+
+    def weights(self, sc: _Scorer, mults: dict[str, int],
+                boost: float) -> dict[str, float]:
+        idf = {t: math.log(sc.stats.max_doc / (sc.df(t) + 1.0)) + 1.0
+               for t in mults}
+        ssw = sum(m * (idf[t] * boost) ** 2 for t, m in mults.items())
+        query_norm = 1.0 / math.sqrt(ssw) if ssw > 0 else 0.0
+        return {t: idf[t] * idf[t] * boost * query_norm for t in mults}
+
+    def tf(self, sc: _Scorer, freq: Column) -> Column:
+        return F.sqrt(freq)
+
+    def score(self, sc: _Scorer, w: Column, freq: Column,
+              norm: Column) -> Column:
+        return self.tf(sc, freq) * w * sc.per_norm(self.norms, norm)
+
+
+class _SweetSpot(_Classic):
+    """SweetSpotSimilarity: ClassicSimilarity with a configurable tf and
+    a plateaued length norm over the quantized doc length (LQ64) in place
+    of the norm-byte decode."""
+
+    def __init__(self, tf_base, tf_min, ln_min, ln_max, ln_steep, tf_mode,
+                 hyper_min, hyper_max, hyper_base, hyper_xoffset):
+        self.tf_base, self.tf_min, self.tf_mode = tf_base, tf_min, tf_mode
+        self.hyper = (hyper_min, hyper_max, hyper_base, hyper_xoffset)
+        self.norms = [1.0 / math.sqrt(
+            ln_steep * (abs(dl - ln_min) + abs(dl - ln_max)
+                        - (ln_max - ln_min)) + 1.0) for dl in LQ64]
+
+    def tf(self, sc: _Scorer, freq: Column) -> Column:
+        if self.tf_mode == "baseline":
+            tf = F.when(freq <= sc.lit(self.tf_min), sc.lit(self.tf_base)) \
+                .otherwise(F.sqrt(freq + sc.lit(
+                    self.tf_base * self.tf_base - self.tf_min)))
+        elif self.tf_mode == "hyperbolic":
+            lo, hi, base, xoffset = self.hyper
+            x = freq - sc.lit(xoffset)
+            bx, bnx = F.pow(sc.lit(base), x), F.pow(sc.lit(base), -x)
+            tf = sc.lit(lo) + sc.lit((hi - lo) / 2.0) * (
+                (bx - bnx) / (bx + bnx) + sc.lit(1.0))
+        else:
+            raise ValueError(f"unknown tf_mode {self.tf_mode!r}")
+        return F.when(freq == 0, sc.lit(0.0)).otherwise(tf)
+
+
+def _h2(sc: _Scorer, c: float, freq: Column, norm: Column) -> Column:
+    """NormalizationH2: tfn = freq * log2(1 + c * avgFieldLength / dl)."""
+    max_doc, sum_ttf = sc.stats.max_doc, sc.stats.sum_ttf
+    avg_fl = sum_ttf / max_doc if max_doc else 1.0
+    return freq * F.log2(sc.lit(1.0)
+                         + sc.lit(c * avg_fl) / sc.per_norm(LQ64, norm))
+
+
+class _LMDirichlet:
+    coord = False
+
+    def __init__(self, mu: float):
+        self.mu = mu
+
+    def weights(self, sc, mults, boost):
+        # p(t|C), LMSimilarity.DefaultCollectionModel:153-155
+        return {t: (sc.ttf(t) + 1.0) / (sc.stats.sum_ttf + 1.0)
+                for t in mults}
+
+    def score(self, sc, w, freq, norm):
+        mu = sc.lit(self.mu)
+        raw = (F.log(sc.lit(1.0) + freq / (mu * w))
+               + F.log(mu / (sc.per_norm(LQ64, norm) + mu)))
+        return F.greatest(sc.lit(0.0), raw.cast(sc._sqltype))
+
+
+class _DFRGL2:
+    coord = False
+
+    def __init__(self, c: float):
+        self.c = c
+
+    def weights(self, sc, mults, boost):
+        # BasicModelG's lambda
+        n = sc.stats.max_doc
+        return {t: (sc.ttf(t) + 1.0) / (n + sc.ttf(t) + 1.0) for t in mults}
+
+    def score(self, sc, w, freq, norm):
+        one = sc.lit(1.0)
+        tfn = _h2(sc, self.c, freq, norm)
+        basic = F.log2(w + one) + tfn * F.log2((one + w) / w)
+        return (basic * (one / (tfn + one))).cast(sc._sqltype)
+
+
+class _IBSPL:
+    coord = False
+
+    def __init__(self, c: float):
+        self.c = c
+
+    def weights(self, sc, mults, boost):
+        # LambdaDF, kept below 1 so SPL stays finite
+        lam = {t: (sc.df(t) + 1.0) / (sc.stats.max_doc + 1.0) for t in mults}
+        return {t: 0.99 if v == 1.0 else v for t, v in lam.items()}
+
+    def score(self, sc, w, freq, norm):
+        one = sc.lit(1.0)
+        tfn = _h2(sc, self.c, freq, norm)
+        spl = -F.log((F.pow(w, tfn / (tfn + one)) - w) / (one - w))
+        return spl.cast(sc._sqltype)
+
+
 def tfidf_score_frame(index: InvertedIndex, terms: list[str],
                       precision: str = "float32",
                       boost: float = 1.0) -> DataFrame:
     """(seg, docid, score, nmatched) per candidate doc (coord applied)."""
-    stype = "double" if precision == "float64" else "float"
-    max_doc, _ = index.collection_stats()
-    tstats = index.term_stats(terms)
-    uniq = sorted(set(terms))
-    mult = {t: terms.count(t) for t in uniq}
-    idf = {t: math.log(max_doc / (tstats.get(t, (0, 0))[0] + 1.0)) + 1.0
-           for t in uniq}
-    # sumOfSquaredWeights over CLAUSES (a repeated term contributes its
-    # squared weight once per clause — BooleanWeight.sumOfSquaredWeights)
-    ssw = sum(mult[t] * (idf[t] * boost) ** 2 for t in uniq)
-    query_norm = 1.0 / math.sqrt(ssw) if ssw > 0 else 0.0
-    max_overlap = len(terms)
-
-    # per-term value = idf^2 * boost * queryNorm * clause multiplicity
-    value = {t: idf[t] * idf[t] * boost * query_norm * mult[t] for t in uniq}
-    vmap = F.create_map(*[x for t, v in value.items()
-                          for x in (F.lit(t), F.lit(v).cast(stype))])
-    norm_arr = F.lit(list(_NORM_TABLE)).cast(f"array<{stype}>")
-
-    exploded = (index.postings.where(F.col("term").isin(uniq))
-                .select("seg", "term", F.explode("postings").alias("p"))
-                .select("seg", "term",
-                        F.col("p.docid").alias("docid"),
-                        F.col("p.freq").alias("freq"),
-                        F.col("p.norm").alias("norm")))
-    tf = F.sqrt(F.col("freq").cast(stype))
-    decoded = F.element_at(norm_arr, F.col("norm") + 1)
-    scored = exploded.withColumn(
-        "tscore", tf * vmap[F.col("term")] * decoded)
-    agg = scored.groupBy("seg", "docid").agg(
-        F.sum("tscore").alias("_sum"),
-        F.sum(F.create_map(*[x for t, m in mult.items()
-                             for x in (F.lit(t), F.lit(m))])[F.col("term")])
-        .alias("nmatched"))
-    coord = (F.col("nmatched").cast(stype)
-             / F.lit(float(max_overlap)).cast(stype))
-    return agg.select("seg", "docid",
-                      (F.col("_sum") * coord).cast(stype).alias("score"),
-                      "nmatched")
+    workload = [_Query(0, _mults(terms), 1, boost)] if terms else []
+    docs = _scored_docs(index, workload, precision, similarity=_Classic())
+    return docs.select("seg", "docid",
+                       F.col("score").cast(_stype(precision)).alias("score"),
+                       "nmatched")
 
 
 def search_tfidf(index: InvertedIndex, query_text: str, k: int = 10,
                  mode: str = "OR",
                  precision: str = "float32") -> DataFrame:
-    """Top-k (key, score) under ClassicSimilarity."""
-    terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    frame = tfidf_score_frame(index, terms, precision)
-    if mode.upper() == "AND":
-        frame = frame.where(F.col("nmatched") == len(terms))
-    return _topk(frame.select("seg", "docid", "score"), index, k, precision)
+    """Top-k (key, score) under ClassicSimilarity; AND keeps the documents
+    matching every clause."""
+    return _topk(_single(index, query_text, mode, precision,
+                         similarity=_Classic()), index, k, precision)
 
 
 def search_lmdirichlet(index: InvertedIndex, query_text: str, k: int = 10,
@@ -110,42 +195,8 @@ def search_lmdirichlet(index: InvertedIndex, query_text: str, k: int = 10,
     (``SimilarityBase.decodeNormValue`` = 1/decoded^2 — the engine's LQ64
     table).  Per-term scores clamp at 0 (the paper's negative-score guard),
     then sum over matching terms."""
-    from .search import LQ64
-
-    stype = "double" if precision == "float64" else "float"
-    terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    uniq = sorted(set(terms))
-    max_doc, sum_ttf = index.collection_stats()
-    tstats = index.term_stats(uniq)
-    p = {t: (tstats.get(t, (0, 0))[1] + 1.0) / (sum_ttf + 1.0)
-         for t in uniq}
-    mult = {t: terms.count(t) for t in uniq}
-    pmap = F.create_map(*[x for t, v in p.items()
-                          for x in (F.lit(t), F.lit(v).cast(stype))])
-    mmap = F.create_map(*[x for t, m in mult.items()
-                          for x in (F.lit(t), F.lit(float(m)).cast(stype))])
-    lq_arr = F.lit(list(LQ64)).cast(f"array<{stype}>")
-
-    exploded = (index.postings.where(F.col("term").isin(uniq))
-                .select("seg", "term", F.explode("postings").alias("p"))
-                .select("seg", "term",
-                        F.col("p.docid").alias("docid"),
-                        F.col("p.freq").alias("freq"),
-                        F.col("p.norm").alias("norm")))
-    dl = F.element_at(lq_arr, F.col("norm") + 1)
-    raw = (F.log(F.lit(1.0).cast(stype)
-                 + F.col("freq").cast(stype)
-                 / (F.lit(mu).cast(stype) * pmap[F.col("term")]))
-           + F.log(F.lit(mu).cast(stype) / (dl + F.lit(mu).cast(stype))))
-    scored = exploded.withColumn(
-        "tscore",
-        F.greatest(F.lit(0.0).cast(stype), raw.cast(stype))
-        * mmap[F.col("term")])
-    agg = scored.groupBy("seg", "docid").agg(F.sum("tscore").alias("score"))
-    return _topk(agg.select("seg", "docid", "score"), index, k, precision)
+    return _topk(_single(index, query_text, precision=precision,
+                         similarity=_LMDirichlet(mu)), index, k, precision)
 
 
 def search_dfr_gl2(index: InvertedIndex, query_text: str, k: int = 10,
@@ -162,44 +213,8 @@ def search_dfr_gl2(index: InvertedIndex, query_text: str, k: int = 10,
 
     dl is the quantized doc length from the norm byte (SimilarityBase
     decode — LQ64); avgFieldLength = sumTotalTermFreq / maxDoc."""
-    from .search import LQ64
-
-    stype = "double" if precision == "float64" else "float"
-    terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    uniq = sorted(set(terms))
-    max_doc, sum_ttf = index.collection_stats()
-    tstats = index.term_stats(uniq)
-    avg_fl = sum_ttf / max_doc if max_doc else 1.0
-    lam = {t: (tstats.get(t, (0, 0))[1] + 1.0)
-           / (max_doc + tstats.get(t, (0, 0))[1] + 1.0) for t in uniq}
-    mult = {t: terms.count(t) for t in uniq}
-    lmap = F.create_map(*[x for t, v in lam.items()
-                          for x in (F.lit(t), F.lit(v).cast(stype))])
-    mmap = F.create_map(*[x for t, m in mult.items()
-                          for x in (F.lit(t), F.lit(float(m)).cast(stype))])
-    lq_arr = F.lit(list(LQ64)).cast(f"array<{stype}>")
-
-    exploded = (index.postings.where(F.col("term").isin(uniq))
-                .select("seg", "term", F.explode("postings").alias("p"))
-                .select("seg", "term",
-                        F.col("p.docid").alias("docid"),
-                        F.col("p.freq").alias("freq"),
-                        F.col("p.norm").alias("norm")))
-    dl = F.element_at(lq_arr, F.col("norm") + 1)
-    tfn = (F.col("freq").cast(stype)
-           * F.log2(F.lit(1.0).cast(stype)
-                    + F.lit(c * avg_fl).cast(stype) / dl))
-    lamc = lmap[F.col("term")]
-    basic = (F.log2(lamc + F.lit(1.0).cast(stype))
-             + tfn * F.log2((F.lit(1.0).cast(stype) + lamc) / lamc))
-    ae = F.lit(1.0).cast(stype) / (tfn + F.lit(1.0).cast(stype))
-    scored = exploded.withColumn(
-        "tscore", (basic * ae).cast(stype) * mmap[F.col("term")])
-    agg = scored.groupBy("seg", "docid").agg(F.sum("tscore").alias("score"))
-    return _topk(agg.select("seg", "docid", "score"), index, k, precision)
+    return _topk(_single(index, query_text, precision=precision,
+                         similarity=_DFRGL2(c)), index, k, precision)
 
 
 def search_ib_spl(index: InvertedIndex, query_text: str, k: int = 10,
@@ -213,45 +228,8 @@ def search_ib_spl(index: InvertedIndex, query_text: str, k: int = 10,
       lambda  = (df + 1) / (N + 1)                           (DF)
       score_t = -ln((lambda^(tfn/(tfn+1)) - lambda) / (1 - lambda))  (SPL)
     """
-    from .search import LQ64
-
-    stype = "double" if precision == "float64" else "float"
-    terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    uniq = sorted(set(terms))
-    max_doc, sum_ttf = index.collection_stats()
-    tstats = index.term_stats(uniq)
-    avg_fl = sum_ttf / max_doc if max_doc else 1.0
-    lam = {}
-    for t in uniq:
-        v = (tstats.get(t, (0, 0))[0] + 1.0) / (max_doc + 1.0)
-        lam[t] = 0.99 if v == 1.0 else v
-    mult = {t: terms.count(t) for t in uniq}
-    lmap = F.create_map(*[x for t, v in lam.items()
-                          for x in (F.lit(t), F.lit(v).cast(stype))])
-    mmap = F.create_map(*[x for t, m in mult.items()
-                          for x in (F.lit(t), F.lit(float(m)).cast(stype))])
-    lq_arr = F.lit(list(LQ64)).cast(f"array<{stype}>")
-    exploded = (index.postings.where(F.col("term").isin(uniq))
-                .select("seg", "term", F.explode("postings").alias("p"))
-                .select("seg", "term",
-                        F.col("p.docid").alias("docid"),
-                        F.col("p.freq").alias("freq"),
-                        F.col("p.norm").alias("norm")))
-    dl = F.element_at(lq_arr, F.col("norm") + 1)
-    tfn = (F.col("freq").cast(stype)
-           * F.log2(F.lit(1.0).cast(stype)
-                    + F.lit(c * avg_fl).cast(stype) / dl))
-    lamc = lmap[F.col("term")]
-    spl = -F.log(
-        (F.pow(lamc, tfn / (tfn + F.lit(1.0).cast(stype))) - lamc)
-        / (F.lit(1.0).cast(stype) - lamc))
-    scored = exploded.withColumn(
-        "tscore", spl.cast(stype) * mmap[F.col("term")])
-    agg = scored.groupBy("seg", "docid").agg(F.sum("tscore").alias("score"))
-    return _topk(agg.select("seg", "docid", "score"), index, k, precision)
+    return _topk(_single(index, query_text, precision=precision,
+                         similarity=_IBSPL(c)), index, k, precision)
 
 
 def search_sweetspot(index: InvertedIndex, query_text: str, k: int = 10,
@@ -278,62 +256,7 @@ def search_sweetspot(index: InvertedIndex, query_text: str, k: int = 10,
     index time (floatToByte315 lossy); this engine stores the quantized
     doc length (LQ64) and computes lengthNorm at query time from it —
     same quantization point, one fewer lossy encode."""
-    from .search import LQ64
-
-    stype = "double" if precision == "float64" else "float"
-    terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    uniq = sorted(set(terms))
-    mult = {t: terms.count(t) for t in uniq}
-    max_doc, _ = index.collection_stats()
-    tstats = index.term_stats(uniq)
-    idf = {t: math.log(max_doc / (tstats.get(t, (0, 0))[0] + 1.0)) + 1.0
-           for t in uniq}
-    ssw = sum(mult[t] * idf[t] ** 2 for t in uniq)
-    query_norm = 1.0 / math.sqrt(ssw) if ssw > 0 else 0.0
-    value = {t: idf[t] * idf[t] * query_norm * mult[t] for t in uniq}
-    vmap = F.create_map(*[x for t, v in value.items()
-                          for x in (F.lit(t), F.lit(v).cast(stype))])
-    # lengthNorm over the 64 quantized doc lengths — a tiny lookup array
-    lnorm = [1.0 / math.sqrt(
-        ln_steep * (abs(dl - ln_min) + abs(dl - ln_max) - (ln_max - ln_min))
-        + 1.0) for dl in LQ64]
-    lnorm_arr = F.array(*[F.lit(v).cast(stype) for v in lnorm])
-
-    exploded = (index.postings.where(F.col("term").isin(uniq))
-                .select("seg", "term", F.explode("postings").alias("p"))
-                .select("seg", "term",
-                        F.col("p.docid").alias("docid"),
-                        F.col("p.freq").alias("freq"),
-                        F.col("p.norm").alias("norm")))
-    freq = F.col("freq").cast(stype)
-    if tf_mode == "baseline":
-        tf = F.when(freq <= F.lit(float(tf_min)),
-                    F.lit(float(tf_base)).cast(stype)) \
-             .otherwise(F.sqrt(freq + F.lit(tf_base * tf_base - tf_min)
-                               .cast(stype)))
-    elif tf_mode == "hyperbolic":
-        x = freq - F.lit(hyper_xoffset).cast(stype)
-        bx = F.pow(F.lit(hyper_base).cast(stype), x)
-        bnx = F.pow(F.lit(hyper_base).cast(stype), -x)
-        tf = (F.lit(hyper_min).cast(stype)
-              + F.lit((hyper_max - hyper_min) / 2.0).cast(stype)
-              * ((bx - bnx) / (bx + bnx) + F.lit(1.0).cast(stype)))
-    else:
-        raise ValueError(f"unknown tf_mode {tf_mode!r}")
-    tf = F.when(freq == 0, F.lit(0.0).cast(stype)).otherwise(tf)
-    decoded = F.element_at(lnorm_arr, F.col("norm") + 1)
-    scored = exploded.withColumn("tscore", tf * vmap[F.col("term")] * decoded)
-    mmap = F.create_map(*[x for t, m in mult.items()
-                          for x in (F.lit(t), F.lit(m))])
-    agg = scored.groupBy("seg", "docid").agg(
-        F.sum("tscore").alias("_sum"),
-        F.sum(mmap[F.col("term")]).alias("nmatched"))
-    coord = (F.col("nmatched").cast(stype)
-             / F.lit(float(len(terms))).cast(stype))
-    return _topk(agg.select(
-        "seg", "docid",
-        (F.col("_sum") * coord).cast(stype).alias("score")), index, k,
-        precision)
+    sim = _SweetSpot(tf_base, tf_min, ln_min, ln_max, ln_steep, tf_mode,
+                     hyper_min, hyper_max, hyper_base, hyper_xoffset)
+    return _topk(_single(index, query_text, precision=precision,
+                         similarity=sim), index, k, precision)

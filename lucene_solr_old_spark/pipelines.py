@@ -16,6 +16,18 @@ table.  Per-step scale shapes are documented on the underlying operators
 :mod:`.operators.packing`); this module adds NO new shuffles beyond the
 sum of its steps — it only wires outputs to inputs, so the composed
 pipeline inherits their 100 TB behavior.
+
+Predicate pushdown stops at the cleaning steps.  ``pii_scrub``,
+``c4_line_filter`` and ``gopher_quality_filter`` wrap their expensive
+derived columns in :func:`.operators.cleaning.eval_once`, a
+non-deterministic value-identity barrier that keeps Catalyst from
+re-evaluating them.  Catalyst pushes no filter through a projection that
+holds a non-deterministic column, so a filter placed after a cleaning
+step, on a cleaned column or on any other (``url``, ``lang``), neither
+reaches the scan nor shrinks the rows the cleaning step processes.  For
+these full-corpus passes nothing selective could be pushed anyway; a
+caller that wants a selective slice of cleaned text filters the input
+before the first cleaning step.
 """
 
 from __future__ import annotations

@@ -257,10 +257,7 @@ def _clause_frame(index: InvertedIndex, clause, clause_id: int,
         terms = _fuzzy_terms(index, clause)
         if not terms:
             return None
-        scored, _ = S.term_score_frame(index, terms, boost=clause.boost,
-                                       precision=precision)
-        frame = (scored.groupBy("seg", "docid")
-                 .agg(F.sum("score").alias("score")))
+        frame = S._term_set_docs(index, terms, precision, clause.boost)
         return frame.withColumn("cid", F.lit(clause_id))
     analyzer = get_analyzer(index.analyzer)
     terms = [t.term for t in analyzer(clause.text)]
@@ -271,10 +268,7 @@ def _clause_frame(index: InvertedIndex, clause, clause_id: int,
                                      slop=clause.slop).select(
             "seg", "docid", "score")
     else:
-        scored, _ = S.term_score_frame(index, terms, boost=clause.boost,
-                                       precision=precision)
-        frame = (scored.groupBy("seg", "docid")
-                 .agg(F.sum("score").alias("score")))
+        frame = S._term_set_docs(index, terms, precision, clause.boost)
     return frame.withColumn("cid", F.lit(clause_id))
 
 
@@ -348,16 +342,10 @@ def bool_score_frame(index: InvertedIndex, query,
 def execute(index: InvertedIndex, query, k: int = 10,
             precision: str = "float32") -> DataFrame:
     """Run a BoolQuery (or raw query string) -> top-k (key, score)."""
-    stype = "double" if precision == "float64" else "float"
     frame = bool_score_frame(index, query, precision)
     if frame is None:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast(stype).alias("score")).limit(0)
-    out = frame.join(index.docmeta.select("seg", "docid", "key"),
-                     ["seg", "docid"])
-    return (out.select("key", F.col("score").cast(stype).alias("score"))
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+        frame = S._no_docs(index, precision)
+    return S._topk(frame, index, k, precision)
 
 
 def complex_phrase_search(index: InvertedIndex, phrase: str, k: int = 10,

@@ -421,17 +421,12 @@ def _frame(index: InvertedIndex, node, budget: _Budget,
     kind = node[0]
     if kind == "term":
         budget.add(1)
-        scored, _ = S.term_score_frame(index, [node[1].lower()],
-                                       precision=precision)
-        return (scored.groupBy("seg", "docid")
-                .agg(F.sum("score").alias("score")))
+        return S._term_set_docs(index, [node[1].lower()], precision)
     if kind in ("prefix", "trunc"):
         terms = _expand(index, node, budget)
         if not terms:
             return _empty_frame(index, stype)
-        scored, _ = S.term_score_frame(index, terms, precision=precision)
-        return (scored.groupBy("seg", "docid")
-                .agg(F.sum("score").alias("score")))
+        return S._term_set_docs(index, terms, precision)
     if kind == "dist":
         tree, mult = _to_span(index, node, budget)
         if tree is None:

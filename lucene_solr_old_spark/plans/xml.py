@@ -414,26 +414,16 @@ class _Executor:
         b = F.lit(getattr(node, "boost", 1.0)).cast(self.stype)
         if isinstance(node, XTerm):
             self._check_content(node.field)
-            scored, _ = S.term_score_frame(
-                self.index, [node.term], boost=node.boost,
-                precision=self.precision)
-            return (scored.groupBy("seg", "docid")
-                    .agg(F.sum("score").alias("score")))
+            return S._term_set_docs(self.index, [node.term],
+                                    self.precision, node.boost)
         if isinstance(node, XTerms):
             self._check_content(node.field)
             analyzer = get_analyzer(self.index.analyzer)
             terms = [t.term for t in analyzer(node.text)]
             if not terms:
                 return None
-            scored, _ = S.term_score_frame(
-                self.index, terms, boost=node.boost,
-                precision=self.precision)
-            agg = scored.groupBy("seg", "docid").agg(
-                F.sum("score").alias("score"),
-                F.countDistinct("term").alias("nmatched"))
-            if node.min_should_match > 0:
-                agg = agg.where(F.col("nmatched") >= node.min_should_match)
-            return agg.select("seg", "docid", "score")
+            return S._term_set_docs(self.index, terms, self.precision,
+                                    node.boost, node.min_should_match)
         if isinstance(node, XMatchAll):
             return _all_docs(self.index).withColumn(
                 "score", F.lit(node.boost).cast(self.stype))
@@ -667,13 +657,7 @@ def xml_search(index: InvertedIndex, xml, k: int = 10,
                attrs: DataFrame | None = None,
                content_field: str | None = None) -> DataFrame:
     """CoreParser.parse + IndexSearcher.search: top-k (key, score)."""
-    stype = "double" if precision == "float64" else "float"
     frame = xml_score_frame(index, xml, precision, attrs, content_field)
     if frame is None:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast(stype).alias("score")).limit(0)
-    out = frame.join(index.docmeta.select("seg", "docid", "key"),
-                     ["seg", "docid"])
-    return (out.select("key", F.col("score").cast(stype).alias("score"))
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+        frame = S._no_docs(index, precision)
+    return S._topk(frame, index, k, precision)

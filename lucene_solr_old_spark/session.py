@@ -190,4 +190,5 @@ def ship_package(spark: SparkSession) -> None:
     try:
         spark.sparkContext.addPyFile(package_zip())
     except Exception:  # already added, or non-local FS quirks — non-fatal
-        pass
+        log.warning("could not ship the package to executors",
+                    exc_info=True)

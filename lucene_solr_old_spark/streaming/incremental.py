@@ -152,11 +152,24 @@ def start_incremental_indexer(
 
 
 def open_nrt_reader(spark: SparkSession, index_path: str,
-                    analyzer: str = "english",
-                    with_positions: bool = True) -> InvertedIndex:
+                    analyzer: str | None = None,
+                    with_positions: bool | None = None) -> InvertedIndex:
     """Point-in-time reader over whatever segments have been flushed —
-    the SearcherManager.maybeRefresh analogue (re-open to see new docs)."""
+    the SearcherManager.maybeRefresh analogue (re-open to see new docs).
+
+    The analyzer and ``with_positions`` are the ones ``index_meta.json``
+    records; an argument that contradicts them raises ``ValueError``.  A
+    directory without a meta takes the arguments (by default the english
+    analyzer, with positions)."""
+    meta = _read_meta(spark, index_path)
     idx = load_index(spark, index_path)
-    idx.analyzer = analyzer
-    idx.with_positions = with_positions
+    given = {"analyzer": analyzer, "with_positions": with_positions}
+    for name, value in given.items():
+        if value is None:
+            continue
+        if meta is None:
+            setattr(idx, name, value)
+        elif value != meta[name]:
+            raise ValueError(f"{name}={value!r} contradicts the index's "
+                             f"recorded {name}={meta[name]!r}")
     return idx

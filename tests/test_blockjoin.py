@@ -87,3 +87,11 @@ def test_search_children_of(spark, env):
     got = rows(search_children_of(idx, "laptop", "zoom", rel, k=10)
                .select("child_key", "parent_key"))
     assert got == [("p2/s1", "p2")]
+
+
+def test_stopword_child_query_matches_no_parent(spark, env):
+    # a child query that analyses to no term scores no child
+    idx, rel = env
+    out = to_parent_join(idx, "the of", rel, score_mode="avg", k=10)
+    assert out.collect() == []
+    assert out.columns == ["parent_key", "score", "n_children"]

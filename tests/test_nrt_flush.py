@@ -11,6 +11,7 @@ from lucene_solr_old_spark.operators.indexer import (build_index,
                                                      compress_index,
                                                      load_index)
 from lucene_solr_old_spark.operators.merge import delete_docs, merge_many
+from lucene_solr_old_spark.operators.search import search_or
 from lucene_solr_old_spark.sources.pages import PAGES_SCHEMA, gen_pages
 from lucene_solr_old_spark.streaming.incremental import (flush_index_batch,
                                                          open_nrt_reader)
@@ -154,6 +155,28 @@ def test_first_flush_writes_meta(spark, tmp_path):
     assert (idx.analyzer, idx.with_positions, idx.with_offsets) == \
         ("ws_lower", True, False)
     assert idx.term_stats(["beta"])["beta"] == (2, 2)
+
+
+def test_nrt_reader_takes_the_recorded_settings(spark, tmp_path):
+    p = str(tmp_path / "idx")
+    flush_index_batch(_docs(spark, [("a", "Runners run"), ("b", "walkers")]),
+                      0, p, analyzer="ws_lower")
+    reader = open_nrt_reader(spark, p)
+    assert (reader.analyzer, reader.with_positions) == ("ws_lower", True)
+    assert [r["key"] for r in search_or(reader, "runners").collect()] == ["a"]
+    same = open_nrt_reader(spark, p, analyzer="ws_lower", with_positions=True)
+    assert same.analyzer == "ws_lower"
+    with pytest.raises(ValueError, match="analyzer"):
+        open_nrt_reader(spark, p, analyzer="english")
+    with pytest.raises(ValueError, match="with_positions"):
+        open_nrt_reader(spark, p, with_positions=False)
+    # a directory without a meta keeps the given values
+    os.remove(os.path.join(p, "index_meta.json"))
+    os.remove(os.path.join(p, ".index_meta.json.crc"))
+    bare = open_nrt_reader(spark, p, analyzer="ws_lower",
+                           with_positions=False)
+    assert (bare.analyzer, bare.with_positions) == ("ws_lower", False)
+    assert open_nrt_reader(spark, p).analyzer == "english"
 
 
 def test_flush_rejects_compressed_index(spark, tmp_path):

@@ -23,7 +23,7 @@ from lucene_solr_old_spark.operators.indexer import build_index
 from lucene_solr_old_spark.operators.search import LQ64
 from lucene_solr_old_spark.operators.tfidf import (
     search_dfr_gl2, search_ib_spl, search_lmdirichlet, search_sweetspot,
-    search_tfidf)
+    search_tfidf, tfidf_score_frame)
 
 ANALYZER = "english"
 DOCS = [
@@ -208,3 +208,19 @@ def test_repeated_term_is_a_repeated_clause(idx):
         idx, "spark spark join", k=20, precision="float64").collect()}
     assert set(once) == set(twice)
     assert twice["d6"] == pytest.approx(2 * once["d6"], rel=1e-12)
+
+
+def test_tfidf_score_frame_counts_clauses(idx):
+    """The per-doc frame behind TF-IDF: coord-scaled scores and the
+    matched clause count, a repeated term counting once per clause."""
+    terms = C.terms("spark spark join")
+    keys = idx.docmeta.select("seg", "docid", "key")
+    got = {r["key"]: (float(r["score"]), r["nmatched"]) for r in
+           tfidf_score_frame(idx, terms, precision="float64")
+           .join(keys, ["seg", "docid"]).collect()}
+    exp = _tfidf("spark spark join")
+    assert set(got) == set(exp)
+    for key, score in exp.items():
+        assert got[key][0] == pytest.approx(score, rel=1e-9), key
+        toks = C.toks[key]
+        assert got[key][1] == sum(1 for t in terms if t in toks), key
