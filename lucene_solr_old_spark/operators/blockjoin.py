@@ -148,13 +148,8 @@ def join_util_search(index: InvertedIndex, from_query: str,
     from .search import _qterms
 
     stype = "double" if precision == "float64" else "float"
-    terms = _qterms(index, from_query)
-    if not terms:
-        return to_docs.select(
-            F.col(key_col).alias("to_key"),
-            F.lit(0.0).cast(stype).alias("score")).limit(0)
-    per_doc = _term_set_docs(index, terms, precision).withColumnRenamed(
-        "score", "s")
+    per_doc = _term_set_docs(index, _qterms(index, from_query),
+                             precision).withColumnRenamed("score", "s")
     with_field = (per_doc
                   .join(index.docmeta.select("seg", "docid", "key"),
                         ["seg", "docid"])

@@ -386,9 +386,6 @@ def complex_phrase_search(index: InvertedIndex, phrase: str, k: int = 10,
             terms = [t.term for t in analyzer(w)]
         if not terms:
             # a slot with no dictionary match can never complete a phrase
-            return index.docmeta.select(
-                "key", F.lit(0.0).cast(
-                    "double" if precision == "float64" else "float")
-                .alias("score")).limit(0)
+            return S._topk(S._no_docs(index, precision), index, k, precision)
         slots.append(terms)
     return multi_phrase(index, slots, k=k, precision=precision)

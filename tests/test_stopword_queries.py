@@ -5,15 +5,18 @@ either precision."""
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from lucene_solr_old_spark.operators import multifield as MF
 from lucene_solr_old_spark.operators import search as S
 from lucene_solr_old_spark.operators import tfidf as T
 from lucene_solr_old_spark.operators import wand as W
 from lucene_solr_old_spark.operators.batch import batch_search
+from lucene_solr_old_spark.operators.blockjoin import join_util_search
 from lucene_solr_old_spark.operators.indexer import build_index, compress_index
 from lucene_solr_old_spark.operators.mlt import more_like_this
 from lucene_solr_old_spark.operators.spans import common_terms_query
-from lucene_solr_old_spark.plans.query import execute
+from lucene_solr_old_spark.plans.query import complex_phrase_search, execute
 from lucene_solr_old_spark.plans.xml import xml_search
 from lucene_solr_old_spark.sources.pages import PAGES_SCHEMA, gen_pages
 
@@ -66,6 +69,19 @@ def _xml(text):
     return f'<TermsQuery fieldName="contents">{text}</TermsQuery>'
 
 
+def _join_util(index, text, precision):
+    groups = index.docmeta.select("key", (F.col("docid") % 3).alias("g"))
+    return join_util_search(index, text, groups, "g", groups, "g",
+                            precision=precision)
+
+
+def _complex_phrase(index, text, precision):
+    # a one-word phrase, or a wildcard slot no dictionary term matches
+    return complex_phrase_search(
+        index, "zzzq*" if text == Q else text.split()[0],
+        precision=precision)
+
+
 # name -> run(plain index, multi-field index, query text, precision)
 SCORERS = {
     "search_tfidf": lambda i, m, q, p: T.search_tfidf(i, q, precision=p),
@@ -84,6 +100,8 @@ SCORERS = {
         m, q, {"body": 1.0}, precision=p),
     "common_terms_query": lambda i, m, q, p: common_terms_query(
         i, q, precision=p),
+    "join_util_search": lambda i, m, q, p: _join_util(i, q, p),
+    "complex_phrase_search": lambda i, m, q, p: _complex_phrase(i, q, p),
 }
 
 
