@@ -280,9 +280,7 @@ FROM tf WHERE term LIKE 'sp%'
 ORDER BY doc_id""")
 def _q_prefix(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    docs = (idx.postings.where(F.col("term").startswith("sp"))
-            .select("seg", F.explode("postings.docid").alias("docid"))
-            .distinct()
+    docs = (S._docs_where(idx, F.col("term").startswith("sp"))
             .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"]))
     return docs.select(F.col("key").cast("long").alias("doc_id"),
                        F.lit(1.0).alias("score"))
@@ -349,9 +347,7 @@ JOIN documents d USING(doc_id)
 GROUP BY d.lang ORDER BY cnt DESC, lang""")
 def _q_facet(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    hits = (idx.postings.where(F.col("term") == "spark")
-            .select("seg", F.explode("postings.docid").alias("docid"))
-            .distinct()
+    hits = (S._docs_where(idx, F.col("term") == "spark")
             .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
             .select(F.col("key").cast("long").alias("doc_id")))
     return (hits.join(_docs(spark, sf_dir).select("doc_id", "lang"), "doc_id")
@@ -501,9 +497,7 @@ JOIN documents d USING(doc_id)
 ORDER BY d.n_chars DESC, m.doc_id LIMIT 20""")
 def _q_sortfield(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    hits = (idx.postings.where(F.col("term") == "spark")
-            .select("seg", F.explode("postings.docid").alias("docid"))
-            .distinct()
+    hits = (S._docs_where(idx, F.col("term") == "spark")
             .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
             .select(F.col("key").cast("long").alias("doc_id")))
     return (hits.join(_docs(spark, sf_dir).select("doc_id", "n_chars"),
@@ -535,9 +529,7 @@ JOIN embeddings e ON e.vec_id = m.doc_id
 WHERE e.label < 5 ORDER BY doc_id""")
 def _q_join(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    hits = (idx.postings.where(F.col("term") == "vector")
-            .select("seg", F.explode("postings.docid").alias("docid"))
-            .distinct()
+    hits = (S._docs_where(idx, F.col("term") == "vector")
             .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
             .select(F.col("key").cast("long").alias("doc_id")))
     emb = _emb(spark, sf_dir).where(F.col("label") < 5)
@@ -3237,9 +3229,7 @@ def _q_facet_prefix(spark, sf_dir):
     from .operators.facets import facet_field
 
     idx = doc_index(spark, sf_dir)
-    hits = (idx.postings.where(F.col("term") == "spark")
-            .select("seg", F.explode("postings.docid").alias("docid"))
-            .distinct()
+    hits = (S._docs_where(idx, F.col("term") == "spark")
             .join(idx.docmeta.select("seg", "docid", "key"),
                   ["seg", "docid"])
             .select(F.col("key").cast("long").alias("doc_id")))

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .indexer import InvertedIndex
-from .search import _term_set_docs
+from .search import _docs_where, _term_set_docs
 
 __all__ = ["taxonomy_counts", "drill_down", "stats_percentiles",
            "collapse_results", "expand_groups",
@@ -31,16 +31,15 @@ __all__ = ["taxonomy_counts", "drill_down", "stats_percentiles",
 def matching_docs(index: InvertedIndex, terms: list[str],
                   mode: str = "OR") -> DataFrame:
     """Non-scoring doc set for a term query — the Solr fq/DocSet analogue
-    (``solr/.../search/DocSetBase.java``). Returns (key)."""
-    matched = (index.postings.where(F.col("term").isin(terms))
-               .select("seg", F.col("term"),
-                       F.explode("postings.docid").alias("docid")))
-    grouped = matched.groupBy("seg", "docid").agg(
-        F.count_distinct("term").alias("n"))
+    (``solr/.../search/DocSetBase.java``). Returns (key).  AND is the
+    term-set clause matching every distinct term."""
     if mode.upper() == "AND":
-        grouped = grouped.where(F.col("n") == len(set(terms)))
-    return (grouped.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+        docs = _term_set_docs(index, terms,
+                              min_should_match=len(set(terms)))
+    else:
+        docs = _docs_where(index, F.col("term").isin(terms))
+    return (docs.join(index.docmeta.select("seg", "docid", "key"),
+                      ["seg", "docid"])
             .select("key"))
 
 
@@ -129,7 +128,8 @@ def group_topk(index: InvertedIndex, terms: list[str], dims: DataFrame,
     hits = (per_doc.join(index.docmeta.select("seg", "docid", "key"),
                          ["seg", "docid"])
             .join(dims_k, "key")
-            .select(group_field, "key", "score"))
+            .select(group_field, "key",
+                    F.col("score").cast("float").alias("score")))
     w = Window.partitionBy(group_field).orderBy(
         F.desc("score"), F.asc("key"))
     return (hits.withColumn("rnk", F.row_number().over(w))

@@ -9,8 +9,9 @@ per-field idf/avgdl (the classic QueryParser's fielded-term syntax,
 Spark shape: one InvertedIndex per field over the same key space (per-field
 stats fall out for free — each field's segstats is its own), wrapped by
 MultiFieldIndex; a fielded disjunction is the float sum of per-field BM25
-frames grouped by doc key.  Cross-field scoring matches Lucene: each
-(field, term) clause scores against ITS field's stats.
+frames grouped by doc key (``search._compound`` on the key).  Cross-field
+scoring matches Lucene: each (field, term) clause scores against ITS
+field's stats.
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from .indexer import InvertedIndex, build_index
-from .search import _no_docs, _term_set_docs, _topk
+from .search import (_compound, _no_docs, _term_set_docs, _topk,
+                     phrase_score_frame)
 from ..functions.tokenizer import get_analyzer
 
 __all__ = ["MultiFieldIndex", "build_multifield_index", "search_fielded",
@@ -110,6 +112,22 @@ def parse_fielded(query: str, default_field: str) -> list[tuple[str, str]]:
     return out
 
 
+def _keyed(idx: InvertedIndex, frame: DataFrame) -> DataFrame:
+    """A field's (seg, docid, score) frame on the shared doc key."""
+    return (frame.join(idx.docmeta.select("seg", "docid", "key"),
+                       ["seg", "docid"])
+            .select("key", "score"))
+
+
+def _top(mfi: MultiFieldIndex, docs: DataFrame | None, k: int,
+         precision: str) -> DataFrame:
+    """Top-k (key, score) of a keyed compound, or of no docs for None."""
+    if docs is None:
+        idx = mfi.indexes[mfi.default_field]
+        return _topk(_no_docs(idx, precision), idx, k, precision)
+    return docs.orderBy(F.desc("score"), F.asc("key")).limit(k)
+
+
 def search_fielded(mfi: MultiFieldIndex, query: str, k: int = 10,
                    precision: str = "float32") -> DataFrame:
     """Cross-field disjunction: per-(field, term) BM25 against that field's
@@ -122,26 +140,11 @@ def search_fielded(mfi: MultiFieldIndex, query: str, k: int = 10,
             continue
         for t in get_analyzer(idx.analyzer)(raw):
             by_field.setdefault(fname, []).append(t.term)
-
-    frames = []
-    for fname, terms in by_field.items():
-        idx = mfi.indexes[fname]
-        per_doc = _term_set_docs(idx, terms, precision)
-        keyed = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                              ["seg", "docid"])
-                 .select("key", "score"))
-        frames.append(keyed)
-    if not frames:
-        any_idx = mfi.indexes[mfi.default_field]
-        return _topk(_no_docs(any_idx, precision), any_idx, k, precision)
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    stype = "double" if precision == "float64" else "float"
-    return (union.groupBy("key")
-            .agg(F.sum("score").cast(stype).alias("score"))
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+    docs = _compound(
+        [("should", _keyed(mfi.indexes[f],
+                           _term_set_docs(mfi.indexes[f], terms, precision)))
+         for f, terms in by_field.items()], precision, keys=("key",))
+    return _top(mfi, docs, k, precision)
 
 
 def search_edismax(mfi: MultiFieldIndex, query_text: str,
@@ -162,45 +165,25 @@ def search_edismax(mfi: MultiFieldIndex, query_text: str,
     already matching the main query gain the phrase score (the edismax
     ``pf`` re-ranking — ``ExtendedDismaxQParser.getPhraseQuery``).
 
-    Plan: per (clause, field) score frames keyed by doc key, ONE union ->
-    groupBy(key, clause) computes the dismax -> groupBy(key) sums + counts
-    matched clauses; pf adds a LEFT-joined phrase frame (main-query
-    matches keep their score when the phrase is absent).  Cross-field
-    alignment happens on the shared doc key (fields are sibling indexes
-    over the same corpus).
+    Plan: per (word, field) score frames keyed by (doc key, word), ONE
+    ``search._compound`` dismax grouped by (key, word), then a should
+    compound of the word rows grouped by key with the resolved mm (each
+    matching word row is a matched clause); pf adds one should compound
+    of the phrase frames beside the main query as a must clause.
+    Cross-field alignment happens on the shared doc key (fields are
+    sibling indexes over the same corpus).
     """
-    stype = "double" if precision == "float64" else "float"
-    words = [w for w in query_text.split() if w]
-    frames = []
-    built_clauses: set[int] = set()
-    for ci, word in enumerate(words):
+    fields, built = [], set()
+    for ci, word in enumerate(query_text.split()):
         for fname, boost in qf.items():
             idx = mfi.indexes.get(fname)
-            if idx is None:
-                continue
-            terms = [t.term for t in get_analyzer(idx.analyzer)(word)]
-            if not terms:
-                continue
-            built_clauses.add(ci)
-            per_doc = _term_set_docs(idx, terms, precision, boost)
-            keyed = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                                  ["seg", "docid"])
-                     .select("key", F.lit(ci).alias("clause"),
-                             F.col("score").alias("fscore")))
-            frames.append(keyed)
-    if not frames:
-        any_idx = mfi.indexes[mfi.default_field]
-        return _topk(_no_docs(any_idx, precision), any_idx, k, precision)
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    per_clause = union.groupBy("key", "clause").agg(
-        (F.max("fscore")
-         + F.lit(tie).cast(stype) * (F.sum("fscore") - F.max("fscore")))
-        .alias("cscore"))
-    agg = per_clause.groupBy("key").agg(
-        F.sum("cscore").cast(stype).alias("score"),
-        F.count("*").alias("nmatched"))
+            terms = ([t.term for t in get_analyzer(idx.analyzer)(word)]
+                     if idx is not None else [])
+            if terms:
+                built.add(ci)
+                fields.append(("should", _keyed(
+                    idx, _term_set_docs(idx, terms, precision, boost))
+                    .withColumn("clause", F.lit(ci))))
     # mm SPEC strings resolve against the number of OPTIONAL CLAUSES the
     # parser actually built, not the raw whitespace word count — a word
     # whose per-field analysis yields no terms (e.g. a stopword under an
@@ -208,33 +191,23 @@ def search_edismax(mfi: MultiFieldIndex, query_text: str,
     # must not count toward minimum-should-match
     # (``ExtendedDismaxQParser.java`` applies mm via
     # ``SolrPluginUtils.setMinShouldMatch`` to the built BooleanQuery).
-    msm = (calculate_min_should_match(len(built_clauses), mm)
+    msm = (calculate_min_should_match(len(built), mm)
            if isinstance(mm, str) else mm)
-    if msm > 0:
-        agg = agg.where(F.col("nmatched") >= msm)
-    if pf:
-        from . import search as _S
-        for fname, boost in pf.items():
-            idx = mfi.indexes.get(fname)
-            if idx is None:
-                continue
-            pterms = [t.term for t in get_analyzer(idx.analyzer)(query_text)]
-            if len(pterms) < 2:
-                continue
-            pframe = (_S.phrase_score_frame(idx, pterms, precision, boost)
-                      .join(idx.docmeta.select("seg", "docid", "key"),
-                            ["seg", "docid"])
-                      .groupBy("key")
-                      .agg(F.sum("score").alias("pscore")))
-            agg = (agg.join(pframe, "key", "left")
-                   .withColumn("score",
-                               (F.col("score")
-                                + F.coalesce(F.col("pscore"),
-                                             F.lit(0.0))).cast(stype))
-                   .drop("pscore"))
-    return (agg.select("key", "score")
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+    words = _compound(fields, precision, tie=tie, keys=("key", "clause"))
+    docs = _compound([("should", words)], precision, min_should_match=msm,
+                     keys=("key",))
+    phrases = []
+    for fname, boost in (pf or {}).items():
+        idx = mfi.indexes.get(fname)
+        pterms = ([t.term for t in get_analyzer(idx.analyzer)(query_text)]
+                  if idx is not None else [])
+        if len(pterms) >= 2:
+            phrases.append(("should", _keyed(
+                idx, phrase_score_frame(idx, pterms, precision, boost))))
+    if docs is not None and phrases:
+        docs = _compound([("must", docs), ("should", _compound(
+            phrases, precision, keys=("key",)))], precision, keys=("key",))
+    return _top(mfi, docs, k, precision)
 
 
 # ---------------------------------------------------------------------------

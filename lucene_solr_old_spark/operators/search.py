@@ -39,7 +39,15 @@ weight steps.  A single query is a workload of one:
     ``ConjunctionScorer.java:28-120``); MUST_NOT is a left-anti join
     (``ReqExclScorer.java``).  wand.py's per-segment kernel is the other
     scorer over the same parsed workload and scorer state.
-  * collect  -> :func:`_topk` is TakeOrderedAndProject (``ORDER BY score
+  * compound -> :func:`_compound` combines child score frames — the
+    classic, XML and surround parsers' clauses and edismax's per-field
+    and per-word frames — as BooleanQuery or DisjunctionMaxQuery: one
+    union, one ``groupBy`` of the document keys with the must /
+    minNrShouldMatch HAVING, one left-anti join of the MUST_NOT doc sets,
+    then :func:`_topk`.  :func:`_docs_where` is the non-scoring doc set of
+    a term predicate (constant-score multi-term clauses, filters,
+    MUST_NOT).
+  * collect  ->:func:`_topk` is TakeOrderedAndProject (``ORDER BY score
     DESC, key ASC LIMIT k``: the per-leaf PQ + merge of
     ``TopScoreDocCollector.java:54-61``, ties to the lower doc key),
     optionally over the hits passing a key/score predicate (the
@@ -75,6 +83,7 @@ tie-broken by doc key.  ``precision="float64"`` is the oracle-precision twin
 from __future__ import annotations
 
 import math
+from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
@@ -366,11 +375,79 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
             F.col("nmatched").cast(st) / F.col("n").cast(st)))
     ex_terms = _qterms(index, exclude_text) if exclude_text else []
     if ex_terms:
-        ex_docs = (index.postings.where(_sql_in("term", ex_terms))
-                   .select("seg", F.explode("postings.docid").alias("docid"))
-                   .distinct())
-        docs = docs.join(ex_docs, ["seg", "docid"], "left_anti")
+        docs = docs.join(_docs_where(index, _sql_in("term", ex_terms)),
+                         ["seg", "docid"], "left_anti")
     return docs.select(*keys, "score", "nmatched")
+
+
+def _docs_where(index: InvertedIndex, term_pred: Column) -> DataFrame:
+    """(seg, docid), each once, of the documents holding a term that
+    satisfies ``term_pred``: the non-scoring doc set of a multi-term
+    rewrite, a filter or a MUST_NOT clause."""
+    return (index.postings.where(term_pred)
+            .select("seg", F.explode("postings.docid").alias("docid"))
+            .distinct())
+
+
+def _boosted(score: Column, boost: float, precision: str) -> Column:
+    """``score`` times ``boost``, rounded to the precision's score type."""
+    stype = _stype(precision)
+    if boost != 1.0:
+        score = score * F.lit(boost).cast(stype)
+    return score.cast(stype)
+
+
+def _compound(clauses, precision: str = "float32", *,
+              min_should_match: int = 0, tie: float | None = None,
+              boost: float = 1.0, keys: tuple[str, ...] = ("seg", "docid")
+              ) -> DataFrame | None:
+    """BooleanQuery / DisjunctionMaxQuery over child score frames:
+    ``clauses`` is an iterable of ``(occur, frame)``, occur ``"must"``,
+    ``"should"`` or ``"must_not"``, and a ``None`` frame matches nothing.
+    The must and should frames (``keys``, score) are unioned once and
+    grouped once by ``keys``: the score is their sum
+    (``BooleanScorer.java``), or ``max + tie * (sum - max)``
+    (``DisjunctionMaxScorer.java``) when ``tie`` is given, times
+    ``boost`` and rounded to the precision's type.  A document must match
+    every must clause and ``min_should_match`` should clauses (each
+    should row is one matched clause, so one frame may carry several per
+    document, as edismax's per-word rows do), and no must_not clause:
+    their frames' keys are one left-anti join
+    (``ReqExclScorer.java``).  Returns (keys..., score), or ``None`` when
+    the compound matches nothing: no scoring clause, or an empty must
+    clause, which stops a lazy ``clauses`` before it builds the rest."""
+    scoring, excluded, n_must = [], [], 0
+    for occur, frame in clauses:
+        if occur == "must_not":
+            if frame is not None:
+                excluded.append(frame.select(*keys))
+        elif frame is None:
+            if occur == "must":
+                return None
+        else:
+            must = int(occur == "must")
+            n_must += must
+            scoring.append(frame.select(*keys, "score",
+                                        F.lit(must).alias("must")))
+    if not scoring:
+        return None
+    union = reduce(DataFrame.unionByName, scoring)
+    score = F.sum("score")
+    if tie is not None:
+        score = F.max("score") + F.lit(tie).cast(_stype(precision)) * (
+            score - F.max("score"))
+    docs = union.groupBy(*keys).agg(score.alias("score"),
+                                    F.sum("must").alias("n_must"),
+                                    F.count("*").alias("n"))
+    if n_must:
+        docs = docs.where(F.col("n_must") == n_must)
+    if min_should_match:
+        docs = docs.where(F.col("n") - F.col("n_must") >= min_should_match)
+    if excluded:
+        docs = docs.join(reduce(DataFrame.unionByName, excluded),
+                         list(keys), "left_anti")
+    return docs.select(*keys, _boosted(F.col("score"), boost, precision)
+                       .alias("score"))
 
 
 def _single(index: InvertedIndex, query_text: str, mode: str = "OR",

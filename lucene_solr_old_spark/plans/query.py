@@ -21,18 +21,20 @@ A re-derivation of the classic QueryParser's core surface
                             `a OR b` == `a b`, `NOT a` == `-a`
 
 Execution maps the BooleanQuery semantics (``search/BooleanQuery.java``)
-onto one DataFrame plan: every scoring clause contributes a
-(seg, docid, score, clause_id) frame; a doc's score is the float sum of its
-matching clauses; docs must match all MUST clauses and no MUST_NOT clause.
-Score = Lucene's sum-with-coord(1) (BM25 never overrides coord).
+onto one DataFrame plan through ``search._compound``: every scoring clause
+contributes a (seg, docid, score) frame; a doc's score is the float sum of
+its matching clauses; docs must match all MUST clauses and no MUST_NOT
+clause, whose doc sets come from the same clause -> term-predicate
+dispatch.  Score = Lucene's sum-with-coord(1) (BM25 never overrides coord).
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from itertools import chain
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.regexp import matches as _re_matches
 from ..functions.regexp import parse_regexp, to_java_regex
@@ -165,8 +167,19 @@ def parse_query(q: str) -> BoolQuery:
 
 
 def _wildcard_regex(pattern: str) -> str:
+    """Anchored Java regex of a wildcard: ``*`` any run, ``?`` one char."""
     esc = re.escape(pattern)
     return "^" + esc.replace(r"\*", ".*").replace(r"\?", ".") + "$"
+
+
+def _dict_terms(index: InvertedIndex, pred, limit: int) -> list[str]:
+    """The first ``limit`` dictionary terms satisfying ``pred``, in term
+    order: a capped expansion over the materialised term dictionary
+    (``InvertedIndex.terms_dict``), a TakeOrderedAndProject, so at most
+    ``limit`` rows are collected and no postings are read."""
+    rows = (index.terms_dict().select("term").where(pred)
+            .orderBy("term").limit(limit).collect())
+    return [r["term"] for r in rows]
 
 
 def regexp_pred(pattern: str):
@@ -235,41 +248,47 @@ def _fuzzy_terms(index: InvertedIndex, clause: FuzzyClause) -> list[str]:
     return sorted(r["term"] for r in rows)
 
 
-def _clause_frame(index: InvertedIndex, clause, clause_id: int,
-                  precision: str):
-    """-> frame(seg, docid, score, cid) | None."""
-    stype = "double" if precision == "float64" else "float"
-    if isinstance(clause, (WildcardClause, RangeClause, RegexpClause)):
-        # constant-score multi-term rewrite: score = boost per matching doc
-        if isinstance(clause, WildcardClause):
-            pred = F.col("term").rlike(_wildcard_regex(clause.pattern))
-        elif isinstance(clause, RegexpClause):
-            pred = regexp_pred(clause.pattern)
-        else:
-            pred = _range_pred(clause)
-        docs = (index.postings.where(pred)
-                .select("seg", F.explode("postings.docid").alias("docid"))
-                .distinct())
-        frame = docs.withColumn("score",
-                                F.lit(clause.boost).cast(stype))
-        return frame.withColumn("cid", F.lit(clause_id))
+def _clause_pred(index: InvertedIndex, clause) -> tuple[Column | None,
+                                                       list[str]]:
+    """(term predicate, scored terms) of a clause.  A constant-score
+    multi-term clause (wildcard, regexp, range) is its dictionary
+    predicate with no scored terms; a term, phrase or fuzzy clause is
+    ``term IN`` its analysed or fuzzy-expanded terms.  The predicate is
+    ``None`` when the clause matches nothing."""
+    if isinstance(clause, WildcardClause):
+        return F.col("term").rlike(_wildcard_regex(clause.pattern)), []
+    if isinstance(clause, RegexpClause):
+        return regexp_pred(clause.pattern), []
+    if isinstance(clause, RangeClause):
+        return _range_pred(clause), []
     if isinstance(clause, FuzzyClause):
         terms = _fuzzy_terms(index, clause)
-        if not terms:
-            return None
-        frame = S._term_set_docs(index, terms, precision, clause.boost)
-        return frame.withColumn("cid", F.lit(clause_id))
-    analyzer = get_analyzer(index.analyzer)
-    terms = [t.term for t in analyzer(clause.text)]
-    if not terms:
-        return None
-    if isinstance(clause, PhraseClause) and len(terms) > 1:
-        frame = S.phrase_score_frame(index, terms, precision, clause.boost,
-                                     slop=clause.slop).select(
-            "seg", "docid", "score")
     else:
-        frame = S._term_set_docs(index, terms, precision, clause.boost)
-    return frame.withColumn("cid", F.lit(clause_id))
+        terms = [t.term for t in get_analyzer(index.analyzer)(clause.text)]
+    return (S._sql_in("term", terms) if terms else None), terms
+
+
+def _clause_frame(index: InvertedIndex, clause,
+                  precision: str) -> DataFrame | None:
+    """-> frame(seg, docid, score) | None."""
+    pred, terms = _clause_pred(index, clause)
+    if pred is None:
+        return None
+    if not terms:
+        # constant-score multi-term rewrite: score = boost per matching doc
+        return S._docs_where(index, pred).withColumn(
+            "score", F.lit(clause.boost).cast(S._stype(precision)))
+    if isinstance(clause, PhraseClause) and len(terms) > 1:
+        return S.phrase_score_frame(index, terms, precision, clause.boost,
+                                    slop=clause.slop).select(
+            "seg", "docid", "score")
+    return S._term_set_docs(index, terms, precision, clause.boost)
+
+
+def _clause_docs(index: InvertedIndex, clause) -> DataFrame | None:
+    """The doc set of a MUST_NOT clause, or None when it matches nothing."""
+    pred, _ = _clause_pred(index, clause)
+    return None if pred is None else S._docs_where(index, pred)
 
 
 def bool_score_frame(index: InvertedIndex, query,
@@ -281,62 +300,13 @@ def bool_score_frame(index: InvertedIndex, query,
     (plans/xml.py)."""
     if isinstance(query, str):
         query = parse_query(query)
-    frames = []
-    n_must = 0
-    cid = 0
-    for clause in query.must:
-        f = _clause_frame(index, clause, cid, precision)
-        if f is None:
-            # a MUST clause that analyzes to nothing matches nothing
-            return None
-        frames.append(f.withColumn("is_must", F.lit(1)))
-        n_must += 1
-        cid += 1
-    for clause in query.should:
-        f = _clause_frame(index, clause, cid, precision)
-        if f is not None:
-            frames.append(f.withColumn("is_must", F.lit(0)))
-            cid += 1
-    if not frames:
-        return None
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    agg = union.groupBy("seg", "docid").agg(
-        F.sum("score").alias("score"),
-        F.sum("is_must").alias("n_must_matched"),
-        F.count("*").alias("n_matched"),
-    )
-    if n_must:
-        agg = agg.where(F.col("n_must_matched") == n_must)
-    if query.min_should_match:
-        agg = agg.where(
-            F.col("n_matched") - F.col("n_must_matched")
-            >= query.min_should_match)
-    for clause in query.must_not:
-        if isinstance(clause, WildcardClause):
-            pred = F.col("term").rlike(_wildcard_regex(clause.pattern))
-        elif isinstance(clause, RegexpClause):
-            pred = regexp_pred(clause.pattern)
-        elif isinstance(clause, RangeClause):
-            pred = _range_pred(clause)
-        elif isinstance(clause, FuzzyClause):
-            terms = _fuzzy_terms(index, clause)
-            if not terms:
-                continue
-            pred = F.col("term").isin(terms)
-        else:
-            analyzer = get_analyzer(index.analyzer)
-            terms = [t.term for t in analyzer(clause.text)]
-            if not terms:
-                continue
-            pred = F.col("term").isin(terms)
-        ex = (index.postings.where(pred)
-              .select("seg", F.explode("postings.docid").alias("docid"))
-              .distinct())
-        agg = agg.join(ex, ["seg", "docid"], "left_anti")
-
-    return agg.select("seg", "docid", "score")
+    clauses = chain(
+        (("must", _clause_frame(index, c, precision)) for c in query.must),
+        (("should", _clause_frame(index, c, precision))
+         for c in query.should),
+        (("must_not", _clause_docs(index, c)) for c in query.must_not))
+    return S._compound(clauses, precision,
+                       min_should_match=query.min_should_match)
 
 
 def execute(index: InvertedIndex, query, k: int = 10,
@@ -371,12 +341,9 @@ def complex_phrase_search(index: InvertedIndex, phrase: str, k: int = 10,
     for w in phrase.split():
         fm = _FUZZY_RE.match(w)
         if "*" in w or "?" in w:
-            rows = (index.terms_dict().select("term")
-                    .where(F.col("term").rlike(_wildcard_regex(w.lower())))
-                    .orderBy(F.asc("term"))
-                    .limit(max_expansions)
-                    .collect())
-            terms = sorted(r["term"] for r in rows)
+            terms = _dict_terms(
+                index, F.col("term").rlike(_wildcard_regex(w.lower())),
+                max_expansions)
         elif fm and fm.group("edits") != "0":
             edits = int(fm.group("edits") or 2)
             terms = _fuzzy_terms(index, FuzzyClause(

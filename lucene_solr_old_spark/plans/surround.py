@@ -45,13 +45,13 @@ exceeding it raises :class:`TooManyBasicQueries`.
 from __future__ import annotations
 
 import re
-from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators import search as S
 from ..operators.indexer import InvertedIndex
 from ..operators.spans import span_score_frame
+from .query import _dict_terms, _wildcard_regex
 
 __all__ = ["ParseException", "TooManyBasicQueries", "parse_surround",
            "surround_search", "surround_score_frame"]
@@ -352,11 +352,6 @@ class _Budget:
                 f"more than {self.limit} basic queries")
 
 
-def _trunc_regex(pattern: str) -> str:
-    esc = re.escape(pattern)
-    return "^" + esc.replace(r"\*", ".*").replace(r"\?", ".") + "$"
-
-
 def _expand(index: InvertedIndex, node, budget: _Budget) -> list[str]:
     """Dictionary expansion of a prefix/trunc node — a pushed-down probe of
     the MATERIALIZED term dictionary (``InvertedIndex.terms_dict``), capped
@@ -365,17 +360,10 @@ def _expand(index: InvertedIndex, node, budget: _Budget) -> list[str]:
     if node[0] == "prefix":
         pred = F.col("term").startswith(node[1].lower())
     else:
-        pred = F.col("term").rlike(_trunc_regex(node[1].lower()))
-    rows = (index.terms_dict().select("term").where(pred)
-            .orderBy("term").limit(budget.limit + 1).collect())
-    terms = [r["term"] for r in rows]
+        pred = F.col("term").rlike(_wildcard_regex(node[1].lower()))
+    terms = _dict_terms(index, pred, budget.limit + 1)
     budget.add(len(terms))
     return terms
-
-
-def _empty_frame(index: InvertedIndex, stype: str) -> DataFrame:
-    return (index.docmeta.select("seg", "docid").limit(0)
-            .withColumn("score", F.lit(0.0).cast(stype)))
 
 
 def _to_span(index, node, budget) -> tuple[object | None, float]:
@@ -416,54 +404,39 @@ def _to_span(index, node, budget) -> tuple[object | None, float]:
 
 
 def _frame(index: InvertedIndex, node, budget: _Budget,
-           precision: str) -> DataFrame:
-    stype = "double" if precision == "float64" else "float"
+           precision: str) -> DataFrame | None:
+    """-> (seg, docid, score), or None when the subtree matches nothing.
+    Every child is built (and charged to the budget) before its parent
+    combines them."""
     kind = node[0]
     if kind == "term":
         budget.add(1)
         return S._term_set_docs(index, [node[1].lower()], precision)
     if kind in ("prefix", "trunc"):
         terms = _expand(index, node, budget)
-        if not terms:
-            return _empty_frame(index, stype)
-        return S._term_set_docs(index, terms, precision)
+        return S._term_set_docs(index, terms, precision) if terms else None
     if kind == "dist":
         tree, mult = _to_span(index, node, budget)
         if tree is None:
-            return _empty_frame(index, stype)
+            return None
         frame = span_score_frame(index, tree, precision=precision)
-        frame = frame.select("seg", "docid", "score")
-        if mult != 1.0:
-            frame = frame.withColumn(
-                "score", (F.col("score") * F.lit(mult)).cast(stype))
-        return frame
-    if kind == "or":
+        return frame.select("seg", "docid", S._boosted(
+            F.col("score"), mult, precision).alias("score"))
+    if kind in ("or", "and", "not"):
+        # OrQuery: all SHOULD; AndQuery: all MUST; NotQuery: first MUST,
+        # rest MUST_NOT
         kids = [_frame(index, c, budget, precision) for c in node[1]]
-        return (reduce(DataFrame.unionByName, kids)
-                .groupBy("seg", "docid").agg(F.sum("score").alias("score")))
-    if kind == "and":
-        kids = [_frame(index, c, budget, precision) for c in node[1]]
-        out = kids[0]
-        for g in kids[1:]:
-            out = (out.join(g.withColumnRenamed("score", "s2"),
-                            ["seg", "docid"])
-                   .withColumn("score", F.col("score") + F.col("s2"))
-                   .drop("s2"))
-        return out
-    if kind == "not":
-        out = _frame(index, node[1][0], budget, precision)
-        for c in node[1][1:]:
-            out = out.join(_frame(index, c, budget, precision)
-                           .select("seg", "docid"),
-                           ["seg", "docid"], "left_anti")
-        return out
+        occurs = {"or": ["should"] * len(kids), "and": ["must"] * len(kids),
+                  "not": ["must"] + ["must_not"] * (len(kids) - 1)}[kind]
+        return S._compound(list(zip(occurs, kids)), precision)
     if kind == "fields":
         # single-field engine: names parse for syntax compat, then drop
         return _frame(index, node[1], budget, precision)
     if kind == "boost":
         frame = _frame(index, node[1], budget, precision)
-        return frame.withColumn(
-            "score", (F.col("score") * F.lit(node[2])).cast(stype))
+        return None if frame is None else frame.select(
+            "seg", "docid",
+            S._boosted(F.col("score"), node[2], precision).alias("score"))
     raise ParseException(f"unknown node {kind!r}")
 
 
@@ -472,7 +445,10 @@ def surround_score_frame(index: InvertedIndex, query: str,
                          max_basic_queries: int = 1024) -> DataFrame:
     """(seg, docid, score) for every doc matching the surround query."""
     ast = parse_surround(query)
-    return _frame(index, ast, _Budget(max_basic_queries), precision)
+    frame = _frame(index, ast, _Budget(max_basic_queries), precision)
+    if frame is None:
+        return S._no_docs(index, precision).select("seg", "docid", "score")
+    return frame
 
 
 def surround_search(index: InvertedIndex, query: str, k: int = 10,

@@ -57,8 +57,8 @@ from ..functions.tokenizer import get_analyzer
 from ..operators import search as S
 from ..operators.indexer import InvertedIndex
 from ..operators.spans import span_score_frame
-from .query import (BoolQuery, FuzzyClause, _clause_frame, bool_score_frame,
-                    parse_query)
+from .query import (FuzzyClause, RangeClause, _clause_frame, _range_pred,
+                    bool_score_frame, parse_query)
 
 __all__ = ["ParserException", "parse_xml_query", "xml_score_frame",
            "xml_search"]
@@ -215,6 +215,16 @@ def _child_by_tag(e, tag):
     raise ParserException(f"<{e.tag}> requires a <{tag}> child")
 
 
+def _occurs(clause) -> str:
+    """A Clause's occurs attribute as a ``search._compound`` occur
+    (``BooleanQueryBuilder.getOccursValue``)."""
+    occ = (clause.get("occurs") or "should").lower()
+    if occ not in ("must", "mustnot", "should"):
+        raise ParserException(
+            f'Invalid value for "occurs" attribute of clause: {occ}')
+    return "must_not" if occ == "mustnot" else occ
+
+
 def parse_xml_query(xml: str):
     """Parse an XML query document to the engine AST."""
     try:
@@ -239,13 +249,9 @@ def _parse_query_elem(e, inh_field):
         bq = XBool(boost=boost,
                    min_should_match=_iattr(e, "minimumNumberShouldMatch", 0))
         for c in _children(e):
-            if c.tag != "Clause":
-                continue
-            occ = (c.get("occurs") or "should").lower()
-            if occ not in ("must", "mustnot", "should"):
-                raise ParserException(
-                    f'Invalid value for "occurs" attribute of clause: {occ}')
-            bq.clauses.append((occ, _parse_query_elem(_first_child(c), field)))
+            if c.tag == "Clause":
+                bq.clauses.append((_occurs(c), _parse_query_elem(
+                    _first_child(c), field)))
         return bq
     if tag == "DisjunctionMaxQuery":
         return XDisMax([_parse_query_elem(c, field) for c in _children(e)],
@@ -332,11 +338,9 @@ def _parse_filter_elem(e, inh_field):
     if tag == "BooleanFilter":
         bf = XBoolFilter()
         for c in _children(e):
-            if c.tag != "Clause":
-                continue
-            occ = (c.get("occurs") or "should").lower()
-            bf.clauses.append((occ,
-                               _parse_filter_elem(_first_child(c), field)))
+            if c.tag == "Clause":
+                bf.clauses.append((_occurs(c), _parse_filter_elem(
+                    _first_child(c), field)))
         return bf
     if tag == "CachedFilter":
         # CachedFilterBuilder LRU-caches the wrapped filter's DocIdSet;
@@ -348,10 +352,6 @@ def _parse_filter_elem(e, inh_field):
 # --------------------------------------------------------------------------
 # execute
 # --------------------------------------------------------------------------
-
-def _docset_from_frame(frame: DataFrame) -> DataFrame:
-    return frame.select("seg", "docid").distinct()
-
 
 def _all_docs(index: InvertedIndex) -> DataFrame:
     return index.docmeta.select("seg", "docid")
@@ -411,7 +411,6 @@ class _Executor:
 
     def frame(self, node) -> DataFrame | None:
         """-> (seg, docid, score) or None for a match-nothing node."""
-        b = F.lit(getattr(node, "boost", 1.0)).cast(self.stype)
         if isinstance(node, XTerm):
             self._check_content(node.field)
             return S._term_set_docs(self.index, [node.term],
@@ -428,9 +427,14 @@ class _Executor:
             return _all_docs(self.index).withColumn(
                 "score", F.lit(node.boost).cast(self.stype))
         if isinstance(node, XBool):
-            return self._bool_frame(node)
+            return S._compound(
+                ((occ, self.frame(c)) for occ, c in node.clauses),
+                self.precision,
+                min_should_match=node.min_should_match, boost=node.boost)
         if isinstance(node, XDisMax):
-            return self._dismax_frame(node)
+            return S._compound(
+                (("should", self.frame(c)) for c in node.children),
+                self.precision, tie=node.tie, boost=node.boost)
         if isinstance(node, XUser):
             self._check_content(node.field)
             bq = parse_query(node.text)
@@ -447,11 +451,8 @@ class _Executor:
             if f is None:
                 return None
             docs = self.filter_docs(node.filt)
-            out = f.join(docs, ["seg", "docid"], "left_semi")
-            if node.boost != 1.0:
-                out = out.withColumn("score", (F.col("score") * b)
-                                     .cast(self.stype))
-            return out
+            return self._boosted(
+                f.join(docs, ["seg", "docid"], "left_semi"), node.boost)
         if isinstance(node, XBoosting):
             f = self.frame(node.match)
             if f is None:
@@ -459,15 +460,13 @@ class _Executor:
             ctx = self.frame(node.context)
             if ctx is None:
                 return f
-            ctx_docs = _docset_from_frame(ctx).withColumn(
-                "in_ctx", F.lit(1))
+            ctx_docs = ctx.select("seg", "docid", F.lit(1).alias("in_ctx"))
             return (f.join(ctx_docs, ["seg", "docid"], "left")
                     .withColumn(
                         "score",
                         F.when(F.col("in_ctx").isNotNull(),
-                               (F.col("score")
-                                * F.lit(node.demote_boost).cast(self.stype))
-                               .cast(self.stype))
+                               S._boosted(F.col("score"), node.demote_boost,
+                                          self.precision))
                         .otherwise(F.col("score")))
                     .select("seg", "docid", "score"))
         if isinstance(node, XFuzzyLikeThis):
@@ -477,78 +476,15 @@ class _Executor:
             analyzer = get_analyzer(self.index.analyzer)
             tree = _resolve_orterms(node.tree, analyzer)
             frame = span_score_frame(self.index, tree, self.precision)
-            out = frame.select("seg", "docid", "score")
-            if node.boost != 1.0:
-                out = out.withColumn("score", (F.col("score") * b)
-                                     .cast(self.stype))
-            return out
+            return self._boosted(frame.select("seg", "docid", "score"),
+                                 node.boost)
         raise ParserException(f"unsupported query node {type(node).__name__}")
 
-    def _bool_frame(self, node: XBool) -> DataFrame | None:
-        frames = []
-        n_must = 0
-        excludes = []
-        for occ, child in node.clauses:
-            if occ == "mustnot":
-                f = self.frame(child)
-                if f is not None:
-                    excludes.append(_docset_from_frame(f))
-                continue
-            f = self.frame(child)
-            if f is None:
-                if occ == "must":
-                    return None
-                continue
-            frames.append(f.withColumn("is_must",
-                                       F.lit(1 if occ == "must" else 0)))
-            if occ == "must":
-                n_must += 1
-        if not frames:
-            return None
-        union = frames[0]
-        for f in frames[1:]:
-            union = union.unionByName(f)
-        agg = union.groupBy("seg", "docid").agg(
-            F.sum("score").alias("score"),
-            F.sum("is_must").alias("n_must_matched"),
-            F.count("*").alias("n_matched"))
-        if n_must:
-            agg = agg.where(F.col("n_must_matched") == n_must)
-        if node.min_should_match:
-            agg = agg.where(F.col("n_matched") - F.col("n_must_matched")
-                            >= node.min_should_match)
-        out = agg.select("seg", "docid", "score")
-        for ex in excludes:
-            out = out.join(ex, ["seg", "docid"], "left_anti")
-        if node.boost != 1.0:
-            out = out.withColumn(
-                "score",
-                (F.col("score") * F.lit(node.boost).cast(self.stype))
-                .cast(self.stype))
-        return out
-
-    def _dismax_frame(self, node: XDisMax) -> DataFrame | None:
-        frames = []
-        for child in node.children:
-            f = self.frame(child)
-            if f is not None:
-                frames.append(f)
-        if not frames:
-            return None
-        union = frames[0]
-        for f in frames[1:]:
-            union = union.unionByName(f)
-        tie = F.lit(node.tie).cast(self.stype)
-        agg = union.groupBy("seg", "docid").agg(
-            (F.max("score")
-             + tie * (F.sum("score") - F.max("score"))).cast(self.stype)
-            .alias("score"))
-        if node.boost != 1.0:
-            agg = agg.withColumn(
-                "score",
-                (F.col("score") * F.lit(node.boost).cast(self.stype))
-                .cast(self.stype))
-        return agg
+    def _boosted(self, frame: DataFrame, boost: float) -> DataFrame:
+        if boost == 1.0:
+            return frame
+        return frame.withColumn(
+            "score", S._boosted(F.col("score"), boost, self.precision))
 
     def _fuzzy_like_this_frame(self, node: XFuzzyLikeThis) -> DataFrame | None:
         # FuzzyLikeThisQuery.java flattens the per-field variants into a
@@ -557,24 +493,15 @@ class _Executor:
         # FuzzyQuery.floatToEdits) and the union scores as a disjunction
         analyzer = get_analyzer(self.index.analyzer)
         max_edits = 1 if node.min_similarity >= 0.5 else 2
-        frames = []
-        cid = 0
-        for field, text in node.fields:
+        for field, _text in node.fields:
             self._check_content(field)
-            for tok in analyzer(text):
-                clause = FuzzyClause(tok.term, max_edits, node.boost,
-                                     max_expansions=node.max_num_terms)
-                f = _clause_frame(self.index, clause, cid, self.precision)
-                if f is not None:
-                    frames.append(f.select("seg", "docid", "score"))
-                    cid += 1
-        if not frames:
-            return None
-        union = frames[0]
-        for f in frames[1:]:
-            union = union.unionByName(f)
-        return (union.groupBy("seg", "docid")
-                .agg(F.sum("score").cast(self.stype).alias("score")))
+        return S._compound(
+            (("should", _clause_frame(
+                self.index, FuzzyClause(tok.term, max_edits, node.boost,
+                                        max_expansions=node.max_num_terms),
+                self.precision))
+             for _field, text in node.fields for tok in analyzer(text)),
+            self.precision)
 
     # -- filters ----------------------------------------------------------
 
@@ -595,50 +522,31 @@ class _Executor:
                         .select("seg", "docid").distinct())
             # indexed content-field term range (TermRangeFilter)
             self._check_content(filt.field)
-            t = F.col("term")
-            pred = ((t >= filt.lower if filt.include_lower
-                     else t > filt.lower)
-                    & (t <= filt.upper if filt.include_upper
-                       else t < filt.upper))
-            return (self.index.postings.where(pred)
-                    .select("seg",
-                            F.explode("postings.docid").alias("docid"))
-                    .distinct())
+            return S._docs_where(self.index, _range_pred(RangeClause(
+                filt.lower, filt.upper, filt.include_lower,
+                filt.include_upper)))
         if isinstance(filt, XTermsFilter):
             self._check_content(filt.field)
             analyzer = get_analyzer(self.index.analyzer)
             terms = [t.term for t in analyzer(filt.text)]
             if not terms:
                 return _all_docs(self.index).limit(0)
-            return (self.index.postings
-                    .where(F.col("term").isin(terms))
-                    .select("seg",
-                            F.explode("postings.docid").alias("docid"))
-                    .distinct())
+            return S._docs_where(self.index, S._sql_in("term", terms))
         if isinstance(filt, XBoolFilter):
-            out = None
-            shoulds = []
-            for occ, child in filt.clauses:
-                docs = self.filter_docs(child)
-                if occ == "must":
-                    out = docs if out is None else out.join(
-                        docs, ["seg", "docid"], "left_semi")
-                elif occ == "should":
-                    shoulds.append(docs)
-            if shoulds:
-                su = shoulds[0]
-                for s in shoulds[1:]:
-                    su = su.unionByName(s)
-                su = su.distinct()
-                out = su if out is None else out.join(
-                    su, ["seg", "docid"], "left_semi")
-            if out is None:
-                out = _all_docs(self.index)
-            for occ, child in filt.clauses:
-                if occ == "mustnot":
-                    out = out.join(self.filter_docs(child),
-                                   ["seg", "docid"], "left_anti")
-            return out
+            # BooleanFilter: every must filter, one should filter when
+            # there are any, no mustnot filter; all documents when only
+            # mustnot filters are given
+            clauses = [(occ, self.filter_docs(child)
+                        .withColumn("score", F.lit(0.0)))
+                       for occ, child in filt.clauses]
+            occurs = {occ for occ, _ in clauses}
+            if not occurs & {"must", "should"}:
+                clauses.append(("must", _all_docs(self.index)
+                                .withColumn("score", F.lit(0.0))))
+            return S._compound(
+                clauses, self.precision,
+                min_should_match=int("should" in occurs)).select(
+                "seg", "docid")
         raise ParserException(
             f"unsupported filter node {type(filt).__name__}")
 

@@ -8,6 +8,7 @@ AQE is on so skewed query-time joins get runtime splitting
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 
@@ -184,11 +185,18 @@ def package_zip(out_dir: str | None = None) -> str:
     return zpath
 
 
+@functools.cache
+def _shipped_zip() -> str:
+    """The package zip :func:`ship_package` adds, written once per
+    process: every later call reuses its path."""
+    return package_zip()
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors regardless of driver cwd
     (the local-mode equivalent of ``spark-submit --py-files engine.zip``)."""
     try:
-        spark.sparkContext.addPyFile(package_zip())
+        spark.sparkContext.addPyFile(_shipped_zip())
     except Exception:  # already added, or non-local FS quirks — non-fatal
         log.warning("could not ship the package to executors",
                     exc_info=True)

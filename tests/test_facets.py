@@ -2,6 +2,7 @@
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import FloatType
 
 from lucene_solr_old_spark.functions.tokenizer import analyze_terms
 from lucene_solr_old_spark.operators.facets import (
@@ -74,7 +75,10 @@ def test_stats_and_grouping(setup):
     by_lang = stats_agg(docs, dims, "n_chars", group_by="lang").collect()
     assert sum(r["cnt"] for r in by_lang) == st["cnt"]
 
-    g = group_topk(idx, ["run", "meet"], dims, "lang", k_per_group=2).collect()
+    grouped = group_topk(idx, ["run", "meet"], dims, "lang", k_per_group=2)
+    # float32 scores, like every other float32 entry point's collector
+    assert isinstance(grouped.schema["score"].dataType, FloatType)
+    g = grouped.collect()
     per_group = {}
     for r in g:
         per_group.setdefault(r["lang"], []).append(r)

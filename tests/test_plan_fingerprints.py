@@ -29,7 +29,10 @@ from lucene_solr_old_spark.operators import wand as W  # noqa: E402
 from lucene_solr_old_spark.operators.mlt import more_like_this  # noqa: E402
 from lucene_solr_old_spark.operators.tfidf import (  # noqa: E402
     search_lmdirichlet, search_tfidf)
+from lucene_solr_old_spark.operators.multifield import (  # noqa: E402
+    MultiFieldIndex, search_edismax, search_fielded)
 from lucene_solr_old_spark.plans.query import execute  # noqa: E402
+from lucene_solr_old_spark.plans.surround import surround_search  # noqa: E402
 from lucene_solr_old_spark.plans.xml import xml_search  # noqa: E402
 from lucene_solr_old_spark.operators.batch import batch_search  # noqa: E402
 from lucene_solr_old_spark.operators.indexer import (  # noqa: E402
@@ -54,6 +57,10 @@ XML = ('<BooleanQuery fieldName="contents">'
        'meetings caresses ponies</TermsQuery></Clause>'
        '<Clause occurs="mustnot"><TermQuery>hope</TermQuery></Clause>'
        '</BooleanQuery>')
+DISMAX = ('<DisjunctionMaxQuery tieBreaker="0.1" fieldName="contents">'
+          '<TermQuery>run</TermQuery>'
+          '<TermsQuery>meetings caresses</TermsQuery>'
+          '</DisjunctionMaxQuery>')
 
 
 def _kind(node: str) -> str | None:
@@ -96,7 +103,7 @@ def plan_counts(df) -> dict[str, int]:
     return counts
 
 
-def entry_points(df, plain, comp) -> dict:
+def entry_points(df, plain, comp, mfi) -> dict:
     first = S.search_or(plain, QUERY, k=5).collect()
     after = (float(first[-1]["score"]), first[-1]["key"])
     # materialised, so only delete_docs' own nodes are counted
@@ -139,6 +146,16 @@ def entry_points(df, plain, comp) -> dict:
             max_query_terms=5),
         "execute": lambda: execute(plain, BOOL, k=10),
         "xml_search": lambda: xml_search(plain, XML, k=10),
+        "xml_dismax": lambda: xml_search(plain, DISMAX, k=10),
+        "surround_and": lambda: surround_search(plain, "run AND meet", k=10),
+        "surround_or": lambda: surround_search(plain, "run OR meet", k=10),
+        "surround_not": lambda: surround_search(plain, "run NOT caress",
+                                                k=10),
+        "search_fielded": lambda: search_fielded(
+            mfi, "raw:running meetings", k=10),
+        "search_edismax": lambda: search_edismax(
+            mfi, "running meetings", {"body": 1.0, "raw": 2.0}, tie=0.1,
+            mm="50%", k=10, pf={"body": 1.5}),
     }
 
 
@@ -147,7 +164,10 @@ def build(spark):
     plain = build_index(df, num_segments=4).persist()
     comp = compress_index(plain).persist()
     comp.postings.count()
-    return df, plain, comp
+    # a second field over the same pages, analysed without stemming
+    raw = build_index(df, num_segments=4, analyzer="ws_lower").persist()
+    mfi = MultiFieldIndex({"body": plain, "raw": raw}, default_field="body")
+    return df, plain, comp, mfi
 
 
 @pytest.fixture(scope="module")

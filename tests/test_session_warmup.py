@@ -1,5 +1,6 @@
-"""Session warm-up is best-effort, but a failure is logged with its
-traceback on the package logger, never swallowed."""
+"""Session set-up: warm-up is best-effort, but a failure is logged with
+its traceback on the package logger, never swallowed; the package zip
+shipped to executors is written once per process."""
 
 import logging
 
@@ -20,3 +21,23 @@ def test_warmup_failure_is_logged(spark, monkeypatch, caplog):
     assert rec.levelno == logging.WARNING
     assert "warm-up" in rec.getMessage()
     assert rec.exc_info and "warm-up broke" in str(rec.exc_info[1])
+
+
+def test_ship_package_zips_once_per_process(spark, monkeypatch):
+    from lucene_solr_old_spark import session
+
+    calls = []
+    real = session.package_zip
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(session, "package_zip", counted)
+    session._shipped_zip.cache_clear()
+    try:
+        session.ship_package(spark)
+        session.ship_package(spark)
+    finally:
+        session._shipped_zip.cache_clear()
+    assert len(calls) == 1
