@@ -1,11 +1,14 @@
-"""Batch query execution: a whole query workload as ONE DataFrame job.
+"""Batch query execution: a whole query workload as ONE DataFrame query.
 
 Per-query jobs pay Spark's scheduling floor (~0.5-2s) regardless of work;
 the reference engine answers single queries in microseconds.  Where Spark
 WINS is throughput: the workload is data — one term-pruned postings scan
 fanned out to every query holding each term, one (qid, seg, docid)
-aggregation, one per-qid top-k window — so the whole workload costs one
-job, and amortized per-query cost drops by orders of magnitude.
+aggregation, one per-qid top-k window — so the whole workload costs four
+Spark jobs (scan and score up to the aggregate's shuffle, the docmeta
+broadcast for the doc keys, the per-qid window's shuffle, and the result
+stage, sorted within partitions), and amortized per-query cost drops by
+orders of magnitude.
 
 This is search.py's BM25 core (:func:`~.search._scored_docs`, which also
 runs every single query as a workload of one) behind the per-qid
@@ -28,7 +31,7 @@ __all__ = ["batch_search"]
 def batch_search(index: InvertedIndex, queries: list[tuple],
                  k: int = 10, precision: str = "float32") -> DataFrame:
     """queries: [(qid, query_text, mode)] with mode in {"OR", "AND"}.
-    Returns (qid, rank, key, score) — top-k per query, one Spark job.
-    """
+    Returns (qid, rank, key, score): each qid's rows contiguous and
+    rank-ordered, the qids not globally sorted."""
     docs = _scored_docs(index, _parse(index, queries), precision)
     return _topk_per_qid(docs, index, k, precision)

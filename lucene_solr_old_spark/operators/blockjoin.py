@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .indexer import InvertedIndex
-from .search import _term_set_docs, search_terms
+from .search import _qterms, _term_set_docs, _with_keys, search_terms
 
 __all__ = ["to_parent_join", "to_child_join"]
 
@@ -40,8 +40,7 @@ def _child_scores(index: InvertedIndex, child_query: str,
 
     terms = [t.term for t in get_analyzer(index.analyzer)(child_query)]
     per_doc = _term_set_docs(index, terms, precision)
-    return per_doc.join(index.docmeta.select("seg", "docid", "key"),
-                        ["seg", "docid"]).select("key", "score")
+    return _with_keys(per_doc, index).select("key", "score")
 
 
 def to_parent_join(index: InvertedIndex, child_query: str,
@@ -145,14 +144,10 @@ def join_util_search(index: InvertedIndex, from_query: str,
     the to-side never shuffles: scan -> broadcast-hash-join -> top-k."""
     from pyspark.sql import functions as F
 
-    from .search import _qterms
-
     stype = "double" if precision == "float64" else "float"
     per_doc = _term_set_docs(index, _qterms(index, from_query),
                              precision).withColumnRenamed("score", "s")
-    with_field = (per_doc
-                  .join(index.docmeta.select("seg", "docid", "key"),
-                        ["seg", "docid"])
+    with_field = (_with_keys(per_doc, index)
                   .join(from_dims.withColumnRenamed(from_field, "_jterm"),
                         "key"))
     if mode == "none":

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .indexer import InvertedIndex
-from .search import _docs_where, _term_set_docs
+from .search import _docs_where, _term_set_docs, _with_keys
 
 __all__ = ["taxonomy_counts", "drill_down", "stats_percentiles",
            "collapse_results", "expand_groups",
@@ -38,9 +38,7 @@ def matching_docs(index: InvertedIndex, terms: list[str],
                               min_should_match=len(set(terms)))
     else:
         docs = _docs_where(index, F.col("term").isin(terms))
-    return (docs.join(index.docmeta.select("seg", "docid", "key"),
-                      ["seg", "docid"])
-            .select("key"))
+    return _with_keys(docs, index).select("key")
 
 
 def facet_field(result_docs: DataFrame, dims: DataFrame, field: str,
@@ -125,8 +123,7 @@ def group_topk(index: InvertedIndex, terms: list[str], dims: DataFrame,
     per-group PQ the reference keeps)."""
     per_doc = _term_set_docs(index, terms)
     dims_k = dims.withColumnRenamed(key_col, "key") if key_col != "key" else dims
-    hits = (per_doc.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    hits = (_with_keys(per_doc, index)
             .join(dims_k, "key")
             .select(group_field, "key",
                     F.col("score").cast("float").alias("score")))

@@ -21,8 +21,9 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from .indexer import InvertedIndex, build_index
-from .search import (_compound, _no_docs, _term_set_docs, _topk,
-                     phrase_score_frame)
+from .search import (_compound, _has_slots, _no_docs, _phrase_terms,
+                     _posting_rows, _Scorer, _slot_fanout, _sql_in,
+                     _term_set_docs, _topk, _with_keys, phrase_score_frame)
 from ..functions.tokenizer import get_analyzer
 
 __all__ = ["MultiFieldIndex", "build_multifield_index", "search_fielded",
@@ -114,9 +115,7 @@ def parse_fielded(query: str, default_field: str) -> list[tuple[str, str]]:
 
 def _keyed(idx: InvertedIndex, frame: DataFrame) -> DataFrame:
     """A field's (seg, docid, score) frame on the shared doc key."""
-    return (frame.join(idx.docmeta.select("seg", "docid", "key"),
-                       ["seg", "docid"])
-            .select("key", "score"))
+    return _with_keys(frame, idx).select("key", "score")
 
 
 def _top(mfi: MultiFieldIndex, docs: DataFrame | None, k: int,
@@ -199,11 +198,11 @@ def search_edismax(mfi: MultiFieldIndex, query_text: str,
     phrases = []
     for fname, boost in (pf or {}).items():
         idx = mfi.indexes.get(fname)
-        pterms = ([t.term for t in get_analyzer(idx.analyzer)(query_text)]
-                  if idx is not None else [])
-        if len(pterms) >= 2:
-            phrases.append(("should", _keyed(
-                idx, phrase_score_frame(idx, pterms, precision, boost))))
+        terms, offsets = (_phrase_terms(idx, query_text)
+                          if idx is not None else ([], []))
+        if len(terms) >= 2:
+            phrases.append(("should", _keyed(idx, phrase_score_frame(
+                idx, terms, precision, boost, offsets=offsets))))
     if docs is not None and phrases:
         docs = _compound([("must", docs), ("should", _compound(
             phrases, precision, keys=("key",)))], precision, keys=("key",))
@@ -257,7 +256,6 @@ def masked_span_query(mfi: MultiFieldIndex, tree, k: int = 10,
     hits -> the exact NearSpans kernels (functions/phrasepos.py) -> BM25
     on the span freq with search.py's summed-idf weight ->
     TakeOrderedAndProject."""
-    from .search import _has_slots, _Scorer, _slot_fanout, _sql_in
     from .spans import (_eval_terms, _required_terms, _span_tree_udf,
                         _tree_terms)
 
@@ -276,17 +274,12 @@ def masked_span_query(mfi: MultiFieldIndex, tree, k: int = 10,
         # this field's terms fan out to their own slots only
         slots = [[n.split(_MASK_SEP, 1)[1]]
                  if n.startswith(fld + _MASK_SEP) else [] for n in names]
-        rows = (idx.postings.where(_sql_in("term", terms))
-                .select("seg", "postings",
-                        F.explode(_slot_fanout(slots)[F.col("term")])
-                        .alias("slot"))
-                .select("seg", "slot", F.explode("postings").alias("p"))
-                .select("seg", "slot", "p.docid",
-                        F.col("p.positions").alias("pos"))
-                .join(idx.docmeta.select("seg", "docid", "key"),
-                      ["seg", "docid"])
-                .select("key", "slot", "pos"))
-        frames.append(rows)
+        rows = _posting_rows(
+            idx.postings.where(_sql_in("term", terms)).select(
+                "seg", "postings",
+                F.explode(_slot_fanout(slots)[F.col("term")]).alias("slot")),
+            ["seg", "slot"], F.col("p.positions").alias("pos"))
+        frames.append(_with_keys(rows, idx).select("key", "slot", "pos"))
     rows = frames[0]
     for f in frames[1:]:
         rows = rows.unionByName(f)

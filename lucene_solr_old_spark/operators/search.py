@@ -53,9 +53,10 @@ weight steps.  A single query is a workload of one:
     optionally over the hits passing a key/score predicate (the
     searchAfter cursor, ``IndexSearcher.java:234-250``);
     :func:`_topk_per_qid` is the per-qid ``row_number`` window for
-    workloads; ``count()`` is TotalHitCountCollector.  A workload that
-    matches nothing collects :func:`_no_docs`, so an empty result has the
-    schema of a matching one.
+    workloads, each qid's rows contiguous and rank-ordered but the qids
+    not globally sorted; ``count()`` is TotalHitCountCollector.  A
+    workload that matches nothing collects :func:`_no_docs`, so an empty
+    result has the schema of a matching one.
 
 Positional queries — PhraseQuery exact or sloppy, MultiPhraseQuery,
 NGramPhraseQuery (here) and the span trees (spans.py, multifield.py) —
@@ -83,7 +84,7 @@ tie-broken by doc key.  ``precision="float64"`` is the oracle-precision twin
 from __future__ import annotations
 
 import math
-from functools import reduce
+from functools import lru_cache, reduce
 from typing import NamedTuple
 
 import numpy as np
@@ -107,12 +108,14 @@ def _qterms(index: InvertedIndex, query_text: str) -> list[str]:
     return [t.term for t in get_analyzer(index.analyzer)(query_text)]
 
 
-def _qtokens(index: InvertedIndex, query_text: str):
-    """Analyzed query tokens WITH positions — phrase queries use analyzed
+def _phrase_terms(index: InvertedIndex,
+                  query_text: str) -> tuple[list[str], list[int]]:
+    """Analyzed phrase terms and their offsets — phrase queries use analyzed
     positions as term offsets (``QueryParser`` calls ``PhraseQuery.add(term,
     position)`` with position increments, so stopword holes in the query
     text widen the phrase — ``PhraseQuery.java:128-135``)."""
-    return get_analyzer(index.analyzer)(query_text)
+    tokens = get_analyzer(index.analyzer)(query_text)
+    return [t.term for t in tokens], [t.pos - tokens[0].pos for t in tokens]
 
 
 def _stype(precision: str) -> str:
@@ -159,6 +162,14 @@ def idf64(df: int, max_doc: int) -> float:
 def cache64(avg_dl: float, k1: float = 1.2, b: float = 0.75) -> list[float]:
     # operation order mirrored in the oracle SQL: k1*((1-b) + (b*lq)/avgdl)
     return [k1 * ((1.0 - b) + (b * lq) / avg_dl) for lq in LQ64]
+
+
+@lru_cache(maxsize=16)
+def _norm_array(table: tuple[float, ...], stype: str) -> Column:
+    """A norm table as ONE array literal (NumPy rounds as the SQL cast
+    does), built once: 256 casts cost ~40 ms of analysis in every plan."""
+    return F.lit(np.asarray(table, np.float64 if stype == "double"
+                            else np.float32))
 
 
 class _Query(NamedTuple):
@@ -251,8 +262,8 @@ class _Scorer:
     def per_norm(self, table: list[float], norm: Column) -> Column:
         """``table[norm]``: a 256-entry per-norm-byte lookup."""
         # element_at is 1-based; norm byte is 0..255
-        arr = F.expr(f"array({', '.join(map(self._num, table))})")
-        return F.element_at(arr, norm + 1)
+        return F.element_at(_norm_array(tuple(table), self._sqltype),
+                            norm + 1)
 
     def weight_map(self) -> Column:
         """term -> weightValue."""
@@ -261,27 +272,23 @@ class _Scorer:
             for t, w in self._weights.items()) + ")")
 
     def fanout_map(self, workload: list[_Query]) -> Column:
-        """term -> array<struct<qid, mult, need, w[, n]>>: the queries
-        holding each term, with its clause multiplicity and the weight of
-        (query, term); ``n``, the query's clause count, for coord."""
+        """term -> array<struct<qid, mult, w>>: the queries holding each
+        term, its clause multiplicity and the (query, term) weight."""
         holders: dict[str, list[str]] = {}
         for q in workload:
             ws = self.sim.weights(self, q.mults, q.boost)
-            n = f", 'n', {sum(q.mults.values())}" if self.sim.coord else ""
             for t, m in q.mults.items():
                 holders.setdefault(t, []).append(
                     f"named_struct('qid', {int(q.qid)}, 'mult', {m}, "
-                    f"'need', {q.need}, 'w', {self._num(ws[t])}{n})")
+                    f"'w', {self._num(ws[t])})")
         return F.expr("map(" + ", ".join(
             f"{_sql_str(t)}, array({', '.join(h)})"
             for t, h in holders.items()) + ")")
 
-    def score(self, weight: Column) -> Column:
-        freq = F.col("freq").cast(self._sqltype)
-        return self.sim.score(self, weight, freq, F.col("norm"))
-
-    def score_col(self) -> Column:
-        return self.score(self.weight_map()[F.col("term")])
+    def score(self, weight: Column, freq: str = "freq",
+              norm: str = "norm") -> Column:
+        return self.sim.score(self, weight, F.col(freq).cast(self._sqltype),
+                              F.col(norm))
 
     def kernel_state(self):
         """(weights, cache, dtype) of the NumPy block-max kernel."""
@@ -306,11 +313,12 @@ class _Scorer:
         return F.expr(self._num(w * float(boost)))
 
 
-def _posting_rows(frame: DataFrame, *keep: str) -> DataFrame:
-    """One row per posting of ``frame``'s postings arrays: the ``keep``
-    columns plus docid, freq and norm."""
+def _posting_rows(frame: DataFrame, keep: list[str],
+                  *cols: Column) -> DataFrame:
+    """One row per posting of ``frame``: the ``keep`` columns, docid and
+    ``cols`` (Columns over the posting ``p``) in one projection."""
     return (frame.select(*keep, F.explode("postings").alias("p"))
-            .select(*keep, "p.docid", "p.freq", "p.norm"))
+            .select(*keep, "p.docid", *cols))
 
 
 def term_score_frame(index: InvertedIndex, terms: list[str],
@@ -323,9 +331,20 @@ def term_score_frame(index: InvertedIndex, terms: list[str],
     """
     scorer = _Scorer(index, terms, precision, boost)
     matched = index.postings.where(_sql_in("term", sorted(set(terms))))
-    scored = _posting_rows(matched, "seg", "term").withColumn(
-        "score", scorer.score_col())
-    return scored, scorer
+    weight = scorer.weight_map()[F.col("term")]
+    return _posting_rows(matched, ["seg", "term"], "p.freq", "p.norm",
+                         scorer.score(weight, "p.freq", "p.norm")
+                         .alias("score")), scorer
+
+
+def _per_query(workload: list[_Query], value) -> Column:
+    """``value(q)`` of the query a row belongs to: one literal when every
+    query of ``workload`` shares it, else a qid -> value map literal."""
+    values = {int(q.qid): int(value(q)) for q in workload}
+    if len(set(values.values())) == 1:
+        return F.lit(next(iter(values.values())))
+    return F.expr("map(" + ", ".join(
+        f"{qid}, {v}" for qid, v in values.items()) + ")")[F.col("qid")]
 
 
 def _scored_docs(index: InvertedIndex, workload: list[_Query],
@@ -353,31 +372,27 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
         index.postings.where(_sql_in("term", terms)).select(
             "seg", "postings",
             F.inline(scorer.fanout_map(workload)[F.col("term")])),
-        "qid", "seg", "mult", "need", "w", *(["n"] if sim.coord else []))
-    hits = hits.withColumn("tscore", scorer.score(F.col("w"))).withColumn(
-        "score", F.col("tscore") * F.col("mult").cast(st))
-    if tie_breaker is None:
-        score = F.sum("score")
-    else:
+        ["qid", "seg", "mult", "w"],
+        scorer.score(F.col("w"), "p.freq", "p.norm").alias("tscore"))
+    # a repeated clause scores once per clause: the term score times mult
+    score = F.sum(F.col("tscore") * F.col("mult").cast(st))
+    if tie_breaker is not None:
         score = F.max("tscore") + F.lit(tie_breaker) * (
-            F.sum("score") - F.max("tscore"))
-    aggs = [score.alias("score"), F.sum("mult").alias("nmatched")]
-    filtered = any(q.need > 1 for q in workload)
-    if filtered:
-        aggs.append(F.max("need").alias("need"))
+            score - F.max("tscore"))
+    nmatched = F.sum("mult")
     if sim.coord:
-        aggs.append(F.max("n").alias("n"))
-    docs = hits.groupBy(*keys).agg(*aggs)
-    if filtered:
-        docs = docs.where(F.col("nmatched") >= F.col("need"))
-    if sim.coord:
-        docs = docs.withColumn("score", F.col("score") * (
-            F.col("nmatched").cast(st) / F.col("n").cast(st)))
+        n = _per_query(workload, lambda q: sum(q.mults.values()))
+        score = score * (nmatched.cast(st) / n.cast(st))
+    docs = hits.groupBy(*keys).agg(score.alias("score"),
+                                   nmatched.alias("nmatched"))
+    if any(q.need > 1 for q in workload):
+        docs = docs.where(
+            F.col("nmatched") >= _per_query(workload, lambda q: q.need))
     ex_terms = _qterms(index, exclude_text) if exclude_text else []
     if ex_terms:
         docs = docs.join(_docs_where(index, _sql_in("term", ex_terms)),
                          ["seg", "docid"], "left_anti")
-    return docs.select(*keys, "score", "nmatched")
+    return docs
 
 
 def _docs_where(index: InvertedIndex, term_pred: Column) -> DataFrame:
@@ -500,14 +515,15 @@ def _topk(per_doc: DataFrame, index: InvertedIndex, k: int,
 def _topk_per_qid(per_doc: DataFrame, index: InvertedIndex, k: int,
                   precision: str = "float32") -> DataFrame:
     """Workload collector: (qid, rank, key, score), the top-k of every qid
-    through one ``row_number`` window."""
+    through one ``row_number`` window.  Each qid's rows are contiguous and
+    rank-ordered; qids are not globally sorted (that costs a job)."""
     score = F.col("score").cast(_stype(precision))
     w = Window.partitionBy("qid").orderBy(F.desc(score), F.asc("key"))
     return (_with_keys(per_doc, index)
-            .withColumn("rank", F.row_number().over(w))
+            .select("qid", F.row_number().over(w).alias("rank"), "key",
+                    score.alias("score"))
             .where(F.col("rank") <= k)
-            .select("qid", "rank", "key", score.alias("score"))
-            .orderBy("qid", "rank"))
+            .sortWithinPartitions("qid", "rank"))
 
 
 def search_terms(index: InvertedIndex, query_text: str, mode: str = "OR",
@@ -571,11 +587,9 @@ def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
     two terms is a term query."""
     if not index.with_positions:
         raise ValueError("index built without positions")
-    tokens = _qtokens(index, phrase_text)
-    if len(tokens) < 2:
+    terms, offsets = _phrase_terms(index, phrase_text)
+    if len(terms) < 2:
         return search_terms(index, phrase_text, "OR", k, precision=precision)
-    terms = [t.term for t in tokens]
-    offsets = [t.pos - tokens[0].pos for t in tokens]
     scored = phrase_score_frame(index, terms, precision, boost, slop,
                                 offsets=offsets)
     return _topk(scored, index, k, precision)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
 from .search import (_has_slots, _no_docs, _phrase_frame, _Scorer,
-                     _slot_positions, _term_set_docs, _topk)
+                     _slot_positions, _term_set_docs, _topk, search_terms)
 
 __all__ = ["span_near", "span_query", "span_score_frame",
            "common_terms_query", "multi_phrase"]
@@ -166,7 +166,6 @@ def span_near(index: InvertedIndex, query_text: str, slop: int = 2,
     NearSpansOrdered / NearSpansUnordered semantics via span_query."""
     terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
     if len(terms) < 2:
-        from .search import search_terms
         return search_terms(index, query_text, "OR", k, precision=precision)
     tree = ("near", [("term", t) for t in terms], slop, in_order)
     return span_query(index, tree, k, precision)

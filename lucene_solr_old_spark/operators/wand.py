@@ -244,16 +244,17 @@ def wand_search(index: InvertedIndex, query_text: str, k: int = 10,
 
 def batch_wand_search(index: InvertedIndex, queries: list[tuple],
                       k: int = 10) -> DataFrame:
-    """Whole query workload through the block-max kernel in ONE job.
+    """Whole query workload through the block-max kernel in one query.
 
     queries: [(qid, query_text, mode)] with mode in {"OR", "AND"}.
-    Returns (qid, rank, key, score).
+    Returns (qid, rank, key, score): each qid's rows contiguous and
+    rank-ordered, the qids not globally sorted.
 
     Plan: one term-pruned scan of the union of all query terms; ONE
     applyInPandas per segment runs every query's kernel against that
     segment's blocks (per-segment top-k), then a per-qid window merges
     leaves — the per-query Spark scheduling floor is amortized across the
-    workload exactly like operators/batch.py, but with MaxScore block
-    skipping instead of the relational aggregation."""
+    workload exactly like operators/batch.py (four jobs), but with MaxScore
+    block skipping instead of the relational aggregation."""
     docs = _kernel_docs(index, _parse(index, queries), k)
     return _topk_per_qid(docs, index, k)

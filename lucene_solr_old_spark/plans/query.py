@@ -268,6 +268,11 @@ def _clause_pred(index: InvertedIndex, clause) -> tuple[Column | None,
     return (S._sql_in("term", terms) if terms else None), terms
 
 
+def _is_phrase(clause, terms: list[str]) -> bool:
+    """A phrase clause of several terms: it matches as a phrase."""
+    return isinstance(clause, PhraseClause) and len(terms) > 1
+
+
 def _clause_frame(index: InvertedIndex, clause,
                   precision: str) -> DataFrame | None:
     """-> frame(seg, docid, score) | None."""
@@ -278,7 +283,7 @@ def _clause_frame(index: InvertedIndex, clause,
         # constant-score multi-term rewrite: score = boost per matching doc
         return S._docs_where(index, pred).withColumn(
             "score", F.lit(clause.boost).cast(S._stype(precision)))
-    if isinstance(clause, PhraseClause) and len(terms) > 1:
+    if _is_phrase(clause, terms):
         return S.phrase_score_frame(index, terms, precision, clause.boost,
                                     slop=clause.slop).select(
             "seg", "docid", "score")
@@ -286,9 +291,16 @@ def _clause_frame(index: InvertedIndex, clause,
 
 
 def _clause_docs(index: InvertedIndex, clause) -> DataFrame | None:
-    """The doc set of a MUST_NOT clause, or None when it matches nothing."""
-    pred, _ = _clause_pred(index, clause)
-    return None if pred is None else S._docs_where(index, pred)
+    """The doc set of a MUST_NOT clause, or None when it matches nothing:
+    a phrase excludes the documents the phrase matches at its slop, any
+    other clause the documents holding a term of its predicate."""
+    pred, terms = _clause_pred(index, clause)
+    if pred is None:
+        return None
+    if _is_phrase(clause, terms):
+        return S.phrase_score_frame(index, terms,
+                                    slop=clause.slop).select("seg", "docid")
+    return S._docs_where(index, pred)
 
 
 def bool_score_frame(index: InvertedIndex, query,

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -13,3 +14,52 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def fingerprint_indexes(spark):
+    """(pages, plain, compressed, multi-field) indexes of the plan
+    fingerprint test, built once per session."""
+    from test_plan_fingerprints import build
+
+    return build(spark)
+
+
+@pytest.fixture
+def jobs_per_collect(spark):
+    """Collect a DataFrame under a job group of its own; returns the number
+    of Spark jobs the collect ran."""
+    sc = spark.sparkContext
+
+    def count(df) -> int:
+        group = f"collect-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs per collect")
+        try:
+            df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
+def per_qid_runs():
+    """Check the workload collector's ordering contract on collected
+    (qid, rank, key, score) rows: each qid's rows are one contiguous run
+    with ranks 1..n in order and n <= k.  Returns {qid: n}."""
+    def check(rows, k: int) -> dict:
+        runs: dict = {}
+        last = None
+        for r in rows:
+            if r["qid"] != last:
+                assert r["qid"] not in runs, f"qid {r['qid']} split"
+                last = r["qid"]
+                runs[last] = 0
+            runs[last] += 1
+            assert r["rank"] == runs[last], (r["qid"], r["rank"])
+        assert all(n <= k for n in runs.values()), runs
+        return runs
+
+    return check

@@ -38,6 +38,30 @@ def test_batch_matches_individual(idx):
         assert got == exp, (qid, text, got, exp)
 
 
+# qid 7 matches nearly every page, far more than k; qid 3 matches none
+SKEWED = [(7, "aad", "OR"), (3, "zzznothing", "OR"),
+          (0, "running meetings", "OR"), (1, "caresses ponies", "AND")]
+
+
+def test_batch_collector_contract(idx, per_qid_runs):
+    """Rows come contiguous and rank-ordered per qid, at most k each; the
+    qids themselves need not be sorted."""
+    runs = per_qid_runs(batch_search(idx, SKEWED, k=5).collect(), 5)
+    assert runs[7] == 5 and 3 not in runs and set(runs) <= {7, 0, 1}
+
+
+def test_batch_jobs_per_collect(fingerprint_indexes, jobs_per_collect):
+    """The workload runs in at most 4 Spark jobs: the (qid, seg, docid)
+    aggregate's shuffle, the docmeta broadcast, the per-qid window's
+    shuffle and the result.  The parent ran 6: a global
+    ``orderBy("qid", "rank")`` added a range-sampling job and a range
+    exchange."""
+    from test_plan_fingerprints import BATCH
+
+    _df, plain, _comp, _mfi = fingerprint_indexes
+    assert jobs_per_collect(batch_search(plain, BATCH, k=10)) <= 4
+
+
 def test_batch_empty_queries(idx):
     out = batch_search(idx, [(0, "", "OR")], k=5)
     assert out.count() == 0

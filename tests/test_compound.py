@@ -61,3 +61,18 @@ def test_parsers_agree(index, classic, surround, xml):
         assert set(scores) == set(ref), name
         for key, score in scores.items():
             assert score == pytest.approx(ref[key], rel=1e-12), (name, key)
+
+
+def test_must_not_phrase_excludes_phrase_matches_only(spark):
+    """A MUST_NOT phrase drops the documents holding the phrase, not every
+    document holding one of its terms (``ReqExclScorer`` over the
+    PhraseQuery's doc set)."""
+    from lucene_solr_old_spark.plans.query import execute
+
+    df = spark.createDataFrame(
+        [("d0", "alpha beta"), ("d1", "alpha gamma"), ("d2", "beta alpha")],
+        "url STRING, text STRING")
+    idx = build_index(df, num_segments=1, analyzer="ws_lower")
+    keys = sorted(r["key"] for r in
+                  execute(idx, '+alpha -"alpha beta"').collect())
+    assert keys == ["d1", "d2"]

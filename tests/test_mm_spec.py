@@ -91,3 +91,32 @@ def test_edismax_mm_counts_built_clauses_not_words(spark):
     # all-stopword query: zero clauses built -> empty result, not a crash
     assert search_edismax(mfi, "the of and", {"body": 1.0},
                           mm="100%", k=10).count() == 0
+
+
+def test_edismax_pf_keeps_stopword_holes(spark):
+    """pf's phrase takes the analysed positions as offsets, as
+    ``search_phrase`` does: under an 'english'-analyzed field "running the
+    meetings" is run@0 meet@2, so only the document holding that phrase
+    gets the boost, not "running meetings"."""
+    from lucene_solr_old_spark.operators.multifield import (
+        build_multifield_index, search_edismax)
+
+    docs = spark.createDataFrame(
+        [("1", "running the meetings"), ("2", "running meetings"),
+         ("3", "meetings about running")],
+        "key STRING, body STRING")
+    mfi = build_multifield_index(
+        docs, key_col="key", fields={"body": "body"},
+        default_field="body", num_segments=1,
+        analyzers={"body": "english"})
+    query = "running the meetings"
+
+    def scores(**kw):
+        return {r["key"]: r["score"] for r in search_edismax(
+            mfi, query, {"body": 1.0}, k=10, **kw).collect()}
+
+    plain, boosted = scores(), scores(pf={"body": 1.0})
+    assert set(plain) == set(boosted) == {"1", "2", "3"}
+    assert boosted["1"] > plain["1"]
+    assert boosted["2"] == plain["2"]
+    assert boosted["3"] == plain["3"]

@@ -171,9 +171,9 @@ def build(spark):
 
 
 @pytest.fixture(scope="module")
-def fingerprints(spark):
+def fingerprints(fingerprint_indexes):
     return {name: plan_counts(make()) for name, make
-            in entry_points(*build(spark)).items()}
+            in entry_points(*fingerprint_indexes).items()}
 
 
 def test_plan_fingerprints_do_not_grow(fingerprints):

@@ -86,9 +86,8 @@ def _oracle(positions, slots, offsets, slop):
 
 
 def _phrase_args(idx, text):
-    tokens = S._qtokens(idx, text)
-    return ([[t.term] for t in tokens],
-            [t.pos - tokens[0].pos for t in tokens])
+    terms, offsets = S._phrase_terms(idx, text)
+    return [[t] for t in terms], offsets
 
 
 @pytest.mark.parametrize("slop", [0, 1, 2])

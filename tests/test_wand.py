@@ -167,3 +167,28 @@ def test_batch_wand_matches_individual(spark, both_indexes):
         exp = [(i + 1, r["key"], round(float(r["score"]), 5))
                for i, r in enumerate(single.collect())]
         assert sorted(by_qid.get(qid, [])) == exp, (qid, text)
+
+
+def test_batch_wand_collector_contract(both_indexes, per_qid_runs):
+    """Rows come contiguous and rank-ordered per qid, at most k each."""
+    from lucene_solr_old_spark.operators.wand import batch_wand_search
+
+    _raw, cidx = both_indexes
+    # qid 7 matches nearly every page, far more than k; qid 3 matches none
+    queries = [(7, "aad", "OR"), (3, "zzznothing", "OR"),
+               (0, "running meetings", "OR"), (1, "caresses ponies", "AND")]
+    runs = per_qid_runs(batch_wand_search(cidx, queries, k=5).collect(), 5)
+    assert runs[7] == 5 and 3 not in runs and set(runs) <= {7, 0, 1}
+
+
+def test_batch_wand_jobs_per_collect(fingerprint_indexes, jobs_per_collect):
+    """The workload runs in at most 4 Spark jobs: the term-pruned scan's
+    shuffle to the per-segment kernel, the docmeta broadcast, the per-qid
+    window's shuffle and the result.  The parent ran 6: a global
+    ``orderBy("qid", "rank")`` added a range-sampling job and a range
+    exchange."""
+    from lucene_solr_old_spark.operators.wand import batch_wand_search
+    from test_plan_fingerprints import BATCH
+
+    _df, _plain, comp, _mfi = fingerprint_indexes
+    assert jobs_per_collect(batch_wand_search(comp, BATCH, k=10)) <= 4
