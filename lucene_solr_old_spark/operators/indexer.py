@@ -41,6 +41,10 @@ class InvertedIndex:
     """postings(seg, term, df, ttf, postings: array<struct<docid,freq,norm[,positions]>>)
     docmeta(seg, docid, key, doclen, norm)
     segstats(seg, max_doc, sum_ttf)
+
+    The (seg, term, df, ttf) columns of postings are the per-segment term
+    dictionaries and segstats the per-segment field summaries; every
+    global statistic is their sum over the segments, taken at read time.
     """
 
     postings: DataFrame
@@ -51,6 +55,8 @@ class InvertedIndex:
     with_offsets: bool = False
     _stats: tuple | None = field(default=None, repr=False)
     _terms_dict: DataFrame | None = field(default=None, repr=False)
+    _term_cache: dict[str, tuple[int, int]] = field(default_factory=dict,
+                                                     repr=False)
     # the build's persisted fused-stage output, released by unpersist()
     _fused: DataFrame | None = field(default=None, repr=False)
 
@@ -66,19 +72,18 @@ class InvertedIndex:
         return self._stats
 
     def terms_dict(self) -> DataFrame:
-        """(term, df, ttf) — the materialized GLOBAL term dictionary.
+        """(term, df, ttf) — the GLOBAL term dictionary, for multi-term
+        expansions (fuzzy/wildcard/regexp/prefix/surround-trunc,
+        spellcheck, suggesters, MLT).
 
-        The reference precomputes its term dictionary at index time and
-        queries SEEK it (``codecs/BlockTreeTermsWriter.java:177-187``); this
-        is the Spark analogue: computed ONCE per index (the single
-        (seg,term)->term aggregation), persisted, and PROBED by every
-        multi-term expansion (fuzzy/wildcard/regexp/prefix/surround-trunc,
-        spellcheck, suggesters, MLT).  Without it each wildcard clause
-        re-aggregates the postings table — a full (seg,term) scan+shuffle
-        per clause at 100-TB scale.  ``save()`` writes it term-range-
-        partitioned so prefix/range probes prune parquet files via min/max
-        stats; ``load_index`` reads the stored table, so query plans over a
-        loaded index contain a plain parquet scan, no aggregate."""
+        Each segment keeps its own dictionary: the (seg, term, df, ttf)
+        rows of the postings table, as the reference writes one terms
+        dictionary per segment (``codecs/BlockTreeTermsWriter.java``).
+        This sums them over the segments once per index object and
+        persists the result, so the expansions of one reader share a
+        single (seg, term) -> term aggregation; :meth:`unpersist` releases
+        it.  Nothing global is stored, so an appended segment is visible
+        to the next reader by construction."""
         if self._terms_dict is None:
             self._terms_dict = (
                 self.postings.groupBy("term")
@@ -89,36 +94,22 @@ class InvertedIndex:
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """Global (df, ttf) per term — the TermStatistics lookup
-        (``search/TermStatistics.java``); small driver-side collect, exactly
-        like Lucene's term-dictionary seek before scoring.  Probes the
-        materialized :meth:`terms_dict` when one exists (loaded or already
-        built); otherwise a term-pruned aggregate over postings — cheaper
-        than building the whole dictionary for a handful of terms."""
+        (``search/TermStatistics.java``).  Like ``TermContext.build``,
+        which sums docFreq over the segments, it reads each segment's
+        (term, df, ttf) row from the term-pruned postings table and sums
+        them on the driver: at most |segments| x |terms| tiny rows, one
+        stage with no shuffle.  Results are cached per index object."""
         if not terms:
             return {}
-        if not hasattr(self, "_term_cache"):
-            self._term_cache: dict[str, tuple[int, int]] = {}
         missing = [t for t in set(terms) if t not in self._term_cache]
         if missing:
-            if self._terms_dict is not None:
-                rows = (self._terms_dict
-                        .where(F.col("term").isin(missing)).collect())
-                found = {r["term"]: (int(r["df"]), int(r["ttf"]))
-                         for r in rows}
-            else:
-                # per-seg rows summed driver-side: <= |segments| x |terms|
-                # tiny rows, ONE stage (no shuffle, no AQE round) — vs the
-                # groupBy form this halves the per-query "term dict seek"
-                # job's latency; exact same integer sums
-                rows = (
-                    self.postings.where(F.col("term").isin(missing))
-                    .select("term", "df", "ttf").collect()
-                )
-                found = {}
-                for r in rows:
-                    df0, ttf0 = found.get(r["term"], (0, 0))
-                    found[r["term"]] = (df0 + int(r["df"]),
-                                        ttf0 + int(r["ttf"]))
+            rows = (self.postings.where(F.col("term").isin(missing))
+                    .select("term", "df", "ttf").collect())
+            found = {}
+            for r in rows:
+                df0, ttf0 = found.get(r["term"], (0, 0))
+                found[r["term"]] = (df0 + int(r["df"]),
+                                    ttf0 + int(r["ttf"]))
             for t in missing:
                 self._term_cache[t] = found.get(t, (0, 0))
         return {t: self._term_cache[t] for t in set(terms)}
@@ -130,41 +121,13 @@ class InvertedIndex:
         return self
 
     def unpersist(self) -> "InvertedIndex":
-        """Release the build's fused-stage cache and whatever
-        :meth:`persist` cached."""
-        for df in (self._fused, self.postings, self.docmeta, self.segstats):
+        """Release the build's fused-stage cache, the :meth:`terms_dict`
+        aggregate and whatever :meth:`persist` cached."""
+        for df in (self._fused, self._terms_dict, self.postings,
+                   self.docmeta, self.segstats):
             if df is not None:
                 df.unpersist()
         return self
-
-    def _write_terms_dict(self, path: str, mode: str) -> None:
-        """Build-time term dictionary (BlockTreeTermsWriter analogue):
-        few term-SORTED files so a prefix/range probe skips row groups
-        whose min/max don't straddle it.  Derived from the parquet JUST
-        WRITTEN, not the in-memory lineage: a column-pruned scan of the
-        stored postings reads only term/df/ttf (a few MB), where the
-        lineage re-reads the whole multi-GB analyzed cache — or, when
-        the build is unpersisted, re-runs the entire fused analysis
-        again.  Always equivalent by construction (stored postings ==
-        the rows terms_dict() would aggregate), incl. delete-masked
-        indexes.  Mirrors the reference, which writes its term dict
-        from the flushed segment data
-        (codecs/BlockTreeTermsWriter.java:177-187).  On append
-        (incremental segments) the stored dict goes stale — the append
-        paths (save(mode="append"), streaming flush_index_batch) DELETE
-        it, so readers fall back to the lazily-aggregated dictionary."""
-        spark = self.postings.sparkSession
-        stored_postings = spark.read.parquet(os.path.join(path, "postings"))
-        (stored_postings.groupBy("term")
-         .agg(F.sum("df").cast("long").alias("df"),
-              F.sum("ttf").cast("long").alias("ttf"))
-         .coalesce(4)
-         .sortWithinPartitions("term")
-         .write.mode(mode).parquet(os.path.join(path, "terms_dict")))
-        # the live object now probes the stored sorted dict too, exactly
-        # like an index opened by load_index
-        self._terms_dict = spark.read.parquet(
-            os.path.join(path, "terms_dict"))
 
     def save(self, path: str, mode: str = "overwrite",
              layout: str = "segdir") -> None:
@@ -190,14 +153,20 @@ class InvertedIndex:
         partition-dir and plain files together): packed indexes are for
         write-once bulk ingest (``route="none"``), segdir for indexes
         that take incremental appends.
+
+        Three tables are written: postings, docmeta and segstats.  There
+        is no separate term dictionary: every (seg, term) postings row
+        carries that segment's df and ttf, and readers sum them over the
+        segments (:meth:`term_stats`, :meth:`terms_dict`).  An append
+        therefore only adds its own segments; nothing global goes stale.
         """
         if layout not in ("segdir", "packed"):
             raise ValueError("layout must be 'segdir' or 'packed'")
         if layout == "packed" and mode != "overwrite":
             # packed is write-once bulk ingest: an append would lay plain
             # coalesced files next to existing ones (duplicating postings
-            # rows) and skip the terms_dict refresh — mirror the
-            # _require_segdir_layout guard on the streaming side
+            # rows) — mirror the _require_segdir_layout guard on the
+            # streaming side
             raise ValueError(
                 "layout='packed' is write-once (bulk ingest); use "
                 "mode='overwrite', or the default segdir layout for "
@@ -210,10 +179,9 @@ class InvertedIndex:
             # ONLY exchange in the zero-shuffle route="none" fused build.
             # coalesce merges existing partitions map-side — the sink
             # stays embarrassingly parallel and data moves zero times.
-            # Term-addressed probes go through terms_dict (below), which
-            # IS term-sorted; packed postings trade the segdir layout's
-            # per-seg file pruning for a parallel sink, which is the
-            # right trade for write-once bulk ingest.
+            # Packed postings trade the segdir layout's per-seg file
+            # pruning for a parallel sink, which is the right trade for
+            # write-once bulk ingest.
             # 2x slots per core: halves each writer's buffer footprint
             # and lets the scheduler rebalance around straggler
             # partitions and GC pauses; file count still tracks write
@@ -228,11 +196,10 @@ class InvertedIndex:
             # still-computing cached partition recompute it).
             (self.postings.coalesce(par)
              .write.mode(mode).parquet(os.path.join(path, "postings")))
-            # Wave 2: the remaining tables are independent warm-cache /
-            # stored-parquet scans — overlap their jobs on driver
-            # threads so none of them serializes behind another's
-            # stragglers (the same overlap a multi-sink cluster job
-            # gets for free).
+            # Wave 2: the remaining tables are independent warm-cache
+            # scans — overlap their jobs on driver threads so neither
+            # serializes behind the other's stragglers (the same overlap
+            # a multi-sink cluster job gets for free).
             def _w_docmeta():
                 (self.docmeta.coalesce(par)
                  .write.mode(mode).parquet(os.path.join(path, "docmeta")))
@@ -241,13 +208,8 @@ class InvertedIndex:
                 self.segstats.write.mode(mode).parquet(
                     os.path.join(path, "segstats"))
 
-            def _w_terms():
-                if mode != "overwrite":
-                    return
-                self._write_terms_dict(path, mode)
-
             _run_concurrently(self.postings.sparkSession,
-                              _w_docmeta, _w_segstats, _w_terms)
+                              _w_docmeta, _w_segstats)
         else:
             self.postings.write.mode(mode).partitionBy("seg").parquet(
                 os.path.join(path, "postings"))
@@ -263,15 +225,6 @@ class InvertedIndex:
             # this directory would otherwise hide these segments' stats.
             self.segstats.write.mode(mode).partitionBy("seg").parquet(
                 os.path.join(path, "segstats"))
-            if mode == "overwrite":
-                self._write_terms_dict(path, mode)
-            else:
-                # an append invalidates the stored dictionary (its rows no
-                # longer cover the new segments' terms); drop it so
-                # load_index falls back to the lazily-aggregated dict
-                # instead of silently losing new terms from expansions
-                _drop_stored_terms_dict(self.postings.sparkSession, path)
-                self._terms_dict = None
         _write_meta(self.postings.sparkSession, path, self._meta(layout))
 
     def _meta(self, layout: str = "segdir") -> dict:
@@ -321,14 +274,6 @@ def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
         stream.close()
 
 
-def _drop_stored_terms_dict(spark: SparkSession, path: str) -> None:
-    """Remove a stored terms_dict that an append has made stale, through
-    the Hadoop FileSystem of ``path`` (any scheme Spark writes to)."""
-    fs, td = _hadoop_path(spark, os.path.join(path, "terms_dict"))
-    if fs.exists(td) and not fs.delete(td, True):
-        raise OSError(f"could not delete stale terms_dict at {td}")
-
-
 def _stored_schemas(meta: dict) -> dict[str, str] | None:
     """DDL schema of each stored table, derived from the meta flags and the
     build's own column types, so a read infers nothing (schema inference
@@ -364,7 +309,6 @@ def _stored_schemas(meta: dict) -> dict[str, str] | None:
         out = {t: f"{seg}, {c}" for t, c in cols.items()}
     else:
         out = {t: f"{c}, {seg}" for t, c in cols.items()}
-    out["terms_dict"] = "term STRING, df BIGINT, ttf BIGINT"
     return out
 
 
@@ -382,7 +326,7 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
             reader = reader.schema(schemas[table])
         return reader.parquet(os.path.join(path, table))
 
-    idx = InvertedIndex(
+    return InvertedIndex(
         postings=read("postings"),
         docmeta=read("docmeta"),
         segstats=read("segstats"),
@@ -390,12 +334,6 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
         analyzer=meta["analyzer"],
         with_offsets=meta.get("with_offsets", False),
     )
-    fs, td = _hadoop_path(spark, os.path.join(path, "terms_dict"))
-    if fs.exists(td):
-        # stored term dictionary: expansions become parquet scans with
-        # min/max file pruning — no per-query postings aggregation.
-        idx._terms_dict = read("terms_dict")
-    return idx
 
 
 def build_index(
@@ -555,14 +493,10 @@ def compress_index(index: InvertedIndex) -> InvertedIndex:
             })
 
     compressed = arrays.mapInPandas(encode_rows, schema=out_schema)
-    out = InvertedIndex(compressed, index.docmeta, index.segstats,
-                        index.with_positions, index.analyzer)
     # (seg,term,df,ttf) and docmeta/segstats are unchanged by encoding —
-    # carry the dictionary AND the already-collected stat caches, so the
-    # first query on the compressed index doesn't re-run the collection
-    # stats / term-stats seek jobs the source index already paid for
-    out._terms_dict = index._terms_dict
-    out._stats = index._stats
-    if hasattr(index, "_term_cache"):
-        out._term_cache = index._term_cache
-    return out
+    # carry the already-collected stat caches, so the first query on the
+    # compressed index doesn't re-run the collection stats / term-stats
+    # seek jobs the source index already paid for
+    return InvertedIndex(compressed, index.docmeta, index.segstats,
+                         index.with_positions, index.analyzer,
+                         _stats=index._stats, _term_cache=index._term_cache)

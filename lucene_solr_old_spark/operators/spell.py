@@ -42,8 +42,8 @@ __all__ = ["spellcheck", "suggest_prefix", "term_range",
 
 
 def _global_terms(index: InvertedIndex) -> DataFrame:
-    # probe the materialized build-time dictionary (InvertedIndex.terms_dict;
-    # BlockTreeTermsWriter analogue) — never re-aggregate postings per query
+    # the per-segment dictionaries summed once per index and persisted
+    # (InvertedIndex.terms_dict) — never re-aggregate postings per query
     return index.terms_dict()
 
 

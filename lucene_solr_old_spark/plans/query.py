@@ -218,18 +218,15 @@ def _fuzzy_terms(index: InvertedIndex, clause: FuzzyClause) -> list[str]:
     defaults maxExpansions=50; ``search/TopTermsRewrite.java`` keeps the
     highest-boost = closest-distance candidates): rank dictionary candidates
     by (edit distance asc, term asc) and keep at most ``max_expansions``.
-    The ranked cap is a TakeOrderedAndProject over the MATERIALIZED term
-    dictionary (``InvertedIndex.terms_dict`` — the BlockTreeTermsWriter
-    seek analogue; stored with the segments, parquet-pruned) — ≤50 rows
-    reach the driver regardless of dictionary size, and no postings
-    aggregation appears in the query plan."""
+    The ranked cap is a TakeOrderedAndProject over the persisted term
+    dictionary (``InvertedIndex.terms_dict``: the per-segment dictionaries
+    summed once per index) — ≤50 rows reach the driver regardless of
+    dictionary size."""
     from ..operators.spell import edit_candidate_pred
 
     cands = index.terms_dict().select("term")
     if clause.prefix_length > 0:
         # FuzzyQuery prefixLength: expansion shares the first p chars
-        # (also the stored dict's file-level min/max prune — it is written
-        # term-sorted)
         cands = cands.where(
             F.col("term").startswith(clause.text[:clause.prefix_length]))
     # length-band + substring-anchor pruning (a safe superset — see

@@ -354,9 +354,9 @@ class _Budget:
 
 def _expand(index: InvertedIndex, node, budget: _Budget) -> list[str]:
     """Dictionary expansion of a prefix/trunc node — a pushed-down probe of
-    the MATERIALIZED term dictionary (``InvertedIndex.terms_dict``), capped
+    the persisted term dictionary (``InvertedIndex.terms_dict``), capped
     at the basic-query budget (TakeOrdered over terms; never a doc scan,
-    never a postings aggregation)."""
+    and the dictionary's aggregate is shared by every expansion)."""
     if node[0] == "prefix":
         pred = F.col("term").startswith(node[1].lower())
     else:

@@ -20,7 +20,9 @@ log = logging.getLogger(__name__)
 def get_spark(app_name: str = "lucene-solr-old-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8))))
@@ -32,8 +34,7 @@ def get_spark(app_name: str = "lucene-solr-old-spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # v1 commitJob renames every task file SEQUENTIALLY on the
         # driver — a serial term proportional to output-file count and
@@ -59,8 +60,7 @@ def get_spark(app_name: str = "lucene-solr-old-spark",
         # throughput/latency-sensitive services; on a real cluster the
         # same flags go on the executor JVMs.
         .config("spark.driver.extraJavaOptions",
-                "-XX:+UseParallelGC -XX:+AlwaysPreTouch -Xms"
-                + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+                "-XX:+UseParallelGC -XX:+AlwaysPreTouch -Xms" + heap)
         .config("spark.executor.extraJavaOptions",
                 "-XX:+UseParallelGC -XX:+AlwaysPreTouch")
         # zstd parquet: ~20% fewer output bytes than snappy at equal or
@@ -87,6 +87,13 @@ def get_spark(app_name: str = "lucene-solr-old-spark",
     ship_package(spark)
     warm_session(spark)
     return spark
+
+
+def _default_heap() -> str:
+    """A quarter of physical memory, capped at 8 GB: the pre-touched heap
+    then leaves room for a second default session on the same host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 4, 8 << 30) >> 20}m"
 
 
 def warm_session(spark: SparkSession) -> None:

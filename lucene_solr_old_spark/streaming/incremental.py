@@ -15,8 +15,10 @@ The reference's NRT surface (SURVEY.md §2.9) re-expressed:
 Each micro-batch builds ``segments_per_batch`` segments labeled
 ``batch_id * segments_per_batch + local`` — globally unique, so the
 accumulated index is just the union of all flushed segments, and query
-results are IDENTICAL to a one-shot batch build of the same rows (global
-stats are computed from segstats at query time).
+results are IDENTICAL to a one-shot batch build of the same rows: global
+statistics are sums over the segments taken at read time (collection
+stats from segstats, term df/ttf from each segment's postings rows), so
+a flush adds its own segments and leaves nothing global to refresh.
 
 Cost model of one flush -> reopen -> first query cycle:
 
@@ -31,7 +33,9 @@ Cost model of one flush -> reopen -> first query cycle:
     fixes the stored tables' schemas, so nothing is inferred from
     Parquet footers, and the file listing runs on the driver;
   * first query: one job for collection stats (per-segment rows summed
-    on the driver) plus the query's own term-stats seek and collect.
+    on the driver), one term-stats seek (a term-pruned scan of the
+    postings rows, summed on the driver the same way), then the query's
+    collect.
 """
 
 from __future__ import annotations
@@ -40,8 +44,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.indexer import (InvertedIndex, _drop_stored_terms_dict,
-                                 _read_meta, _run_concurrently, _write_meta,
+from ..operators.indexer import (InvertedIndex, _read_meta,
+                                 _run_concurrently, _write_meta,
                                  build_index, load_index)
 
 __all__ = ["start_incremental_indexer", "open_nrt_reader",
@@ -116,11 +120,6 @@ def flush_index_batch(batch_df: DataFrame, batch_id: int, index_path: str,
         idx.unpersist()
     if meta is None:
         _write_meta(spark, index_path, idx._meta())
-    # a flushed batch makes any stored terms_dict stale (it predates the
-    # new segments' terms); drop it so readers opened via load_index
-    # re-derive the dictionary lazily instead of silently losing the new
-    # terms from multi-term expansions and term_stats
-    _drop_stored_terms_dict(spark, index_path)
 
 
 def start_incremental_indexer(

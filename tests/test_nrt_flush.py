@@ -16,7 +16,7 @@ from lucene_solr_old_spark.sources.pages import PAGES_SCHEMA, gen_pages
 from lucene_solr_old_spark.streaming.incremental import (flush_index_batch,
                                                          open_nrt_reader)
 
-TABLES = ("postings", "docmeta", "segstats", "terms_dict")
+TABLES = ("postings", "docmeta", "segstats")
 # the most jobs one flush may launch: the doc-routing shuffle, the cache
 # fill, the emptiness take, the postings and docmeta writes, and the
 # segstats aggregate's two
@@ -82,12 +82,12 @@ def _rows(df):
 
 
 def _assert_reads_match(spark, p, idx):
-    """Every table of ``idx`` has the schema and rows of an inferred read."""
+    """Every table of ``idx`` has the schema and rows of an inferred read,
+    and those tables are all the index stores."""
+    assert {d for d in os.listdir(p)
+            if os.path.isdir(os.path.join(p, d))} == set(TABLES)
     for t in TABLES:
-        got = idx._terms_dict if t == "terms_dict" else getattr(idx, t)
-        if not os.path.isdir(os.path.join(p, t)):
-            assert got is None, t
-            continue
+        got = getattr(idx, t)
         want = spark.read.parquet(os.path.join(p, t))
         assert got.schema == want.schema, t
         assert _rows(got) == _rows(want), t
@@ -141,7 +141,6 @@ def test_empty_batch_is_a_no_op(spark, tmp_path):
     flush_index_batch(_docs(spark, []), 5, p, text_col="text",
                       analyzer="ws_lower")
     assert sorted(os.listdir(os.path.join(p, "postings"))) == before
-    assert os.path.isdir(os.path.join(p, "terms_dict"))
     fresh = str(tmp_path / "fresh")
     flush_index_batch(_docs(spark, []), 0, fresh)
     assert not os.path.exists(fresh)

@@ -1,8 +1,9 @@
-"""Appends into a saved index: a stored terms_dict must not survive them
-(it would silently drop newly indexed terms from every multi-term
-expansion and from term_stats), whatever form the index path takes; the
-saved segments' stats must stay visible next to the flushed ones; and
-packed layout is write-once."""
+"""Appends into a saved index.  Term statistics come only from each
+segment's postings rows, so every writer that adds segments makes their
+terms visible to the next reader, in term_stats and in every dictionary
+expansion, without writing or deleting any global dictionary.  The saved
+segments' stats stay visible next to the flushed ones, and the packed
+layout is write-once."""
 
 import os
 
@@ -11,6 +12,9 @@ from pyspark.sql import functions as F
 
 from lucene_solr_old_spark.operators.indexer import build_index, load_index
 
+OLD = [("a", "alpha beta"), ("b", "beta gamma")]
+NEW = [("c", "delta epsilon")]
+
 
 def _idx(spark, rows):
     df = spark.createDataFrame(rows, "k STRING, t STRING")
@@ -18,72 +22,68 @@ def _idx(spark, rows):
                        analyzer="ws_lower")
 
 
-def test_save_append_drops_stored_terms_dict(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    _idx(spark, [("a", "alpha beta"), ("b", "beta gamma")]).save(path)
-    assert os.path.isdir(os.path.join(path, "terms_dict"))
-
-    idx2 = _idx(spark, [("c", "delta epsilon")])
-    idx2.postings = idx2.postings.withColumn(
-        "seg", (F.col("seg") + 2).cast("int"))
-    idx2.docmeta = idx2.docmeta.withColumn(
-        "seg", (F.col("seg") + 2).cast("int"))
-    idx2.segstats = idx2.segstats.withColumn(
-        "seg", (F.col("seg") + 2).cast("int"))
+def _save_append(spark, path):
+    _idx(spark, OLD).save(path)
+    idx2 = _idx(spark, NEW)
+    seg = (F.col("seg") + 2).cast("int")
+    idx2.postings = idx2.postings.withColumn("seg", seg)
+    idx2.docmeta = idx2.docmeta.withColumn("seg", seg)
+    idx2.segstats = idx2.segstats.withColumn("seg", seg)
     idx2.save(path, mode="append")
-
-    # the stale stored dict is gone, and a reloaded index sees the NEW terms
-    assert not os.path.isdir(os.path.join(path, "terms_dict"))
-    reloaded = load_index(spark, path)
-    stats = reloaded.term_stats(["delta", "beta"])
-    assert stats["delta"][0] == 1
-    assert stats["beta"][0] == 2
-    terms = {r["term"] for r in reloaded.terms_dict().collect()}
-    assert {"alpha", "beta", "gamma", "delta", "epsilon"} <= terms
+    return load_index(spark, path)
 
 
-def test_flush_index_batch_drops_stored_terms_dict(spark, tmp_path):
+def _flush(spark, path, target=None):
     from lucene_solr_old_spark.streaming.incremental import flush_index_batch
 
-    path = str(tmp_path / "idx")
-    _idx(spark, [("a", "alpha beta")]).save(path)
-    assert os.path.isdir(os.path.join(path, "terms_dict"))
+    _idx(spark, OLD).save(path)
+    batch = spark.createDataFrame(NEW, "k STRING, t STRING")
+    flush_index_batch(batch, batch_id=7, index_path=target or path,
+                      key_col="k", text_col="t", analyzer="ws_lower")
+    return load_index(spark, path)
 
-    batch = spark.createDataFrame([("c", "delta epsilon")],
-                                  "k STRING, t STRING")
-    flush_index_batch(batch, batch_id=7, index_path=path, key_col="k",
-                      text_col="t", analyzer="ws_lower")
-    assert not os.path.isdir(os.path.join(path, "terms_dict"))
-    reloaded = load_index(spark, path)
-    assert reloaded.term_stats(["delta"])["delta"][0] == 1
+
+def _flush_uri(spark, path):
+    return _flush(spark, path, target="file://" + path)
+
+
+def _checkpointed(spark, path):
+    from lucene_solr_old_spark.sources.segments import (checkpointed_build,
+                                                        load_checkpointed)
+
+    docs = spark.createDataFrame(OLD + NEW, "k STRING, t STRING")
+    checkpointed_build(spark, docs, path, n_shards=2, segments_per_shard=1,
+                       key_col="k", text_col="t", analyzer="ws_lower")
+    for s in range(2):
+        assert not os.path.exists(
+            os.path.join(path, "shards", str(s), "terms_dict"))
+    return load_checkpointed(spark, path, 2)
+
+
+WRITERS = [_save_append, _flush, _flush_uri, _checkpointed]
+
+
+@pytest.mark.parametrize("write", WRITERS,
+                         ids=[w.__name__.lstrip("_") for w in WRITERS])
+def test_new_terms_visible_after_append(spark, tmp_path, write):
+    from lucene_solr_old_spark.operators.spell import spellcheck
+    from lucene_solr_old_spark.plans.query import execute
+
+    path = str(tmp_path / "idx")
+    reader = write(spark, path)
+    assert not os.path.exists(os.path.join(path, "terms_dict"))
+
+    assert reader.term_stats(["delta", "beta", "epsilon"]) == {
+        "delta": (1, 1), "beta": (2, 2), "epsilon": (1, 1)}
+    assert {r["key"] for r in execute(reader, "delt*").collect()} == {"c"}
+    rows = spellcheck(reader, "epsilom", max_edits=1, k=3).collect()
+    assert [r["term"] for r in rows] == ["epsilon"]
 
 
 def test_flush_index_batch_keeps_saved_segstats(spark, tmp_path):
     """segstats of a saved index and of a later flush share one table:
     global maxDoc / sumTotalTermFreq (idf, avgdl) cover both."""
-    from lucene_solr_old_spark.streaming.incremental import flush_index_batch
-
-    path = str(tmp_path / "idx")
-    _idx(spark, [("a", "alpha beta"), ("b", "beta gamma")]).save(path)
-    batch = spark.createDataFrame([("c", "delta epsilon")],
-                                  "k STRING, t STRING")
-    flush_index_batch(batch, batch_id=7, index_path=path, key_col="k",
-                      text_col="t", analyzer="ws_lower")
-    assert load_index(spark, path).collection_stats() == (3, 6)
-
-
-def test_flush_index_batch_drops_terms_dict_at_uri(spark, tmp_path):
-    """The stale dictionary is removed through the Hadoop FileSystem, so a
-    ``file://`` (or any scheme's) index path is handled like a plain one."""
-    from lucene_solr_old_spark.streaming.incremental import flush_index_batch
-
-    path = str(tmp_path / "idx")
-    _idx(spark, [("a", "alpha beta")]).save(path)
-    batch = spark.createDataFrame([("z", "zebra")], "k STRING, t STRING")
-    flush_index_batch(batch, batch_id=7, index_path="file://" + path,
-                      key_col="k", text_col="t", analyzer="ws_lower")
-    assert not os.path.isdir(os.path.join(path, "terms_dict"))
-    assert load_index(spark, path).term_stats(["zebra"])["zebra"] == (1, 1)
+    assert _flush(spark, str(tmp_path / "idx")).collection_stats() == (3, 6)
 
 
 def test_packed_layout_rejects_append(spark, tmp_path):
