@@ -22,11 +22,13 @@ we inline them — same data, join-free plan).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import warnings
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -34,6 +36,13 @@ from .analysis import (FUSED_SCHEMA, FUSED_SCHEMA_OFFSETS,
                        make_fused_postings_partition)
 
 __all__ = ["InvertedIndex", "build_index", "load_index"]
+
+log = logging.getLogger(__name__)
+
+# The most (seg, term) dictionary rows term_stats keeps resident on the
+# driver: about 100 MB of Arrow buffers and NumPy arrays at the limit.  A
+# larger dictionary is seeked term-pruned on every call.
+_RESIDENT_TERM_ROWS = 1 << 20
 
 
 @dataclass
@@ -45,6 +54,9 @@ class InvertedIndex:
     The (seg, term, df, ttf) columns of postings are the per-segment term
     dictionaries and segstats the per-segment field summaries; every
     global statistic is their sum over the segments, taken at read time.
+    Each index object reads them once and keeps the sums on the driver:
+    the collection stats, and the term dictionary as sorted NumPy arrays
+    when it has at most ``_RESIDENT_TERM_ROWS`` rows (:meth:`term_stats`).
     """
 
     postings: DataFrame
@@ -55,8 +67,9 @@ class InvertedIndex:
     with_offsets: bool = False
     _stats: tuple | None = field(default=None, repr=False)
     _terms_dict: DataFrame | None = field(default=None, repr=False)
-    _term_cache: dict[str, tuple[int, int]] = field(default_factory=dict,
-                                                     repr=False)
+    # the resident dictionary: (sorted terms, df, ttf) summed over the
+    # segments; () when it is over _RESIDENT_TERM_ROWS, None until read
+    _term_arrays: tuple | None = field(default=None, repr=False)
     # the build's persisted fused-stage output, released by unpersist()
     _fused: DataFrame | None = field(default=None, repr=False)
 
@@ -93,26 +106,58 @@ class InvertedIndex:
         return self._terms_dict
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """Global (df, ttf) per term — the TermStatistics lookup
-        (``search/TermStatistics.java``).  Like ``TermContext.build``,
-        which sums docFreq over the segments, it reads each segment's
-        (term, df, ttf) row from the term-pruned postings table and sums
-        them on the driver: at most |segments| x |terms| tiny rows, one
-        stage with no shuffle.  Results are cached per index object."""
+        """Global (df, ttf) per term, (0, 0) for a term the index lacks —
+        the TermStatistics lookup (``search/TermStatistics.java``).  Like
+        ``TermContext.build``, which sums docFreq over the segments, it
+        sums each segment's (term, df, ttf) postings row.
+
+        The first call reads those three columns of every postings row
+        once, in one column-pruned Arrow job, and keeps their per-term
+        sums resident as sorted NumPy arrays; every later seek is a
+        ``searchsorted`` on the driver with no Spark job — the reference
+        answers the same lookup from its RAM-resident terms index
+        (``codecs/BlockTreeTermsReader.java``).  A dictionary of more
+        than ``_RESIDENT_TERM_ROWS`` rows is not kept (logged once per
+        index object): each call then reads just the query's terms, one
+        term-pruned job summed on the driver."""
+        terms = sorted(set(terms))
         if not terms:
             return {}
-        missing = [t for t in set(terms) if t not in self._term_cache]
-        if missing:
-            rows = (self.postings.where(F.col("term").isin(missing))
-                    .select("term", "df", "ttf").collect())
-            found = {}
-            for r in rows:
-                df0, ttf0 = found.get(r["term"], (0, 0))
-                found[r["term"]] = (df0 + int(r["df"]),
-                                    ttf0 + int(r["ttf"]))
-            for t in missing:
-                self._term_cache[t] = found.get(t, (0, 0))
-        return {t: self._term_cache[t] for t in set(terms)}
+        if self._term_arrays is None:
+            self._term_arrays = self._read_term_arrays()
+        if not self._term_arrays:
+            return self._seek_terms(terms)
+        keys, df, ttf = self._term_arrays
+        out = {}
+        for t, i in zip(terms, np.searchsorted(keys, terms).tolist()):
+            hit = i < len(keys) and keys[i] == t
+            out[t] = (int(df[i]), int(ttf[i])) if hit else (0, 0)
+        return out
+
+    def _read_term_arrays(self) -> tuple:
+        """(sorted terms, df, ttf) of the whole dictionary, or () when it
+        has more than ``_RESIDENT_TERM_ROWS`` rows."""
+        rows = (self.postings.select("term", "df", "ttf")
+                .limit(_RESIDENT_TERM_ROWS + 1).toArrow())
+        if rows.num_rows > _RESIDENT_TERM_ROWS:
+            log.info("term dictionary over %d rows: term_stats seeks the "
+                     "postings table per call", _RESIDENT_TERM_ROWS)
+            return ()
+        sums = (rows.group_by("term")
+                .aggregate([("df", "sum"), ("ttf", "sum")]).sort_by("term"))
+        # UTF-8 byte order is code point order: searchsorted's str order
+        return (sums.column("term").to_numpy(zero_copy_only=False),
+                sums.column("df_sum").to_numpy(),
+                sums.column("ttf_sum").to_numpy())
+
+    def _seek_terms(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """term_stats of ``terms`` from one term-pruned postings scan."""
+        found = dict.fromkeys(terms, (0, 0))
+        for r in (self.postings.where(F.col("term").isin(terms))
+                  .select("term", "df", "ttf").collect()):
+            df0, ttf0 = found[r["term"]]
+            found[r["term"]] = (df0 + int(r["df"]), ttf0 + int(r["ttf"]))
+        return found
 
     def persist(self) -> "InvertedIndex":
         self.postings = self.postings.persist()
@@ -494,9 +539,8 @@ def compress_index(index: InvertedIndex) -> InvertedIndex:
 
     compressed = arrays.mapInPandas(encode_rows, schema=out_schema)
     # (seg,term,df,ttf) and docmeta/segstats are unchanged by encoding —
-    # carry the already-collected stat caches, so the first query on the
-    # compressed index doesn't re-run the collection stats / term-stats
-    # seek jobs the source index already paid for
+    # carry the collection stats and the resident dictionary, so the
+    # compressed index doesn't re-read what the source index already read
     return InvertedIndex(compressed, index.docmeta, index.segstats,
                          index.with_positions, index.analyzer,
-                         _stats=index._stats, _term_cache=index._term_cache)
+                         _stats=index._stats, _term_arrays=index._term_arrays)

@@ -28,7 +28,7 @@ weight steps.  A single query is a workload of one:
     for the relational plan, NumPy arrays for the kernel.
   * score    -> :func:`_scored_docs` is the relational core: one
     term-pruned postings scan, fanned out to the queries holding each term
-    through one map literal carrying each (query, term) weight, scored by
+    through array literals carrying each (query, term) weight, scored by
     the similarity (BM25: ``weightValue * freq / (freq + cache[norm])``,
     ``BM25Similarity.java:233-238``), and aggregated per (qid, seg,
     docid).  The aggregate is the plain sum — coord == 1 for BM25
@@ -83,6 +83,7 @@ tie-broken by doc key.  ``precision="float64"`` is the oracle-precision twin
 
 from __future__ import annotations
 
+import json
 import math
 from functools import lru_cache, reduce
 from typing import NamedTuple
@@ -122,11 +123,18 @@ def _stype(precision: str) -> str:
     return "double" if precision == "float64" else "float"
 
 
-# Literal tables (weights, the norm cache, the query fan-out) are written
-# as Spark SQL text and parsed in ONE call: every ``F.lit`` is a py4j round
-# trip (about 1 ms each on a 4-core host, so a 256-entry per-element
-# array literal cost ~170 ms of driver time per query).  ``repr`` of a float round-trips exactly
-# through Java's double parser, so the values are the same as lit()'s.
+# A literal table is built in a few py4j calls, never one ``F.lit`` per
+# element (a round trip costs about 1 ms on a 4-core host; pyspark also
+# converts a NumPy array literal element by element, so only the cached
+# norm table is one).  The tables that grow with the workload, the query
+# fan-out and the per-query maps, are one JSON string each that
+# ``from_json`` types and the optimiser folds into a literal: analysing
+# the same table as SQL text, with a struct and a cast per element, cost
+# up to 51-57 ms per 16-query batch.  The weights are rounded to the
+# score type in NumPy first, as the SQL cast rounds.  The small per-query
+# tables (term weights, IN lists, phrase slots) stay Spark SQL text parsed
+# in one call: ``repr`` of a float round-trips exactly through Java's
+# double parser.
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -162,6 +170,18 @@ def idf64(df: int, max_doc: int) -> float:
 def cache64(avg_dl: float, k1: float = 1.2, b: float = 0.75) -> list[float]:
     # operation order mirrored in the oracle SQL: k1*((1-b) + (b*lq)/avgdl)
     return [k1 * ((1.0 - b) + (b * lq) / avg_dl) for lq in LQ64]
+
+
+def _json_lit(value, ddl: str) -> Column:
+    """``value`` as a literal of Spark type ``ddl``: one JSON string that
+    ``from_json`` types and the optimiser folds into a literal."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
+
+
+def _int_type(values) -> str:
+    """INT, or BIGINT when a value needs it (the type a SQL integer
+    literal takes)."""
+    return "int" if all(-2**31 <= v < 2**31 for v in values) else "bigint"
 
 
 @lru_cache(maxsize=16)
@@ -240,6 +260,7 @@ class _Scorer:
         self.stats = Bm25Stats(max_doc, sum_ttf)
         self.tstats = index.term_stats(terms)
         self._sqltype = _stype(precision)
+        self._dtype = np.float64 if precision == "float64" else np.float32
         if precision == "float64":
             self.bm25_cache = cache64(sum_ttf / max_doc if max_doc else 1.0)
         else:
@@ -274,16 +295,16 @@ class _Scorer:
     def fanout_map(self, workload: list[_Query]) -> Column:
         """term -> array<struct<qid, mult, w>>: the queries holding each
         term, its clause multiplicity and the (query, term) weight."""
-        holders: dict[str, list[str]] = {}
+        holders: dict[str, list[dict]] = {}
         for q in workload:
             ws = self.sim.weights(self, q.mults, q.boost)
             for t, m in q.mults.items():
                 holders.setdefault(t, []).append(
-                    f"named_struct('qid', {int(q.qid)}, 'mult', {m}, "
-                    f"'w', {self._num(ws[t])})")
-        return F.expr("map(" + ", ".join(
-            f"{_sql_str(t)}, array({', '.join(h)})"
-            for t, h in holders.items()) + ")")
+                    {"qid": int(q.qid), "mult": m,
+                     "w": float(self._dtype(ws[t]))})
+        qid = _int_type(int(q.qid) for q in workload)
+        return _json_lit(holders, f"map<string, array<struct<qid: {qid}, "
+                                  f"mult: int, w: {self._sqltype}>>>")
 
     def score(self, weight: Column, freq: str = "freq",
               norm: str = "norm") -> Column:
@@ -292,7 +313,7 @@ class _Scorer:
 
     def kernel_state(self):
         """(weights, cache, dtype) of the NumPy block-max kernel."""
-        dtype = np.float64 if self.precision == "float64" else np.float32
+        dtype = self._dtype
         return ({t: dtype(w) for t, w in self._weights.items()},
                 np.asarray(self.bm25_cache, dtype=dtype), dtype)
 
@@ -343,8 +364,10 @@ def _per_query(workload: list[_Query], value) -> Column:
     values = {int(q.qid): int(value(q)) for q in workload}
     if len(set(values.values())) == 1:
         return F.lit(next(iter(values.values())))
-    return F.expr("map(" + ", ".join(
-        f"{qid}, {v}" for qid, v in values.items()) + ")")[F.col("qid")]
+    entries = [{"k": qid, "v": v} for qid, v in values.items()]
+    return F.map_from_entries(_json_lit(
+        entries, f"array<struct<k: {_int_type(values.keys())}, v: int>>"))[
+            F.col("qid")]
 
 
 def _scored_docs(index: InvertedIndex, workload: list[_Query],

@@ -194,9 +194,17 @@ def package_zip(out_dir: str | None = None) -> str:
 
 @functools.cache
 def _shipped_zip() -> str:
-    """The package zip :func:`ship_package` adds, written once per
-    process: every later call reuses its path."""
-    return package_zip()
+    """The package zip :func:`ship_package` adds, written once per process
+    into a temporary directory of its own (removed at exit): a session of
+    another process, from another checkout say, cannot rewrite a zip this
+    one shipped, which would fail its tasks' fetch."""
+    import atexit
+    import shutil
+    import tempfile
+
+    out_dir = tempfile.mkdtemp(prefix="lucene_solr_old_spark-")
+    atexit.register(shutil.rmtree, out_dir, True)
+    return package_zip(out_dir)
 
 
 def ship_package(spark: SparkSession) -> None:

@@ -33,9 +33,9 @@ Cost model of one flush -> reopen -> first query cycle:
     fixes the stored tables' schemas, so nothing is inferred from
     Parquet footers, and the file listing runs on the driver;
   * first query: one job for collection stats (per-segment rows summed
-    on the driver), one term-stats seek (a term-pruned scan of the
-    postings rows, summed on the driver the same way), then the query's
-    collect.
+    on the driver), one job reading the reader's whole term dictionary
+    (the postings rows' term, df and ttf, summed on the driver and kept
+    resident, so later queries seek none), then the query's collect.
 """
 
 from __future__ import annotations

@@ -25,23 +25,40 @@ def fingerprint_indexes(spark):
     return build(spark)
 
 
+def _jobs_in_group(sc, fn) -> int:
+    """Run ``fn()`` under a job group of its own; returns the number of
+    Spark jobs it ran."""
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs per call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture
 def jobs_per_collect(spark):
     """Collect a DataFrame under a job group of its own; returns the number
     of Spark jobs the collect ran."""
-    sc = spark.sparkContext
+    return lambda df: _jobs_in_group(spark.sparkContext, df.collect)
 
-    def count(df) -> int:
-        group = f"collect-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "jobs per collect")
-        try:
-            df.collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    return count
+@pytest.fixture
+def jobs_per_call(spark):
+    """Call ``make()`` and collect the DataFrame it returns, if it returns
+    one, under one job group; returns the number of Spark jobs from the
+    call through the collect (term-stats seeks included)."""
+    from pyspark.sql import DataFrame
+
+    def run(make):
+        out = make()
+        if isinstance(out, DataFrame):
+            out.collect()
+
+    return lambda make: _jobs_in_group(spark.sparkContext,
+                                       lambda: run(make))
 
 
 @pytest.fixture

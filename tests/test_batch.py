@@ -38,6 +38,22 @@ def test_batch_matches_individual(idx):
         assert got == exp, (qid, text, got, exp)
 
 
+def test_batch_qids_beyond_int(idx):
+    """A qid past the INT range keeps its value: the fan-out and the
+    per-query literals type it BIGINT, as a SQL integer literal would."""
+    big = 2**31 + 5
+    texts = [("running meetings", "OR"), ("caresses ponies", "AND")]
+
+    def rows(qids):
+        out = batch_search(idx, [(q, t, m) for q, (t, m) in zip(qids, texts)],
+                           k=5).collect()
+        return {(r["qid"], r["rank"], r["key"], r["score"]) for r in out}
+
+    small = rows([0, 1])
+    assert small and rows([big, 1]) == {
+        (big if q == 0 else q, *rest) for q, *rest in small}
+
+
 # qid 7 matches nearly every page, far more than k; qid 3 matches none
 SKEWED = [(7, "aad", "OR"), (3, "zzznothing", "OR"),
           (0, "running meetings", "OR"), (1, "caresses ponies", "AND")]

@@ -35,7 +35,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_DOCS = int(os.environ.get("SCALING_DOCS", "1200000"))
 REPS = int(os.environ.get("SCALING_REPS", "2"))
@@ -88,7 +90,7 @@ def run_full(cores: int, zip_path: str, inp: str, out: str,
         "--segments", "64", "--shuffle", str(cores * 4),
         "--route", ROUTE, "--layout", LAYOUT,
     ] + (["--nosave"] if nosave else [])
-    res = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo",
+    res = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT,
                          timeout=3600)
     for line in res.stdout.splitlines()[::-1]:
         if line.strip().startswith("{"):
@@ -122,8 +124,9 @@ def run_analysis_only(cores: int, inp: str) -> float:
 def main() -> None:
     from lucene_solr_old_spark.session import package_zip
 
-    os.makedirs("/root/repo/dist", exist_ok=True)
-    zip_path = package_zip("/root/repo/dist")
+    dist = os.path.join(ROOT, "dist")
+    os.makedirs(dist, exist_ok=True)
+    zip_path = package_zip(dist)
     work = tempfile.mkdtemp(prefix="scaling-")
     corpus = os.environ.get("SCALING_CORPUS", "")
     if corpus and os.path.isdir(corpus):
@@ -204,7 +207,7 @@ def main() -> None:
                  "scale with threads; analysis stage (dominant compute) "
                  "scales at the measured hardware ceiling",
     }
-    with open("/root/repo/BENCH_scaling.json", "w") as f:
+    with open(os.path.join(ROOT, "BENCH_scaling.json"), "w") as f:
         json.dump(result, f, indent=1)
     print(json.dumps(result))
     shutil.rmtree(work, ignore_errors=True)
