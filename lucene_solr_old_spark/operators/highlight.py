@@ -21,7 +21,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.tokenizer import get_analyzer
-from .search import _posting_rows, _with_keys
+from .search import _with_keys
 
 __all__ = ["highlight_first", "highlight_analyzed", "postings_highlight",
            "fvh_highlight"]
@@ -93,9 +93,10 @@ def postings_highlight(index, docs: DataFrame, query_text: str,
         raise ValueError("postings_highlight requires with_offsets=True")
     qterms = sorted({t.term for t in
                      get_analyzer(index.analyzer)(query_text)})
-    occ = _posting_rows(index.postings.where(F.col("term").isin(qterms)),
-                        ["seg"], F.element_at("p.starts", 1).alias("s0"),
-                        F.element_at("p.ends", 1).alias("e0"))
+    occ = (index.postings.where(F.col("term").isin(qterms))
+           .select("seg", F.explode("postings").alias("p"))
+           .select("seg", "p.docid", F.element_at("p.starts", 1).alias("s0"),
+                   F.element_at("p.ends", 1).alias("e0")))
     first = occ.groupBy("seg", "docid").agg(
         F.min(F.struct("s0", "e0")).alias("m"))
     with_keys = (_with_keys(first, index)

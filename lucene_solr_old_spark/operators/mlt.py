@@ -77,4 +77,4 @@ def more_like_this(index: InvertedIndex, key: str, k: int = 10,
                                min_word_len, max_word_len)
              .select("term").collect()]
     return S._topk(S._term_set_docs(index, terms, precision), index, k,
-                   precision, where=F.col("key") != key)
+                   precision, where=f"key != {S._sql_str(key)}")

@@ -21,9 +21,9 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from .indexer import InvertedIndex, build_index
-from .search import (_compound, _has_slots, _no_docs, _phrase_terms,
-                     _posting_rows, _Scorer, _slot_fanout, _sql_in,
-                     _term_set_docs, _topk, _with_keys, phrase_score_frame)
+from .search import (_compound, _has_slots, _no_docs, _phrase_terms, _plan,
+                     _Scorer, _sql_in, _term_set_docs, _topk, _with_keys,
+                     phrase_score_frame)
 from ..functions.tokenizer import get_analyzer
 
 __all__ = ["MultiFieldIndex", "build_multifield_index", "search_fielded",
@@ -266,6 +266,15 @@ def masked_span_query(mfi: MultiFieldIndex, tree, k: int = 10,
         fld, t = name.split(_MASK_SEP, 1)
         by_field.setdefault(fld, []).append(t)
 
+    # norms of the masked field; term stats of each leaf's real field
+    masked_idx = mfi.field(mfi.default_field)
+    scorer = _Scorer(masked_idx, [], precision)
+    tstats = {fld: mfi.field(fld).term_stats(terms)
+              for fld, terms in by_field.items()}
+    weight = scorer.summed_weight([
+        tstats[fld].get(t, (0, 0))[0] for fld, t in
+        (n.split(_MASK_SEP, 1) for n in sorted(set(_tree_terms(tagged))))])
+
     frames = []
     for fld, terms in sorted(by_field.items()):
         idx = mfi.field(fld)
@@ -274,35 +283,31 @@ def masked_span_query(mfi: MultiFieldIndex, tree, k: int = 10,
         # this field's terms fan out to their own slots only
         slots = [[n.split(_MASK_SEP, 1)[1]]
                  if n.startswith(fld + _MASK_SEP) else [] for n in names]
-        rows = _posting_rows(
-            idx.postings.where(_sql_in("term", terms)).select(
-                "seg", "postings",
-                F.explode(_slot_fanout(slots)[F.col("term")]).alias("slot")),
-            ["seg", "slot"], F.col("p.positions").alias("pos"))
-        frames.append(_with_keys(rows, idx).select("key", "slot", "pos"))
+        rows = _plan(f"""
+            SELECT seg, slot, w, p.docid AS docid, p.positions AS pos
+            FROM (SELECT seg, slot, w, explode(postings) AS p
+                  FROM (SELECT seg, postings,
+                               inline({scorer.slot_fanout(slots, weight)}[term])
+                        FROM {{postings}} WHERE {_sql_in('term', terms)}))""",
+                     postings=idx.postings)
+        frames.append(_with_keys(rows, idx).select("key", "slot", "pos", "w"))
     rows = frames[0]
     for f in frames[1:]:
         rows = rows.unionByName(f)
 
     per_key = rows.groupBy("key").agg(
-        F.collect_list(F.struct("slot", "pos")).alias("hits"))
+        F.collect_list(F.struct("slot", "pos")).alias("hits"),
+        F.first("w").alias("w"))
     required = _required_terms(tagged)
     if required:
-        per_key = per_key.where(_has_slots(names.index(n) for n in required))
-
-    # norms of the masked field; term stats of each leaf's real field
-    masked_idx = mfi.field(mfi.default_field)
-    scorer = _Scorer(masked_idx, [], precision)
-    tstats = {fld: mfi.field(fld).term_stats(terms)
-              for fld, terms in by_field.items()}
-    dfs = [tstats[fld].get(t, (0, 0))[0] for fld, t in
-           (n.split(_MASK_SEP, 1) for n in sorted(set(_tree_terms(tagged))))]
+        per_key = per_key.where(
+            F.expr(_has_slots(names.index(n) for n in required)))
     return (per_key
             .join(masked_idx.docmeta.select("key", "norm"), "key")
             .withColumn("freq", _span_tree_udf(
                 tagged, names, f32=(precision != "float64"))(F.col("hits")))
             .where(F.col("freq") > 0)
-            .select("key", scorer.score(scorer.summed_weight(dfs))
+            .select("key", F.expr(scorer.score("w"))
                     .cast(scorer._sqltype).alias("score"))
             .orderBy(F.desc("score"), F.asc("key"))
             .limit(k))

@@ -1,4 +1,4 @@
-"""Query execution: the reference's scorer algebra as DataFrame plans.
+"""Query execution: the reference's scorer algebra as Spark SQL plans.
 
 Every term-query entry point — ``search_terms`` (``search_or``/
 ``search_and``), ``search_dismax``, ``search_after``, ``count_query``,
@@ -19,13 +19,13 @@ weight steps.  A single query is a workload of one:
   * similarity -> the ``Similarity`` the scorer plugs in (``search/
     similarities/``): ``weights`` gives each (query, term) weight on the
     driver from df/ttf, the collection stats, the query's clauses and its
-    boost (the ``SimWeight``); ``score`` is the per-posting Column of
-    (weight, freq, norm byte) (the ``SimScorer``); ``coord`` scales a
+    boost (the ``SimWeight``); ``score`` is the per-posting SQL expression
+    of (weight, freq, norm byte) (the ``SimScorer``); ``coord`` scales a
     document by matched / total clauses.  :class:`_BM25` is the default;
     tfidf.py holds the others.
   * weight   -> :class:`_Scorer` is the only place the collection stats,
-    term stats, weights and norm tables are computed: Column expressions
-    for the relational plan, NumPy arrays for the kernel.
+    term stats, weights and norm tables are computed: SQL expressions and
+    literals for the relational plan, NumPy arrays for the kernel.
   * score    -> :func:`_scored_docs` is the relational core: one
     term-pruned postings scan, fanned out to the queries holding each term
     through array literals carrying each (query, term) weight, scored by
@@ -85,11 +85,13 @@ from __future__ import annotations
 
 import json
 import math
-from functools import lru_cache, reduce
+import uuid
+import weakref
+from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.bm25 import Bm25Stats
 from ..functions.smallfloat import byte315_to_float
@@ -123,21 +125,35 @@ def _stype(precision: str) -> str:
     return "double" if precision == "float64" else "float"
 
 
-# A literal table is built in a few py4j calls, never one ``F.lit`` per
-# element (a round trip costs about 1 ms on a 4-core host; pyspark also
-# converts a NumPy array literal element by element, so only the cached
-# norm table is one).  The tables that grow with the workload, the query
-# fan-out and the per-query maps, are one JSON string each that
-# ``from_json`` types and the optimiser folds into a literal: analysing
-# the same table as SQL text, with a struct and a cast per element, cost
-# up to 51-57 ms per 16-query batch.  The weights are rounded to the
-# score type in NumPy first, as the SQL cast rounds.  The small per-query
-# tables (term weights, IN lists, phrase slots) stay Spark SQL text parsed
-# in one call: ``repr`` of a float round-trips exactly through Java's
-# double parser.
+# A plan is ONE Spark SQL statement, built with one ``spark.sql`` call that
+# takes its child frames (the index tables, or a frame the statement
+# scores or collects) as DataFrame arguments: a py4j round trip costs
+# about 0.2 ms, and chaining ``F.col``/``select``/lambda calls cost a
+# query 149-833 of them (72-180 ms of driver time) where a statement costs
+# a handful.  Only a Python UDF or ``applyInPandas`` step is applied
+# through the DataFrame API, between two statements.  Literals are SQL
+# text: strings through :func:`_sql_str`, numbers through
+# :func:`_sql_num` (``repr`` of a float round-trips exactly through Java's
+# double parser), and the tables that grow with the workload or are read
+# per posting (the query fan-out, the per-query maps, the norm table) as
+# one JSON string each that ``from_json`` types and the optimiser folds
+# into a literal: as SQL ``array``/``map`` text, with a struct and a cast
+# per element, the same table cost up to 51-57 ms of analysis per
+# 16-query batch.  Table values are rounded to the score type in NumPy
+# first, as the SQL cast rounds.  A map or array literal is referenced,
+# not written, by the generated code, so a weight carried in one keeps
+# the code of a plan shape the same from one query to the next.
+
+_SQL_ESCAPES = str.maketrans({
+    "\\": "\\\\", "'": "\\'",
+    # the statement formatter reads braces and the parser substitutes
+    # ``${...}`` variables even inside a literal: write them as escapes
+    "{": "\\u007B", "}": "\\u007D", "$": "\\u0024"})
+
 
 def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.translate(_SQL_ESCAPES) + "'"
 
 
 def _sql_num(x: float, stype: str) -> str:
@@ -146,8 +162,75 @@ def _sql_num(x: float, stype: str) -> str:
     return f"CAST({text} AS {stype})"
 
 
-def _sql_in(col: str, values: list[str]) -> Column:
-    return F.expr(f"{col} IN ({', '.join(_sql_str(v) for v in values)})")
+def _sql_in(col: str, values: list[str]) -> str:
+    """``col IN (...)`` over a literal list: Parquet receives it as a
+    pushed ``In`` filter."""
+    return f"{col} IN ({', '.join(_sql_str(v) for v in values)})"
+
+
+def _json_sql(value, ddl: str) -> str:
+    """``value`` as a literal of Spark type ``ddl``: one JSON string that
+    ``from_json`` types and the optimiser folds into a literal."""
+    return f"from_json({_sql_str(json.dumps(value))}, '{ddl}')"
+
+
+# frame -> the temporary view it is registered as; (session, view) pairs
+# of the frames collected since, dropped by the next statement
+_VIEWS: "weakref.WeakKeyDictionary[DataFrame, str]" = \
+    weakref.WeakKeyDictionary()
+_DEAD_VIEWS: list[tuple] = []
+
+
+def _view(frame: DataFrame) -> str:
+    """The temporary view of ``frame``, registered on its first statement:
+    registering a view runs a Spark command (about 5 ms), so the index
+    tables, read by every query, pay it once per index object."""
+    name = _VIEWS.get(frame)
+    if name is None:
+        name = f"_fulltext_{uuid.uuid4().hex}"
+        frame.createOrReplaceTempView(name)
+        _VIEWS[frame] = name
+        # a finalizer may run inside a py4j call: it only records the view
+        weakref.finalize(frame, _DEAD_VIEWS.append,
+                         (frame.sparkSession, name))
+    return name
+
+
+def _plan(sql: str, **frames: DataFrame) -> DataFrame:
+    """The frame of the Spark SQL statement ``sql``, where ``{name}``
+    stands for ``frames[name]`` (literals escape their braces)."""
+    spark = next(iter(frames.values())).sparkSession
+    while True:
+        try:
+            session, name = _DEAD_VIEWS.pop()
+        except IndexError:
+            break
+        if session is spark:
+            spark.catalog.dropTempView(name)
+    return spark.sql(sql.format(**{k: _view(f) for k, f in frames.items()}))
+
+
+class _Sql(NamedTuple):
+    """A plan not built yet: the SQL text of a query over ``frames``.  A
+    statement reading it inlines the text, so a plan and its collector are
+    built as one statement."""
+    text: str
+    frames: dict
+
+
+def _build(plan: "_Sql | DataFrame") -> DataFrame:
+    return plan if isinstance(plan, DataFrame) else _plan(plan.text,
+                                                          **plan.frames)
+
+
+def _source(plan: "_Sql | DataFrame", frames: dict) -> str:
+    """``plan`` as a FROM item: a subquery of its text, or a frame
+    argument; adds the frames it reads to ``frames``."""
+    if isinstance(plan, DataFrame):
+        frames["per_doc"] = plan
+        return "{per_doc}"
+    frames.update(plan.frames)
+    return f"({plan.text})"
 
 
 # --- float64 "oracle precision" variant ------------------------------------
@@ -172,24 +255,10 @@ def cache64(avg_dl: float, k1: float = 1.2, b: float = 0.75) -> list[float]:
     return [k1 * ((1.0 - b) + (b * lq) / avg_dl) for lq in LQ64]
 
 
-def _json_lit(value, ddl: str) -> Column:
-    """``value`` as a literal of Spark type ``ddl``: one JSON string that
-    ``from_json`` types and the optimiser folds into a literal."""
-    return F.from_json(F.lit(json.dumps(value)), ddl)
-
-
 def _int_type(values) -> str:
     """INT, or BIGINT when a value needs it (the type a SQL integer
     literal takes)."""
     return "int" if all(-2**31 <= v < 2**31 for v in values) else "bigint"
-
-
-@lru_cache(maxsize=16)
-def _norm_array(table: tuple[float, ...], stype: str) -> Column:
-    """A norm table as ONE array literal (NumPy rounds as the SQL cast
-    does), built once: 256 casts cost ~40 ms of analysis in every plan."""
-    return F.lit(np.asarray(table, np.float64 if stype == "double"
-                            else np.float32))
 
 
 class _Query(NamedTuple):
@@ -220,11 +289,18 @@ def _parse(index: InvertedIndex, queries: list[tuple],
     return out
 
 
+def _no_docs_sql(index: InvertedIndex, precision: str) -> _Sql:
+    """The scored docs of a workload that matches nothing (its frames name
+    the postings only for the session a statement of it alone runs in)."""
+    return _Sql(f"""SELECT CAST(NULL AS INT) AS qid, CAST(NULL AS INT) AS seg,
+        CAST(NULL AS INT) AS docid, CAST(NULL AS {_stype(precision)}) AS score,
+        CAST(NULL AS BIGINT) AS nmatched WHERE false""",
+                {"postings": index.postings})
+
+
 def _no_docs(index: InvertedIndex, precision: str) -> DataFrame:
     """The scored-docs frame of a workload that matches nothing."""
-    return index.docmeta.sparkSession.createDataFrame(
-        [], f"qid INT, seg INT, docid INT, score {_stype(precision)}, "
-            "nmatched BIGINT")
+    return _build(_no_docs_sql(index, precision))
 
 
 class _BM25:
@@ -241,14 +317,14 @@ class _BM25:
         return {t: float(sc.stats.weight_value(sc.df(t), boost))
                 for t in mults}
 
-    def score(self, sc: "_Scorer", w: Column, freq: Column,
-              norm: Column) -> Column:
-        return (w * freq) / (freq + sc.per_norm(sc.bm25_cache, norm))
+    def score(self, sc: "_Scorer", w: str, freq: str, norm: str) -> str:
+        return f"(({w} * {freq}) / ({freq} + " \
+               f"{sc.per_norm(sc.bm25_cache, norm)}))"
 
 
 class _Scorer:
     """Scoring state of a query or workload under one similarity, in
-    either precision: Column expressions for the relational plan, NumPy
+    either precision: SQL expressions for the relational plan, NumPy
     arrays for the kernel."""
 
     def __init__(self, index: InvertedIndex, terms: list[str],
@@ -274,25 +350,18 @@ class _Scorer:
     def ttf(self, term: str) -> int:
         return self.tstats.get(term, (0, 0))[1]
 
-    def _num(self, x: float) -> str:
+    def lit(self, x: float) -> str:
+        """``x`` as an SQL literal of the score type."""
         return _sql_num(x, self._sqltype)
 
-    def lit(self, x: float) -> Column:
-        return F.expr(self._num(x))
-
-    def per_norm(self, table: list[float], norm: Column) -> Column:
+    def per_norm(self, table: list[float], norm: str) -> str:
         """``table[norm]``: a 256-entry per-norm-byte lookup."""
         # element_at is 1-based; norm byte is 0..255
-        return F.element_at(_norm_array(tuple(table), self._sqltype),
-                            norm + 1)
+        values = [float(v) for v in np.asarray(table, self._dtype)]
+        return (f"element_at({_json_sql(values, f'array<{self._sqltype}>')}"
+                f", {norm} + 1)")
 
-    def weight_map(self) -> Column:
-        """term -> weightValue."""
-        return F.expr("map(" + ", ".join(
-            f"{_sql_str(t)}, {self._num(w)}"
-            for t, w in self._weights.items()) + ")")
-
-    def fanout_map(self, workload: list[_Query]) -> Column:
+    def fanout_map(self, workload: list[_Query]) -> str:
         """term -> array<struct<qid, mult, w>>: the queries holding each
         term, its clause multiplicity and the (query, term) weight."""
         holders: dict[str, list[dict]] = {}
@@ -303,13 +372,24 @@ class _Scorer:
                     {"qid": int(q.qid), "mult": m,
                      "w": float(self._dtype(ws[t]))})
         qid = _int_type(int(q.qid) for q in workload)
-        return _json_lit(holders, f"map<string, array<struct<qid: {qid}, "
+        return _json_sql(holders, f"map<string, array<struct<qid: {qid}, "
                                   f"mult: int, w: {self._sqltype}>>>")
 
-    def score(self, weight: Column, freq: str = "freq",
-              norm: str = "norm") -> Column:
-        return self.sim.score(self, weight, F.col(freq).cast(self._sqltype),
-                              F.col(norm))
+    def slot_fanout(self, slots: list[list[str]], weight: float) -> str:
+        """term -> array<struct<slot, w>>: the slots holding each term,
+        each carrying the query's ``weight``."""
+        holders: dict[str, list[dict]] = {}
+        w = float(self._dtype(weight))
+        for i, slot in enumerate(slots):
+            for t in sorted(set(slot)):
+                holders.setdefault(t, []).append({"slot": i, "w": w})
+        return _json_sql(holders, "map<string, array<struct<slot: int, "
+                                  f"w: {self._sqltype}>>>")
+
+    def score(self, weight: str, freq: str = "freq",
+              norm: str = "norm") -> str:
+        return self.sim.score(self, weight,
+                              f"CAST({freq} AS {self._sqltype})", norm)
 
     def kernel_state(self):
         """(weights, cache, dtype) of the NumPy block-max kernel."""
@@ -317,10 +397,13 @@ class _Scorer:
         return ({t: dtype(w) for t, w in self._weights.items()},
                 np.asarray(self.bm25_cache, dtype=dtype), dtype)
 
-    def summed_weight(self, dfs: list[int], boost: float = 1.0) -> Column:
+    def summed_weight(self, dfs: list[int], boost: float = 1.0) -> float:
         """The weightValue of a positional query: idf summed over ``dfs`` in
         order, times (k1+1) and ``boost``, accumulated in this precision
-        (``BM25Similarity.idfExplain(TermStatistics[])``)."""
+        (``BM25Similarity.idfExplain(TermStatistics[])``).  A plan carries
+        it in its slot fan-out (:meth:`slot_fanout`): as a float literal,
+        Spark would write it into the generated code, and compile new code
+        for every phrase with new terms."""
         if self.precision == "float64":
             s = 0.0
             for df in dfs:
@@ -331,15 +414,7 @@ class _Scorer:
             for df in dfs:
                 s32 = s32 + self.stats.idf(df)
             w = float(s32 * (self.stats.k1 + np.float32(1.0)))
-        return F.expr(self._num(w * float(boost)))
-
-
-def _posting_rows(frame: DataFrame, keep: list[str],
-                  *cols: Column) -> DataFrame:
-    """One row per posting of ``frame``: the ``keep`` columns, docid and
-    ``cols`` (Columns over the posting ``p``) in one projection."""
-    return (frame.select(*keep, F.explode("postings").alias("p"))
-            .select(*keep, "p.docid", *cols))
+        return w * float(boost)
 
 
 def term_score_frame(index: InvertedIndex, terms: list[str],
@@ -351,31 +426,35 @@ def term_score_frame(index: InvertedIndex, terms: list[str],
     (``BM25Similarity.java:233-238``), weightValue per-term from global df.
     """
     scorer = _Scorer(index, terms, precision, boost)
-    matched = index.postings.where(_sql_in("term", sorted(set(terms))))
-    weight = scorer.weight_map()[F.col("term")]
-    return _posting_rows(matched, ["seg", "term"], "p.freq", "p.norm",
-                         scorer.score(weight, "p.freq", "p.norm")
-                         .alias("score")), scorer
+    weights = "map(" + ", ".join(f"{_sql_str(t)}, {scorer.lit(w)}" for t, w
+                                 in scorer._weights.items()) + ")"
+    return _plan(f"""
+        SELECT seg, term, p.docid, p.freq, p.norm,
+               {scorer.score(f'{weights}[term]', 'p.freq', 'p.norm')}
+                 AS score
+        FROM (SELECT seg, term, explode(postings) AS p FROM {{postings}}
+              WHERE {_sql_in('term', sorted(set(terms)))})""",
+                 postings=index.postings), scorer
 
 
-def _per_query(workload: list[_Query], value) -> Column:
+def _per_query(workload: list[_Query], value) -> str:
     """``value(q)`` of the query a row belongs to: one literal when every
     query of ``workload`` shares it, else a qid -> value map literal."""
     values = {int(q.qid): int(value(q)) for q in workload}
     if len(set(values.values())) == 1:
-        return F.lit(next(iter(values.values())))
+        return str(next(iter(values.values())))
     entries = [{"k": qid, "v": v} for qid, v in values.items()]
-    return F.map_from_entries(_json_lit(
-        entries, f"array<struct<k: {_int_type(values.keys())}, v: int>>"))[
-            F.col("qid")]
+    return "map_from_entries(" + _json_sql(
+        entries, f"array<struct<k: {_int_type(values.keys())}, v: int>>"
+    ) + ")[qid]"
 
 
 def _scored_docs(index: InvertedIndex, workload: list[_Query],
                  precision: str = "float32", *, similarity=None,
                  tie_breaker: float | None = None,
                  exclude_text: str | None = None,
-                 keys: tuple[str, ...] = ("qid", "seg", "docid")
-                 ) -> DataFrame:
+                 keys: tuple[str, ...] = ("qid", "seg", "docid"),
+                 per_qid: bool = False) -> _Sql:
     """The relational core: (qid, seg, docid, score, nmatched) for every
     document a query of ``workload`` matches, ``nmatched`` its matched
     clauses (``keys=("seg", "docid")`` drops qid for a workload of one).
@@ -383,39 +462,50 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
     by default; times matched / total clauses for a coord similarity),
     or ``max + tie_breaker * (sum - max)`` when a tie-breaker is given
     (DisjunctionMaxQuery); documents matching ``exclude_text`` are
-    dropped (MUST_NOT)."""
+    dropped (MUST_NOT).
+
+    ``per_qid`` hash-partitions the scored postings by qid before the
+    aggregate, for a caller that collects per qid: the aggregate and the
+    per-qid window then share that one shuffle.  Its skew bound is one
+    query's postings rows in one task, where the (qid, seg, docid)
+    shuffle put only one query's matched documents in a task."""
     if not workload:
-        return _no_docs(index, precision)
+        return _no_docs_sql(index, precision)
     terms = sorted({t for q in workload for t in q.mults})
     scorer = _Scorer(index, terms, precision, similarity=similarity)
-    sim, st = scorer.sim, scorer._sqltype
+    st = scorer._sqltype
     # fan each term's postings out to the queries holding it BEFORE the
-    # postings explode: one map lookup per (seg, term) row
-    hits = _posting_rows(
-        index.postings.where(_sql_in("term", terms)).select(
-            "seg", "postings",
-            F.inline(scorer.fanout_map(workload)[F.col("term")])),
-        ["qid", "seg", "mult", "w"],
-        scorer.score(F.col("w"), "p.freq", "p.norm").alias("tscore"))
-    # a repeated clause scores once per clause: the term score times mult
-    score = F.sum(F.col("tscore") * F.col("mult").cast(st))
+    # postings explode: one map lookup per (seg, term) row; a repeated
+    # clause scores once per clause: the term score times mult
+    score = f"sum(tscore * CAST(mult AS {st}))"
     if tie_breaker is not None:
-        score = F.max("tscore") + F.lit(tie_breaker) * (
-            score - F.max("tscore"))
-    nmatched = F.sum("mult")
-    if sim.coord:
+        score = (f"(max(tscore) + ({float(tie_breaker)!r}D * "
+                 f"({score} - max(tscore))))")
+    if scorer.sim.coord:
         n = _per_query(workload, lambda q: sum(q.mults.values()))
-        score = score * (nmatched.cast(st) / n.cast(st))
-    docs = hits.groupBy(*keys).agg(score.alias("score"),
-                                   nmatched.alias("nmatched"))
+        score = f"({score} * (CAST(sum(mult) AS {st}) / CAST({n} AS {st})))"
+    sql = f"""
+        SELECT {', '.join(keys)}, {score} AS score, sum(mult) AS nmatched
+        FROM (SELECT qid, seg, mult, w, p.docid AS docid,
+                     {scorer.score('w', 'p.freq', 'p.norm')} AS tscore
+              FROM (SELECT qid, seg, mult, w, explode(postings) AS p
+                    FROM (SELECT seg, postings,
+                                 inline({scorer.fanout_map(workload)}[term])
+                          FROM {{postings}}
+                          WHERE {_sql_in('term', terms)}))
+              {'DISTRIBUTE BY qid' if per_qid else ''})
+        GROUP BY {', '.join(keys)}"""
     if any(q.need > 1 for q in workload):
-        docs = docs.where(
-            F.col("nmatched") >= _per_query(workload, lambda q: q.need))
+        sql = f"""SELECT * FROM ({sql})
+            WHERE nmatched >= {_per_query(workload, lambda q: q.need)}"""
     ex_terms = _qterms(index, exclude_text) if exclude_text else []
     if ex_terms:
-        docs = docs.join(_docs_where(index, _sql_in("term", ex_terms)),
-                         ["seg", "docid"], "left_anti")
-    return docs
+        sql = f"""SELECT * FROM ({sql}) LEFT ANTI JOIN (
+            SELECT DISTINCT seg, docid
+            FROM (SELECT seg, explode(postings.docid) AS docid
+                  FROM {{postings}} WHERE {_sql_in('term', ex_terms)}))
+            USING (seg, docid)"""
+    return _Sql(sql, {"postings": index.postings})
 
 
 def _docs_where(index: InvertedIndex, term_pred: Column) -> DataFrame:
@@ -490,7 +580,7 @@ def _compound(clauses, precision: str = "float32", *,
 
 def _single(index: InvertedIndex, query_text: str, mode: str = "OR",
             precision: str = "float32", min_should_match: int = 0,
-            **kw) -> DataFrame:
+            **kw) -> _Sql:
     """Scored docs of one query: a workload of one."""
     return _scored_docs(
         index, _parse(index, [(0, query_text, mode)], min_should_match),
@@ -506,47 +596,61 @@ def _term_set_docs(index: InvertedIndex, terms: list[str],
     parsers and operators, as a workload of one.  It is grouped by
     document alone, so a parser's union of clause frames keeps their
     (seg, docid) partitioning."""
-    if not terms:
-        return _no_docs(index, precision).select("seg", "docid", "score")
     workload = [_Query(0, dict.fromkeys(sorted(set(terms)), 1),
-                       max(1, min_should_match), boost)]
-    return _scored_docs(index, workload, precision,
-                        keys=("seg", "docid")).drop("nmatched")
+                       max(1, min_should_match), boost)] if terms else []
+    docs = _scored_docs(index, workload, precision, keys=("seg", "docid"))
+    return _plan(f"SELECT seg, docid, score FROM ({docs.text})",
+                 **docs.frames)
 
 
-def _with_keys(per_doc: DataFrame, index: InvertedIndex) -> DataFrame:
-    # late materialization of the doc key: the PURPOSE_GET_FIELDS second
-    # round of SURVEY.md §3.3
-    return per_doc.join(index.docmeta.select("seg", "docid", "key"),
-                        ["seg", "docid"])
+def _keyed(per_doc: "_Sql | DataFrame", index: InvertedIndex,
+           frames: dict) -> str:
+    """``per_doc`` joined to its documents' keys, as a FROM clause: the
+    late materialization of the doc key, the PURPOSE_GET_FIELDS second
+    round of SURVEY.md §3.3."""
+    frames["docmeta"] = index.docmeta
+    return (f"{_source(per_doc, frames)} JOIN (SELECT seg, docid, key "
+            "FROM {docmeta}) USING (seg, docid)")
 
 
-def _topk(per_doc: DataFrame, index: InvertedIndex, k: int,
-          precision: str = "float32",
-          where: Column | None = None) -> DataFrame:
+def _with_keys(per_doc: "_Sql | DataFrame",
+               index: InvertedIndex) -> DataFrame:
+    """``per_doc`` joined to its documents' keys: (seg, docid, ..., key)."""
+    frames: dict = {}
+    return _plan(f"SELECT * FROM {_keyed(per_doc, index, frames)}",
+                 **frames)
+
+
+def _topk(per_doc: "_Sql | DataFrame", index: InvertedIndex, k: int,
+          precision: str = "float32", where: str | None = None) -> DataFrame:
     """TakeOrderedAndProject collector: top-k (key, score), optionally only
-    over the hits satisfying ``where`` (a predicate on key and score)."""
-    with_keys = _with_keys(per_doc, index)
-    score = F.col("score").cast(_stype(precision))
-    if where is not None:
-        with_keys = with_keys.where(where)
-    return (with_keys.select("key", score.alias("score"))
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+    over the hits satisfying ``where`` (an SQL predicate on key and
+    score)."""
+    frames: dict = {}
+    return _plan(f"""
+        SELECT key, score
+        FROM (SELECT key, CAST(score AS {_stype(precision)}) AS score
+              FROM {_keyed(per_doc, index, frames)}
+              {f'WHERE {where}' if where else ''})
+        ORDER BY score DESC, key ASC LIMIT {int(k)}""", **frames)
 
 
-def _topk_per_qid(per_doc: DataFrame, index: InvertedIndex, k: int,
+def _topk_per_qid(per_doc: "_Sql | DataFrame", index: InvertedIndex, k: int,
                   precision: str = "float32") -> DataFrame:
     """Workload collector: (qid, rank, key, score), the top-k of every qid
     through one ``row_number`` window.  Each qid's rows are contiguous and
     rank-ordered; qids are not globally sorted (that costs a job)."""
-    score = F.col("score").cast(_stype(precision))
-    w = Window.partitionBy("qid").orderBy(F.desc(score), F.asc("key"))
-    return (_with_keys(per_doc, index)
-            .select("qid", F.row_number().over(w).alias("rank"), "key",
-                    score.alias("score"))
-            .where(F.col("rank") <= k)
-            .sortWithinPartitions("qid", "rank"))
+    score = f"CAST(score AS {_stype(precision)})"
+    frames: dict = {}
+    return _plan(f"""
+        SELECT * FROM (
+            SELECT qid, row_number() OVER (
+                       PARTITION BY qid ORDER BY {score} DESC, key ASC)
+                     AS rank,
+                   key, {score} AS score
+            FROM {_keyed(per_doc, index, frames)})
+        WHERE rank <= {int(k)}
+        SORT BY qid, rank""", **frames)
 
 
 def search_terms(index: InvertedIndex, query_text: str, mode: str = "OR",
@@ -584,7 +688,7 @@ def search_dismax(index: InvertedIndex, query_text: str, k: int = 10,
 
 def count_query(index: InvertedIndex, query_text: str, mode: str = "OR") -> int:
     """TotalHitCountCollector (``search/TotalHitCountCollector.java``)."""
-    return _single(index, query_text, mode).count()
+    return _build(_single(index, query_text, mode)).count()
 
 
 def search_after(index: InvertedIndex, query_text: str, k: int,
@@ -593,10 +697,11 @@ def search_after(index: InvertedIndex, query_text: str, k: int,
     """Cursor pagination: hits strictly after (score, key) in rank order
     (``search/IndexSearcher.java:234-250,351-416``)."""
     docs = _single(index, query_text, mode, precision)
-    score = F.col("score").cast(_stype(precision))
-    after = (score < F.lit(after_score)) | (
-        (score == F.lit(after_score)) & (F.col("key") > F.lit(after_key)))
-    return _topk(docs, index, k, precision, where=after)
+    score = f"CAST(score AS {_stype(precision)})"
+    after = _sql_num(after_score, "double")
+    return _topk(docs, index, k, precision,
+                 where=f"({score} < {after}) OR (({score} = {after}) "
+                       f"AND (key > {_sql_str(after_key)}))")
 
 
 def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
@@ -613,86 +718,95 @@ def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
     terms, offsets = _phrase_terms(index, phrase_text)
     if len(terms) < 2:
         return search_terms(index, phrase_text, "OR", k, precision=precision)
-    scored = phrase_score_frame(index, terms, precision, boost, slop,
-                                offsets=offsets)
+    scored = _phrase_frame(index, [[t] for t in terms], offsets, precision,
+                           boost, slop)
     return _topk(scored, index, k, precision)
 
 
-def _slot_fanout(slots: list[list[str]]) -> Column:
-    """term -> array of the slots holding it, as one map literal."""
-    holders: dict[str, list[int]] = {}
-    for i, slot in enumerate(slots):
-        for t in sorted(set(slot)):
-            holders.setdefault(t, []).append(i)
-    return F.expr("map(" + ", ".join(
-        f"{_sql_str(t)}, array({', '.join(map(str, ids))})"
-        for t, ids in holders.items()) + ")")
-
-
-def _slot_positions(index: InvertedIndex,
-                    slots: list[list[str]]) -> DataFrame:
-    """The positional gather: (seg, docid, norm, hits) for every document
-    holding a term of ``slots``, where ``hits`` is the sorted
+def _slot_positions(scorer: _Scorer, slots: list[list[str]], weight: float,
+                    required=()) -> str:
+    """The positional gather, as SQL over ``{postings}``: (seg, docid,
+    norm, w, hits) for every document holding a term of ``slots`` and a
+    hit in every slot of ``required``, where ``hits`` is the sorted
     array<struct<slot, pos>> of the document's postings, one per (slot,
-    term), with the term's positions.  One term-pruned postings scan; each
-    term fans out to every slot holding it, so a repeated phrase term
-    feeds each of its slots."""
+    term), with the term's positions, and ``w`` the query's ``weight``.
+    One term-pruned postings scan; each term fans out to every slot
+    holding it, so a repeated phrase term feeds each of its slots."""
     terms = sorted({t for slot in slots for t in slot})
-    rows = (index.postings.where(_sql_in("term", terms))
-            .select("seg", "postings",
-                    F.explode(_slot_fanout(slots)[F.col("term")])
-                    .alias("slot"))
-            .select("seg", "slot", F.explode("postings").alias("p")))
-    return rows.groupBy("seg", F.col("p.docid").alias("docid")).agg(
-        F.first("p.norm").alias("norm"),
-        F.array_sort(F.collect_list(F.struct(
-            "slot", F.col("p.positions").alias("pos")))).alias("hits"))
+    sql = f"""
+        SELECT seg, p.docid AS docid, first(p.norm) AS norm, first(w) AS w,
+               array_sort(collect_list(struct(slot, p.positions AS pos)))
+                 AS hits
+        FROM (SELECT seg, slot, w, explode(postings) AS p
+              FROM (SELECT seg, postings,
+                           inline({scorer.slot_fanout(slots, weight)}[term])
+                    FROM {{postings}} WHERE {_sql_in('term', terms)}))
+        GROUP BY seg, p.docid"""
+    if required:
+        sql = f"SELECT * FROM ({sql}) WHERE {_has_slots(required)}"
+    return sql
 
 
-def _has_slots(slot_ids) -> Column:
+def _has_slots(slot_ids) -> str:
     """Every slot of ``slot_ids`` holds a hit: the set-containment filter
     (AND's ``nmatched >= need`` over slots)."""
     need = sorted(set(slot_ids))
-    return F.size(F.array_intersect(
-        F.col("hits.slot"),
-        F.expr(f"array({', '.join(map(str, need))})"))) == len(need)
+    return (f"size(array_intersect(hits.slot, "
+            f"array({', '.join(map(str, need))}))) = {len(need)}")
 
 
-def _exact_phrase_freq(offsets: list[int]) -> Column:
+def _exact_phrase_freq(offsets: list[int]) -> str:
     """ExactPhraseScorer's freq: per slot, the union of its terms'
     positions shifted back by the slot's offset; the phrase occurs at every
     start that all slots share."""
-    def starts(i: int, off: int) -> Column:
-        pos = F.flatten(F.transform(
-            F.filter("hits", lambda h: h["slot"] == i), lambda h: h["pos"]))
-        return F.transform(pos, lambda p: p - off)
+    def starts(i: int, off: int) -> str:
+        return (f"transform(flatten(transform(filter(hits, h -> h.slot = {i}"
+                f"), h -> h.pos)), p -> p - {off})")
 
-    common = F.array_distinct(starts(0, offsets[0]))
+    common = f"array_distinct({starts(0, offsets[0])})"
     for i, off in enumerate(offsets[1:], 1):
-        common = F.array_intersect(common, starts(i, off))
-    return F.size(common).cast("double")
+        common = f"array_intersect({common}, {starts(i, off)})"
+    return f"CAST(size({common}) AS double)"
+
+
+def _freq_scores(docs: _Sql, scorer: _Scorer, name: str,
+                 freq: str | None = None) -> _Sql:
+    """(seg, docid, ``name``, score) of the documents of ``docs`` (seg,
+    docid, norm, w, ...) whose freq is positive: BM25 on that freq with
+    the query weight ``w``.  The freq is the SQL expression ``freq`` over
+    them, or else their ``freq`` column."""
+    cols = f"*, {freq} AS freq" if freq else "*"
+    return _Sql(f"""
+        SELECT seg, docid, freq AS {name}, {scorer.score('w')} AS score
+        FROM (SELECT {cols} FROM ({docs.text}))
+        WHERE freq > 0""", docs.frames)
+
+
+def _udf_freq(docs: _Sql, udf) -> _Sql:
+    """``docs`` with the column ``freq`` that ``udf`` computes from their
+    hits: the one step of a plan applied through the DataFrame API."""
+    frame = _build(docs)
+    return _Sql("SELECT * FROM {docs}",
+                {"docs": frame.withColumn("freq", udf(frame["hits"]))})
 
 
 def _phrase_frame(index: InvertedIndex, slots: list[list[str]],
                   offsets: list[int], precision: str = "float32",
-                  boost: float = 1.0, slop: int = 0) -> DataFrame:
+                  boost: float = 1.0, slop: int = 0) -> _Sql:
     """(seg, docid, pfreq, score) of a phrase whose slot i accepts any term
     of ``slots[i]`` at phrase offset ``offsets[i]``; weight = idf summed
     over every term of every slot.  slop>0 takes one term per slot."""
     flat = [t for slot in slots for t in slot]
     scorer = _Scorer(index, flat, precision, boost)
+    docs = _Sql(_slot_positions(
+        scorer, slots,
+        scorer.summed_weight([scorer.df(t) for t in flat], boost),
+        range(len(slots))), {"postings": index.postings})
     if slop == 0:
-        freq = _exact_phrase_freq(offsets)
-    else:
-        freq = _sloppy_pfreq_udf(slop, flat, offsets,
-                                 f32=(precision != "float64"))(F.col("hits"))
-    weight = scorer.summed_weight([scorer.df(t) for t in flat], boost)
-    return (_slot_positions(index, slots)
-            .where(_has_slots(range(len(slots))))
-            .withColumn("freq", freq)
-            .where(F.col("freq") > 0)
-            .select("seg", "docid", F.col("freq").alias("pfreq"),
-                    scorer.score(weight).alias("score")))
+        return _freq_scores(docs, scorer, "pfreq",
+                            _exact_phrase_freq(offsets))
+    return _freq_scores(_udf_freq(docs, _sloppy_pfreq_udf(
+        slop, flat, offsets, f32=(precision != "float64"))), scorer, "pfreq")
 
 
 def phrase_score_frame(index: InvertedIndex, terms: list[str],
@@ -710,8 +824,8 @@ def phrase_score_frame(index: InvertedIndex, terms: list[str],
     """
     if offsets is None:
         offsets = list(range(len(terms)))
-    return _phrase_frame(index, [[t] for t in terms], offsets, precision,
-                         boost, slop)
+    return _build(_phrase_frame(index, [[t] for t in terms], offsets,
+                                precision, boost, slop))
 
 
 def _sloppy_pfreq_udf(slop: int, terms: list[str], offsets: list[int],
@@ -810,9 +924,8 @@ def ngram_phrase_search(index: InvertedIndex, query_text: str, n: int = 2,
     if keep[-1] != len(grams) - 1:
         keep.append(len(grams) - 1)
     terms = [grams[i] for i in keep]
-    frame = phrase_score_frame(index, terms, precision, slop=0,
-                               offsets=keep)
-    return _topk(frame.select("seg", "docid", "score"), index, k, precision)
+    frame = _phrase_frame(index, [[t] for t in terms], keep, precision)
+    return _topk(frame, index, k, precision)
 
 
 def custom_score_search(index: InvertedIndex, query_text: str,

@@ -32,8 +32,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
-from .search import (_has_slots, _no_docs, _phrase_frame, _Scorer,
-                     _slot_positions, _term_set_docs, _topk, search_terms)
+from .search import (_build, _freq_scores, _no_docs, _phrase_frame, _Scorer,
+                     _slot_positions, _Sql, _term_set_docs, _topk, _udf_freq,
+                     search_terms)
 
 __all__ = ["span_near", "span_query", "span_score_frame",
            "common_terms_query", "multi_phrase"]
@@ -116,8 +117,7 @@ def span_query(index: InvertedIndex, tree, k: int = 10,
          | ("or", [children]) | ("not", include, exclude)
          | ("first", child, n)      (terms must be pre-analyzed)
     """
-    scored = span_score_frame(index, tree, precision)
-    return _topk(scored.select("seg", "docid", "score"), index, k, precision)
+    return _topk(_span_scores(index, tree, precision), index, k, precision)
 
 
 def span_score_frame(index: InvertedIndex, tree,
@@ -141,22 +141,23 @@ def span_score_frame(index: InvertedIndex, tree,
     trees, empty required set) degrades to a scan of the rarest-term df,
     the same bound as the reference's leapfrog.
     """
+    return _build(_span_scores(index, tree, precision))
+
+
+def _span_scores(index: InvertedIndex, tree, precision: str) -> _Sql:
+    """span_score_frame's plan, built by the statement that reads it."""
     if not index.with_positions:
         raise ValueError("index built without positions")
     names = sorted(set(_eval_terms(tree)))
     weight_terms = sorted(set(_tree_terms(tree)))
     scorer = _Scorer(index, weight_terms, precision)
-    docs = _slot_positions(index, [[t] for t in names])
-    required = _required_terms(tree)
-    if required:
-        docs = docs.where(_has_slots(names.index(t) for t in required))
-    weight = scorer.summed_weight([scorer.df(t) for t in weight_terms])
-    return (docs
-            .withColumn("freq", _span_tree_udf(
-                tree, names, f32=(precision != "float64"))(F.col("hits")))
-            .where(F.col("freq") > 0)
-            .select("seg", "docid", F.col("freq").alias("sfreq"),
-                    scorer.score(weight).alias("score")))
+    docs = _Sql(_slot_positions(
+        scorer, [[t] for t in names],
+        scorer.summed_weight([scorer.df(t) for t in weight_terms]),
+        [names.index(t) for t in _required_terms(tree)]),
+        {"postings": index.postings})
+    udf = _span_tree_udf(tree, names, f32=(precision != "float64"))
+    return _freq_scores(_udf_freq(docs, udf), scorer, "sfreq")
 
 
 def span_near(index: InvertedIndex, query_text: str, slop: int = 2,
@@ -227,4 +228,4 @@ def multi_phrase(index: InvertedIndex, slots: list[list[str]],
         return _topk(_no_docs(index, precision), index, k, precision)
     scored = _phrase_frame(index, norm_slots, list(range(len(norm_slots))),
                            precision)
-    return _topk(scored.select("seg", "docid", "score"), index, k, precision)
+    return _topk(scored, index, k, precision)

@@ -6,7 +6,7 @@ Each is one similarity object plugged into search.py's term scorer,
 :func:`~.search._scored_docs`, exactly as BM25 is: ``weights`` gives the
 weight of each (query, term) on the driver from the term's df/ttf, the
 collection stats, the query's clauses and its boost; ``score`` gives the
-per-posting score Column of (weight, freq, norm byte); ``coord`` (the
+per-posting score SQL expression of (weight, freq, norm byte); ``coord`` (the
 Classic family) multiplies a document's score by matched / total clauses.
 The term-pruned postings scan, the per-document aggregate, AND's
 ``nmatched >= need`` filter and the top-k collector are BM25's, so every
@@ -22,12 +22,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.smallfloat import byte315_to_float
 from .indexer import InvertedIndex
-from .search import (LQ64, _mults, _Query, _scored_docs, _Scorer, _single,
-                     _stype, _topk)
+from .search import (LQ64, _mults, _plan, _Query, _scored_docs, _Scorer,
+                     _single, _stype, _topk)
 
 __all__ = ["search_tfidf", "tfidf_score_frame", "search_lmdirichlet",
            "search_dfr_gl2", "search_ib_spl"]
@@ -61,12 +61,12 @@ class _Classic:
         query_norm = 1.0 / math.sqrt(ssw) if ssw > 0 else 0.0
         return {t: idf[t] * idf[t] * boost * query_norm for t in mults}
 
-    def tf(self, sc: _Scorer, freq: Column) -> Column:
-        return F.sqrt(freq)
+    def tf(self, sc: _Scorer, freq: str) -> str:
+        return f"sqrt({freq})"
 
-    def score(self, sc: _Scorer, w: Column, freq: Column,
-              norm: Column) -> Column:
-        return self.tf(sc, freq) * w * sc.per_norm(self.norms, norm)
+    def score(self, sc: _Scorer, w: str, freq: str, norm: str) -> str:
+        return (f"(({self.tf(sc, freq)} * {w}) * "
+                f"{sc.per_norm(self.norms, norm)})")
 
 
 class _SweetSpot(_Classic):
@@ -82,28 +82,29 @@ class _SweetSpot(_Classic):
             ln_steep * (abs(dl - ln_min) + abs(dl - ln_max)
                         - (ln_max - ln_min)) + 1.0) for dl in LQ64]
 
-    def tf(self, sc: _Scorer, freq: Column) -> Column:
+    def tf(self, sc: _Scorer, freq: str) -> str:
+        lit = sc.lit
         if self.tf_mode == "baseline":
-            tf = F.when(freq <= sc.lit(self.tf_min), sc.lit(self.tf_base)) \
-                .otherwise(F.sqrt(freq + sc.lit(
-                    self.tf_base * self.tf_base - self.tf_min)))
+            tf = (f"CASE WHEN ({freq} <= {lit(self.tf_min)}) "
+                  f"THEN {lit(self.tf_base)} ELSE sqrt(({freq} + "
+                  f"{lit(self.tf_base * self.tf_base - self.tf_min)})) END")
         elif self.tf_mode == "hyperbolic":
             lo, hi, base, xoffset = self.hyper
-            x = freq - sc.lit(xoffset)
-            bx, bnx = F.pow(sc.lit(base), x), F.pow(sc.lit(base), -x)
-            tf = sc.lit(lo) + sc.lit((hi - lo) / 2.0) * (
-                (bx - bnx) / (bx + bnx) + sc.lit(1.0))
+            x = f"({freq} - {lit(xoffset)})"
+            bx, bnx = f"power({lit(base)}, {x})", f"power({lit(base)}, (- {x}))"
+            tf = (f"({lit(lo)} + ({lit((hi - lo) / 2.0)} * "
+                  f"((({bx} - {bnx}) / ({bx} + {bnx})) + {lit(1.0)})))")
         else:
             raise ValueError(f"unknown tf_mode {self.tf_mode!r}")
-        return F.when(freq == 0, sc.lit(0.0)).otherwise(tf)
+        return f"CASE WHEN ({freq} = 0) THEN {lit(0.0)} ELSE {tf} END"
 
 
-def _h2(sc: _Scorer, c: float, freq: Column, norm: Column) -> Column:
+def _h2(sc: _Scorer, c: float, freq: str, norm: str) -> str:
     """NormalizationH2: tfn = freq * log2(1 + c * avgFieldLength / dl)."""
     max_doc, sum_ttf = sc.stats.max_doc, sc.stats.sum_ttf
     avg_fl = sum_ttf / max_doc if max_doc else 1.0
-    return freq * F.log2(sc.lit(1.0)
-                         + sc.lit(c * avg_fl) / sc.per_norm(LQ64, norm))
+    return (f"({freq} * log2(({sc.lit(1.0)} + ({sc.lit(c * avg_fl)} / "
+            f"{sc.per_norm(LQ64, norm)}))))")
 
 
 class _LMDirichlet:
@@ -119,9 +120,9 @@ class _LMDirichlet:
 
     def score(self, sc, w, freq, norm):
         mu = sc.lit(self.mu)
-        raw = (F.log(sc.lit(1.0) + freq / (mu * w))
-               + F.log(mu / (sc.per_norm(LQ64, norm) + mu)))
-        return F.greatest(sc.lit(0.0), raw.cast(sc._sqltype))
+        raw = (f"(ln(({sc.lit(1.0)} + ({freq} / ({mu} * {w})))) + "
+               f"ln(({mu} / ({sc.per_norm(LQ64, norm)} + {mu}))))")
+        return f"greatest({sc.lit(0.0)}, CAST({raw} AS {sc._sqltype}))"
 
 
 class _DFRGL2:
@@ -138,8 +139,8 @@ class _DFRGL2:
     def score(self, sc, w, freq, norm):
         one = sc.lit(1.0)
         tfn = _h2(sc, self.c, freq, norm)
-        basic = F.log2(w + one) + tfn * F.log2((one + w) / w)
-        return (basic * (one / (tfn + one))).cast(sc._sqltype)
+        basic = f"(log2(({w} + {one})) + ({tfn} * log2((({one} + {w}) / {w}))))"
+        return f"CAST(({basic} * ({one} / ({tfn} + {one}))) AS {sc._sqltype})"
 
 
 class _IBSPL:
@@ -156,8 +157,9 @@ class _IBSPL:
     def score(self, sc, w, freq, norm):
         one = sc.lit(1.0)
         tfn = _h2(sc, self.c, freq, norm)
-        spl = -F.log((F.pow(w, tfn / (tfn + one)) - w) / (one - w))
-        return spl.cast(sc._sqltype)
+        spl = (f"(- ln(((power({w}, ({tfn} / ({tfn} + {one}))) - {w}) / "
+               f"({one} - {w}))))")
+        return f"CAST({spl} AS {sc._sqltype})"
 
 
 def tfidf_score_frame(index: InvertedIndex, terms: list[str],
@@ -166,9 +168,9 @@ def tfidf_score_frame(index: InvertedIndex, terms: list[str],
     """(seg, docid, score, nmatched) per candidate doc (coord applied)."""
     workload = [_Query(0, _mults(terms), 1, boost)] if terms else []
     docs = _scored_docs(index, workload, precision, similarity=_Classic())
-    return docs.select("seg", "docid",
-                       F.col("score").cast(_stype(precision)).alias("score"),
-                       "nmatched")
+    return _plan(f"""SELECT seg, docid,
+        CAST(score AS {_stype(precision)}) AS score, nmatched
+        FROM ({docs.text})""", **docs.frames)
 
 
 def search_tfidf(index: InvertedIndex, query_text: str, k: int = 10,

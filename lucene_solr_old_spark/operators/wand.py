@@ -36,8 +36,8 @@ from pyspark.sql import DataFrame
 
 from .codec import decode_block
 from .indexer import InvertedIndex
-from .search import (_no_docs, _parse, _Query, _Scorer, _sql_in, _topk,
-                     _topk_per_qid)
+from .search import (_no_docs, _parse, _plan, _Query, _Scorer, _sql_in,
+                     _topk, _topk_per_qid)
 
 __all__ = ["wand_search", "batch_wand_search"]
 
@@ -226,11 +226,10 @@ def _kernel_docs(index: InvertedIndex, workload: list[_Query], k: int,
             "score": np.concatenate(scores).astype(dtype),
         })
 
-    return (index.postings.where(_sql_in("term", terms))
-            .select("seg", "term", "blocks")
-            .groupBy("seg")
-            .applyInPandas(kernel, schema="qid INT, seg INT, docid INT, "
-                                          f"score {scorer._sqltype}"))
+    blocks = _plan(f"SELECT seg, term, blocks FROM {{postings}} "
+                   f"WHERE {_sql_in('term', terms)}", postings=index.postings)
+    return blocks.groupBy("seg").applyInPandas(
+        kernel, schema=f"qid INT, seg INT, docid INT, score {scorer._sqltype}")
 
 
 def wand_search(index: InvertedIndex, query_text: str, k: int = 10,
@@ -254,7 +253,9 @@ def batch_wand_search(index: InvertedIndex, queries: list[tuple],
     applyInPandas per segment runs every query's kernel against that
     segment's blocks (per-segment top-k), then a per-qid window merges
     leaves — the per-query Spark scheduling floor is amortized across the
-    workload exactly like operators/batch.py (four jobs), but with MaxScore
-    block skipping instead of the relational aggregation."""
+    workload like operators/batch.py, but with MaxScore block skipping
+    instead of the relational aggregation, in four jobs: the kernel stage
+    up to its shuffle by segment, the docmeta broadcast, the per-qid
+    window's shuffle and the result."""
     docs = _kernel_docs(index, _parse(index, queries), k)
     return _topk_per_qid(docs, index, k)

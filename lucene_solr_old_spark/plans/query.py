@@ -262,7 +262,7 @@ def _clause_pred(index: InvertedIndex, clause) -> tuple[Column | None,
         terms = _fuzzy_terms(index, clause)
     else:
         terms = [t.term for t in get_analyzer(index.analyzer)(clause.text)]
-    return (S._sql_in("term", terms) if terms else None), terms
+    return (F.expr(S._sql_in("term", terms)) if terms else None), terms
 
 
 def _is_phrase(clause, terms: list[str]) -> bool:

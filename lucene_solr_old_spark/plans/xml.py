@@ -531,7 +531,7 @@ class _Executor:
             terms = [t.term for t in analyzer(filt.text)]
             if not terms:
                 return _all_docs(self.index).limit(0)
-            return S._docs_where(self.index, S._sql_in("term", terms))
+            return S._docs_where(self.index, F.expr(S._sql_in("term", terms)))
         if isinstance(filt, XBoolFilter):
             # BooleanFilter: every must filter, one should filter when
             # there are any, no mustnot filter; all documents when only

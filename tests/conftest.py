@@ -1,5 +1,6 @@
 import os
 import sys
+import threading
 import uuid
 
 import pytest
@@ -59,6 +60,32 @@ def jobs_per_call(spark):
 
     return lambda make: _jobs_in_group(spark.sparkContext,
                                        lambda: run(make))
+
+
+@pytest.fixture
+def py4j_calls_per_call(spark):
+    """Call ``make()``; returns the number of py4j round trips the calling
+    thread made to the JVM (a DataFrame's build, not its collect).  The
+    py4j finalizer thread's object releases are not counted."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(make) -> int:
+        caller, calls = threading.get_ident(), [0]
+        send = client.send_command
+
+        def counting(*args, **kwargs):
+            if threading.get_ident() == caller:
+                calls[0] += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            make()
+        finally:
+            del client.send_command
+        return calls[0]
+
+    return count
 
 
 @pytest.fixture

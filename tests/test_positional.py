@@ -113,7 +113,7 @@ def test_multi_phrase_matches_oracle(idx, positions, slots):
     got = {r["key"] for r in
            multi_phrase(idx, slots, k=len(PAGES)).collect()}
     assert got == set(want)
-    frame = S._phrase_frame(idx, slots, offsets)
+    frame = S._build(S._phrase_frame(idx, slots, offsets))
     assert _by_key(idx, frame, "pfreq") == want
 
 

@@ -1,0 +1,166 @@
+"""Query plans are built as Spark SQL statements: each plan costs a fixed,
+small number of py4j round trips, whatever its number of terms or queries;
+user text reaches the SQL only as escaped literals; and a phrase or span
+query of a shape already run compiles no new code."""
+
+import re
+
+import pytest
+
+from lucene_solr_old_spark.functions.tokenizer import get_analyzer
+from lucene_solr_old_spark.operators import indexer as I
+from lucene_solr_old_spark.operators import search as S
+from lucene_solr_old_spark.operators import spans as SP
+from lucene_solr_old_spark.operators import wand as W
+from lucene_solr_old_spark.operators.batch import batch_search
+
+
+@pytest.fixture(scope="module")
+def loaded(fingerprint_indexes, tmp_path_factory, spark):
+    """The fingerprint pages' plain and compressed indexes, saved and
+    loaded, with their segment and term statistics read."""
+    _df, plain, comp, _mfi = fingerprint_indexes
+    root = tmp_path_factory.mktemp("sqlplans")
+    out = []
+    for name, idx in (("plain", plain), ("comp", comp)):
+        idx.save(str(root / name))
+        idx = I.load_index(spark, str(root / name))
+        idx.collection_stats()
+        idx.term_stats(["zzzwarm"])
+        out.append(idx)
+    return out
+
+
+TWO = "running meetings"
+SIX = "running meetings caresses ponies relational hopeful"
+BUILDS = {
+    "search_or": lambda p, c, q: S.search_or(p, q),
+    "search_and": lambda p, c, q: S.search_and(p, q),
+    "search_dismax": lambda p, c, q: S.search_dismax(p, q, tie_breaker=0.1),
+    "search_phrase": lambda p, c, q: S.search_phrase(p, q),
+    "span_near": lambda p, c, q: SP.span_near(p, q, slop=2),
+    "wand_search": lambda p, c, q: W.wand_search(c, q),
+}
+BATCHES = {
+    "batch_search": lambda p, c, qs: batch_search(p, qs),
+    "batch_wand_search": lambda p, c, qs: W.batch_wand_search(c, qs),
+}
+# The DataFrame-chained builds took 149 (wand_search) to 833
+# (search_phrase) round trips; a statement takes a handful, and a Python
+# UDF or applyInPandas step a few dozen.
+BUDGET = 64
+
+
+def _workload(n: int) -> list[tuple]:
+    words = SIX.split()
+    return [(q, f"{words[q % 6]} {words[(q + 1) % 6]}",
+             "AND" if q % 2 else "OR") for q in range(n)]
+
+
+@pytest.mark.parametrize("name", sorted(BUILDS))
+def test_query_build_round_trips(name, loaded, py4j_calls_per_call):
+    plain, comp = loaded
+    build = BUILDS[name]
+    for _ in range(2):  # register the index tables' views, and drop a
+        build(plain, comp, TWO)  # collected frame's view once
+    two = py4j_calls_per_call(lambda: build(plain, comp, TWO))
+    six = py4j_calls_per_call(lambda: build(plain, comp, SIX))
+    assert two == six and two <= BUDGET, (two, six)
+
+
+@pytest.mark.parametrize("name", sorted(BATCHES))
+def test_batch_build_round_trips(name, loaded, py4j_calls_per_call):
+    plain, comp = loaded
+    build = BATCHES[name]
+    for _ in range(2):
+        build(plain, comp, _workload(4))
+    four = py4j_calls_per_call(lambda: build(plain, comp, _workload(4)))
+    sixteen = py4j_calls_per_call(lambda: build(plain, comp, _workload(16)))
+    assert four == sixteen and four <= BUDGET, (four, sixteen)
+
+
+@pytest.mark.parametrize("run", [
+    lambda p, q: S.search_phrase(p, q),
+    lambda p, q: S.search_phrase(p, q, slop=2),
+    lambda p, q: SP.span_near(p, q, slop=2),
+], ids=["exact", "sloppy", "span_near"])
+def test_new_phrase_of_a_known_shape_compiles_nothing(run, loaded, spark):
+    """The phrase weight travels in the slot fan-out literal, not as a
+    float literal Spark would write into the generated code."""
+    plain, _comp = loaded
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME()
+    assert run(plain, "aad aakvslvyai").collect()
+    before = compiled.getCount()
+    assert run(plain, "aaeevnqlbaa aaferqwx").collect()
+    assert compiled.getCount() == before
+
+
+# Terms with the characters SQL text or its formatter treat specially
+ODD = ["o'brien", "back\\slash", "{brace}", "a}b{c", "${spark.master}",
+       "naïve", "日本", "q''t"]
+ODD_DOCS = [
+    ("d0", "o'brien {brace} naïve"),
+    ("d1", "back\\slash ${spark.master} o'brien"),
+    ("d2", "{brace} o'brien a}b{c"),
+    ("d3", "日本 q''t naïve plain"),
+    ("d4", "plain words only"),
+    ("d5", "a}b{c ${spark.master} back\\slash 日本"),
+]
+
+
+@pytest.fixture(scope="module")
+def odd(spark, tmp_path_factory):
+    """A whitespace-analysed index of ``ODD_DOCS``, saved and loaded so
+    its postings scan is a Parquet scan."""
+    docs = spark.createDataFrame(ODD_DOCS, "url STRING, text STRING")
+    path = str(tmp_path_factory.mktemp("odd") / "idx")
+    I.build_index(docs, num_segments=2, analyzer="ws_lower").save(path)
+    return I.load_index(spark, path)
+
+
+def _holding(terms, every=False):
+    """Keys of the documents holding any (or every) term of ``terms``."""
+    analyze = get_analyzer("ws_lower")
+    test = all if every else any
+    return {key for key, text in ODD_DOCS
+            if test(t in {x.term for x in analyze(text)} for t in terms)}
+
+
+def _adjacent(first, second):
+    analyze = get_analyzer("ws_lower")
+    out = set()
+    for key, text in ODD_DOCS:
+        terms = [x.term for x in analyze(text)]
+        if any(a == first and b == second for a, b in zip(terms, terms[1:])):
+            out.add(key)
+    return out
+
+
+@pytest.mark.parametrize("pair", [ODD[i:i + 2] for i in range(0, 8, 2)])
+def test_odd_terms_match_exactly(odd, pair):
+    text = " ".join(pair)
+    assert {r["key"] for r in S.search_or(odd, text, k=10).collect()} \
+        == _holding(pair)
+    assert {r["key"] for r in S.search_and(odd, text, k=10).collect()} \
+        == _holding(pair, every=True)
+    assert {r["key"] for r in S.search_phrase(odd, text, k=10).collect()} \
+        == _adjacent(*pair)
+
+
+def test_odd_terms_batch_and_clause(odd):
+    queries = [(i, t, "OR") for i, t in enumerate(ODD)]
+    got: dict = {}
+    for r in batch_search(odd, queries, k=10).collect():
+        got.setdefault(r["qid"], set()).add(r["key"])
+    assert got == {i: _holding([t]) for i, t in enumerate(ODD)}
+    docs = S._with_keys(S._term_set_docs(odd, ODD[:3]), odd)
+    assert {r["key"] for r in docs.collect()} == _holding(ODD[:3])
+
+
+def test_rendered_scan_pushes_term_in(odd):
+    df = S.search_or(odd, "o'brien {brace}")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert any("In(term," in p for p in pushed), plan
