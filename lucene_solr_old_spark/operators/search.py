@@ -73,6 +73,17 @@ share one scorer:
     :meth:`_Scorer.summed_weight`, the idf summed over the query's terms
     (``BM25Similarity.idfExplain(TermStatistics[])``).
 
+Building: each plan is Spark SQL text, built by :func:`_plan` with ONE
+``spark.sql`` call over temporary views of its input frames, each frame
+registered once.  A plan that feeds another, as the scored docs feed
+:func:`_topk`, is an :class:`_Sql` its reader inlines, so a term or exact
+phrase query and its collector are one statement.  Only a Python UDF or
+``applyInPandas`` step goes through the DataFrame API, between two
+statements.  Chained DataFrame calls, where every ``F.col``, select
+element and lambda is a py4j round trip, cost a query 149-833 round trips
+and 72-180 ms of driver time on a 4-core host; a statement costs 5-6 of
+them, and a UDF or ``applyInPandas`` step about 40-50 more.
+
 Scoring: per-term scores are computed in Spark float32 arithmetic (same IEEE
 ops as the Java engine).  Multi-term sums aggregate in float64 then round to
 float32 — the reference's own sum order is scorer-implementation-dependent
@@ -125,24 +136,20 @@ def _stype(precision: str) -> str:
     return "double" if precision == "float64" else "float"
 
 
-# A plan is ONE Spark SQL statement, built with one ``spark.sql`` call that
-# takes its child frames (the index tables, or a frame the statement
-# scores or collects) as DataFrame arguments: a py4j round trip costs
-# about 0.2 ms, and chaining ``F.col``/``select``/lambda calls cost a
-# query 149-833 of them (72-180 ms of driver time) where a statement costs
-# a handful.  Only a Python UDF or ``applyInPandas`` step is applied
-# through the DataFrame API, between two statements.  Literals are SQL
-# text: strings through :func:`_sql_str`, numbers through
-# :func:`_sql_num` (``repr`` of a float round-trips exactly through Java's
-# double parser), and the tables that grow with the workload or are read
-# per posting (the query fan-out, the per-query maps, the norm table) as
-# one JSON string each that ``from_json`` types and the optimiser folds
-# into a literal: as SQL ``array``/``map`` text, with a struct and a cast
-# per element, the same table cost up to 51-57 ms of analysis per
-# 16-query batch.  Table values are rounded to the score type in NumPy
-# first, as the SQL cast rounds.  A map or array literal is referenced,
-# not written, by the generated code, so a weight carried in one keeps
-# the code of a plan shape the same from one query to the next.
+# A plan is SQL text (see "Building" above), and so are its literals:
+# strings through :func:`_sql_str`, numbers through :func:`_sql_num`
+# (``repr`` of a float round-trips exactly through Java's double parser),
+# and the tables that grow with the workload or are read per posting (the
+# query fan-out, the per-query maps, the norm table) as one JSON string
+# each that ``from_json`` types and the optimiser folds into a literal.
+# As SQL ``array``/``map`` text, with a struct and a cast per element, the
+# same table cost up to 51-57 ms of analysis per 16-query batch; as a
+# NumPy array literal, pyspark hands it to the JVM one py4j call per
+# element (25-35 ms for a 256-entry norm table).  Table values are
+# rounded to the score type in NumPy first, as the SQL cast rounds.  A map
+# or array literal is referenced, not written, by the generated code, so
+# a weight carried in one keeps the code of a plan shape the same from
+# one query to the next.
 
 _SQL_ESCAPES = str.maketrans({
     "\\": "\\\\", "'": "\\'",

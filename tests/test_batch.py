@@ -69,9 +69,8 @@ def test_batch_collector_contract(idx, per_qid_runs):
 def test_batch_jobs_per_collect(fingerprint_indexes, jobs_per_collect):
     """The workload runs in at most 3 Spark jobs: the qid shuffle that the
     (qid, seg, docid) aggregate and the per-qid window share, the docmeta
-    broadcast, and the result.  A global ``orderBy("qid", "rank")`` once
-    added a range-sampling job and a range exchange, and a separate
-    window shuffle a fourth job."""
+    broadcast, and the result.  A global ``orderBy("qid", "rank")`` would
+    add a range-sampling job and a range exchange."""
     from test_plan_fingerprints import BATCH
 
     _df, plain, _comp, _mfi = fingerprint_indexes
