@@ -226,6 +226,7 @@ class _Sql(NamedTuple):
 
 
 def _build(plan: "_Sql | DataFrame") -> DataFrame:
+    """The frame of ``plan``."""
     return plan if isinstance(plan, DataFrame) else _plan(plan.text,
                                                           **plan.frames)
 
