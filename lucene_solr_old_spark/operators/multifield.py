@@ -283,11 +283,11 @@ def masked_span_query(mfi: MultiFieldIndex, tree, k: int = 10,
         # this field's terms fan out to their own slots only
         slots = [[n.split(_MASK_SEP, 1)[1]]
                  if n.startswith(fld + _MASK_SEP) else [] for n in names]
+        fanout = scorer.slot_fanout(slots, weight)
         rows = _plan(f"""
             SELECT seg, slot, w, p.docid AS docid, p.positions AS pos
             FROM (SELECT seg, slot, w, explode(postings) AS p
-                  FROM (SELECT seg, postings,
-                               inline({scorer.slot_fanout(slots, weight)}[term])
+                  FROM (SELECT seg, postings, inline({fanout}[term])
                         FROM {{postings}} WHERE {_sql_in('term', terms)}))""",
                      postings=idx.postings)
         frames.append(_with_keys(rows, idx).select("key", "slot", "pos", "w"))

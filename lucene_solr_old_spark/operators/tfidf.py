@@ -91,7 +91,8 @@ class _SweetSpot(_Classic):
         elif self.tf_mode == "hyperbolic":
             lo, hi, base, xoffset = self.hyper
             x = f"({freq} - {lit(xoffset)})"
-            bx, bnx = f"power({lit(base)}, {x})", f"power({lit(base)}, (- {x}))"
+            bx = f"power({lit(base)}, {x})"
+            bnx = f"power({lit(base)}, (- {x}))"
             tf = (f"({lit(lo)} + ({lit((hi - lo) / 2.0)} * "
                   f"((({bx} - {bnx}) / ({bx} + {bnx})) + {lit(1.0)})))")
         else:
@@ -139,7 +140,8 @@ class _DFRGL2:
     def score(self, sc, w, freq, norm):
         one = sc.lit(1.0)
         tfn = _h2(sc, self.c, freq, norm)
-        basic = f"(log2(({w} + {one})) + ({tfn} * log2((({one} + {w}) / {w}))))"
+        basic = (f"(log2(({w} + {one})) + "
+                 f"({tfn} * log2((({one} + {w}) / {w}))))")
         return f"CAST(({basic} * ({one} / ({tfn} + {one}))) AS {sc._sqltype})"
 
 
