@@ -280,8 +280,7 @@ FROM tf WHERE term LIKE 'sp%'
 ORDER BY doc_id""")
 def _q_prefix(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    docs = (S._docs_where(idx, F.col("term").startswith("sp"))
-            .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"]))
+    docs = S._with_keys(S._docs_where(idx, "startswith(term, 'sp')"), idx)
     return docs.select(F.col("key").cast("long").alias("doc_id"),
                        F.lit(1.0).alias("score"))
 
@@ -310,8 +309,7 @@ def _q_fuzzy(spark, sf_dir):
                        F.explode("postings.docid").alias("docid")))
     per_doc = matched.groupBy("seg", "docid").agg(
         F.count_distinct("term").alias("nterms"))
-    return (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    return (S._with_keys(per_doc, idx)
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.col("nterms").cast("long").alias("nterms")))
 
@@ -347,8 +345,7 @@ JOIN documents d USING(doc_id)
 GROUP BY d.lang ORDER BY cnt DESC, lang""")
 def _q_facet(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    hits = (S._docs_where(idx, F.col("term") == "spark")
-            .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
+    hits = (S._with_keys(S._docs_where(idx, "term = 'spark'"), idx)
             .select(F.col("key").cast("long").alias("doc_id")))
     return (hits.join(_docs(spark, sf_dir).select("doc_id", "lang"), "doc_id")
             .groupBy("lang").agg(F.count("*").alias("cnt"))
@@ -419,8 +416,7 @@ def _q_group(spark, sf_dir):
     scored, _sc = S.term_score_frame(idx, ["spark", "join"],
                                      precision="float64")
     per_doc = scored.groupBy("seg", "docid").agg(F.sum("score").alias("s"))
-    hits = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    hits = (S._with_keys(per_doc, idx)
             .select(F.col("key").cast("long").alias("doc_id"), "s")
             .join(_docs(spark, sf_dir).select("doc_id", "lang"), "doc_id"))
     w = Window.partitionBy("lang").orderBy(
@@ -450,8 +446,7 @@ def _q_collapse(spark, sf_dir):
     scored, _sc = S.term_score_frame(idx, ["spark", "join"],
                                      precision="float64")
     per_doc = scored.groupBy("seg", "docid").agg(F.sum("score").alias("s"))
-    hits = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    hits = (S._with_keys(per_doc, idx)
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.round("s", 4).alias("score")))
     dims = _docs(spark, sf_dir).select("doc_id", "lang")
@@ -476,8 +471,7 @@ def _q_expand(spark, sf_dir):
     scored, _sc = S.term_score_frame(idx, ["spark", "join"],
                                      precision="float64")
     per_doc = scored.groupBy("seg", "docid").agg(F.sum("score").alias("s"))
-    hits = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    hits = (S._with_keys(per_doc, idx)
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.round("s", 4).alias("score")))
     dims = _docs(spark, sf_dir).select("doc_id", "lang")
@@ -497,8 +491,7 @@ JOIN documents d USING(doc_id)
 ORDER BY d.n_chars DESC, m.doc_id LIMIT 20""")
 def _q_sortfield(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    hits = (S._docs_where(idx, F.col("term") == "spark")
-            .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
+    hits = (S._with_keys(S._docs_where(idx, "term = 'spark'"), idx)
             .select(F.col("key").cast("long").alias("doc_id")))
     return (hits.join(_docs(spark, sf_dir).select("doc_id", "n_chars"),
                       "doc_id")
@@ -529,8 +522,7 @@ JOIN embeddings e ON e.vec_id = m.doc_id
 WHERE e.label < 5 ORDER BY doc_id""")
 def _q_join(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
-    hits = (S._docs_where(idx, F.col("term") == "vector")
-            .join(idx.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
+    hits = (S._with_keys(S._docs_where(idx, "term = 'vector'"), idx)
             .select(F.col("key").cast("long").alias("doc_id")))
     emb = _emb(spark, sf_dir).where(F.col("label") < 5)
     return (hits.join(emb, hits.doc_id == emb.vec_id)
@@ -545,8 +537,7 @@ def _q_funcq(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
     scored, _sc = S.term_score_frame(idx, ["spark"], precision="float64")
     per_doc = scored.groupBy("seg", "docid").agg(F.sum("score").alias("s"))
-    hits = (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    hits = (S._with_keys(per_doc, idx)
             .select(F.col("key").cast("long").alias("doc_id"), "s")
             .join(_docs(spark, sf_dir).select("doc_id", "n_chars"), "doc_id"))
     fs = F.col("s") + F.log(F.lit(1).cast("double") + F.col("n_chars"))
@@ -1305,8 +1296,7 @@ def _q_wildcard(spark, sf_dir):
                        F.explode("postings.docid").alias("docid")))
     per_doc = matched.groupBy("seg", "docid").agg(
         F.count_distinct("term").alias("nterms"))
-    return (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    return (S._with_keys(per_doc, idx)
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.col("nterms").cast("long").alias("nterms"))
             .orderBy("doc_id"))
@@ -1383,8 +1373,7 @@ def _q_span_near(spark, sf_dir):
     outs = []
     for qid, tree, doc, _exp in _SPAN_CASES:
         frame = span_score_frame(idx, tree, precision="float64")
-        out = (frame.join(idx.docmeta.select("seg", "docid", "key"),
-                          ["seg", "docid"])
+        out = (S._with_keys(frame, idx)
                .where(F.col("key") == doc)
                .select(F.lit(qid).cast("int").alias("qid"),
                        F.col("key").cast("long").alias("doc_id"),
@@ -1423,8 +1412,7 @@ def _q_span_first(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
     frame = span_score_frame(idx, ("first", ("term", "spark"), 3),
                              precision="float64")
-    out = (frame.join(idx.docmeta.select("seg", "docid", "key"),
-                      ["seg", "docid"])
+    out = (S._with_keys(frame, idx)
            .select(F.col("key").cast("long").alias("doc_id"),
                    F.round("sfreq", 6).alias("sfreq"),
                    F.round("score", 4).alias("score"),
@@ -1461,8 +1449,7 @@ def _q_span_or(spark, sf_dir):
     idx = doc_index(spark, sf_dir)
     tree = ("or", [("term", "spark"), ("term", "join")])
     frame = span_score_frame(idx, tree, precision="float64")
-    return (frame.join(idx.docmeta.select("seg", "docid", "key"),
-                       ["seg", "docid"])
+    return (S._with_keys(frame, idx)
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.round("sfreq", 6).alias("sfreq"),
                     F.round("score", 4).alias("score"),
@@ -1626,8 +1613,7 @@ def _q_phrase_sloppy(spark, sf_dir):
         terms = phrase_text.split()
         frame = S.phrase_score_frame(idx, terms, precision="float64",
                                      slop=slop)
-        out = (frame.join(idx.docmeta.select("seg", "docid", "key"),
-                          ["seg", "docid"])
+        out = (S._with_keys(frame, idx)
                .where(F.col("key") == doc)
                .select(F.lit(qid).cast("int").alias("qid"),
                        F.col("key").cast("long").alias("doc_id"),
@@ -2381,13 +2367,12 @@ def _q_regexp(spark, sf_dir):
     # the engine translates it to an anchored JVM rlike over the dictionary
     idx = doc_index(spark, sf_dir)
     matched = (idx.postings
-               .where(regexp_pred("s(pa|to)@k"))
+               .where(regexp_pred("s(pa|to)@k", spark))
                .select("seg", F.col("term"),
                        F.explode("postings.docid").alias("docid")))
     per_doc = matched.groupBy("seg", "docid").agg(
         F.count_distinct("term").alias("nterms"))
-    return (per_doc.join(idx.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
+    return (S._with_keys(per_doc, idx)
             .select(F.col("key").cast("long").alias("doc_id"),
                     F.col("nterms").cast("long").alias("nterms")))
 
@@ -3229,9 +3214,7 @@ def _q_facet_prefix(spark, sf_dir):
     from .operators.facets import facet_field
 
     idx = doc_index(spark, sf_dir)
-    hits = (S._docs_where(idx, F.col("term") == "spark")
-            .join(idx.docmeta.select("seg", "docid", "key"),
-                  ["seg", "docid"])
+    hits = (S._with_keys(S._docs_where(idx, "term = 'spark'"), idx)
             .select(F.col("key").cast("long").alias("doc_id")))
     dims = _docs(spark, sf_dir).select("doc_id", "source")
     return (facet_field(hits, dims, "source", key_col="doc_id",

@@ -145,9 +145,8 @@ def join_util_search(index: InvertedIndex, from_query: str,
     from pyspark.sql import functions as F
 
     stype = "double" if precision == "float64" else "float"
-    per_doc = _term_set_docs(index, _qterms(index, from_query),
-                             precision).withColumnRenamed("score", "s")
-    with_field = (_with_keys(per_doc, index)
+    per_doc = _term_set_docs(index, _qterms(index, from_query), precision)
+    with_field = (_with_keys(per_doc, index).withColumnRenamed("score", "s")
                   .join(from_dims.withColumnRenamed(from_field, "_jterm"),
                         "key"))
     if mode == "none":

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .indexer import InvertedIndex
-from .search import _docs_where, _term_set_docs, _with_keys
+from .search import _docs_where, _sql_in, _term_set_docs, _with_keys
 
 __all__ = ["taxonomy_counts", "drill_down", "stats_percentiles",
            "collapse_results", "expand_groups",
@@ -37,7 +37,7 @@ def matching_docs(index: InvertedIndex, terms: list[str],
         docs = _term_set_docs(index, terms,
                               min_should_match=len(set(terms)))
     else:
-        docs = _docs_where(index, F.col("term").isin(terms))
+        docs = _docs_where(index, _sql_in("term", terms))
     return _with_keys(docs, index).select("key")
 
 

@@ -9,7 +9,7 @@ per-field idf/avgdl (the classic QueryParser's fielded-term syntax,
 Spark shape: one InvertedIndex per field over the same key space (per-field
 stats fall out for free — each field's segstats is its own), wrapped by
 MultiFieldIndex; a fielded disjunction is the float sum of per-field BM25
-frames grouped by doc key (``search._compound`` on the key).  Cross-field
+plans aggregated by doc key (``search._compound`` on the key).  Cross-field
 scoring matches Lucene: each (field, term) clause scores against ITS
 field's stats.
 """
@@ -21,9 +21,9 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from .indexer import InvertedIndex, build_index
-from .search import (_compound, _has_slots, _no_docs, _phrase_terms, _plan,
-                     _Scorer, _sql_in, _term_set_docs, _topk, _with_keys,
-                     phrase_score_frame)
+from .search import (_compound, _has_slots, _keyed, _no_docs, _phrase_frame,
+                     _phrase_terms, _plan, _Scorer, _Sql, _sql_in,
+                     _term_set_docs, _topk, _with_keys)
 from ..functions.tokenizer import get_analyzer
 
 __all__ = ["MultiFieldIndex", "build_multifield_index", "search_fielded",
@@ -113,18 +113,22 @@ def parse_fielded(query: str, default_field: str) -> list[tuple[str, str]]:
     return out
 
 
-def _keyed(idx: InvertedIndex, frame: DataFrame) -> DataFrame:
-    """A field's (seg, docid, score) frame on the shared doc key."""
-    return _with_keys(frame, idx).select("key", "score")
+def _keyed_scores(idx: InvertedIndex, plan: _Sql, cols: str = "") -> _Sql:
+    """A field's (seg, docid, score) plan on the shared doc key: (key,
+    score) and the SQL select items ``cols``."""
+    frames: dict = {}
+    return _Sql(f"SELECT key, score{cols} FROM {_keyed(plan, idx, frames)}",
+                frames)
 
 
-def _top(mfi: MultiFieldIndex, docs: DataFrame | None, k: int,
+def _top(mfi: MultiFieldIndex, docs: _Sql | None, k: int,
          precision: str) -> DataFrame:
     """Top-k (key, score) of a keyed compound, or of no docs for None."""
     if docs is None:
         idx = mfi.indexes[mfi.default_field]
         return _topk(_no_docs(idx, precision), idx, k, precision)
-    return docs.orderBy(F.desc("score"), F.asc("key")).limit(k)
+    return _plan(f"""SELECT key, score FROM ({docs.text})
+        ORDER BY score DESC, key ASC LIMIT {int(k)}""", **docs.frames)
 
 
 def search_fielded(mfi: MultiFieldIndex, query: str, k: int = 10,
@@ -140,8 +144,8 @@ def search_fielded(mfi: MultiFieldIndex, query: str, k: int = 10,
         for t in get_analyzer(idx.analyzer)(raw):
             by_field.setdefault(fname, []).append(t.term)
     docs = _compound(
-        [("should", _keyed(mfi.indexes[f],
-                           _term_set_docs(mfi.indexes[f], terms, precision)))
+        [("should", _keyed_scores(
+            mfi.indexes[f], _term_set_docs(mfi.indexes[f], terms, precision)))
          for f, terms in by_field.items()], precision, keys=("key",))
     return _top(mfi, docs, k, precision)
 
@@ -164,13 +168,14 @@ def search_edismax(mfi: MultiFieldIndex, query_text: str,
     already matching the main query gain the phrase score (the edismax
     ``pf`` re-ranking — ``ExtendedDismaxQParser.getPhraseQuery``).
 
-    Plan: per (word, field) score frames keyed by (doc key, word), ONE
-    ``search._compound`` dismax grouped by (key, word), then a should
-    compound of the word rows grouped by key with the resolved mm (each
-    matching word row is a matched clause); pf adds one should compound
-    of the phrase frames beside the main query as a must clause.
-    Cross-field alignment happens on the shared doc key (fields are
-    sibling indexes over the same corpus).
+    Plan: one statement.  Per (word, field) term clauses keyed by (doc
+    key, word), a ``search._compound`` dismax aggregated by (key, word),
+    then a should compound of the word rows aggregated by key with the
+    resolved mm (each matching word row is a matched clause); pf adds a
+    should compound of the phrase plans beside the main query as a must
+    clause, and a key-ordered ``LIMIT k`` collects.  Cross-field
+    alignment happens on the shared doc key (fields are sibling indexes
+    over the same corpus, each read through its own views).
     """
     fields, built = [], set()
     for ci, word in enumerate(query_text.split()):
@@ -180,9 +185,9 @@ def search_edismax(mfi: MultiFieldIndex, query_text: str,
                      if idx is not None else [])
             if terms:
                 built.add(ci)
-                fields.append(("should", _keyed(
-                    idx, _term_set_docs(idx, terms, precision, boost))
-                    .withColumn("clause", F.lit(ci))))
+                fields.append(("should", _keyed_scores(
+                    idx, _term_set_docs(idx, terms, precision, boost),
+                    f", {ci} AS clause")))
     # mm SPEC strings resolve against the number of OPTIONAL CLAUSES the
     # parser actually built, not the raw whitespace word count — a word
     # whose per-field analysis yields no terms (e.g. a stopword under an
@@ -201,8 +206,8 @@ def search_edismax(mfi: MultiFieldIndex, query_text: str,
         terms, offsets = (_phrase_terms(idx, query_text)
                           if idx is not None else ([], []))
         if len(terms) >= 2:
-            phrases.append(("should", _keyed(idx, phrase_score_frame(
-                idx, terms, precision, boost, offsets=offsets))))
+            phrases.append(("should", _keyed_scores(idx, _phrase_frame(
+                idx, [[t] for t in terms], offsets, precision, boost))))
     if docs is not None and phrases:
         docs = _compound([("must", docs), ("should", _compound(
             phrases, precision, keys=("key",)))], precision, keys=("key",))

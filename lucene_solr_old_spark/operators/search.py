@@ -39,14 +39,14 @@ weight steps.  A single query is a workload of one:
     ``ConjunctionScorer.java:28-120``); MUST_NOT is a left-anti join
     (``ReqExclScorer.java``).  wand.py's per-segment kernel is the other
     scorer over the same parsed workload and scorer state.
-  * compound -> :func:`_compound` combines child score frames — the
+  * compound -> :func:`_compound` combines child score plans — the
     classic, XML and surround parsers' clauses and edismax's per-field
-    and per-word frames — as BooleanQuery or DisjunctionMaxQuery: one
-    union, one ``groupBy`` of the document keys with the must /
-    minNrShouldMatch HAVING, one left-anti join of the MUST_NOT doc sets,
-    then :func:`_topk`.  :func:`_docs_where` is the non-scoring doc set of
-    a term predicate (constant-score multi-term clauses, filters,
-    MUST_NOT).
+    and per-word plans — as BooleanQuery or DisjunctionMaxQuery: one
+    UNION ALL aggregated by the document keys with the must /
+    minNrShouldMatch HAVING, one LEFT ANTI JOIN of the MUST_NOT doc sets,
+    and :func:`_topk`, all in one statement.  :func:`_docs_where` is the
+    non-scoring doc set of an SQL term predicate (constant-score
+    multi-term clauses, filters, MUST_NOT).
   * collect  ->:func:`_topk` is TakeOrderedAndProject (``ORDER BY score
     DESC, key ASC LIMIT k``: the per-leaf PQ + merge of
     ``TopScoreDocCollector.java:54-61``, ties to the lower doc key),
@@ -75,14 +75,17 @@ share one scorer:
 
 Building: each plan is Spark SQL text, built by :func:`_plan` with ONE
 ``spark.sql`` call over temporary views of its input frames, each frame
-registered once.  A plan that feeds another, as the scored docs feed
-:func:`_topk`, is an :class:`_Sql` its reader inlines, so a term or exact
-phrase query and its collector are one statement.  Only a Python UDF or
-``applyInPandas`` step goes through the DataFrame API, between two
-statements.  Chained DataFrame calls, where every ``F.col``, select
-element and lambda is a py4j round trip, cost a query 149-833 round trips
-and 72-180 ms of driver time on a 4-core host; a statement costs 5-6 of
-them, and a UDF or ``applyInPandas`` step about 40-50 more.
+registered once and named by the frame itself (:func:`_ref`), so a
+statement may read two indexes.  A plan that feeds another, as clauses
+feed a compound and scored docs feed :func:`_topk`, is an :class:`_Sql`
+its reader inlines, so a query of any number of clauses and its
+collector are one statement.  Only a Python UDF or ``applyInPandas``
+step (a sloppy phrase, a span tree) is built through the DataFrame API;
+it enters the statement as a frame.  Chained DataFrame calls, where every
+``F.col``, select element and lambda is a py4j round trip, cost a query
+149-1125 round trips and 72-580 ms of driver time on a 4-core host; a
+statement costs 5-6 of them, and a UDF or ``applyInPandas`` step about
+40-50 more.
 
 Scoring: per-term scores are computed in Spark float32 arithmetic (same IEEE
 ops as the Java engine).  Multi-term sums aggregate in float64 then round to
@@ -98,11 +101,10 @@ import json
 import math
 import uuid
 import weakref
-from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.bm25 import Bm25Stats
 from ..functions.smallfloat import byte315_to_float
@@ -171,7 +173,9 @@ def _sql_num(x: float, stype: str) -> str:
 
 def _sql_in(col: str, values: list[str]) -> str:
     """``col IN (...)`` over a literal list: Parquet receives it as a
-    pushed ``In`` filter."""
+    pushed ``In`` filter.  An empty list is ``false``."""
+    if not values:
+        return "false"
     return f"{col} IN ({', '.join(_sql_str(v) for v in values)})"
 
 
@@ -203,6 +207,15 @@ def _view(frame: DataFrame) -> str:
     return name
 
 
+def _ref(frame: DataFrame, frames: dict) -> str:
+    """``frame`` as a placeholder of a statement over ``frames``, keyed by
+    the frame itself: one statement may read two indexes' tables, or two
+    Python steps, and no frame takes another's place."""
+    name = f"f{id(frame)}"
+    frames[name] = frame
+    return "{" + name + "}"
+
+
 def _plan(sql: str, **frames: DataFrame) -> DataFrame:
     """The frame of the Spark SQL statement ``sql``, where ``{name}``
     stands for ``frames[name]`` (literals escape their braces)."""
@@ -225,18 +238,18 @@ class _Sql(NamedTuple):
     frames: dict
 
 
-def _build(plan: "_Sql | DataFrame") -> DataFrame:
-    """The frame of ``plan``."""
-    return plan if isinstance(plan, DataFrame) else _plan(plan.text,
-                                                          **plan.frames)
+def _build(plan: "_Sql | DataFrame | None") -> DataFrame | None:
+    """The frame of ``plan`` (None for None)."""
+    if plan is None or isinstance(plan, DataFrame):
+        return plan
+    return _plan(plan.text, **plan.frames)
 
 
 def _source(plan: "_Sql | DataFrame", frames: dict) -> str:
     """``plan`` as a FROM item: a subquery of its text, or a frame
     argument; adds the frames it reads to ``frames``."""
     if isinstance(plan, DataFrame):
-        frames["per_doc"] = plan
-        return "{per_doc}"
+        return _ref(plan, frames)
     frames.update(plan.frames)
     return f"({plan.text})"
 
@@ -297,18 +310,14 @@ def _parse(index: InvertedIndex, queries: list[tuple],
     return out
 
 
-def _no_docs_sql(index: InvertedIndex, precision: str) -> _Sql:
+def _no_docs(index: InvertedIndex, precision: str) -> _Sql:
     """The scored docs of a workload that matches nothing (its frames name
     the postings only for the session a statement of it alone runs in)."""
+    frames: dict = {}
+    _ref(index.postings, frames)
     return _Sql(f"""SELECT CAST(NULL AS INT) AS qid, CAST(NULL AS INT) AS seg,
         CAST(NULL AS INT) AS docid, CAST(NULL AS {_stype(precision)}) AS score,
-        CAST(NULL AS BIGINT) AS nmatched WHERE false""",
-                {"postings": index.postings})
-
-
-def _no_docs(index: InvertedIndex, precision: str) -> DataFrame:
-    """The scored-docs frame of a workload that matches nothing."""
-    return _build(_no_docs_sql(index, precision))
+        CAST(NULL AS BIGINT) AS nmatched WHERE false""", frames)
 
 
 class _BM25:
@@ -478,10 +487,12 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
     query's postings rows in one task, where the (qid, seg, docid)
     shuffle put only one query's matched documents in a task."""
     if not workload:
-        return _no_docs_sql(index, precision)
+        return _no_docs(index, precision)
     terms = sorted({t for q in workload for t in q.mults})
     scorer = _Scorer(index, terms, precision, similarity=similarity)
     st = scorer._sqltype
+    frames: dict = {}
+    postings = _ref(index.postings, frames)
     # fan each term's postings out to the queries holding it BEFORE the
     # postings explode: one map lookup per (seg, term) row; a repeated
     # clause scores once per clause: the term score times mult
@@ -499,7 +510,7 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
               FROM (SELECT qid, seg, mult, w, explode(postings) AS p
                     FROM (SELECT seg, postings,
                                  inline({scorer.fanout_map(workload)}[term])
-                          FROM {{postings}}
+                          FROM {postings}
                           WHERE {_sql_in('term', terms)}))
               {'DISTRIBUTE BY qid' if per_qid else ''})
         GROUP BY {', '.join(keys)}"""
@@ -511,79 +522,89 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
         sql = f"""SELECT * FROM ({sql}) LEFT ANTI JOIN (
             SELECT DISTINCT seg, docid
             FROM (SELECT seg, explode(postings.docid) AS docid
-                  FROM {{postings}} WHERE {_sql_in('term', ex_terms)}))
+                  FROM {postings} WHERE {_sql_in('term', ex_terms)}))
             USING (seg, docid)"""
-    return _Sql(sql, {"postings": index.postings})
+    return _Sql(sql, frames)
 
 
-def _docs_where(index: InvertedIndex, term_pred: Column) -> DataFrame:
+def _docs_where(index: InvertedIndex, term_pred: str) -> _Sql:
     """(seg, docid), each once, of the documents holding a term that
-    satisfies ``term_pred``: the non-scoring doc set of a multi-term
-    rewrite, a filter or a MUST_NOT clause."""
-    return (index.postings.where(term_pred)
-            .select("seg", F.explode("postings.docid").alias("docid"))
-            .distinct())
+    satisfies the SQL predicate ``term_pred``: the non-scoring doc set of
+    a multi-term rewrite, a filter or a MUST_NOT clause."""
+    frames: dict = {}
+    return _Sql(f"""SELECT DISTINCT seg, docid
+        FROM (SELECT seg, explode(postings.docid) AS docid
+              FROM {_ref(index.postings, frames)} WHERE {term_pred})""",
+                frames)
 
 
-def _boosted(score: Column, boost: float, precision: str) -> Column:
-    """``score`` times ``boost``, rounded to the precision's score type."""
+def _boosted(score: str, boost: float, precision: str) -> str:
+    """The SQL ``score`` times ``boost``, rounded to the precision's score
+    type."""
     stype = _stype(precision)
     if boost != 1.0:
-        score = score * F.lit(boost).cast(stype)
-    return score.cast(stype)
+        score = f"{score} * {_sql_num(boost, stype)}"
+    return f"CAST({score} AS {stype})"
+
+
+def _rescored(plan: "_Sql | DataFrame", score: str,
+              keys: tuple[str, ...] = ("seg", "docid")) -> _Sql:
+    """(keys..., score) of ``plan`` with the SQL ``score`` over its
+    columns."""
+    frames: dict = {}
+    return _Sql(f"SELECT {', '.join(keys)}, {score} AS score "
+                f"FROM {_source(plan, frames)}", frames)
 
 
 def _compound(clauses, precision: str = "float32", *,
               min_should_match: int = 0, tie: float | None = None,
               boost: float = 1.0, keys: tuple[str, ...] = ("seg", "docid")
-              ) -> DataFrame | None:
-    """BooleanQuery / DisjunctionMaxQuery over child score frames:
-    ``clauses`` is an iterable of ``(occur, frame)``, occur ``"must"``,
-    ``"should"`` or ``"must_not"``, and a ``None`` frame matches nothing.
-    The must and should frames (``keys``, score) are unioned once and
-    grouped once by ``keys``: the score is their sum
+              ) -> _Sql | None:
+    """BooleanQuery / DisjunctionMaxQuery over child score plans, as one
+    statement: ``clauses`` is an iterable of ``(occur, plan)``, occur
+    ``"must"``, ``"should"`` or ``"must_not"``, and a ``None`` plan
+    matches nothing.  The must and should plans (``keys``, score) are one
+    UNION ALL grouped by ``keys``: the score is their sum
     (``BooleanScorer.java``), or ``max + tie * (sum - max)``
     (``DisjunctionMaxScorer.java``) when ``tie`` is given, times
-    ``boost`` and rounded to the precision's type.  A document must match
-    every must clause and ``min_should_match`` should clauses (each
-    should row is one matched clause, so one frame may carry several per
-    document, as edismax's per-word rows do), and no must_not clause:
-    their frames' keys are one left-anti join
-    (``ReqExclScorer.java``).  Returns (keys..., score), or ``None`` when
-    the compound matches nothing: no scoring clause, or an empty must
-    clause, which stops a lazy ``clauses`` before it builds the rest."""
-    scoring, excluded, n_must = [], [], 0
-    for occur, frame in clauses:
+    ``boost`` and rounded to the precision's type.  The HAVING keeps the
+    documents matching every must clause and ``min_should_match`` should
+    clauses (each should row is one matched clause, so a plan may carry
+    several per document, as edismax's per-word rows do); the must_not
+    plans' keys are one LEFT ANTI JOIN (``ReqExclScorer.java``).
+    Returns (keys..., score), or ``None`` when the compound matches
+    nothing: no scoring clause, or an empty must clause, which stops a
+    lazy ``clauses`` before it builds the rest."""
+    cols = ", ".join(keys)
+    scoring, excluded, n_must, frames = [], [], 0, {}
+    for occur, plan in clauses:
         if occur == "must_not":
-            if frame is not None:
-                excluded.append(frame.select(*keys))
-        elif frame is None:
+            if plan is not None:
+                excluded.append(
+                    f"SELECT {cols} FROM {_source(plan, frames)}")
+        elif plan is None:
             if occur == "must":
                 return None
         else:
             must = int(occur == "must")
             n_must += must
-            scoring.append(frame.select(*keys, "score",
-                                        F.lit(must).alias("must")))
+            scoring.append(f"SELECT {cols}, score, {must} AS must "
+                           f"FROM {_source(plan, frames)}")
     if not scoring:
         return None
-    union = reduce(DataFrame.unionByName, scoring)
-    score = F.sum("score")
+    score = "sum(score)"
     if tie is not None:
-        score = F.max("score") + F.lit(tie).cast(_stype(precision)) * (
-            score - F.max("score"))
-    docs = union.groupBy(*keys).agg(score.alias("score"),
-                                    F.sum("must").alias("n_must"),
-                                    F.count("*").alias("n"))
-    if n_must:
-        docs = docs.where(F.col("n_must") == n_must)
-    if min_should_match:
-        docs = docs.where(F.col("n") - F.col("n_must") >= min_should_match)
+        score = (f"max(score) + {_sql_num(tie, _stype(precision))} * "
+                 f"({score} - max(score))")
+    sql = f"""SELECT {cols}, {score} AS score
+        FROM ({' UNION ALL '.join(scoring)}) GROUP BY {cols}
+        HAVING sum(must) = {n_must}
+           AND count(*) - sum(must) >= {int(min_should_match)}"""
     if excluded:
-        docs = docs.join(reduce(DataFrame.unionByName, excluded),
-                         list(keys), "left_anti")
-    return docs.select(*keys, _boosted(F.col("score"), boost, precision)
-                       .alias("score"))
+        sql = f"""SELECT * FROM ({sql})
+            LEFT ANTI JOIN ({' UNION ALL '.join(excluded)}) USING ({cols})"""
+    return _rescored(_Sql(sql, frames), _boosted("score", boost, precision),
+                     keys)
 
 
 def _single(index: InvertedIndex, query_text: str, mode: str = "OR",
@@ -597,7 +618,7 @@ def _single(index: InvertedIndex, query_text: str, mode: str = "OR",
 
 def _term_set_docs(index: InvertedIndex, terms: list[str],
                    precision: str = "float32", boost: float = 1.0,
-                   min_should_match: int = 0) -> DataFrame:
+                   min_should_match: int = 0) -> _Sql:
     """(seg, docid, score) of one BM25 clause over the term SET ``terms``
     (a repeated term scores once) at ``boost``, keeping the documents that
     match ``min_should_match`` of its terms: the term clause of the query
@@ -607,8 +628,7 @@ def _term_set_docs(index: InvertedIndex, terms: list[str],
     workload = [_Query(0, dict.fromkeys(sorted(set(terms)), 1),
                        max(1, min_should_match), boost)] if terms else []
     docs = _scored_docs(index, workload, precision, keys=("seg", "docid"))
-    return _plan(f"SELECT seg, docid, score FROM ({docs.text})",
-                 **docs.frames)
+    return _Sql(f"SELECT seg, docid, score FROM ({docs.text})", docs.frames)
 
 
 def _keyed(per_doc: "_Sql | DataFrame", index: InvertedIndex,
@@ -616,9 +636,8 @@ def _keyed(per_doc: "_Sql | DataFrame", index: InvertedIndex,
     """``per_doc`` joined to its documents' keys, as a FROM clause: the
     late materialization of the doc key, the PURPOSE_GET_FIELDS second
     round of SURVEY.md §3.3."""
-    frames["docmeta"] = index.docmeta
     return (f"{_source(per_doc, frames)} JOIN (SELECT seg, docid, key "
-            "FROM {docmeta}) USING (seg, docid)")
+            f"FROM {_ref(index.docmeta, frames)}) USING (seg, docid)")
 
 
 def _with_keys(per_doc: "_Sql | DataFrame",
@@ -731,9 +750,10 @@ def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
     return _topk(scored, index, k, precision)
 
 
-def _slot_positions(scorer: _Scorer, slots: list[list[str]], weight: float,
-                    required=()) -> str:
-    """The positional gather, as SQL over ``{postings}``: (seg, docid,
+def _slot_positions(index: InvertedIndex, scorer: _Scorer,
+                    slots: list[list[str]], weight: float,
+                    required=()) -> _Sql:
+    """The positional gather over ``index``'s postings: (seg, docid,
     norm, w, hits) for every document holding a term of ``slots`` and a
     hit in every slot of ``required``, where ``hits`` is the sorted
     array<struct<slot, pos>> of the document's postings, one per (slot,
@@ -741,6 +761,8 @@ def _slot_positions(scorer: _Scorer, slots: list[list[str]], weight: float,
     One term-pruned postings scan; each term fans out to every slot
     holding it, so a repeated phrase term feeds each of its slots."""
     terms = sorted({t for slot in slots for t in slot})
+    frames: dict = {}
+    postings = _ref(index.postings, frames)
     sql = f"""
         SELECT seg, p.docid AS docid, first(p.norm) AS norm, first(w) AS w,
                array_sort(collect_list(struct(slot, p.positions AS pos)))
@@ -748,11 +770,11 @@ def _slot_positions(scorer: _Scorer, slots: list[list[str]], weight: float,
         FROM (SELECT seg, slot, w, explode(postings) AS p
               FROM (SELECT seg, postings,
                            inline({scorer.slot_fanout(slots, weight)}[term])
-                    FROM {{postings}} WHERE {_sql_in('term', terms)}))
+                    FROM {postings} WHERE {_sql_in('term', terms)}))
         GROUP BY seg, p.docid"""
     if required:
         sql = f"SELECT * FROM ({sql}) WHERE {_has_slots(required)}"
-    return sql
+    return _Sql(sql, frames)
 
 
 def _has_slots(slot_ids) -> str:
@@ -794,8 +816,9 @@ def _udf_freq(docs: _Sql, udf) -> _Sql:
     """``docs`` with the column ``freq`` that ``udf`` computes from their
     hits: the one step of a plan applied through the DataFrame API."""
     frame = _build(docs)
-    return _Sql("SELECT * FROM {docs}",
-                {"docs": frame.withColumn("freq", udf(frame["hits"]))})
+    frame = frame.withColumn("freq", udf(frame["hits"]))
+    frames: dict = {}
+    return _Sql(f"SELECT * FROM {_ref(frame, frames)}", frames)
 
 
 def _phrase_frame(index: InvertedIndex, slots: list[list[str]],
@@ -806,10 +829,10 @@ def _phrase_frame(index: InvertedIndex, slots: list[list[str]],
     over every term of every slot.  slop>0 takes one term per slot."""
     flat = [t for slot in slots for t in slot]
     scorer = _Scorer(index, flat, precision, boost)
-    docs = _Sql(_slot_positions(
-        scorer, slots,
+    docs = _slot_positions(
+        index, scorer, slots,
         scorer.summed_weight([scorer.df(t) for t in flat], boost),
-        range(len(slots))), {"postings": index.postings})
+        range(len(slots)))
     if slop == 0:
         return _freq_scores(docs, scorer, "pfreq",
                             _exact_phrase_freq(offsets))

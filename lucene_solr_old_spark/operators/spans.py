@@ -28,13 +28,13 @@ weight.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
 from .search import (_build, _freq_scores, _no_docs, _phrase_frame, _Scorer,
-                     _slot_positions, _Sql, _term_set_docs, _topk, _udf_freq,
-                     search_terms)
+                     _slot_positions, _source, _Sql, _term_set_docs, _topk,
+                     _udf_freq, search_terms)
 
 __all__ = ["span_near", "span_query", "span_score_frame",
            "common_terms_query", "multi_phrase"]
@@ -151,11 +151,10 @@ def _span_scores(index: InvertedIndex, tree, precision: str) -> _Sql:
     names = sorted(set(_eval_terms(tree)))
     weight_terms = sorted(set(_tree_terms(tree)))
     scorer = _Scorer(index, weight_terms, precision)
-    docs = _Sql(_slot_positions(
-        scorer, [[t] for t in names],
+    docs = _slot_positions(
+        index, scorer, [[t] for t in names],
         scorer.summed_weight([scorer.df(t) for t in weight_terms]),
-        [names.index(t) for t in _required_terms(tree)]),
-        {"postings": index.postings})
+        [names.index(t) for t in _required_terms(tree)])
     udf = _span_tree_udf(tree, names, f32=(precision != "float64"))
     return _freq_scores(_udf_freq(docs, udf), scorer, "sfreq")
 
@@ -191,20 +190,16 @@ def common_terms_query(index: InvertedIndex, query_text: str,
     if not low:
         low, high = high, []
 
-    low_agg = _term_set_docs(index, low, precision).withColumnRenamed(
-        "score", "low_score")
+    per_doc = _term_set_docs(index, low, precision)
     if high:
-        high_agg = _term_set_docs(index, high, precision).withColumnRenamed(
-            "score", "high_score")
         # semi-restricted join: high-df postings only evaluated for docs in
         # the (small) low-df match set
-        joined = low_agg.join(high_agg, ["seg", "docid"], "left")
-        per_doc = joined.select(
-            "seg", "docid",
-            (F.col("low_score") + F.coalesce(F.col("high_score"),
-                                             F.lit(0.0))).alias("score"))
-    else:
-        per_doc = low_agg.withColumnRenamed("low_score", "score")
+        frames: dict = {}
+        per_doc = _Sql(f"""
+            SELECT seg, docid, l.score + coalesce(h.score, 0.0D) AS score
+            FROM {_source(per_doc, frames)} l LEFT JOIN {_source(
+                _term_set_docs(index, high, precision), frames)} h
+            USING (seg, docid)""", frames)
     return _topk(per_doc, index, k, precision)
 
 

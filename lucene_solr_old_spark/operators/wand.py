@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 
 from .codec import decode_block
 from .indexer import InvertedIndex
-from .search import (_no_docs, _parse, _plan, _Query, _Scorer, _sql_in,
+from .search import (_no_docs, _parse, _plan, _Query, _Scorer, _Sql, _sql_in,
                      _topk, _topk_per_qid)
 
 __all__ = ["wand_search", "batch_wand_search"]
@@ -185,7 +185,7 @@ def _conjunctive_kernel(term_rows, weights, cache, k, mults=None,
 
 
 def _kernel_docs(index: InvertedIndex, workload: list[_Query], k: int,
-                 precision: str = "float32") -> DataFrame:
+                 precision: str = "float32") -> "_Sql | DataFrame":
     """(qid, seg, docid, score): every query's per-segment top-k from the
     block-max kernel, in ONE applyInPandas over the segments."""
     if "blocks" not in index.postings.columns:

@@ -21,11 +21,12 @@ A re-derivation of the classic QueryParser's core surface
                             `a OR b` == `a b`, `NOT a` == `-a`
 
 Execution maps the BooleanQuery semantics (``search/BooleanQuery.java``)
-onto one DataFrame plan through ``search._compound``: every scoring clause
-contributes a (seg, docid, score) frame; a doc's score is the float sum of
-its matching clauses; docs must match all MUST clauses and no MUST_NOT
-clause, whose doc sets come from the same clause -> term-predicate
-dispatch.  Score = Lucene's sum-with-coord(1) (BM25 never overrides coord).
+onto one Spark SQL statement through ``search._compound``: every scoring
+clause contributes a (seg, docid, score) plan; a doc's score is the float
+sum of its matching clauses; docs must match all MUST clauses and no
+MUST_NOT clause, whose doc sets come from the same clause -> SQL
+term-predicate dispatch.  Score = Lucene's sum-with-coord(1) (BM25 never
+overrides coord).
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ import re
 from dataclasses import dataclass, field
 from itertools import chain
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.regexp import matches as _re_matches
 from ..functions.regexp import parse_regexp, to_java_regex
@@ -166,51 +167,62 @@ def parse_query(q: str) -> BoolQuery:
     return out
 
 
-def _wildcard_regex(pattern: str) -> str:
-    """Anchored Java regex of a wildcard: ``*`` any run, ``?`` one char."""
-    esc = re.escape(pattern)
-    return "^" + esc.replace(r"\*", ".*").replace(r"\?", ".") + "$"
+def _wildcard_pred(pattern: str) -> str:
+    """SQL term predicate of a wildcard: an anchored ``RLIKE``, ``*`` any
+    run, ``?`` one char."""
+    esc = re.escape(pattern).replace(r"\*", ".*").replace(r"\?", ".")
+    return f"term RLIKE {S._sql_str('^' + esc + '$')}"
 
 
-def _dict_terms(index: InvertedIndex, pred, limit: int) -> list[str]:
-    """The first ``limit`` dictionary terms satisfying ``pred``, in term
-    order: a capped expansion over the materialised term dictionary
-    (``InvertedIndex.terms_dict``), a TakeOrderedAndProject, so at most
-    ``limit`` rows are collected and no postings are read."""
+def _dict_terms(index: InvertedIndex, pred: str, limit: int) -> list[str]:
+    """The first ``limit`` dictionary terms satisfying the SQL ``pred``,
+    in term order: a capped expansion over the materialised term
+    dictionary (``InvertedIndex.terms_dict``), a TakeOrderedAndProject, so
+    at most ``limit`` rows are collected and no postings are read."""
     rows = (index.terms_dict().select("term").where(pred)
             .orderBy("term").limit(limit).collect())
     return [r["term"] for r in rows]
 
 
-def regexp_pred(pattern: str):
-    """Term predicate for a Lucene-RegExp pattern.
+_REGEXP_FN = "_fulltext_regexp"
+
+
+def _regexp_matches(terms, patterns):
+    """The full-grammar membership test of :func:`regexp_pred` over an
+    Arrow batch of terms, the pattern a literal."""
+    ast = parse_regexp(patterns.iloc[0]) if len(patterns) else None
+    return terms.map(lambda t: _re_matches(ast, t or ""))
+
+
+def regexp_pred(pattern: str, spark) -> str:
+    """Term predicate, as SQL, for a Lucene-RegExp pattern.
 
     Fast path: the pattern subset Java regex can express translates to an
-    anchored ``rlike`` (JVM-side, whole-stage codegen over the dictionary).
+    anchored ``RLIKE`` (JVM-side, whole-stage codegen over the dictionary).
     Full grammar (complement / intersection / non-fixed intervals):
-    evaluate exact language membership in an Arrow-batched pandas UDF —
-    still a dictionary-sized scan, never a doc scan.  Invalid syntax raises
-    RegexpSyntaxError instead of silently mis-parsing as Java regex."""
-    ast = parse_regexp(pattern)
-    jr = to_java_regex(ast)
+    evaluate exact language membership in an Arrow-batched pandas UDF,
+    registered once per session as a SQL function of (term, pattern
+    literal) — still a dictionary-sized scan, never a doc scan.  Invalid
+    syntax raises RegexpSyntaxError instead of silently mis-parsing as
+    Java regex."""
+    jr = to_java_regex(pattern)
     if jr is not None:
-        return F.col("term").rlike(jr)
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+        return f"term RLIKE {S._sql_str(jr)}"
+    if not getattr(spark, "_fulltext_regexp", False):
+        from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("boolean")
-    def _m(terms):
-        return terms.map(lambda t: _re_matches(ast, t or ""))
+        spark.udf.register(_REGEXP_FN,
+                           pandas_udf(_regexp_matches, "boolean"))
+        spark._fulltext_regexp = True
+    return f"{_REGEXP_FN}(term, {S._sql_str(pattern)})"
 
-    return _m(F.col("term"))
 
-
-def _range_pred(clause: RangeClause):
-    lo = (F.col("term") >= clause.lower if clause.include_lower
-          else F.col("term") > clause.lower)
-    hi = (F.col("term") <= clause.upper if clause.include_upper
-          else F.col("term") < clause.upper)
-    return lo & hi
+def _range_pred(r, col: str = "term", lit=S._sql_str) -> str:
+    """``col`` within the range ``r`` (a RangeClause or an XML range
+    filter), its bounds written as SQL literals by ``lit``."""
+    lo = ">=" if r.include_lower else ">"
+    hi = "<=" if r.include_upper else "<"
+    return f"{col} {lo} {lit(r.lower)} AND {col} {hi} {lit(r.upper)}"
 
 
 def _fuzzy_terms(index: InvertedIndex, clause: FuzzyClause) -> list[str]:
@@ -245,68 +257,65 @@ def _fuzzy_terms(index: InvertedIndex, clause: FuzzyClause) -> list[str]:
     return sorted(r["term"] for r in rows)
 
 
-def _clause_pred(index: InvertedIndex, clause) -> tuple[Column | None,
+def _clause_pred(index: InvertedIndex, clause) -> tuple[str | None,
                                                        list[str]]:
-    """(term predicate, scored terms) of a clause.  A constant-score
+    """(SQL term predicate, scored terms) of a clause.  A constant-score
     multi-term clause (wildcard, regexp, range) is its dictionary
     predicate with no scored terms; a term, phrase or fuzzy clause is
     ``term IN`` its analysed or fuzzy-expanded terms.  The predicate is
     ``None`` when the clause matches nothing."""
     if isinstance(clause, WildcardClause):
-        return F.col("term").rlike(_wildcard_regex(clause.pattern)), []
+        return _wildcard_pred(clause.pattern), []
     if isinstance(clause, RegexpClause):
-        return regexp_pred(clause.pattern), []
+        return regexp_pred(clause.pattern, index.postings.sparkSession), []
     if isinstance(clause, RangeClause):
         return _range_pred(clause), []
     if isinstance(clause, FuzzyClause):
         terms = _fuzzy_terms(index, clause)
     else:
         terms = [t.term for t in get_analyzer(index.analyzer)(clause.text)]
-    return (F.expr(S._sql_in("term", terms)) if terms else None), terms
+    return (S._sql_in("term", terms) if terms else None), terms
 
 
-def _is_phrase(clause, terms: list[str]) -> bool:
-    """A phrase clause of several terms: it matches as a phrase."""
-    return isinstance(clause, PhraseClause) and len(terms) > 1
+def _phrase(index: InvertedIndex, clause, terms: list[str],
+            precision: str = "float32") -> S._Sql | None:
+    """The phrase plan of a phrase clause of several terms, else None."""
+    if not isinstance(clause, PhraseClause) or len(terms) < 2:
+        return None
+    return S._phrase_frame(index, [[t] for t in terms],
+                           list(range(len(terms))), precision, clause.boost,
+                           clause.slop)
 
 
 def _clause_frame(index: InvertedIndex, clause,
-                  precision: str) -> DataFrame | None:
-    """-> frame(seg, docid, score) | None."""
+                  precision: str) -> S._Sql | None:
+    """-> plan(seg, docid, score) | None."""
     pred, terms = _clause_pred(index, clause)
     if pred is None:
         return None
     if not terms:
         # constant-score multi-term rewrite: score = boost per matching doc
-        return S._docs_where(index, pred).withColumn(
-            "score", F.lit(clause.boost).cast(S._stype(precision)))
-    if _is_phrase(clause, terms):
-        return S.phrase_score_frame(index, terms, precision, clause.boost,
-                                    slop=clause.slop).select(
-            "seg", "docid", "score")
-    return S._term_set_docs(index, terms, precision, clause.boost)
+        return S._rescored(S._docs_where(index, pred),
+                           S._sql_num(clause.boost, S._stype(precision)))
+    return (_phrase(index, clause, terms, precision)
+            or S._term_set_docs(index, terms, precision, clause.boost))
 
 
-def _clause_docs(index: InvertedIndex, clause) -> DataFrame | None:
+def _clause_docs(index: InvertedIndex, clause) -> S._Sql | None:
     """The doc set of a MUST_NOT clause, or None when it matches nothing:
     a phrase excludes the documents the phrase matches at its slop, any
     other clause the documents holding a term of its predicate."""
     pred, terms = _clause_pred(index, clause)
     if pred is None:
         return None
-    if _is_phrase(clause, terms):
-        return S.phrase_score_frame(index, terms,
-                                    slop=clause.slop).select("seg", "docid")
-    return S._docs_where(index, pred)
+    return _phrase(index, clause, terms) or S._docs_where(index, pred)
 
 
-def bool_score_frame(index: InvertedIndex, query,
-                     precision: str = "float32") -> DataFrame | None:
-    """BooleanQuery semantics -> score frame(seg, docid, score), or
-    ``None`` when the query matches nothing (empty after analysis, or a
-    MUST clause that analyzes to nothing).  Shared by :func:`execute`
-    and the XML parser's ``UserQuery``/nested-boolean execution
-    (plans/xml.py)."""
+def _bool_plan(index: InvertedIndex, query,
+               precision: str = "float32") -> S._Sql | None:
+    """BooleanQuery semantics -> plan(seg, docid, score), or ``None`` when
+    the query matches nothing (empty after analysis, or a MUST clause that
+    analyzes to nothing)."""
     if isinstance(query, str):
         query = parse_query(query)
     clauses = chain(
@@ -318,13 +327,19 @@ def bool_score_frame(index: InvertedIndex, query,
                        min_should_match=query.min_should_match)
 
 
+def bool_score_frame(index: InvertedIndex, query,
+                     precision: str = "float32") -> DataFrame | None:
+    """The frame of :func:`_bool_plan`, shared with the XML parser's
+    ``UserQuery`` (plans/xml.py)."""
+    return S._build(_bool_plan(index, query, precision))
+
+
 def execute(index: InvertedIndex, query, k: int = 10,
             precision: str = "float32") -> DataFrame:
     """Run a BoolQuery (or raw query string) -> top-k (key, score)."""
-    frame = bool_score_frame(index, query, precision)
-    if frame is None:
-        frame = S._no_docs(index, precision)
-    return S._topk(frame, index, k, precision)
+    plan = _bool_plan(index, query, precision)
+    return S._topk(plan or S._no_docs(index, precision), index, k,
+                   precision)
 
 
 def complex_phrase_search(index: InvertedIndex, phrase: str, k: int = 10,
@@ -350,9 +365,8 @@ def complex_phrase_search(index: InvertedIndex, phrase: str, k: int = 10,
     for w in phrase.split():
         fm = _FUZZY_RE.match(w)
         if "*" in w or "?" in w:
-            terms = _dict_terms(
-                index, F.col("term").rlike(_wildcard_regex(w.lower())),
-                max_expansions)
+            terms = _dict_terms(index, _wildcard_pred(w.lower()),
+                                max_expansions)
         elif fm and fm.group("edits") != "0":
             edits = int(fm.group("edits") or 2)
             terms = _fuzzy_terms(index, FuzzyClause(

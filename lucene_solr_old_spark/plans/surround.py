@@ -46,12 +46,12 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..operators import search as S
 from ..operators.indexer import InvertedIndex
-from ..operators.spans import span_score_frame
-from .query import _dict_terms, _wildcard_regex
+from ..operators.spans import _span_scores
+from .query import _dict_terms, _wildcard_pred
 
 __all__ = ["ParseException", "TooManyBasicQueries", "parse_surround",
            "surround_search", "surround_score_frame"]
@@ -357,10 +357,8 @@ def _expand(index: InvertedIndex, node, budget: _Budget) -> list[str]:
     the persisted term dictionary (``InvertedIndex.terms_dict``), capped
     at the basic-query budget (TakeOrdered over terms; never a doc scan,
     and the dictionary's aggregate is shared by every expansion)."""
-    if node[0] == "prefix":
-        pred = F.col("term").startswith(node[1].lower())
-    else:
-        pred = F.col("term").rlike(_wildcard_regex(node[1].lower()))
+    pred = (f"startswith(term, {S._sql_str(node[1].lower())})"
+            if node[0] == "prefix" else _wildcard_pred(node[1].lower()))
     terms = _dict_terms(index, pred, budget.limit + 1)
     budget.add(len(terms))
     return terms
@@ -404,10 +402,10 @@ def _to_span(index, node, budget) -> tuple[object | None, float]:
 
 
 def _frame(index: InvertedIndex, node, budget: _Budget,
-           precision: str) -> DataFrame | None:
-    """-> (seg, docid, score), or None when the subtree matches nothing.
-    Every child is built (and charged to the budget) before its parent
-    combines them."""
+           precision: str) -> S._Sql | None:
+    """-> plan(seg, docid, score), or None when the subtree matches
+    nothing.  Every child is built (and charged to the budget) before its
+    parent combines them."""
     kind = node[0]
     if kind == "term":
         budget.add(1)
@@ -419,9 +417,8 @@ def _frame(index: InvertedIndex, node, budget: _Budget,
         tree, mult = _to_span(index, node, budget)
         if tree is None:
             return None
-        frame = span_score_frame(index, tree, precision=precision)
-        return frame.select("seg", "docid", S._boosted(
-            F.col("score"), mult, precision).alias("score"))
+        return S._rescored(_span_scores(index, tree, precision),
+                           S._boosted("score", mult, precision))
     if kind in ("or", "and", "not"):
         # OrQuery: all SHOULD; AndQuery: all MUST; NotQuery: first MUST,
         # rest MUST_NOT
@@ -433,28 +430,30 @@ def _frame(index: InvertedIndex, node, budget: _Budget,
         # single-field engine: names parse for syntax compat, then drop
         return _frame(index, node[1], budget, precision)
     if kind == "boost":
-        frame = _frame(index, node[1], budget, precision)
-        return None if frame is None else frame.select(
-            "seg", "docid",
-            S._boosted(F.col("score"), node[2], precision).alias("score"))
+        plan = _frame(index, node[1], budget, precision)
+        return None if plan is None else S._rescored(
+            plan, S._boosted("score", node[2], precision))
     raise ParseException(f"unknown node {kind!r}")
+
+
+def _score_plan(index: InvertedIndex, query: str, precision: str,
+                max_basic_queries: int) -> S._Sql:
+    """(seg, docid, score) of every doc matching the surround query."""
+    plan = _frame(index, parse_surround(query), _Budget(max_basic_queries),
+                  precision)
+    return plan or S._rescored(S._no_docs(index, precision), "score")
 
 
 def surround_score_frame(index: InvertedIndex, query: str,
                          precision: str = "float32",
                          max_basic_queries: int = 1024) -> DataFrame:
     """(seg, docid, score) for every doc matching the surround query."""
-    ast = parse_surround(query)
-    frame = _frame(index, ast, _Budget(max_basic_queries), precision)
-    if frame is None:
-        return S._no_docs(index, precision).select("seg", "docid", "score")
-    return frame
+    return S._build(_score_plan(index, query, precision, max_basic_queries))
 
 
 def surround_search(index: InvertedIndex, query: str, k: int = 10,
                     precision: str = "float32",
                     max_basic_queries: int = 1024) -> DataFrame:
     """Parse + execute a surround query -> top-k (key, score)."""
-    frame = surround_score_frame(index, query, precision,
-                                 max_basic_queries)
-    return S._topk(frame, index, k, precision)
+    return S._topk(_score_plan(index, query, precision, max_basic_queries),
+                   index, k, precision)

@@ -51,14 +51,14 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field as dfield
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.tokenizer import get_analyzer
 from ..operators import search as S
 from ..operators.indexer import InvertedIndex
-from ..operators.spans import span_score_frame
-from .query import (FuzzyClause, RangeClause, _clause_frame, _range_pred,
-                    bool_score_frame, parse_query)
+from ..operators.spans import _span_scores
+from .query import (FuzzyClause, _bool_plan, _clause_frame, _range_pred,
+                    parse_query)
 
 __all__ = ["ParserException", "parse_xml_query", "xml_score_frame",
            "xml_search"]
@@ -353,10 +353,6 @@ def _parse_filter_elem(e, inh_field):
 # execute
 # --------------------------------------------------------------------------
 
-def _all_docs(index: InvertedIndex) -> DataFrame:
-    return index.docmeta.select("seg", "docid")
-
-
 def _resolve_orterms(tree, analyzer):
     """SpanOrTerms text -> ("or", [term...]) with the index analyzer."""
     kind = tree[0]
@@ -383,10 +379,9 @@ class _Executor:
                  attrs: DataFrame | None, content_field: str | None):
         self.index = index
         self.precision = precision
-        self.stype = "double" if precision == "float64" else "float"
+        self.stype = S._stype(precision)
         self.attrs = attrs
         self.content_field = content_field
-        self._attr_docs = None
 
     # -- field routing ----------------------------------------------------
 
@@ -397,20 +392,16 @@ class _Executor:
                 f"field {field!r} is not the indexed content field "
                 f"{self.content_field!r}")
 
-    def _attr_frame(self) -> DataFrame:
-        """attrs joined to (seg, docid) through docmeta.key."""
-        if self._attr_docs is None:
-            if self.attrs is None:
-                raise ParserException(
-                    "metadata filter requires attrs= DataFrame")
-            self._attr_docs = self.index.docmeta.select(
-                "seg", "docid", "key").join(self.attrs, "key")
-        return self._attr_docs
+    # -- scoring plans ----------------------------------------------------
 
-    # -- scoring frames ---------------------------------------------------
+    def _boost(self, plan: S._Sql, boost: float) -> S._Sql:
+        """(seg, docid, score) of ``plan``, the score times ``boost``
+        unless that is 1."""
+        return S._rescored(plan, "score" if boost == 1.0 else
+                           S._boosted("score", boost, self.precision))
 
-    def frame(self, node) -> DataFrame | None:
-        """-> (seg, docid, score) or None for a match-nothing node."""
+    def frame(self, node) -> S._Sql | None:
+        """-> plan(seg, docid, score) or None for a match-nothing node."""
         if isinstance(node, XTerm):
             self._check_content(node.field)
             return S._term_set_docs(self.index, [node.term],
@@ -424,8 +415,8 @@ class _Executor:
             return S._term_set_docs(self.index, terms, self.precision,
                                     node.boost, node.min_should_match)
         if isinstance(node, XMatchAll):
-            return _all_docs(self.index).withColumn(
-                "score", F.lit(node.boost).cast(self.stype))
+            return S._rescored(self.index.docmeta,
+                               S._sql_num(node.boost, self.stype))
         if isinstance(node, XBool):
             return S._compound(
                 ((occ, self.frame(c)) for occ, c in node.clauses),
@@ -441,18 +432,19 @@ class _Executor:
             if node.boost != 1.0:
                 for cl in bq.must + bq.should:
                     cl.boost *= node.boost
-            return bool_score_frame(self.index, bq, self.precision)
+            return _bool_plan(self.index, bq, self.precision)
         if isinstance(node, XConstantScore):
-            docs = self.filter_docs(node.filt)
-            return docs.withColumn("score",
-                                   F.lit(node.boost).cast(self.stype))
+            return S._rescored(self.filter_docs(node.filt),
+                               S._sql_num(node.boost, self.stype))
         if isinstance(node, XFiltered):
             f = self.frame(node.query)
             if f is None:
                 return None
-            docs = self.filter_docs(node.filt)
-            return self._boosted(
-                f.join(docs, ["seg", "docid"], "left_semi"), node.boost)
+            frames: dict = {}
+            return self._boost(S._Sql(
+                f"SELECT * FROM {S._source(f, frames)} LEFT SEMI JOIN "
+                f"{S._source(self.filter_docs(node.filt), frames)} "
+                "USING (seg, docid)", frames), node.boost)
         if isinstance(node, XBoosting):
             f = self.frame(node.match)
             if f is None:
@@ -460,33 +452,27 @@ class _Executor:
             ctx = self.frame(node.context)
             if ctx is None:
                 return f
-            ctx_docs = ctx.select("seg", "docid", F.lit(1).alias("in_ctx"))
-            return (f.join(ctx_docs, ["seg", "docid"], "left")
-                    .withColumn(
-                        "score",
-                        F.when(F.col("in_ctx").isNotNull(),
-                               S._boosted(F.col("score"), node.demote_boost,
-                                          self.precision))
-                        .otherwise(F.col("score")))
-                    .select("seg", "docid", "score"))
+            frames = {}
+            demoted = S._boosted("score", node.demote_boost, self.precision)
+            return S._Sql(f"""
+                SELECT seg, docid,
+                       CASE WHEN in_ctx IS NOT NULL THEN {demoted}
+                            ELSE score END AS score
+                FROM {S._source(f, frames)} LEFT JOIN (
+                    SELECT seg, docid, 1 AS in_ctx
+                    FROM {S._source(ctx, frames)}) USING (seg, docid)""",
+                          frames)
         if isinstance(node, XFuzzyLikeThis):
             return self._fuzzy_like_this_frame(node)
         if isinstance(node, XSpan):
             self._check_content(node.field)
             analyzer = get_analyzer(self.index.analyzer)
             tree = _resolve_orterms(node.tree, analyzer)
-            frame = span_score_frame(self.index, tree, self.precision)
-            return self._boosted(frame.select("seg", "docid", "score"),
-                                 node.boost)
+            return self._boost(_span_scores(self.index, tree, self.precision),
+                               node.boost)
         raise ParserException(f"unsupported query node {type(node).__name__}")
 
-    def _boosted(self, frame: DataFrame, boost: float) -> DataFrame:
-        if boost == 1.0:
-            return frame
-        return frame.withColumn(
-            "score", S._boosted(F.col("score"), boost, self.precision))
-
-    def _fuzzy_like_this_frame(self, node: XFuzzyLikeThis) -> DataFrame | None:
+    def _fuzzy_like_this_frame(self, node: XFuzzyLikeThis) -> S._Sql | None:
         # FuzzyLikeThisQuery.java flattens the per-field variants into a
         # prioritized disjunction; simplification (documented): each
         # analyzed token fuzzy-expands (maxEdits from minSimilarity as
@@ -505,48 +491,41 @@ class _Executor:
 
     # -- filters ----------------------------------------------------------
 
-    def filter_docs(self, filt) -> DataFrame:
-        """-> distinct (seg, docid) matching the filter."""
+    def filter_docs(self, filt) -> S._Sql:
+        """-> plan of the distinct (seg, docid) matching the filter (and
+        other columns, which its readers drop)."""
         if isinstance(filt, XRangeFilter):
-            af = self.attrs is not None and filt.field in self.attrs.columns
-            if af:
-                col = F.col(filt.field)
-                if filt.numeric:
-                    col = col.cast("double")
-                    lo, hi = float(filt.lower), float(filt.upper)
-                else:
-                    lo, hi = filt.lower, filt.upper
-                pred = ((col >= lo if filt.include_lower else col > lo)
-                        & (col <= hi if filt.include_upper else col < hi))
-                return (self._attr_frame().where(pred)
-                        .select("seg", "docid").distinct())
-            # indexed content-field term range (TermRangeFilter)
-            self._check_content(filt.field)
-            return S._docs_where(self.index, _range_pred(RangeClause(
-                filt.lower, filt.upper, filt.include_lower,
-                filt.include_upper)))
+            if self.attrs is None or filt.field not in self.attrs.columns:
+                # indexed content-field term range (TermRangeFilter)
+                self._check_content(filt.field)
+                return S._docs_where(self.index, _range_pred(filt))
+            col = f"`{filt.field}`"
+            pred = (_range_pred(filt, f"CAST({col} AS double)",
+                                lambda v: S._sql_num(float(v), "double"))
+                    if filt.numeric else _range_pred(filt, col))
+            frames: dict = {}
+            return S._Sql(f"""SELECT DISTINCT seg, docid
+                FROM (SELECT seg, docid, key
+                      FROM {S._ref(self.index.docmeta, frames)})
+                JOIN {S._ref(self.attrs, frames)} USING (key)
+                WHERE {pred}""", frames)
         if isinstance(filt, XTermsFilter):
             self._check_content(filt.field)
             analyzer = get_analyzer(self.index.analyzer)
             terms = [t.term for t in analyzer(filt.text)]
-            if not terms:
-                return _all_docs(self.index).limit(0)
-            return S._docs_where(self.index, F.expr(S._sql_in("term", terms)))
+            return S._docs_where(self.index, S._sql_in("term", terms))
         if isinstance(filt, XBoolFilter):
             # BooleanFilter: every must filter, one should filter when
             # there are any, no mustnot filter; all documents when only
             # mustnot filters are given
-            clauses = [(occ, self.filter_docs(child)
-                        .withColumn("score", F.lit(0.0)))
+            clauses = [(occ, S._rescored(self.filter_docs(child), "0.0D"))
                        for occ, child in filt.clauses]
             occurs = {occ for occ, _ in clauses}
             if not occurs & {"must", "should"}:
-                clauses.append(("must", _all_docs(self.index)
-                                .withColumn("score", F.lit(0.0))))
-            return S._compound(
-                clauses, self.precision,
-                min_should_match=int("should" in occurs)).select(
-                "seg", "docid")
+                clauses.append(("must", S._rescored(self.index.docmeta,
+                                                    "0.0D")))
+            return S._compound(clauses, self.precision,
+                               min_should_match=int("should" in occurs))
         raise ParserException(
             f"unsupported filter node {type(filt).__name__}")
 
@@ -556,6 +535,10 @@ def xml_score_frame(index: InvertedIndex, xml, precision: str = "float32",
                     content_field: str | None = None) -> DataFrame | None:
     """Parse (if a string) and score an XML query -> (seg, docid, score)
     frame, or None when it matches nothing."""
+    return S._build(_xml_plan(index, xml, precision, attrs, content_field))
+
+
+def _xml_plan(index, xml, precision, attrs, content_field) -> S._Sql | None:
     node = parse_xml_query(xml) if isinstance(xml, str) else xml
     return _Executor(index, precision, attrs, content_field).frame(node)
 
@@ -565,7 +548,6 @@ def xml_search(index: InvertedIndex, xml, k: int = 10,
                attrs: DataFrame | None = None,
                content_field: str | None = None) -> DataFrame:
     """CoreParser.parse + IndexSearcher.search: top-k (key, score)."""
-    frame = xml_score_frame(index, xml, precision, attrs, content_field)
-    if frame is None:
-        frame = S._no_docs(index, precision)
-    return S._topk(frame, index, k, precision)
+    plan = _xml_plan(index, xml, precision, attrs, content_field)
+    return S._topk(plan or S._no_docs(index, precision), index, k,
+                   precision)

@@ -13,6 +13,11 @@ from lucene_solr_old_spark.operators import search as S
 from lucene_solr_old_spark.operators import spans as SP
 from lucene_solr_old_spark.operators import wand as W
 from lucene_solr_old_spark.operators.batch import batch_search
+from lucene_solr_old_spark.operators.multifield import (search_edismax,
+                                                        search_fielded)
+from lucene_solr_old_spark.plans.query import execute
+from lucene_solr_old_spark.plans.surround import surround_search
+from lucene_solr_old_spark.plans.xml import xml_search
 
 
 @pytest.fixture(scope="module")
@@ -77,6 +82,58 @@ def test_batch_build_round_trips(name, loaded, py4j_calls_per_call):
     four = py4j_calls_per_call(lambda: build(plain, comp, _workload(4)))
     sixteen = py4j_calls_per_call(lambda: build(plain, comp, _workload(16)))
     assert four == sixteen and four <= BUDGET, (four, sixteen)
+
+
+def _xml_should(words: list[str]) -> str:
+    return "<BooleanQuery>" + "".join(
+        f'<Clause occurs="should"><TermsQuery>{w}</TermsQuery></Clause>'
+        for w in words) + "</BooleanQuery>"
+
+
+# compound queries of one clause per word
+COMPOUNDS = {
+    "execute": lambda p, mfi, ws: execute(p, " ".join(ws)),
+    "xml_search": lambda p, mfi, ws: xml_search(p, _xml_should(ws)),
+    "surround_search": lambda p, mfi, ws: surround_search(p, " OR ".join(ws)),
+    "search_fielded": lambda p, mfi, ws: search_fielded(
+        mfi, " ".join(f"raw:{w}" if i % 2 else w for i, w in enumerate(ws))),
+    "search_edismax": lambda p, mfi, ws: search_edismax(
+        mfi, " ".join(ws), {"body": 1.0, "raw": 2.0}, tie=0.1, mm="50%",
+        pf={"body": 1.5}),
+}
+
+
+@pytest.mark.parametrize("name", sorted(COMPOUNDS))
+def test_compound_build_round_trips(name, loaded, fingerprint_indexes,
+                                    py4j_calls_per_call):
+    """A compound query is one statement, whatever its number of clauses."""
+    plain, _comp = loaded
+    mfi = fingerprint_indexes[3]
+    build = COMPOUNDS[name]
+    for _ in range(2):
+        build(plain, mfi, TWO.split())
+    two = py4j_calls_per_call(lambda: build(plain, mfi, TWO.split()))
+    six = py4j_calls_per_call(lambda: build(plain, mfi, SIX.split()))
+    assert two == six and two <= BUDGET, (two, six)
+
+
+def test_full_grammar_regexp_is_one_registered_function(loaded, spark,
+                                                        py4j_calls_per_call):
+    """The full-grammar regexp predicate is a SQL function registered once
+    per session, its pattern a literal: a new pattern builds no new
+    Python function, also after ``get_spark`` returns the session again."""
+    from lucene_solr_old_spark.session import get_spark
+
+    plain, _comp = loaded
+    execute(plain, "/run[a-z]*&~(run)/")
+    one = py4j_calls_per_call(lambda: execute(plain, "/run[a-z]*&~(run)/"))
+    two = py4j_calls_per_call(
+        lambda: execute(plain, "/meet[a-z]*&~(meet)/"))
+    assert get_spark("tests", master="local[4]", shuffle_partitions=8) \
+        is spark
+    again = py4j_calls_per_call(
+        lambda: execute(plain, "/(run|meet)[a-z]*&~(running)/"))
+    assert one == two == again and one <= BUDGET, (one, two, again)
 
 
 @pytest.mark.parametrize("run", [
