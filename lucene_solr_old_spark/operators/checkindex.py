@@ -9,8 +9,10 @@ Checks:
     sums, so checking them checks every term-statistics reader);
     docids strictly increasing; freqs >= 1; positions (if stored) sorted,
     len(positions) == freq
-  * per-segment: docids dense 0..maxDoc-1; keys unique; segstats.max_doc ==
-    count(docmeta); segstats.sum_ttf == sum(doclen)
+  * per-segment: docids dense 0..maxDoc-1; keys unique; docids ascend
+    with keys (the top-k collectors cut each segment by docid and break
+    score ties by key); segstats.max_doc == count(docmeta);
+    segstats.sum_ttf == sum(doclen)
   * cross-table: every posting docid exists in docmeta; norm byte equals
     the quantization of the doc's stored doclen
   * compressed indexes: block metadata (first/last/count/max_tf/max_norm)
@@ -21,7 +23,7 @@ Returns a dict of violation counts; all-zero == healthy index.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from ..functions.smallfloat import doclen_to_norm
 from .indexer import InvertedIndex
@@ -161,6 +163,11 @@ def validate_index(index: InvertedIndex,
     ).collect()[0]
     out["dup_docs"] = int(bad["dup_docs"] or 0)
     out["non_dense_docids"] = int(bad["non_dense_docids"] or 0)
+    # a document whose key does not follow its docid predecessor's
+    prev = F.lag("key").over(Window.partitionBy("seg").orderBy("docid"))
+    out["keys_not_ascending"] = int(
+        meta.select((F.col("key") <= prev).alias("bad"))
+        .where("bad").count())
 
     # norm quantization consistency
     lens = [int(x) for x in range(0, 4097)]

@@ -43,6 +43,10 @@ log = logging.getLogger(__name__)
 # driver: about 100 MB of Arrow buffers and NumPy arrays at the limit.  A
 # larger dictionary is seeked term-pruned on every call.
 _RESIDENT_TERM_ROWS = 1 << 20
+# The most docmeta rows whose (seg, docid, key) doc_keys keeps resident on
+# the driver, at about 100 bytes per key.  A larger index reads the keys
+# of each call's documents from docmeta.
+_RESIDENT_KEY_ROWS = 1 << 20
 
 
 @dataclass
@@ -57,6 +61,12 @@ class InvertedIndex:
     Each index object reads them once and keeps the sums on the driver:
     the collection stats, and the term dictionary as sorted NumPy arrays
     when it has at most ``_RESIDENT_TERM_ROWS`` rows (:meth:`term_stats`).
+    It keeps the doc keys too, per segment, when docmeta has at most
+    ``_RESIDENT_KEY_ROWS`` rows (:meth:`doc_keys`).
+
+    Inside every segment, docids ascend with keys: the top-k collectors
+    cut each segment by docid and rank ties by key
+    (``checkindex.validate_index`` checks the order).
     """
 
     postings: DataFrame
@@ -65,11 +75,15 @@ class InvertedIndex:
     with_positions: bool = True
     analyzer: str = "english"
     with_offsets: bool = False
+    # (maxDoc, sumTotalTermFreq, segments)
     _stats: tuple | None = field(default=None, repr=False)
     _terms_dict: DataFrame | None = field(default=None, repr=False)
     # the resident dictionary: (sorted terms, df, ttf) summed over the
     # segments; () when it is over _RESIDENT_TERM_ROWS, None until read
     _term_arrays: tuple | None = field(default=None, repr=False)
+    # the resident keys: seg -> (ascending docids, their keys); () when
+    # docmeta is over _RESIDENT_KEY_ROWS, None until read
+    _key_arrays: dict | tuple | None = field(default=None, repr=False)
     # the build's persisted fused-stage output, released by unpersist()
     _fused: DataFrame | None = field(default=None, repr=False)
 
@@ -81,8 +95,13 @@ class InvertedIndex:
         if self._stats is None:
             rows = self.segstats.select("max_doc", "sum_ttf").collect()
             self._stats = (sum(int(r["max_doc"]) for r in rows),
-                           sum(int(r["sum_ttf"]) for r in rows))
-        return self._stats
+                           sum(int(r["sum_ttf"]) for r in rows), len(rows))
+        return self._stats[:2]
+
+    def num_segments(self) -> int:
+        """The number of segments (read with :meth:`collection_stats`)."""
+        self.collection_stats()
+        return self._stats[2]
 
     def terms_dict(self) -> DataFrame:
         """(term, df, ttf) — the GLOBAL term dictionary, for multi-term
@@ -149,6 +168,82 @@ class InvertedIndex:
         return (sums.column("term").to_numpy(zero_copy_only=False),
                 sums.column("df_sum").to_numpy(),
                 sums.column("ttf_sum").to_numpy())
+
+    def read_resident(self) -> None:
+        """Read whichever of the term dictionary and the doc keys is not
+        resident yet, the two reads concurrently: a query needs both, the
+        dictionary to weigh its terms and the keys to rank its hits."""
+        reads = []
+        if self._term_arrays is None:
+            reads.append(lambda: setattr(self, "_term_arrays",
+                                         self._read_term_arrays()))
+        if self._key_arrays is None:
+            reads.append(lambda: setattr(self, "_key_arrays",
+                                         self._read_key_arrays()))
+        if len(reads) > 1:
+            _run_concurrently(self.docmeta.sparkSession, *reads)
+        elif reads:
+            reads[0]()
+
+    def doc_keys(self, segs: np.ndarray, docids: np.ndarray) -> np.ndarray:
+        """The keys of the documents ``(segs[i], docids[i])``: the stored
+        fields of the winners only, Solr's PURPOSE_GET_FIELDS round
+        (SURVEY.md §3.3).  The first call reads docmeta's (seg, docid,
+        key) columns once, in one column-pruned Arrow job, and keeps them
+        resident per segment; over ``_RESIDENT_KEY_ROWS`` rows (logged
+        once per index object), each call reads just these documents'
+        keys, one seg- and docid-pruned job."""
+        out = np.empty(len(segs), dtype=object)
+        if not len(segs):
+            return out
+        if self._key_arrays is None:
+            self._key_arrays = self._read_key_arrays()
+        arrays = self._key_arrays
+        if not isinstance(arrays, dict):
+            arrays = self._seek_keys(segs, docids)
+        for s in np.unique(segs).tolist():
+            at = segs == s
+            ids, keys = arrays[s]
+            out[at] = keys[np.searchsorted(ids, docids[at])]
+        return out
+
+    def docid_bounds(self, key: str) -> dict[int, int]:
+        """seg -> the greatest docid whose key is at most ``key``, for the
+        segments holding such a document: as docids ascend with keys, a
+        segment's documents after ``key`` are those past its bound."""
+        if self._key_arrays is None:
+            self._key_arrays = self._read_key_arrays()
+        if not isinstance(self._key_arrays, dict):
+            return {int(r[0]): int(r[1]) for r in
+                    self.docmeta.where(F.col("key") <= key)
+                    .groupBy("seg").agg(F.max("docid")).collect()}
+        out = {}
+        for s, (ids, keys) in self._key_arrays.items():
+            i = int(np.searchsorted(keys, key, side="right"))
+            if i:
+                out[s] = int(ids[i - 1])
+        return out
+
+    def _read_key_arrays(self) -> dict | tuple:
+        """seg -> (docids, keys) of the whole docmeta, or () when it has
+        more than ``_RESIDENT_KEY_ROWS`` rows."""
+        rows = (self.docmeta.select("seg", "docid", "key")
+                .limit(_RESIDENT_KEY_ROWS + 1).toArrow())
+        if rows.num_rows > _RESIDENT_KEY_ROWS:
+            log.info("docmeta over %d rows: doc_keys reads the keys of "
+                     "each call's documents", _RESIDENT_KEY_ROWS)
+            return ()
+        return _key_map(rows)
+
+    def _seek_keys(self, segs: np.ndarray, docids: np.ndarray) -> dict:
+        """seg -> (docids, keys) of just the documents ``(segs[i],
+        docids[i])``, from one docmeta read pruned to them."""
+        pred = " OR ".join(
+            f"(seg = {s} AND docid IN "
+            f"({', '.join(map(str, np.unique(docids[segs == s]).tolist()))}))"
+            for s in np.unique(segs).tolist())
+        return _key_map(self.docmeta.where(pred)
+                        .select("seg", "docid", "key").toArrow())
 
     def _seek_terms(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """term_stats of ``terms`` from one term-pruned postings scan."""
@@ -280,6 +375,20 @@ class InvertedIndex:
                 "with_offsets": self.with_offsets,
                 "layout": layout,
                 "compressed": "blocks" in self.postings.columns}
+
+
+def _key_map(rows) -> dict:
+    """seg -> (ascending docids, their keys) of an Arrow (seg, docid, key)
+    table."""
+    seg = rows.column("seg").to_numpy()
+    docid = rows.column("docid").to_numpy()
+    order = np.lexsort((docid, seg))
+    seg, docid = seg[order], docid[order]
+    key = rows.column("key").to_numpy(zero_copy_only=False)[order]
+    segs, starts = np.unique(seg, return_index=True)
+    ends = [*starts[1:].tolist(), len(seg)]
+    return {s: (docid[a:b], key[a:b])
+            for s, a, b in zip(segs.tolist(), starts.tolist(), ends)}
 
 
 def _run_concurrently(spark: SparkSession, *fns) -> None:
@@ -428,10 +537,11 @@ def build_index(
         membership and docids are DETERMINISTIC under any input
         parallelism (the murmur3 doc-routing analogue; required for
         reproducible builds and key-addressed upserts).
-      * ``"none"`` — ZERO-shuffle bulk ingest: segment = input partition,
-        docid = arrival order within it — exactly Lucene's
-        DocumentsWriterPerThread assignment (insertion-order docids, no
-        routing at all; ``index/DocumentsWriterFlushControl``).  Query
+      * ``"none"`` — ZERO-shuffle bulk ingest: segment = input partition
+        (Lucene's DocumentsWriterPerThread assignment, no routing at all;
+        ``index/DocumentsWriterFlushControl``), each partition sorted by
+        key in place, so docid = key rank within the segment as on the
+        hash route (the order the top-k collectors rely on).  Query
         results are IDENTICAL to any other segmentation (global stats);
         only the internal seg/docid labels differ, so use it when
         reproducible labels don't matter — the whole build then moves
@@ -453,7 +563,8 @@ def build_index(
         html_input = False
 
     if route == "none":
-        parted = base.withColumn("seg", F.spark_partition_id())
+        parted = (base.sortWithinPartitions("key")
+                  .withColumn("seg", F.spark_partition_id()))
     else:
         parted = (
             base.repartition(num_segments, "key")
@@ -539,8 +650,9 @@ def compress_index(index: InvertedIndex) -> InvertedIndex:
 
     compressed = arrays.mapInPandas(encode_rows, schema=out_schema)
     # (seg,term,df,ttf) and docmeta/segstats are unchanged by encoding —
-    # carry the collection stats and the resident dictionary, so the
+    # carry the collection stats, the resident dictionary and keys, so the
     # compressed index doesn't re-read what the source index already read
     return InvertedIndex(compressed, index.docmeta, index.segstats,
                          index.with_positions, index.analyzer,
-                         _stats=index._stats, _term_arrays=index._term_arrays)
+                         _stats=index._stats, _term_arrays=index._term_arrays,
+                         _key_arrays=index._key_arrays)

@@ -19,10 +19,10 @@ floor=2MB, maxMergedSegment=5GB, reclaimDeletesWeight=2
 
 The merge job (``merge_many``; ``merge_segments`` and ``force_merge`` are
 one-group calls of it) is the Spark restatement of
-``SegmentMerger.merge()`` (``index/SegmentMerger.java:85-135``): docIDs are
-rebased per source segment (``MergeState.DocMap``), deleted docs dropped
-and the survivors renumbered densely, posting lists regrouped in
-rebased-docID order and per-term stats re-summed.  ``delete_docs`` shares
+``SegmentMerger.merge()`` (``index/SegmentMerger.java:85-135``): deleted
+docs dropped and the survivors renumbered densely (``MergeState.DocMap``),
+here in key order within each target segment, posting lists regrouped in
+the new docID order and per-term stats re-summed.  ``delete_docs`` shares
 the explode -> regroup half of it.
 """
 
@@ -310,12 +310,14 @@ def merge_many(index: InvertedIndex, merges: list[list[int]],
 
     ``merges``: disjoint segment-id groups (e.g. ``TieredMergePlanner.
     find_merges`` output).  ``target_segs`` defaults to each group's min
-    id.  Docids renumber densely per TARGET segment: driver-side
-    prefix-sum base offsets per source segment (k tiny values) plus the
-    rank within the source segment, so renumbering parallelizes across
-    segments instead of funnelling every surviving row through one task
-    (``index/MergeState.java DocMap`` maps docids per reader the same
-    way).
+    id.  Docids renumber densely per TARGET segment in key order: the
+    new docid is the surviving document's key rank within its target
+    (one ``row_number`` window over the sources' (seg, docid, key) rows),
+    so a merged segment keeps the order of a freshly built one, where
+    docids ascend with keys and the top-k collectors' per-segment cut
+    breaks score ties by key.  ``index/MergeState.java``'s DocMap
+    instead concatenates the readers by doc base, which only keeps that
+    order when the sources' key ranges do not interleave.
     """
     if not merges:
         return index
@@ -333,26 +335,15 @@ def merge_many(index: InvertedIndex, merges: list[list[int]],
     src_meta = index.docmeta.where(in_merge)
     if deleted_keys is not None:
         src_meta = src_meta.join(deleted_keys, "key", "left_anti")
-    counts = {r["seg"]: r["n"] for r in
-              src_meta.groupBy("seg").agg(F.count("*").alias("n")).collect()}
-    base: dict[int, int] = {}
-    acc: dict[int, int] = {}
-    for s in sorted(counts):
-        t = seg_to_tgt[s]
-        base[s] = acc.get(t, 0)
-        acc[t] = base[s] + counts[s]
-    base_col = F.create_map(*[x for s, b in base.items()
-                              for x in (F.lit(s), F.lit(b))])
-    w = Window.partitionBy("seg").orderBy("docid")
-    docmap = src_meta.select(
-        "seg", "docid",
-        tgt_col[F.col("seg")].cast("int").alias("tseg"),
-        (base_col[F.col("seg")] + F.row_number().over(w) - 1)
+    tseg = tgt_col[F.col("seg")].cast("int")
+    renumbered = src_meta.select(
+        "*", tseg.alias("tseg"),
+        (F.row_number().over(Window.partitionBy(tseg).orderBy("key")) - 1)
         .cast("int").alias("new_docid"))
-    new_meta = (src_meta.join(docmap, ["seg", "docid"])
-                .select(F.col("tseg").alias("seg"),
-                        F.col("new_docid").alias("docid"),
-                        "key", "doclen", "norm"))
+    docmap = renumbered.select("seg", "docid", "tseg", "new_docid")
+    new_meta = renumbered.select(F.col("tseg").alias("seg"),
+                                 F.col("new_docid").alias("docid"),
+                                 "key", "doclen", "norm")
 
     fields = _posting_fields(wp)
     remapped = (_explode_postings(index.postings.where(in_merge), fields)

@@ -68,7 +68,8 @@ def more_like_this(index: InvertedIndex, key: str, k: int = 10,
                    max_word_len: int = 0,
                    precision: str = "float32") -> DataFrame:
     """(key, score) top-k similar docs — the selected interesting terms
-    as a BM25 disjunction, the source doc excluded."""
+    as a BM25 disjunction, the source doc excluded: the top k + 1 less
+    the source doc, cut from the collector's local frame."""
     from . import search as S
 
     terms = [r["term"] for r in
@@ -76,5 +77,6 @@ def more_like_this(index: InvertedIndex, key: str, k: int = 10,
                                max_doc_freq, max_query_terms,
                                min_word_len, max_word_len)
              .select("term").collect()]
-    return S._topk(S._term_set_docs(index, terms, precision), index, k,
-                   precision, where=f"key != {S._sql_str(key)}")
+    return (S._topk(S._term_set_docs(index, terms, precision), index, k + 1,
+                    precision)
+            .where(F.col("key") != key).limit(k))

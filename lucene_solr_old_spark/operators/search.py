@@ -44,19 +44,24 @@ weight steps.  A single query is a workload of one:
     and per-word plans — as BooleanQuery or DisjunctionMaxQuery: one
     UNION ALL aggregated by the document keys with the must /
     minNrShouldMatch HAVING, one LEFT ANTI JOIN of the MUST_NOT doc sets,
-    and :func:`_topk`, all in one statement.  :func:`_docs_where` is the
+    and :func:`_cut`, all in one statement.  :func:`_docs_where` is the
     non-scoring doc set of an SQL term predicate (constant-score
     multi-term clauses, filters, MUST_NOT).
-  * collect  ->:func:`_topk` is TakeOrderedAndProject (``ORDER BY score
-    DESC, key ASC LIMIT k``: the per-leaf PQ + merge of
-    ``TopScoreDocCollector.java:54-61``, ties to the lower doc key),
-    optionally over the hits passing a key/score predicate (the
-    searchAfter cursor, ``IndexSearcher.java:234-250``);
-    :func:`_topk_per_qid` is the per-qid ``row_number`` window for
-    workloads, each qid's rows contiguous and rank-ordered but the qids
-    not globally sorted; ``count()`` is TotalHitCountCollector.  A
-    workload that matches nothing collects :func:`_no_docs`, so an empty
-    result has the schema of a matching one.
+  * collect  -> the per-leaf PQ + merge of
+    ``TopScoreDocCollector.java:54-61`` (ties to the lower doc key), in
+    two rounds like Solr's distributed search (SURVEY.md §3.3): the
+    statement (:func:`_cut`) keeps each segment's top k by (score DESC,
+    docid ASC) through a ``row_number`` window and reads no key, which is
+    exact because docids ascend with keys inside a segment; the driver
+    then reads the survivors' keys from the index's resident keys
+    (``InvertedIndex.doc_keys``), merges the segments by (score DESC, key
+    ASC) and returns a local frame.  :func:`_topk` collects one query,
+    optionally over the hits passing a seg/docid/score predicate (the
+    searchAfter cursor, ``IndexSearcher.java:234-250``), at most k x
+    segments rows; :func:`_topk_per_qid` collects a workload per (qid,
+    seg), at most ``_TOPK_ROWS`` rows per statement, each qid's rows
+    contiguous and rank-ordered.  Either runs its statement when called:
+    the entry points are eager.  ``count()`` is TotalHitCountCollector.
 
 Positional queries — PhraseQuery exact or sloppy, MultiPhraseQuery,
 NGramPhraseQuery (here) and the span trees (spans.py, multifield.py) —
@@ -79,7 +84,7 @@ registered once and named by the frame itself (:func:`_ref`), so a
 statement may read two indexes.  A plan that feeds another, as clauses
 feed a compound and scored docs feed :func:`_topk`, is an :class:`_Sql`
 its reader inlines, so a query of any number of clauses and its
-collector are one statement.  Only a Python UDF or ``applyInPandas``
+collector's cut are one statement.  Only a Python UDF or ``applyInPandas``
 step (a sloppy phrase, a span tree) is built through the DataFrame API;
 it enters the statement as a frame.  Chained DataFrame calls, where every
 ``F.col``, select element and lambda is a py4j round trip, cost a query
@@ -104,6 +109,8 @@ import weakref
 from typing import NamedTuple
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.bm25 import Bm25Stats
@@ -136,6 +143,10 @@ def _phrase_terms(index: InvertedIndex,
 
 def _stype(precision: str) -> str:
     return "double" if precision == "float64" else "float"
+
+
+def _dtype(precision: str):
+    return np.float64 if precision == "float64" else np.float32
 
 
 # A plan is SQL text (see "Building" above), and so are its literals:
@@ -348,12 +359,13 @@ class _Scorer:
                  precision: str = "float32", boost: float = 1.0,
                  similarity=None):
         max_doc, sum_ttf = index.collection_stats()
+        index.read_resident()
         self.precision = precision
         self.sim = similarity = similarity or _BM25()
         self.stats = Bm25Stats(max_doc, sum_ttf)
         self.tstats = index.term_stats(terms)
         self._sqltype = _stype(precision)
-        self._dtype = np.float64 if precision == "float64" else np.float32
+        self._dtype = _dtype(precision)
         if precision == "float64":
             self.bm25_cache = cache64(sum_ttf / max_doc if max_doc else 1.0)
         else:
@@ -481,11 +493,12 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
     (DisjunctionMaxQuery); documents matching ``exclude_text`` are
     dropped (MUST_NOT).
 
-    ``per_qid`` hash-partitions the scored postings by qid before the
-    aggregate, for a caller that collects per qid: the aggregate and the
-    per-qid window then share that one shuffle.  Its skew bound is one
-    query's postings rows in one task, where the (qid, seg, docid)
-    shuffle put only one query's matched documents in a task."""
+    The scored postings are hash-partitioned by segment before the
+    aggregate, or by qid with ``per_qid``, for a caller that collects per
+    qid: the aggregate and the collector's (qid?, seg) window then share
+    that one shuffle.  Its skew bound is one segment's (one query's)
+    postings rows in one task, where a (qid, seg, docid) shuffle put only
+    one query's matched documents of a segment in a task."""
     if not workload:
         return _no_docs(index, precision)
     terms = sorted({t for q in workload for t in q.mults})
@@ -498,7 +511,7 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
     # clause scores once per clause: the term score times mult
     score = f"sum(tscore * CAST(mult AS {st}))"
     if tie_breaker is not None:
-        score = (f"(max(tscore) + ({float(tie_breaker)!r}D * "
+        score = (f"(max(tscore) + ({_sql_num(tie_breaker, st)} * "
                  f"({score} - max(tscore))))")
     if scorer.sim.coord:
         n = _per_query(workload, lambda q: sum(q.mults.values()))
@@ -512,7 +525,7 @@ def _scored_docs(index: InvertedIndex, workload: list[_Query],
                                  inline({scorer.fanout_map(workload)}[term])
                           FROM {postings}
                           WHERE {_sql_in('term', terms)}))
-              {'DISTRIBUTE BY qid' if per_qid else ''})
+              DISTRIBUTE BY {'qid' if per_qid else 'seg'})
         GROUP BY {', '.join(keys)}"""
     if any(q.need > 1 for q in workload):
         sql = f"""SELECT * FROM ({sql})
@@ -633,9 +646,9 @@ def _term_set_docs(index: InvertedIndex, terms: list[str],
 
 def _keyed(per_doc: "_Sql | DataFrame", index: InvertedIndex,
            frames: dict) -> str:
-    """``per_doc`` joined to its documents' keys, as a FROM clause: the
-    late materialization of the doc key, the PURPOSE_GET_FIELDS second
-    round of SURVEY.md §3.3."""
+    """``per_doc`` joined to its documents' keys, as a FROM clause: for
+    the callers that need the key of every matched document (facets,
+    grouping, highlighting, block joins, cross-field compounds)."""
     return (f"{_source(per_doc, frames)} JOIN (SELECT seg, docid, key "
             f"FROM {_ref(index.docmeta, frames)}) USING (seg, docid)")
 
@@ -648,36 +661,120 @@ def _with_keys(per_doc: "_Sql | DataFrame",
                  **frames)
 
 
+# The most rows one workload statement brings to the driver: a workload
+# whose bound, queries x segments x k, is larger runs in query chunks
+# that fit it, the same statement once per chunk.
+_TOPK_ROWS = 1 << 20
+
+
+def _cut(per_doc: "_Sql | DataFrame", parts: str, k: int,
+         precision: str = "float32", where: str | None = None) -> DataFrame:
+    """The statement of a top-k collector: the top ``k`` of each
+    ``parts`` group (``seg``, or ``qid, seg``) of ``per_doc``'s hits by
+    (score DESC, docid ASC), as (``parts``, docid, score) with the score
+    cast to the precision's type; optionally only over the hits
+    satisfying ``where`` (an SQL predicate on seg, docid and score).  It
+    reads no key: docids ascend with keys inside a segment, so the
+    per-segment cut keeps every hit of the (score DESC, key ASC) top k,
+    and it is bounded, k rows per group whatever the ties."""
+    frames: dict = {}
+    return _plan(f"""
+        SELECT {parts}, docid, score FROM (
+            SELECT *, row_number() OVER (
+                       PARTITION BY {parts} ORDER BY score DESC, docid)
+                     AS r
+            FROM (SELECT {parts}, docid,
+                         CAST(score AS {_stype(precision)}) AS score
+                  FROM {_source(per_doc, frames)})
+            {f'WHERE {where}' if where else ''})
+        WHERE r <= {int(k)}""", **frames)
+
+
+def _collect(statement: DataFrame):
+    """The rows of a collector's statement as an Arrow table: the one
+    place a top-k statement runs."""
+    return statement.toArrow()
+
+
+def _local(spark, columns: list[tuple[str, str]], data: dict) -> DataFrame:
+    """A DataFrame of the driver's ``data`` (column -> values) with the
+    (name, SQL type) ``columns``, created through Arrow in no Spark job;
+    with no rows, an empty statement (an empty pandas frame would become
+    a one-job RDD scan)."""
+    if not len(next(iter(data.values()))):
+        return spark.sql("SELECT " + ", ".join(
+            f"CAST(NULL AS {t}) AS {c}" for c, t in columns) + " WHERE false")
+    return spark.createDataFrame(pd.DataFrame(data),
+                                 ", ".join(f"{c} {t}" for c, t in columns))
+
+
+def _merged(index: InvertedIndex, rows, k: int) -> dict:
+    """qid -> the top ``k`` [(score, key)] of the collected (qid?, seg,
+    docid, score) ``rows``, by (score DESC, key ASC): the coordinator's
+    merge of the per-segment top ids (Solr's PURPOSE_GET_TOP_IDS), with
+    the keys of the survivors from the index's resident keys.  Scores
+    compare as the collected score-type floats, keys as ``str`` (code
+    point order, Spark's UTF-8 byte order)."""
+    keys = index.doc_keys(rows.column("seg").to_numpy(),
+                          rows.column("docid").to_numpy())
+    qids = (rows.column("qid").to_pylist() if "qid" in rows.column_names
+            else [0] * rows.num_rows)
+    hits: dict = {}
+    for q, score, key in zip(qids, rows.column("score").to_pylist(),
+                             keys.tolist()):
+        hits.setdefault(q, []).append((-score, key))
+    return {q: [(-s, key) for s, key in sorted(h)[:k]]
+            for q, h in hits.items()}
+
+
 def _topk(per_doc: "_Sql | DataFrame", index: InvertedIndex, k: int,
           precision: str = "float32", where: str | None = None) -> DataFrame:
-    """TakeOrderedAndProject collector: top-k (key, score), optionally only
-    over the hits satisfying ``where`` (an SQL predicate on key and
-    score)."""
-    frames: dict = {}
-    return _plan(f"""
-        SELECT key, score
-        FROM (SELECT key, CAST(score AS {_stype(precision)}) AS score
-              FROM {_keyed(per_doc, index, frames)}
-              {f'WHERE {where}' if where else ''})
-        ORDER BY score DESC, key ASC LIMIT {int(k)}""", **frames)
+    """TopScoreDocCollector: top-k (key, score) by (score DESC, key ASC),
+    optionally only over the hits satisfying ``where`` (an SQL predicate
+    on seg, docid and score).  The per-segment cut (:func:`_cut`) runs
+    here, at most k x segments rows reach the driver, and the result is
+    a local frame of k rows."""
+    return _ranked(index, _cut(per_doc, "seg", k, precision, where), k,
+                   precision)
 
 
-def _topk_per_qid(per_doc: "_Sql | DataFrame", index: InvertedIndex, k: int,
-                  precision: str = "float32") -> DataFrame:
-    """Workload collector: (qid, rank, key, score), the top-k of every qid
-    through one ``row_number`` window.  Each qid's rows are contiguous and
-    rank-ordered; qids are not globally sorted (that costs a job)."""
-    score = f"CAST(score AS {_stype(precision)})"
-    frames: dict = {}
-    return _plan(f"""
-        SELECT * FROM (
-            SELECT qid, row_number() OVER (
-                       PARTITION BY qid ORDER BY {score} DESC, key ASC)
-                     AS rank,
-                   key, {score} AS score
-            FROM {_keyed(per_doc, index, frames)})
-        WHERE rank <= {int(k)}
-        SORT BY qid, rank""", **frames)
+def _ranked(index: InvertedIndex, statement: DataFrame, k: int,
+            precision: str = "float32") -> DataFrame:
+    """The local (key, score) frame of the top ``k`` of a single query,
+    from its (seg, docid, score) ``statement``, cut to k rows per
+    segment, which runs here."""
+    top = _merged(index, _collect(statement), k).get(0, [])
+    return _local(index.postings.sparkSession,
+                  [("key", "string"), ("score", _stype(precision))],
+                  {"key": [key for _s, key in top],
+                   "score": np.array([s for s, _key in top],
+                                     _dtype(precision))})
+
+
+def _topk_per_qid(index: InvertedIndex, workload: list[_Query], statement,
+                  k: int, precision: str = "float32") -> DataFrame:
+    """Workload collector: (qid, rank, key, score), the top-k of every
+    qid of ``workload``, each qid's rows contiguous and rank-ordered.
+    ``statement(queries)`` is the (qid, seg, docid, score) statement of
+    a chunk of the workload, cut to k rows per (qid, seg); it runs here,
+    once per chunk of at most ``_TOPK_ROWS`` rows, and the driver merges
+    each qid's segments."""
+    per_chunk = max(1, _TOPK_ROWS // max(1, k * index.num_segments()))
+    tables = [_collect(statement(workload[i:i + per_chunk]))
+              for i in range(0, len(workload), per_chunk)]
+    out: dict[str, list] = {"qid": [], "rank": [], "key": [], "score": []}
+    if tables:
+        for q, top in sorted(_merged(index, pa.concat_tables(tables),
+                                     k).items()):
+            out["qid"] += [q] * len(top)
+            out["rank"] += range(1, len(top) + 1)
+            out["key"] += [key for _s, key in top]
+            out["score"] += [s for s, _key in top]
+    return _local(index.postings.sparkSession,
+                  [("qid", _int_type(q.qid for q in workload)),
+                   ("rank", "int"), ("key", "string"),
+                   ("score", _stype(precision))],
+                  {**out, "score": np.array(out["score"], _dtype(precision))})
 
 
 def search_terms(index: InvertedIndex, query_text: str, mode: str = "OR",
@@ -722,13 +819,18 @@ def search_after(index: InvertedIndex, query_text: str, k: int,
                  after_score: float, after_key: str,
                  mode: str = "OR", precision: str = "float32") -> DataFrame:
     """Cursor pagination: hits strictly after (score, key) in rank order
-    (``search/IndexSearcher.java:234-250,351-416``)."""
+    (``search/IndexSearcher.java:234-250,351-416``).  As docids ascend
+    with keys inside a segment, the key bound is a per-segment docid
+    bound, a seg -> docid map literal."""
     docs = _single(index, query_text, mode, precision)
-    score = f"CAST(score AS {_stype(precision)})"
     after = _sql_num(after_score, "double")
+    bounds = [{"k": s, "v": d}
+              for s, d in sorted(index.docid_bounds(after_key).items())]
+    bound = ("coalesce(map_from_entries(" + _json_sql(
+        bounds, "array<struct<k: int, v: int>>") + ")[seg], -1)")
     return _topk(docs, index, k, precision,
-                 where=f"({score} < {after}) OR (({score} = {after}) "
-                       f"AND (key > {_sql_str(after_key)}))")
+                 where=f"(score < {after}) OR ((score = {after}) "
+                       f"AND (docid > {bound}))")
 
 
 def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
@@ -770,7 +872,8 @@ def _slot_positions(index: InvertedIndex, scorer: _Scorer,
         FROM (SELECT seg, slot, w, explode(postings) AS p
               FROM (SELECT seg, postings,
                            inline({scorer.slot_fanout(slots, weight)}[term])
-                    FROM {postings} WHERE {_sql_in('term', terms)}))
+                    FROM {postings} WHERE {_sql_in('term', terms)})
+              DISTRIBUTE BY seg)
         GROUP BY seg, p.docid"""
     if required:
         sql = f"SELECT * FROM ({sql}) WHERE {_has_slots(required)}"

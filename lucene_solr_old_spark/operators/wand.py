@@ -14,10 +14,12 @@ Plan shape (designed for 1000-executor scale):
     on the term column prunes row groups before any decode;
   * `groupBy(seg).applyInPandas(kernel)` — one small task per segment, no
     doc-level shuffle; only the workload's posting rows move;
-  * per-(qid, seg) top-k rows join docmeta for keys (late materialization)
-    and go to search.py's collectors: TakeOrderedAndProject for
-    ``wand_search`` (a workload of one), the per-qid ``row_number`` window
-    for ``batch_wand_search``.
+  * the kernel cuts each (qid, seg) to its top k by (score DESC, docid
+    ASC), and its rows are collected as they are: the driver merges each
+    qid's segments by (score DESC, key ASC) with the index's resident doc
+    keys (search.py's collectors; docids ascend with keys inside a
+    segment, so the cut keeps every winner), in two Spark jobs, the
+    kernel stage up to its shuffle by segment and the result.
 
 Algorithm (disjunction): term-at-a-time MaxScore with block-max skipping —
 terms ordered by upper bound descending; after the first term, a new doc is
@@ -36,8 +38,8 @@ from pyspark.sql import DataFrame
 
 from .codec import decode_block
 from .indexer import InvertedIndex
-from .search import (_no_docs, _parse, _plan, _Query, _Scorer, _Sql, _sql_in,
-                     _topk, _topk_per_qid)
+from .search import (_build, _no_docs, _parse, _plan, _Query, _ranked,
+                     _Scorer, _sql_in, _topk_per_qid)
 
 __all__ = ["wand_search", "batch_wand_search"]
 
@@ -185,14 +187,15 @@ def _conjunctive_kernel(term_rows, weights, cache, k, mults=None,
 
 
 def _kernel_docs(index: InvertedIndex, workload: list[_Query], k: int,
-                 precision: str = "float32") -> "_Sql | DataFrame":
-    """(qid, seg, docid, score): every query's per-segment top-k from the
-    block-max kernel, in ONE applyInPandas over the segments."""
+                 precision: str = "float32") -> DataFrame:
+    """(qid, seg, docid, score): every query's per-segment top-k by
+    (score DESC, docid ASC) from the block-max kernel, in ONE
+    applyInPandas over the segments."""
     if "blocks" not in index.postings.columns:
         raise ValueError("the block-max kernel requires a compressed index "
                          "(indexer.compress_index)")
     if not workload:
-        return _no_docs(index, precision)
+        return _build(_no_docs(index, precision))
     terms = sorted({t for q in workload for t in q.mults})
     scorer = _Scorer(index, terms, precision)
     weights, cache, dtype = scorer.kernel_state()
@@ -235,10 +238,12 @@ def _kernel_docs(index: InvertedIndex, workload: list[_Query], k: int,
 def wand_search(index: InvertedIndex, query_text: str, k: int = 10,
                 mode: str = "OR", precision: str = "float32") -> DataFrame:
     """Top-k (key, score) via the block-max kernel. Requires a compressed
-    index (indexer.compress_index)."""
+    index (indexer.compress_index).  The kernel runs when called, at most
+    k x segments rows reach the driver, and the result is a local
+    frame."""
     workload = _parse(index, [(0, query_text, mode)])
-    return _topk(_kernel_docs(index, workload, k, precision), index, k,
-                 precision)
+    return _ranked(index, _kernel_docs(index, workload, k, precision), k,
+                   precision)
 
 
 def batch_wand_search(index: InvertedIndex, queries: list[tuple],
@@ -247,15 +252,16 @@ def batch_wand_search(index: InvertedIndex, queries: list[tuple],
 
     queries: [(qid, query_text, mode)] with mode in {"OR", "AND"}.
     Returns (qid, rank, key, score): each qid's rows contiguous and
-    rank-ordered, the qids not globally sorted.
+    rank-ordered, as a local frame.
 
     Plan: one term-pruned scan of the union of all query terms; ONE
     applyInPandas per segment runs every query's kernel against that
-    segment's blocks (per-segment top-k), then a per-qid window merges
-    leaves — the per-query Spark scheduling floor is amortized across the
-    workload like operators/batch.py, but with MaxScore block skipping
-    instead of the relational aggregation, in four jobs: the kernel stage
-    up to its shuffle by segment, the docmeta broadcast, the per-qid
-    window's shuffle and the result."""
-    docs = _kernel_docs(index, _parse(index, queries), k)
-    return _topk_per_qid(docs, index, k)
+    segment's blocks (per-(qid, seg) top-k), and the driver merges each
+    qid's segments — the per-query Spark scheduling floor is amortized
+    across the workload like operators/batch.py, but with MaxScore block
+    skipping instead of the relational aggregation, in two jobs: the
+    kernel stage up to its shuffle by segment, and the result.  The
+    workload runs when called, in chunks of at most ``search._TOPK_ROWS``
+    driver rows (queries x segments x k)."""
+    return _topk_per_qid(index, _parse(index, queries),
+                         lambda chunk: _kernel_docs(index, chunk, k), k)

@@ -40,13 +40,6 @@ def _jobs_in_group(sc, fn) -> int:
 
 
 @pytest.fixture
-def jobs_per_collect(spark):
-    """Collect a DataFrame under a job group of its own; returns the number
-    of Spark jobs the collect ran."""
-    return lambda df: _jobs_in_group(spark.sparkContext, df.collect)
-
-
-@pytest.fixture
 def jobs_per_call(spark):
     """Call ``make()`` and collect the DataFrame it returns, if it returns
     one, under one job group; returns the number of Spark jobs from the

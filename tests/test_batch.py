@@ -66,15 +66,20 @@ def test_batch_collector_contract(idx, per_qid_runs):
     assert runs[7] == 5 and 3 not in runs and set(runs) <= {7, 0, 1}
 
 
-def test_batch_jobs_per_collect(fingerprint_indexes, jobs_per_collect):
-    """The workload runs in at most 3 Spark jobs: the qid shuffle that the
-    (qid, seg, docid) aggregate and the per-qid window share, the docmeta
-    broadcast, and the result.  A global ``orderBy("qid", "rank")`` would
-    add a range-sampling job and a range exchange."""
+def test_batch_jobs_per_collect(fingerprint_indexes, jobs_per_call):
+    """With statistics, dictionary and keys resident, the workload runs in
+    at most 2 Spark jobs from call to rows: the qid shuffle that the
+    (qid, seg, docid) aggregate and the per-(qid, seg) window share, and
+    the result; the driver merges each qid's segments with the resident
+    keys, where a docmeta broadcast was a third job.  A global
+    ``orderBy("qid", "rank")`` would add a range-sampling job and a range
+    exchange."""
     from test_plan_fingerprints import BATCH
 
     _df, plain, _comp, _mfi = fingerprint_indexes
-    assert jobs_per_collect(batch_search(plain, BATCH, k=10)) <= 3
+    plain.collection_stats()
+    plain.read_resident()
+    assert jobs_per_call(lambda: batch_search(plain, BATCH, k=10)) <= 2
 
 
 def test_batch_empty_queries(idx):

@@ -2,9 +2,12 @@
 
 Each entry point runs once on a tiny index (500 generated pages, the size
 of the sf0.001 documents table); builds run unpersisted, so the inversion
-stage itself is in the counted plan.  The counts of Exchange, Window,
-join, Python-exec, TakeOrderedAndProject and scan nodes in its executed
-(final adaptive) plan are compared with ``plan_fingerprints.json``; the
+stage itself is in the counted plan.  A query entry point runs its
+collector's statement when called and returns a local frame, so its
+counted plan is that statement's (the last one ``search._collect`` ran).
+The counts of Exchange, Window, join, Python-exec, TakeOrderedAndProject
+and scan nodes in the executed (final adaptive) plan are compared with
+``plan_fingerprints.json``; the
 scan count shows how often a plan reads its inputs.  A count may
 fall but never rise: a plan regression then fails here instead of
 showing up as benchmark noise.
@@ -95,9 +98,21 @@ def _walk(node, counts: dict[str, int]) -> None:
         _walk(children.next(), counts)
 
 
-def plan_counts(df) -> dict[str, int]:
-    """Run ``df`` and count node kinds in its executed physical plan."""
-    df.collect()
+def plan_counts(make) -> dict[str, int]:
+    """Call ``make()`` and count node kinds in the executed physical plan
+    of the last statement a collector ran, or else of the frame it
+    returns, collected."""
+    seen, collect = [], S._collect
+    S._collect = lambda statement: seen.append(statement) or collect(
+        statement)
+    try:
+        df = make()
+    finally:
+        S._collect = collect
+    if seen:
+        df = seen[-1]
+    else:
+        df.collect()
     counts = dict.fromkeys(KINDS, 0)
     _walk(df._jdf.queryExecution().executedPlan(), counts)
     return counts
@@ -172,7 +187,7 @@ def build(spark):
 
 @pytest.fixture(scope="module")
 def fingerprints(fingerprint_indexes):
-    return {name: plan_counts(make()) for name, make
+    return {name: plan_counts(make) for name, make
             in entry_points(*fingerprint_indexes).items()}
 
 
@@ -191,6 +206,6 @@ if __name__ == "__main__":
 
     spark = get_spark("plan-fingerprints", master="local[4]",
                       shuffle_partitions=8)
-    print(json.dumps({name: plan_counts(make()) for name, make
+    print(json.dumps({name: plan_counts(make) for name, make
                       in entry_points(*build(spark)).items()}, indent=1))
     spark.stop()

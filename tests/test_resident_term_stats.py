@@ -66,16 +66,29 @@ ENTRY_POINTS = {
 
 @pytest.mark.parametrize("name", sorted(ENTRY_POINTS))
 def test_query_runs_no_seek_job(name, saved, spark, jobs_per_call,
-                                jobs_per_collect):
-    """With the dictionary resident, a query's call runs only the jobs of
-    its collect: building the DataFrame seeks no term statistics."""
+                                monkeypatch):
+    """With the dictionary and keys resident, a query's call runs exactly
+    its collector statement's jobs: it seeks no term statistics and reads
+    no key."""
     plain, comp = (I.load_index(spark, p) for p in saved)
-    for idx in (plain, comp):  # read the segment and term statistics
+    for idx in (plain, comp):  # read the statistics, dictionary and keys
         idx.collection_stats()
-        idx.term_stats(["zzzwarm"])
-    run = ENTRY_POINTS[name]
-    n_call = jobs_per_call(lambda: run(plain, comp))
-    assert n_call == jobs_per_collect(run(plain, comp)) and n_call > 0
+        idx.read_resident()
+    tracker, collect, in_statements = (spark.sparkContext.statusTracker(),
+                                       S._collect, [])
+
+    def counting(statement):
+        group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        before = set(tracker.getJobIdsForGroup(group))
+        rows = collect(statement)
+        in_statements.append(
+            len(set(tracker.getJobIdsForGroup(group)) - before))
+        return rows
+
+    monkeypatch.setattr(S, "_collect", counting)
+    n_call = jobs_per_call(lambda: ENTRY_POINTS[name](plain, comp))
+    assert len(in_statements) == 1
+    assert n_call == in_statements[0] and n_call > 0
 
 
 def test_over_budget_seeks_equal_resident(saved, spark, oracle, monkeypatch,

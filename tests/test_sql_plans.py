@@ -1,7 +1,11 @@
 """Query plans are built as Spark SQL statements: each plan costs a fixed,
 small number of py4j round trips, whatever its number of terms or queries;
 user text reaches the SQL only as escaped literals; and a phrase or span
-query of a shape already run compiles no new code."""
+query of a shape already run compiles no new code.
+
+An entry point runs its collector's statement when called and returns a
+local frame; the round trips counted here are those of the build, up to
+the statement's run (``search._collect``)."""
 
 import re
 
@@ -36,6 +40,27 @@ def loaded(fingerprint_indexes, tmp_path_factory, spark):
     return out
 
 
+class _Built(Exception):
+    """Raised where a collector would run the statement it built."""
+
+
+@pytest.fixture
+def build_calls(py4j_calls_per_call, monkeypatch):
+    """Call ``make()`` up to its collector's run of the statement it
+    built; returns the py4j round trips of that build."""
+    def built(statement):
+        raise _Built
+
+    def build(make):
+        try:
+            make()
+        except _Built:
+            pass
+
+    monkeypatch.setattr(S, "_collect", built)
+    return lambda make: py4j_calls_per_call(lambda: build(make))
+
+
 TWO = "running meetings"
 SIX = "running meetings caresses ponies relational hopeful"
 BUILDS = {
@@ -63,24 +88,24 @@ def _workload(n: int) -> list[tuple]:
 
 
 @pytest.mark.parametrize("name", sorted(BUILDS))
-def test_query_build_round_trips(name, loaded, py4j_calls_per_call):
+def test_query_build_round_trips(name, loaded, build_calls):
     plain, comp = loaded
     build = BUILDS[name]
     for _ in range(2):  # register the index tables' views, and drop a
-        build(plain, comp, TWO)  # collected frame's view once
-    two = py4j_calls_per_call(lambda: build(plain, comp, TWO))
-    six = py4j_calls_per_call(lambda: build(plain, comp, SIX))
+        build_calls(lambda: build(plain, comp, TWO))  # dead frame's view
+    two = build_calls(lambda: build(plain, comp, TWO))
+    six = build_calls(lambda: build(plain, comp, SIX))
     assert two == six and two <= BUDGET, (two, six)
 
 
 @pytest.mark.parametrize("name", sorted(BATCHES))
-def test_batch_build_round_trips(name, loaded, py4j_calls_per_call):
+def test_batch_build_round_trips(name, loaded, build_calls):
     plain, comp = loaded
     build = BATCHES[name]
     for _ in range(2):
-        build(plain, comp, _workload(4))
-    four = py4j_calls_per_call(lambda: build(plain, comp, _workload(4)))
-    sixteen = py4j_calls_per_call(lambda: build(plain, comp, _workload(16)))
+        build_calls(lambda: build(plain, comp, _workload(4)))
+    four = build_calls(lambda: build(plain, comp, _workload(4)))
+    sixteen = build_calls(lambda: build(plain, comp, _workload(16)))
     assert four == sixteen and four <= BUDGET, (four, sixteen)
 
 
@@ -105,33 +130,32 @@ COMPOUNDS = {
 
 @pytest.mark.parametrize("name", sorted(COMPOUNDS))
 def test_compound_build_round_trips(name, loaded, fingerprint_indexes,
-                                    py4j_calls_per_call):
+                                    build_calls):
     """A compound query is one statement, whatever its number of clauses."""
     plain, _comp = loaded
     mfi = fingerprint_indexes[3]
     build = COMPOUNDS[name]
     for _ in range(2):
-        build(plain, mfi, TWO.split())
-    two = py4j_calls_per_call(lambda: build(plain, mfi, TWO.split()))
-    six = py4j_calls_per_call(lambda: build(plain, mfi, SIX.split()))
+        build_calls(lambda: build(plain, mfi, TWO.split()))
+    two = build_calls(lambda: build(plain, mfi, TWO.split()))
+    six = build_calls(lambda: build(plain, mfi, SIX.split()))
     assert two == six and two <= BUDGET, (two, six)
 
 
 def test_full_grammar_regexp_is_one_registered_function(loaded, spark,
-                                                        py4j_calls_per_call):
+                                                        build_calls):
     """The full-grammar regexp predicate is a SQL function registered once
     per session, its pattern a literal: a new pattern builds no new
     Python function, also after ``get_spark`` returns the session again."""
     from lucene_solr_old_spark.session import get_spark
 
     plain, _comp = loaded
-    execute(plain, "/run[a-z]*&~(run)/")
-    one = py4j_calls_per_call(lambda: execute(plain, "/run[a-z]*&~(run)/"))
-    two = py4j_calls_per_call(
-        lambda: execute(plain, "/meet[a-z]*&~(meet)/"))
+    build_calls(lambda: execute(plain, "/run[a-z]*&~(run)/"))
+    one = build_calls(lambda: execute(plain, "/run[a-z]*&~(run)/"))
+    two = build_calls(lambda: execute(plain, "/meet[a-z]*&~(meet)/"))
     assert get_spark("tests", master="local[4]", shuffle_partitions=8) \
         is spark
-    again = py4j_calls_per_call(
+    again = build_calls(
         lambda: execute(plain, "/(run|meet)[a-z]*&~(running)/"))
     assert one == two == again and one <= BUDGET, (one, two, again)
 
@@ -215,9 +239,11 @@ def test_odd_terms_batch_and_clause(odd):
     assert {r["key"] for r in docs.collect()} == _holding(ODD[:3])
 
 
-def test_rendered_scan_pushes_term_in(odd):
-    df = S.search_or(odd, "o'brien {brace}")
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def test_rendered_scan_pushes_term_in(odd, monkeypatch):
+    statements, collect = [], S._collect
+    monkeypatch.setattr(S, "_collect", lambda statement: statements.append(
+        statement) or collect(statement))
+    S.search_or(odd, "o'brien {brace}")
+    plan = statements[0]._jdf.queryExecution().executedPlan().toString()
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any("In(term," in p for p in pushed), plan

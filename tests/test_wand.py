@@ -181,14 +181,17 @@ def test_batch_wand_collector_contract(both_indexes, per_qid_runs):
     assert runs[7] == 5 and 3 not in runs and set(runs) <= {7, 0, 1}
 
 
-def test_batch_wand_jobs_per_collect(fingerprint_indexes, jobs_per_collect):
-    """The workload runs in at most 4 Spark jobs: the term-pruned scan's
-    shuffle to the per-segment kernel, the docmeta broadcast, the per-qid
-    window's shuffle and the result.  The parent ran 6: a global
-    ``orderBy("qid", "rank")`` added a range-sampling job and a range
-    exchange."""
+def test_batch_wand_jobs_per_collect(fingerprint_indexes, jobs_per_call):
+    """With statistics, dictionary and keys resident, the workload runs
+    in at most 2 Spark jobs from call to rows: the term-pruned scan's
+    shuffle to the per-segment kernel, and the result, whose rows the
+    driver merges per qid with the resident keys.  It ran 4 with a
+    docmeta broadcast and a per-qid window's shuffle, and 6 with a
+    global ``orderBy("qid", "rank")``."""
     from lucene_solr_old_spark.operators.wand import batch_wand_search
     from test_plan_fingerprints import BATCH
 
     _df, _plain, comp, _mfi = fingerprint_indexes
-    assert jobs_per_collect(batch_wand_search(comp, BATCH, k=10)) <= 4
+    comp.collection_stats()
+    comp.read_resident()
+    assert jobs_per_call(lambda: batch_wand_search(comp, BATCH, k=10)) <= 2
