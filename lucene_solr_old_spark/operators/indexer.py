@@ -178,8 +178,7 @@ class InvertedIndex:
             reads.append(lambda: setattr(self, "_term_arrays",
                                          self._read_term_arrays()))
         if self._key_arrays is None:
-            reads.append(lambda: setattr(self, "_key_arrays",
-                                         self._read_key_arrays()))
+            reads.append(self._resident_keys)
         if len(reads) > 1:
             _run_concurrently(self.docmeta.sparkSession, *reads)
         elif reads:
@@ -196,9 +195,7 @@ class InvertedIndex:
         out = np.empty(len(segs), dtype=object)
         if not len(segs):
             return out
-        if self._key_arrays is None:
-            self._key_arrays = self._read_key_arrays()
-        arrays = self._key_arrays
+        arrays = self._resident_keys()
         if not isinstance(arrays, dict):
             arrays = self._seek_keys(segs, docids)
         for s in np.unique(segs).tolist():
@@ -211,18 +208,23 @@ class InvertedIndex:
         """seg -> the greatest docid whose key is at most ``key``, for the
         segments holding such a document: as docids ascend with keys, a
         segment's documents after ``key`` are those past its bound."""
-        if self._key_arrays is None:
-            self._key_arrays = self._read_key_arrays()
-        if not isinstance(self._key_arrays, dict):
+        arrays = self._resident_keys()
+        if not isinstance(arrays, dict):
             return {int(r[0]): int(r[1]) for r in
                     self.docmeta.where(F.col("key") <= key)
                     .groupBy("seg").agg(F.max("docid")).collect()}
         out = {}
-        for s, (ids, keys) in self._key_arrays.items():
+        for s, (ids, keys) in arrays.items():
             i = int(np.searchsorted(keys, key, side="right"))
             if i:
                 out[s] = int(ids[i - 1])
         return out
+
+    def _resident_keys(self) -> dict | tuple:
+        """The resident keys, read on first use (() over the budget)."""
+        if self._key_arrays is None:
+            self._key_arrays = self._read_key_arrays()
+        return self._key_arrays
 
     def _read_key_arrays(self) -> dict | tuple:
         """seg -> (docids, keys) of the whole docmeta, or () when it has

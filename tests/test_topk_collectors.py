@@ -108,6 +108,56 @@ def test_checkindex_flags_docids_out_of_key_order(ties):
     assert validate_index(bad)["keys_not_ascending"] > 0
 
 
+def _close(got, want):
+    """Same keys in the same order, scores equal to float32 precision:
+    the WAND kernel sums a document's clauses in float32, the relational
+    plan in float64."""
+    return [k for k, _s in got] == [k for k, _s in want] and all(
+        abs(a - b) <= 1e-6 * max(1.0, abs(b))
+        for (_k, a), (_w, b) in zip(got, want))
+
+
+def _keyed_top(index, per_doc, k):
+    """The reference: every hit joined to its key and ordered by (score
+    DESC, key ASC), as the keyed collector did."""
+    return (S._with_keys(per_doc, index)
+            .select("key", F.col("score").cast("float").alias("score"))
+            .orderBy(F.desc("score"), "key").limit(k))
+
+
+@pytest.fixture(scope="module")
+def reshaped(fingerprint_indexes):
+    """The fingerprint pages merged into two segments, and built with
+    route="none" from three input partitions."""
+    df, plain, _comp, _mfi = fingerprint_indexes
+    return (merge_many(plain, [[0, 2], [1, 3]]),
+            I.build_index(df.repartition(3), route="none"))
+
+
+@pytest.mark.parametrize("which", ["merged", "route_none"])
+def test_reshaped_indexes_equal_the_keyed_collector(reshaped, which):
+    idx = reshaped[["merged", "route_none"].index(which)]
+    comp = I.compress_index(idx)
+    for text in ("running meetings caresses", "aad and"):
+        want = _pairs(_keyed_top(idx, S._single(idx, text), 7))
+        assert _pairs(S.search_or(idx, text, k=7)) == want
+        assert _close(_pairs(wand_search(comp, text, k=7)), want)
+    assert _pairs(S.search_dismax(idx, "relational hopeful", k=7,
+                                  tie_breaker=0.1)) == _pairs(_keyed_top(
+        idx, S._single(idx, "relational hopeful", tie_breaker=0.1), 7))
+    assert _pairs(S.search_phrase(idx, "aad aaeevnqlbaa", k=7)) == _pairs(
+        _keyed_top(idx, S._phrase_frame(idx, [["aad"], ["aaeevnqlbaa"]],
+                                        [0, 1]), 7))
+    workload = [(0, "aad and", "OR"), (1, "running meetings", "AND")]
+    for make, index in ((batch_search, idx), (batch_wand_search, comp)):
+        got = {}
+        for r in make(index, workload, k=7).collect():
+            got.setdefault(r["qid"], []).append((r["key"], r["score"]))
+        assert got.keys() == {0, 1} and all(
+            _close(got[q], _pairs(S.search_terms(idx, t, m, k=7)))
+            for q, t, m in workload)
+
+
 # --- resident keys, row bounds, statements ---------------------------------
 
 @pytest.fixture(scope="module")
